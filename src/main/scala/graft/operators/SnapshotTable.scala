@@ -259,9 +259,9 @@ object SnapshotTable {
     }
 
   /** Atomic publish: write a temp manifest, rename to the versioned name.
-    * Returns the committed version; retries (writing on top of the new
-    * state is the CALLER's job, so a lost race throws for writers that
-    * staged against a stale parent — optimistic concurrency). Staged
+    * Returns the committed version, or throws [[CommitConflictException]]
+    * when a concurrent committer already took the slot: re-staging on
+    * top of the new state is the caller's job ([[commitLoop]]). Staged
     * artifacts all carry caller-unique names ([[stageDir]], uniquely
     * named blooms), so a lost race leaves only unreferenced orphans.
     */
@@ -358,8 +358,12 @@ object SnapshotTable {
         catch { case _: java.nio.file.FileAlreadyExistsException => false }
       } else fcPublish(spark, tmp, target)
     // local link leaves tmp in place either way; fcPublish consumed tmp
-    // on success and left it on failure
-    if (isLocal || !won) f.delete(tmp, false)
+    // on success and left it on failure. Best-effort: a won slot is a
+    // PUBLISHED commit that must never surface as failed (callers would
+    // reclaim staged dirs the manifest now references); [[vacuum]]
+    // reaps a leftover `.tmp-*`
+    if (isLocal || !won)
+      try f.delete(tmp, false) catch { case scala.util.control.NonFatal(_) => () }
     if (!won) throw new CommitConflictException(
       s"concurrent commit won version $expectedNext at $path; " +
         "re-stage against the current snapshot and retry")
@@ -367,8 +371,8 @@ object SnapshotTable {
   }
 
   /** A commit lost the version-slot race to a concurrent committer.
-    * [[ingest]] catches this and rebases (see its scaladoc); rewrite
-    * operators (write/compact/merge/mergeOnRead) surface it — their
+    * [[commitLoop]] catches this and rebases; the operators that publish
+    * outside it (write/merge/metadata commits) surface it — their
     * staged output was derived from a snapshot that is no longer
     * current, so only the caller can decide to recompute.
     */
@@ -391,6 +395,182 @@ object SnapshotTable {
     try { fc.rename(tmp, target); true }
     catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
+
+  /** How many times [[commitLoop]] publishes before it gives up. */
+  private val commitAttempts = 5
+
+  /** Test seam: [[commitLoop]] clears it, then fires it with the op
+    * name before every publish attempt, so a spec can land a
+    * deterministic racing commit in the loser's window (no thread
+    * timing); a racer that re-arms it wins every slot. No-op in
+    * production.
+    */
+  private[graft] var commitFault: String => Unit = _ => ()
+
+  /** The optimistic-commit protocol of every incremental operator — the
+    * Iceberg commit-retry contract reduced to its kernel. Staged
+    * artifacts carry committer-unique names, so losing the version slot
+    * loses no work. Each attempt:
+    *
+    *  1. re-homes the `staged` artifacts (data dirs with their hash and
+    *     stats sidecars, `t<v>-` tombstones) at the slot version by pure
+    *     rename ([[rehome]]). The name must carry the COMMIT version:
+    *     the merge-on-read overlay orders rows against tombstones by it,
+    *     and a stale number would let an outstanding tombstone mask
+    *     freshly-committed rows;
+    *  2. asks `build` for the manifest, given the slot version, the base
+    *     manifest (the op's own parent on attempt 0, then the winner's)
+    *     and every commit that interleaved since that parent (empty on
+    *     attempt 0). `build` runs the op's own gate and may refuse;
+    *     None means the base already holds what the op wanted, and
+    *     commitLoop returns the base version;
+    *  3. publishes through [[commit]]. On [[CommitConflictException]]
+    *     it resolves the winner: on a branch (`ref`) the branch head,
+    *     on the main chain the latest manifest, where every interleaved
+    *     kind must be in `admits` (else the op refuses with `why(kind)`
+    *     or the default reason). The winner must also keep the schema,
+    *     partitioning and column mapping of the manifest just built —
+    *     the staged files were written under them.
+    *
+    * It publishes at most 5 times ([[commitAttempts]]) and then gives
+    * up with an IOException. With `reclaim` set, a terminal failure
+    * deletes the staged artifacts plus the listed paths: nothing that
+    * fails here was published. Otherwise they stay for [[vacuum]].
+    *
+    * Admission, the interleaved kinds each op rebases over (each op's
+    * scaladoc gives its reason):
+    * {{{
+    *   append, commitStreamAppend  append fast-forward compact binpack posdelete
+    *                               posupdate merge-on-read posdelete-compact
+    *   ingest, ingestFuzzy         append fast-forward compact binpack posdelete
+    *                               posdelete-compact
+    *   compact, compactSmall       append fast-forward
+    *   mergeOnRead                 append fast-forward merge-on-read binpack
+    *   commitPositionalDelta       append fast-forward posdelete posupdate
+    *                               posdelete-compact
+    *   compactPosDeletes           append fast-forward posdelete posupdate
+    *                               merge-on-read posdelete-compact
+    *   appendBranch                the branch head (branch chains only append)
+    * }}}
+    */
+  private def commitLoop(spark: SparkSession, path: String, op: String,
+      parentV: Long, parent: Option[Manifest], staged: Seq[String],
+      admits: Seq[String], why: PartialFunction[String, String] = PartialFunction.empty,
+      ref: Option[String] = None, reclaim: Option[Seq[Path]] = None)(
+      build: (Long, Option[Manifest], Seq[(Long, Manifest)]) => Option[Manifest]): Long = {
+    val f = fs(spark, new Path(path))
+    var names = staged
+    var baseV = parentV
+    var base = parent
+    var chain = Vector.empty[(Long, Manifest)]
+    var attempt = 0
+    try {
+      while (true) {
+        val fault = commitFault
+        commitFault = _ => ()
+        fault(op)
+        val v = baseV + 1
+        names = names.map(rehome(f, path, _, v))
+        val m = build(v, base, chain) match {
+          case Some(m) => m
+          case None => return baseV
+        }
+        try return commit(spark, path, v, m, ref)
+        catch { case _: CommitConflictException => () }
+        attempt += 1
+        if (attempt == commitAttempts) throw new java.io.IOException(
+          s"$op at $path lost $commitAttempts consecutive commit races; " +
+            "giving up — retry under lower commit contention")
+        val (wv, wm) = ref match {
+          case Some(r) => branchHeadManifest(spark, path, r)
+          case None =>
+            val wv = currentVersion(spark, path).getOrElse(throw new IllegalStateException(
+              s"commit conflict at $path with no current version — manifest store inconsistent"))
+            val fresh = ((baseV + 1) to wv).map(cv => cv -> readManifestChecked(spark, path, cv))
+            fresh.foreach { case (cv, cm) =>
+              val k = cm.kind.getOrElse("unknown")
+              if (!admits.contains(k)) throw new java.io.IOException(
+                s"$op at $path lost the commit race to version $cv (kind '$k'); " +
+                  why.applyOrElse(k, (_: String) =>
+                    s"only ${admits.mkString("/")} interleavings rebase automatically") +
+                  s" — re-run the $op against the current snapshot")
+            }
+            chain ++= fresh
+            fresh.last
+        }
+        def refuse(what: String) = throw new java.io.IOException(
+          s"$op at $path lost the commit race and the winner committed a different " +
+            s"$what; re-run the $op against the current snapshot")
+        if (m.schema.exists(s => !wm.schema.forall(_ == s))) refuse("schema")
+        if (wm.partitionCols != m.partitionCols) refuse("partitioning")
+        if (wm.physmap != m.physmap) refuse("column mapping")
+        baseV = wv
+        base = Some(wm)
+      }
+      throw new IllegalStateException("unreachable")
+    } catch {
+      case e: Throwable if reclaim.isDefined =>
+        try {
+          names.flatMap(stagedPaths(path, _)).foreach(f.delete(_, true))
+          reclaim.get.foreach(f.delete(_, true))
+        } catch { case _: Throwable => () }
+        throw e
+    }
+  }
+
+  /** Every location keyed by a staged artifact's name: a data dir with
+    * its hash and stats sidecars, or a merge-on-read tombstone.
+    */
+  private def stagedPaths(path: String, name: String): Seq[Path] =
+    Seq(new Path(path, name), hashesDir(path, name), statsDir(path, name),
+      tombstonePath(path, name))
+
+  /** A staged name ([[stageDir]] dir or `t<v>-<uuid>` tombstone)
+    * renumbered for commit version `v`; the uuid suffix keeps it
+    * committer-unique.
+    */
+  private def atVersion(name: String, v: Long): String = {
+    val (prefix, rest) = name.span(!_.isDigit)
+    prefix + f"$v%08d" + rest.dropWhile(_.isDigit)
+  }
+
+  /** Move every location keyed by staged name `from` to `to` (stats
+    * rows key on FILE names, which rename preserves).
+    */
+  private def renameStaged(f: org.apache.hadoop.fs.FileSystem, path: String,
+                           from: String, to: String): Unit = {
+    val moves = stagedPaths(path, from).zip(stagedPaths(path, to)).filter(m => f.exists(m._1))
+    if (moves.isEmpty || !moves.forall { case (a, b) => f.rename(a, b) })
+      throw new java.io.IOException(s"rebase could not rename staged $from to $to under $path")
+  }
+
+  /** Re-home a staged artifact at commit version `v` (a no-op when its
+    * name already carries `v`); returns the new name.
+    */
+  private def rehome(f: org.apache.hadoop.fs.FileSystem, path: String,
+                     name: String, v: Long): String = {
+    val to = atVersion(name, v)
+    if (to != name) renameStaged(f, path, name, to)
+    to
+  }
+
+  /** An APPEND commit's manifest: `base` plus one delta dir. The base's
+    * overlay, constraints and sidecar trust carry forward untouched —
+    * the delta commits at a later version than every outstanding
+    * tombstone, so the mask never touches it, and a fresh delta sidecar
+    * cannot heal the base dirs' untrusted ones.
+    */
+  private def appendManifest(base: Option[Manifest], dir: String, format: String,
+      bloom: Option[String], schema: StructType, statsCols: Seq[String],
+      partitionCols: Seq[String], physmap: Map[String, String],
+      physRetired: Seq[String]): Manifest =
+    Manifest(base.map(_.dirs).getOrElse(Nil) :+ dir, format, bloom, Some(schema),
+      statsCols, base.map(_.tombstones).getOrElse(Nil), base.flatMap(_.morKey),
+      kind = Some("append"), partitionCols = partitionCols,
+      constraints = base.map(_.constraints).getOrElse(Nil), physmap = physmap,
+      physRetired = physRetired, hashesValid = base.forall(_.hashesValid),
+      posDeletes = base.map(_.posDeletes).getOrElse(Nil),
+      partEvolved = base.exists(_.partEvolved))
 
   /** Commit `df` as the table's next snapshot (the full-table-overwrite
     * write path; [[ingest]] is the incremental append path). `statsCols`
@@ -729,12 +909,11 @@ object SnapshotTable {
     * root (shared data namespace, caller-unique name) but only the
     * branch manifest references it until [[fastForward]] publishes.
     * Branch chains are append-only by construction — the rebase after
-    * a lost slot race therefore only ever sees sibling appends, and
-    * re-parents by dir-list union exactly like [[append]]'s whitelist
-    * rebase.
+    * a lost slot race therefore only ever sees sibling appends, so it
+    * re-parents onto the branch head with no kind whitelist.
     */
   def appendBranch(spark: SparkSession, incoming: DataFrame, path: String,
-                   name: String, retries: Int = 5): Long = {
+                   name: String): Long = {
     import org.apache.spark.sql.functions._
     val (headV0, parent0) = branchHeadManifest(spark, path, name)
     // the chain's committed format governs the staged delta — same
@@ -763,48 +942,11 @@ object SnapshotTable {
           .load(new Path(path, deltaDir).toString)
       writeStatsSidecar(spark, path, deltaDir, written,
         effStats.map(c => physmap.getOrElse(c, c)))
-      val f = fs(spark, new Path(path))
-      var stagedDir = deltaDir
-      var parentV = headV0
-      var parentM = parent0
-      var attempt = 0
-      while (true) {
-        val v = parentV + 1
-        val dirAtV = if (dirVersion(stagedDir) == v) stagedDir else {
-          val renamed = stageDir(v)
-          renameStaged(f, path, stagedDir, renamed)
-          renamed
-        }
-        stagedDir = dirAtV
-        try {
-          commit(spark, path, v, Manifest(
-            parentM.dirs :+ dirAtV, format, None, Some(committedSchema),
-            effStats, parentM.tombstones, parentM.morKey,
-            kind = Some("append"), partitionCols = effParts,
-            constraints = parentM.constraints, physmap = physmap,
-            physRetired = parentM.physRetired,
-            hashesValid = parentM.hashesValid,
-            posDeletes = parentM.posDeletes,
-            partEvolved = parentM.partEvolved), ref = Some(name))
-          return v
-        } catch {
-          case _: CommitConflictException =>
-            attempt += 1
-            if (attempt >= retries) throw new java.io.IOException(
-              s"appendBranch('$name') at $path lost $retries consecutive " +
-                "commit races; giving up — retry under lower contention")
-            val (wv, wm) = branchHeadManifest(spark, path, name)
-            if (!wm.schema.forall(_ == committedSchema) ||
-                wm.partitionCols != effParts || wm.physmap != physmap)
-              throw new java.io.IOException(
-                s"appendBranch('$name') at $path lost the commit race and the " +
-                  "winner committed a different schema/partitioning/mapping; " +
-                  "re-run against the current branch head")
-            parentV = wv
-            parentM = wm
-        }
+      commitLoop(spark, path, s"appendBranch('$name')", headV0, Some(parent0),
+          Seq(deltaDir), admits = Nil, ref = Some(name)) { (v, base, _) =>
+        Some(appendManifest(base, atVersion(deltaDir, v), format, None,
+          committedSchema, effStats, effParts, physmap, base.get.physRetired))
       }
-      throw new IllegalStateException("unreachable")
     } finally { if (weCached) { incoming.unpersist(); () } }
   }
 
@@ -2527,12 +2669,16 @@ object SnapshotTable {
     * the rebuilt intervals disjoint and pruning sharp.
     *
     * CONCURRENT APPENDS are safe: a compaction that loses the
-    * version-slot race to interleaved `ingest` commits REBASES — the
-    * compacted dir re-homes (pure rename) next to the interleaved
-    * append dirs it never read, at O(delta) cost and bounded retries
-    * (see [[rebaseLostCompact]]). A concurrent COMPACTION or any
-    * rewrite (overwrite/merge/merge-on-read) refuses loudly — the
-    * chain this rewrite replaced no longer exists.
+    * version-slot race to interleaved `ingest` commits REBASES
+    * ([[commitLoop]]) — the compacted dir re-homes (pure rename) next
+    * to the interleaved append dirs it never read, so the table is
+    * never re-scanned. The appends were deduped against a bloom that
+    * covers the compacted content and never add tombstones, so neither
+    * the dedup invariant nor the materialized overlay changes under
+    * them. A concurrent COMPACTION or any rewrite (overwrite/merge/
+    * merge-on-read) refuses loudly — the chain this rewrite replaced
+    * no longer exists — and so does a binpack, whose merged dir would
+    * list next to this full rewrite and double-count its content.
     */
   def compact(spark: SparkSession, path: String,
               targetFileBytes: Long = 128L * 1024 * 1024,
@@ -2645,27 +2791,48 @@ object SnapshotTable {
     writeStatsSidecar(spark, path, nextDir, written,
       effStats.map(m.physOf))
     val committedSchema = m.schema.getOrElse(nullableSchema(written.schema))
-    val fault = compactCommitFault
-    compactCommitFault = () => ()
-    fault()
-    val finalDir =
-      try {
-        commit(spark, path, v + 1, Manifest(Seq(nextDir), m.format, outBloomName,
-          Some(committedSchema), effStats,
-          kind = Some("compact"), partitionCols = m.partitionCols,
-          constraints = m.constraints,
-          physmap = m.physmap, physRetired = m.physRetired))
-        nextDir
-      } catch {
-        case _: CommitConflictException =>
-          // a concurrent committer took our version slot: when only
-          // appends interleaved, the rewrite still replaces exactly the
-          // dirs it read — rebase instead of throwing the rewrite away
-          // (see [[rebaseLostCompact]])
-          rebaseLostCompact(spark, path, m, v, committedSchema, effStats,
-            nextDir, rebuiltBloom, expectedItems, fpp, retries = 5)
-      }
-    val after = listDataFiles(f, new Path(path, finalDir)).size
+    val parentDirs = m.dirs.toSet
+    val committed = commitLoop(spark, path, "compaction", v, Some(m), Seq(nextDir),
+        admits = Seq("append", "fast-forward"),
+        why = { case "compact" => "a concurrent compaction won: this rewrite is " +
+          "obsolete, the chain it replaced no longer exists" }) { (cv, base, chain) =>
+      val dir = atVersion(nextDir, cv)
+      val appendAdded = base.get.dirs.filterNot(parentDirs)
+      // rebased bloom: with no overlay the compacted content is the
+      // parent's, which the winner's bloom already covers (with the
+      // appends); with one, deleted content must LEAVE the dedup
+      // universe, so only the rebuilt bloom plus the appends' hash
+      // sidecars qualifies — else the manifest names none
+      val bloom =
+        if (chain.isEmpty) outBloomName
+        else if (!m.hasOverlay) base.get.bloom
+        else rebuiltBloom.flatMap { rb =>
+          val sidecars = appendAdded.map(d => hashesDir(path, d))
+          if (!sidecars.forall(f.exists)) None
+          else {
+            // re-merging dirs already merged on a prior attempt is a
+            // bitwise-idempotent OR — safe across attempts
+            val merged =
+              if (appendAdded.isEmpty) Some(rb)
+              else {
+                val ab = bloomOf(spark.read.format(m.format)
+                  .load(sidecars.map(_.toString): _*),
+                  xxhash64(col("__h")), expectedItems, fpp)
+                if (rb.isCompatible(ab)) { rb.mergeInPlace(ab); Some(rb) } else None
+              }
+            merged.map { b =>
+              val name = f"b$cv%08d-${dir.takeRight(8)}.bin"
+              writeBloomAt(spark, path, name, b)
+              name
+            }
+          }
+        }
+      Some(Manifest(dir +: appendAdded, m.format, bloom, Some(committedSchema),
+        effStats, kind = Some("compact"), partitionCols = m.partitionCols,
+        constraints = base.get.constraints, physmap = m.physmap,
+        physRetired = base.get.physRetired))
+    }
+    val after = listDataFiles(f, new Path(path, atVersion(nextDir, committed))).size
     Sink.CompactionStats(before.length, after, totalBytes)
   }
 
@@ -2709,13 +2876,15 @@ object SnapshotTable {
     *
     * CONCURRENT APPENDS are safe — the maintenance-loop norm is binpack
     * racing a streaming ingest: a lost version-slot race REBASES the
-    * staged merge onto the winner's state (the merged dir re-homes by
-    * pure rename; the rebased manifest = the winner's dirs minus the
-    * merged smalls plus the merge — content is unchanged by binpack, so
-    * the winner's bloom, schema, and stats config all carry as-is), at
-    * O(1) metadata cost and bounded retries. Interleaved rewrites,
-    * merges, schema or partition changes refuse loudly; the caller
-    * re-runs against the new snapshot (see [[rebaseLostBinpack]]).
+    * staged merge onto the winner's state ([[commitLoop]]). The merged
+    * dir re-homes by pure rename, and the rebased manifest is the
+    * winner's dirs minus the merged smalls plus the merge. Binpack adds
+    * no content, so the winner's bloom (covering parent ∪ appends),
+    * schema and stats config all carry as-is, and appends add no
+    * tombstones, so the overlay stays empty. Any other interleaving —
+    * a rewrite, merge, merge-on-read or another compaction — may have
+    * removed the dirs this merge replaced and refuses loudly; re-running
+    * binpack against the new snapshot is cheap by construction.
     */
   def compactSmall(spark: SparkSession, path: String,
                    smallDirBytes: Long = 64L * 1024 * 1024,
@@ -2767,72 +2936,13 @@ object SnapshotTable {
         .load(new Path(path, nextDir).toString)
     }
     writeStatsSidecar(spark, path, nextDir, written, m.statsCols.map(m.physOf))
-    val fault = binpackCommitFault
-    binpackCommitFault = () => ()
-    fault()
-    try {
-      commit(spark, path, v + 1, m.copy(dirs = bigs.map(_._1) :+ nextDir,
+    val merged = smalls.map(_._1).toSet
+    val version = commitLoop(spark, path, "binpack", v, Some(m), Seq(nextDir),
+        admits = Seq("append", "fast-forward")) { (cv, base, _) =>
+      Some(base.get.copy(dirs = base.get.dirs.filterNot(merged) :+ atVersion(nextDir, cv),
         kind = Some("binpack")))
-      BinpackStats(v + 1, smalls.size, bigs.size, smallBytes, committed = true)
-    } catch {
-      case _: CommitConflictException =>
-        val next = rebaseLostBinpack(spark, path, m, v, smalls.map(_._1),
-          nextDir, retries = 5)
-        BinpackStats(next, smalls.size, bigs.size, smallBytes, committed = true)
     }
-  }
-
-  private[graft] var binpackCommitFault: () => Unit = () => ()
-
-  /** Optimistic-concurrency rebase for a LOST binpack commit. Binpack
-    * is a pure layout op over a subset of dirs, so when only APPENDS
-    * interleaved the staged merge still replaces exactly the small dirs
-    * it read: the rebased manifest is the WINNER's dir list minus the
-    * merged smalls plus the merged dir, re-homed at the new version by
-    * pure rename (content never changes, nothing re-stages, the table
-    * is never scanned). The winner's bloom covers parent ∪ appends and
-    * binpack adds no content, so bloom, schema, and stats config all
-    * carry from the winner's manifest as-is. Appends never add
-    * tombstones (and binpack required an empty overlay), so the
-    * rebased manifest's overlay is empty by construction. Anything but
-    * an append interleaving — a rewrite, merge, merge-on-read, schema
-    * or partition change, or another compaction — refuses loudly: the
-    * dirs this merge replaced may no longer exist, and re-running
-    * binpack against the current snapshot is cheap by construction.
-    */
-  private def rebaseLostBinpack(spark: SparkSession, path: String,
-      parentM: Manifest, parentV: Long, mergedSmalls: Seq[String],
-      stagedDir0: String, retries: Int): Long = {
-    val f = fs(spark, new Path(path))
-    val merged = mergedSmalls.toSet
-    var stagedDir = stagedDir0
-    var attempt = 0
-    while (true) {
-      val (winnerV, winnerM, _) = rebaseWinnerChain(spark, path,
-        parentV, "binpack", parentM.schema, parentM.partitionCols,
-        (cv, k) => if (k != "append" && k != "fast-forward")
-          throw new java.io.IOException(
-            s"binpack at $path lost the commit race to version $cv (kind '$k'); " +
-              "only append interleavings rebase automatically — re-run binpack " +
-              "against the current snapshot"),
-        expectPhysmap = parentM.physmap)
-      val next = winnerV + 1
-      val newDir = stageDir(next)
-      renameStaged(f, path, stagedDir, newDir)
-      try {
-        commit(spark, path, next, winnerM.copy(
-          dirs = winnerM.dirs.filterNot(merged) :+ newDir, kind = Some("binpack")))
-        return next
-      } catch {
-        case _: CommitConflictException =>
-          attempt += 1
-          if (attempt >= retries) throw new java.io.IOException(
-            s"binpack at $path lost $retries consecutive commit races; " +
-              "giving up — retry under lower commit contention")
-          stagedDir = newDir
-      }
-    }
-    throw new IllegalStateException("unreachable")
+    BinpackStats(version, smalls.size, bigs.size, smallBytes, committed = true)
   }
 
   /** Drop snapshots older than the `keep` most recent manifests — the
@@ -3550,344 +3660,6 @@ object SnapshotTable {
 
   final case class IngestStats(version: Long, nIncoming: Long, nNew: Long)
 
-  /** Test seam: invoked exactly once immediately before [[ingest]]'s
-    * first commit attempt, then self-clears. Lets specs inject a
-    * deterministic concurrent commit (no thread timing) to drive the
-    * rebase path. No-op in production.
-    */
-  private[graft] var ingestCommitFault: () => Unit = () => ()
-
-  /** Optimistic-concurrency rebase for a LOST append commit — the
-    * Iceberg commit-retry contract reduced to its kernel. The staged
-    * delta directory, its sidecars, and its bloom all carry
-    * committer-unique names, so losing the version slot loses no work:
-    * when every interleaved commit is content-compatible — `append`
-    * (adds content) or `compact` (preserves it) — the delta re-commits
-    * on top of the winner's state at O(delta) cost:
-    *
-    *  1. validate the interleaved chain: kinds ⊆ {append, compact},
-    *     schema and partitioning unchanged — anything else (overwrite,
-    *     merge, merge-on-read, evolution) invalidates the staged
-    *     dedup decisions, so the conflict surfaces to the caller;
-    *  2. re-dedup the STAGED files against the interleaved appends'
-    *     ~16 B/row hash sidecars (per-dir payload fallback): rows a
-    *     racer admitted first drop out, preserving the table's
-    *     content-dedup invariant under concurrency;
-    *  3. re-home the delta at the new version — a pure RENAME of the
-    *     dir and its hash/stats sidecars when nothing dropped (file
-    *     names, and therefore stats rows, are stable under rename), a
-    *     rewrite otherwise. The dir name must carry the COMMIT
-    *     version: the merge-on-read overlay orders rows against
-    *     tombstones by it, and a stale number would let an outstanding
-    *     tombstone mask freshly-appended rows;
-    *  4. bloom: merge the delta's bloom into the WINNER's, which
-    *     already covers the interleaved content (the delta bloom may
-    *     over-cover dropped rows — bloom over-coverage is always safe,
-    *     the hash verify catches the false positives). If the winner
-    *     names no compatible bloom, the commit names none and the next
-    *     ingest pays the documented one-scan rebuild — the rebase
-    *     itself NEVER scans the table;
-    *  5. commit; on another lost race, loop (bounded by `retries`).
-    *
-    * Returns (committed version, rows committed after re-dedup).
-    */
-  /** Shared scaffolding for the four optimistic-concurrency rebases
-    * (append / compact / binpack / merge-on-read): resolve the winner,
-    * read the interleaved manifest chain, and enforce the checks every
-    * flavor shares — interleaved kinds acceptable (policy supplied by
-    * the caller: which interleavings are content-safe is exactly what
-    * distinguishes the flavors), schema unchanged, partition layout
-    * unchanged. Returns (winner version, winner manifest, full chain).
-    */
-  private def rebaseWinnerChain(spark: SparkSession, path: String,
-      parentV: Long, opName: String,
-      expectSchema: Option[StructType], expectParts: Seq[String],
-      validateKind: (Long, String) => Unit,
-      expectPhysmap: Map[String, String] = Map.empty): (Long, Manifest, Seq[(Long, Manifest)]) = {
-    val winnerV = currentVersion(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"commit conflict at $path with no current version — manifest store inconsistent"))
-    val chain = ((parentV + 1) to winnerV)
-      .map(v => v -> readManifestChecked(spark, path, v))
-    chain.foreach { case (cv, mm) =>
-      validateKind(cv, mm.kind.getOrElse("unknown")) }
-    val winnerM = chain.last._2
-    expectSchema.foreach { es =>
-      if (!winnerM.schema.forall(_ == es)) throw new java.io.IOException(
-        s"$opName at $path lost the commit race and the winner committed a " +
-          s"different schema; re-run the $opName against the current snapshot")
-    }
-    if (winnerM.partitionCols != expectParts) throw new java.io.IOException(
-      s"$opName at $path lost the commit race and the winner committed " +
-        s"different partitioning; re-run the $opName against the current snapshot")
-    // belt-and-braces: the kinds every rebase admits (append / compact /
-    // binpack) all preserve the column mapping, and a rename/drop commit
-    // (kind renamecol/dropcol) changes the logical schema and refuses
-    // above — but the staged files were written under OUR physmap, so a
-    // divergent winner mapping must never slip through silently
-    if (winnerM.physmap != expectPhysmap) throw new java.io.IOException(
-      s"$opName at $path lost the commit race and the winner committed a " +
-        s"different column mapping; re-run the $opName against the current snapshot")
-    (winnerV, winnerM, chain)
-  }
-
-  private def rebaseLostAppend(spark: SparkSession, path: String,
-      textCol: String, format: String, committedSchema: StructType,
-      effStats: Seq[String], effParts: Seq[String],
-      deltaBloom: org.apache.spark.util.sketch.BloomFilter,
-      stagedDir0: String, parentV0: Option[Long], parentDirs0: Seq[String],
-      retries: Int, physmap: Map[String, String] = Map.empty,
-      physRetired: Seq[String] = Nil,
-      regate: Option[(DataFrame, Seq[String], Long) => DataFrame] = None): (Long, Long) = {
-    import org.apache.spark.sql.functions._
-    val physText = physmap.getOrElse(textCol, textCol)
-    val f = fs(spark, new Path(path))
-    var stagedDir = stagedDir0
-    var parentV = parentV0
-    var parentDirs = parentDirs0
-    var attempt = 0
-    while (true) {
-      // binpack is content-preserving exactly like compact (and is the
-      // ROUTINE maintenance commit an ingest races) — rebase over it;
-      // its merged-away small dirs' sidecars stay on disk (the old
-      // snapshot is retained), so the dedup re-check below still reads
-      val (winnerV, winnerM, chain) = rebaseWinnerChain(spark, path,
-        parentV.getOrElse(0L), "ingest", Some(committedSchema), effParts,
-        (v, k) => if (k != "append" && k != "fast-forward" && k != "compact" &&
-            k != "binpack" && k != "posdelete" && k != "posdelete-compact")
-          throw new java.io.IOException(
-            s"ingest at $path lost the commit race to version $v (kind '$k'); " +
-              "only append/compact/binpack/posdelete interleavings rebase " +
-              "automatically — re-run the ingest against the current snapshot"),
-        expectPhysmap = physmap)
-      // dirs the interleaved APPENDs added; a compact REPLACES the dir
-      // list but preserves content the delta was already deduped against
-      val appendAdded = {
-        var prev = parentDirs
-        val out = Seq.newBuilder[String]
-        chain.foreach { case (_, mm) =>
-          // a fast-forward publish adds dirs exactly like an append —
-          // its content enters the dedup universe the same way
-          if (mm.kind.exists(k => k == "append" || k == "fast-forward"))
-            out ++= mm.dirs.diff(prev)
-          prev = mm.dirs
-        }
-        out.result()
-      }
-      val stagedRead = {
-        val r = spark.read.format(format)
-        (if (effParts.isEmpty) r else r.schema(physSchema(committedSchema, physmap)))
-          .load(new Path(path, stagedDir).toString)
-      }
-      val nStaged = stagedRead.count()
-      val next = winnerV + 1
-      val newDir = stageDir(next)
-      val nNew =
-        if (appendAdded.isEmpty) { renameStaged(f, path, stagedDir, newDir); nStaged }
-        else {
-          val sidecars = appendAdded.map(d => hashesDir(path, d))
-          val theirs =
-            if (sidecars.forall(f.exists))
-              spark.read.format(format).load(sidecars.map(_.toString): _*)
-            else rawScan(spark, path,
-                winnerM.copy(dirs = appendAdded, tombstones = Nil))
-              .select(contentKey(col(textCol)).as("__h"))
-          val survExact = stagedRead.join(theirs,
-            contentKey(stagedRead(physText)) === col("__h"), "left_anti")
-          // caller-supplied extra admission gate against the racer-added
-          // dirs ([[ingestFuzzy]]'s near-dup re-check — what makes the
-          // fuzzy invariant hold under concurrent fuzzy ingests, not just
-          // the exact one)
-          val surv = regate.fold(survExact)(g => g(survExact, appendAdded, winnerV))
-          val nSurv = surv.count()
-          if (nSurv == nStaged) { renameStaged(f, path, stagedDir, newDir); nStaged }
-          else {
-            // racer admitted some of our content first: rewrite the
-            // survivors into a fresh correctly-versioned dir (the old
-            // staging becomes a vacuum-reclaimable orphan). `surv` is a
-            // raw (physical-named) frame, so stage it WITHOUT the
-            // logical→physical translation — its names are already
-            // physical.
-            stagedWrite(surv.select(physSchema(committedSchema, physmap)
-              .fieldNames.map(col(_)).toSeq: _*),
-              new Path(path, newDir), format,
-              effParts.map(c => physmap.getOrElse(c, c)))
-            val rewritten = {
-              val r = spark.read.format(format)
-              (if (effParts.isEmpty) r else r.schema(physSchema(committedSchema, physmap)))
-                .load(new Path(path, newDir).toString)
-            }
-            writeHashSidecar(spark, path, newDir, rewritten, physText, format)
-            writeStatsSidecar(spark, path, newDir, rewritten,
-              effStats.map(c => physmap.getOrElse(c, c)))
-            nSurv
-          }
-        }
-      val bloomName = readBloom(spark, path, winnerV) match {
-        case Some(wb) if wb.isCompatible(deltaBloom) =>
-          wb.mergeInPlace(deltaBloom)
-          val name = f"b$next%08d-${newDir.takeRight(8)}.bin"
-          writeBloomAt(spark, path, name, wb)
-          Some(name)
-        case _ => None
-      }
-      try {
-        commit(spark, path, next, Manifest(winnerM.dirs :+ newDir, format,
-          bloomName, Some(committedSchema), effStats, winnerM.tombstones,
-          winnerM.morKey, kind = Some("append"), partitionCols = effParts,
-          constraints = winnerM.constraints,
-          physmap = physmap, physRetired = physRetired,
-          hashesValid = winnerM.hashesValid,
-          posDeletes = winnerM.posDeletes, partEvolved = winnerM.partEvolved))
-        return (next, nNew)
-      } catch {
-        case _: CommitConflictException =>
-          attempt += 1
-          if (attempt >= retries) throw new java.io.IOException(
-            s"ingest at $path lost $retries consecutive commit races; " +
-              "giving up — retry under lower commit contention")
-          parentV = Some(winnerV)
-          parentDirs = winnerM.dirs
-          stagedDir = newDir
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Test seam: invoked exactly once immediately before [[compact]]'s
-    * first commit attempt, then self-clears. Lets specs inject a
-    * deterministic concurrent commit (no thread timing) to drive the
-    * rebase path. No-op in production.
-    */
-  private[graft] var compactCommitFault: () => Unit = () => ()
-
-  /** Optimistic-concurrency rebase for a LOST compaction commit. When
-    * only APPENDS interleaved, the staged rewrite of the original chain
-    * still replaces exactly those dirs — the rebased manifest is
-    * [compacted dir] ++ [interleaved append dirs], the compacted dir
-    * re-homed at the new version by pure rename (its content never
-    * changes, so nothing re-stages and the rebase never scans the
-    * table). The interleaved appends were deduped against a bloom
-    * covering the compacted content, so the content-dedup invariant is
-    * untouched. Tombstones clear as in any compaction: the parent's
-    * overlay is materialized in the compacted output, and append
-    * commits never add tombstones, so the appended rows were never
-    * masked. Bloom selection:
-    *
-    *   - parent had NO tombstones: compacted content == parent content,
-    *     and the winner's manifest-named bloom already covers
-    *     parent ∪ appends — the rebased manifest references the
-    *     WINNER's bloom. (If the winner names none, the rebase names
-    *     none: the compaction's own bloom under-covers the appends and
-    *     naming it would let a replayed append row pass as
-    *     probe-negative; the next ingest pays the documented one-scan
-    *     rebuild instead.)
-    *   - tombstones were materialized: deleted content must LEAVE the
-    *     dedup universe here (the re-admission contract), so the
-    *     winner's bloom — which still covers it — is unusable; the
-    *     bloom rebuilt from the compacted output merges the append
-    *     dirs' ~16 B/row hash sidecars (O(delta)). Without a rebuilt
-    *     bloom (no `textCol`) or a missing sidecar, the manifest names
-    *     none.
-    *
-    * A concurrent COMPACT refuses: the chain this rewrite replaces no
-    * longer exists, so the staged output is obsolete — and the caller's
-    * compaction goal is already met by the winner. Rewrites (overwrite/
-    * merge/merge-on-read) and schema/partition changes refuse loudly,
-    * as in [[rebaseLostAppend]]. Returns the committed dir name.
-    */
-  private def rebaseLostCompact(spark: SparkSession, path: String,
-      parentM: Manifest, parentV: Long, committedSchema: StructType,
-      effStats: Seq[String], compactedDir0: String,
-      rebuiltBloom: Option[org.apache.spark.util.sketch.BloomFilter],
-      expectedItems: Long, fpp: Double, retries: Int): String = {
-    import org.apache.spark.sql.functions._
-    val f = fs(spark, new Path(path))
-    var compactedDir = compactedDir0
-    var attempt = 0
-    while (true) {
-      // note: a binpack interleave REFUSES here (unlike the append/MOR
-      // rebases) — winnerM.dirs.filterNot(parentSet) below would list
-      // the binpacked dir next to this compaction's full rewrite and
-      // double-count the merged content
-      val (winnerV, winnerM, _) = rebaseWinnerChain(spark, path,
-        parentV, "compaction", Some(committedSchema), parentM.partitionCols,
-        expectPhysmap = parentM.physmap,
-        validateKind =
-        (cv, k) => {
-          if (k == "compact") throw new java.io.IOException(
-            s"compaction at $path lost the commit race to a concurrent compaction " +
-              s"(version $cv); this rewrite is obsolete — the chain it replaced " +
-              "no longer exists and the winner already compacted it")
-          if (k != "append" && k != "fast-forward") throw new java.io.IOException(
-            s"compaction at $path lost the commit race to version $cv (kind '$k'); " +
-              "only append interleavings rebase automatically — re-run the " +
-              "compaction against the current snapshot")
-        })
-      val parentSet = parentM.dirs.toSet
-      val appendAdded = winnerM.dirs.filterNot(parentSet)
-      val next = winnerV + 1
-      val newDir = stageDir(next)
-      renameStaged(f, path, compactedDir, newDir)
-      val bloomName =
-        if (!parentM.hasOverlay) winnerM.bloom
-        else rebuiltBloom.flatMap { rb =>
-          val sidecars = appendAdded.map(d => hashesDir(path, d))
-          if (appendAdded.isEmpty || sidecars.forall(f.exists)) {
-            val merged =
-              if (appendAdded.isEmpty) Some(rb)
-              else {
-                // re-merging dirs already merged on a prior attempt is
-                // a bitwise-idempotent OR — safe across the retry loop
-                val ab = bloomOf(
-                  spark.read.format(parentM.format)
-                    .load(sidecars.map(_.toString): _*),
-                  xxhash64(col("__h")), expectedItems, fpp)
-                if (rb.isCompatible(ab)) { rb.mergeInPlace(ab); Some(rb) }
-                else None
-              }
-            merged.map { b =>
-              val name = f"b$next%08d-${newDir.takeRight(8)}.bin"
-              writeBloomAt(spark, path, name, b)
-              name
-            }
-          } else None
-        }
-      try {
-        commit(spark, path, next, Manifest(newDir +: appendAdded, parentM.format,
-          bloomName, Some(committedSchema), effStats,
-          kind = Some("compact"), partitionCols = parentM.partitionCols,
-          constraints = winnerM.constraints,
-          physmap = winnerM.physmap, physRetired = winnerM.physRetired))
-        return newDir
-      } catch {
-        case _: CommitConflictException =>
-          attempt += 1
-          if (attempt >= retries) throw new java.io.IOException(
-            s"compaction at $path lost $retries consecutive commit races; " +
-              "giving up — retry under lower commit contention")
-          compactedDir = newDir
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** Re-home a staged delta at a new commit version by pure rename:
-    * the data dir plus its hash and stats sidecars (both keyed by dir
-    * name; stats rows key on FILE names, which rename preserves).
-    */
-  private def renameStaged(f: org.apache.hadoop.fs.FileSystem, path: String,
-                           from: String, to: String): Unit = {
-    if (!f.rename(new Path(path, from), new Path(path, to)))
-      throw new java.io.IOException(
-        s"rebase could not rename staged dir $from to $to under $path")
-    Seq((hashesDir(path, from), hashesDir(path, to)),
-        (statsDir(path, from), statsDir(path, to))).foreach { case (a, b) =>
-      if (f.exists(a) && !f.rename(a, b)) throw new java.io.IOException(
-        s"rebase could not rename sidecar $a to $b")
-    }
-  }
-
   /** Incremental content-dedup ingest — "this batch minus ALL prior
     * content" as one committed operator (the cronjob shape of corpus
     * dedup at 100 TB, [[Dedup.newDocuments]] wired over snapshot
@@ -3932,12 +3704,22 @@ object SnapshotTable {
     *
     * CONCURRENT INGESTS both succeed: a committer that loses the
     * version-slot race REBASES its staged delta onto the winner's
-    * state instead of failing — re-deduped against the interleaved
-    * appends' hash sidecars so the content-dedup invariant holds under
-    * concurrency, at O(delta) cost and bounded retries (see
-    * [[rebaseLostAppend]]). Interleaved rewrites (overwrite / merge /
-    * merge-on-read) or schema changes refuse the rebase loudly; the
-    * caller re-runs against the new snapshot.
+    * state instead of failing ([[commitLoop]]), at O(delta) cost — the
+    * rebase never scans the table. It rebases over commits that keep
+    * the content its dedup decisions were made against: appends add
+    * content (the staged rows are re-deduped against the interleaved
+    * appends' ~16 B/row hash sidecars, per-dir payload fallback, so
+    * rows a racer admitted first drop out and the survivors are
+    * rewritten), compact/binpack preserve it (a binpack's merged-away
+    * dirs keep their sidecars for the retained old snapshot), and
+    * positional deletes only mask it. The delta's bloom merges into the
+    * WINNER's, which already covers the interleaved content (the delta
+    * bloom may over-cover dropped rows — always safe, the hash verify
+    * catches false positives); a winner with no compatible bloom makes
+    * the commit name none, and the next ingest pays the one-scan
+    * rebuild. Rewrites (overwrite / merge / merge-on-read) invalidate
+    * the staged dedup decisions and refuse loudly, as do schema
+    * changes; the caller re-runs against the new snapshot.
     */
   def ingest(spark: SparkSession, incoming: DataFrame, path: String,
              textCol: String, expectedItems: Long = 1000000L,
@@ -4030,11 +3812,12 @@ object SnapshotTable {
       // A partitioned dir reads with the committed schema so partition
       // values come back in their declared types, not path-inferred ones.
       // Raw re-reads see PHYSICAL column names.
-      val writtenReader = spark.read.format(format)
-      val written =
-        (if (effParts.isEmpty) writtenReader
-         else writtenReader.schema(physSchema(committedSchema, physmap)))
-          .load(new Path(path, deltaDir).toString)
+      def readStaged(dir: String) = {
+        val r = spark.read.format(format)
+        (if (effParts.isEmpty) r else r.schema(physSchema(committedSchema, physmap)))
+          .load(new Path(path, dir).toString)
+      }
+      val written = readStaged(deltaDir)
       val nNew = written.count()
       val deltaBloom = bloomOf(written,
         xxhash64(contentKey(col(physText))), expectedItems, fpp)
@@ -4061,49 +3844,71 @@ object SnapshotTable {
       writeStatsSidecar(spark, path, deltaDir, written,
         effStats.map(c => physmap.getOrElse(c, c)))
       writeBloomAt(spark, path, bloomName, merged)
-      // an append carries the parent's tombstone overlay forward
-      // untouched: the delta's rows commit at a LATER version than
-      // every outstanding tombstone, so the mask never touches them
-      val fault = ingestCommitFault
-      ingestCommitFault = () => ()
-      fault()
-      try {
-        commit(spark, path, next, Manifest(parentDirs :+ deltaDir, format,
-          Some(bloomName), Some(committedSchema), effStats,
-          parent.map(_.tombstones).getOrElse(Nil),
-          parent.flatMap(_.morKey), kind = Some("append"),
-          partitionCols = effParts,
-          constraints = parent.map(_.constraints).getOrElse(Nil),
-          physmap = physmap, physRetired = parentRetired,
-          // an append cannot heal pre-existing untrusted sidecars (its
-          // own delta sidecar is fresh, but the parent dirs' are not)
-          hashesValid = parent.forall(_.hashesValid),
-          posDeletes = parent.map(_.posDeletes).getOrElse(Nil),
-          partEvolved = parent.exists(_.partEvolved)))
-        IngestStats(next, nIncoming, nNew)
-      } catch {
-        case _: CommitConflictException =>
-          // a concurrent committer took our version slot: rebase the
-          // staged delta onto the winner's state (see
-          // [[rebaseLostAppend]]) instead of throwing work away
-          val (v, n) = rebaseLostAppend(spark, path, textCol, format,
-            committedSchema, effStats, effParts, deltaBloom,
-            deltaDir, cur, parentDirs, retries = 5,
-            physmap = physmap, physRetired = parentRetired,
-            regate = rebaseRegate)
-          IngestStats(v, nIncoming, n)
+      var nCommitted = nNew
+      val version = commitLoop(spark, path, "ingest", cur.getOrElse(0L), parent,
+          Seq(deltaDir), admits = Seq("append", "fast-forward", "compact", "binpack",
+            "posdelete", "posdelete-compact")) { (v, base, chain) =>
+        val dir = atVersion(deltaDir, v)
+        val bloom =
+          if (chain.isEmpty) Some(bloomName)
+          else {
+            // dirs the interleaved APPENDs (and fast-forwards, which add
+            // dirs the same way) added; a compact REPLACES the dir list
+            // but keeps content the delta was already deduped against
+            val appendAdded = (parentDirs +: chain.map(_._2.dirs)).zip(chain.map(_._2))
+              .flatMap { case (prev, mm) =>
+                if (mm.kind.exists(k => k == "append" || k == "fast-forward"))
+                  mm.dirs.diff(prev)
+                else Nil
+              }
+            if (appendAdded.nonEmpty) {
+              val f = fs(spark, new Path(path))
+              val stagedRead = readStaged(dir)
+              val sidecars = appendAdded.map(d => hashesDir(path, d))
+              val theirs =
+                if (sidecars.forall(f.exists))
+                  spark.read.format(format).load(sidecars.map(_.toString): _*)
+                else rawScan(spark, path,
+                    base.get.copy(dirs = appendAdded, tombstones = Nil))
+                  .select(contentKey(col(textCol)).as("__h"))
+              val survExact = stagedRead.join(theirs,
+                contentKey(stagedRead(physText)) === col("__h"), "left_anti")
+              val surv = rebaseRegate.fold(survExact)(g => g(survExact, appendAdded, v - 1))
+              val nSurv = surv.count()
+              if (nSurv != stagedRead.count()) {
+                // a racer admitted some of our content first: rewrite the
+                // survivors (raw, already-physical names — no translation)
+                // and swap them in under the staged name
+                val tmp = stageDir(v)
+                stagedWrite(surv.select(physSchema(committedSchema, physmap)
+                  .fieldNames.map(col(_)).toSeq: _*),
+                  new Path(path, tmp), format, effParts.map(c => physmap.getOrElse(c, c)))
+                val rewritten = readStaged(tmp)
+                writeHashSidecar(spark, path, tmp, rewritten, physText, format)
+                writeStatsSidecar(spark, path, tmp, rewritten,
+                  effStats.map(c => physmap.getOrElse(c, c)))
+                stagedPaths(path, dir).foreach(f.delete(_, true))
+                renameStaged(f, path, tmp, dir)
+              }
+              nCommitted = nSurv
+            }
+            readBloom(spark, path, v - 1) match {
+              case Some(wb) if wb.isCompatible(deltaBloom) =>
+                wb.mergeInPlace(deltaBloom)
+                val name = f"b$v%08d-${dir.takeRight(8)}.bin"
+                writeBloomAt(spark, path, name, wb)
+                Some(name)
+              case _ => None
+            }
+          }
+        Some(appendManifest(base, dir, format, bloom, committedSchema, effStats,
+          effParts, physmap, parentRetired))
       }
+      IngestStats(version, nIncoming, nCommitted)
     } finally { if (weCached) { incoming.unpersist(); () } }
   }
 
   // ---- plain append (the SQL INSERT INTO kernel) --------------------------
-
-  /** Test seam: invoked exactly once immediately before [[append]]'s
-    * first commit attempt, then self-clears. Lets specs inject a
-    * deterministic concurrent commit (no thread timing) to drive the
-    * rebase path. No-op in production.
-    */
-  private[graft] var appendCommitFault: () => Unit = () => ()
 
   /** Plain committed APPEND — SQL `INSERT INTO` semantics over the
     * snapshot chain (the kernel behind the DataSource V2 write path,
@@ -4132,15 +3937,19 @@ object SnapshotTable {
     *
     * A first commit CREATES the table (defines schema, partitioning,
     * stats config) — the CTAS path. Concurrency: a lost version-slot
-    * race rebases over content-compatible interleavings (append /
-    * compact / binpack / posdelete / posdelete-compact) by re-homing the
-    * staged delta at the winner's next version — a pure rename, O(1)
-    * data I/O — and conflicts loudly on rewrites or schema changes.
-    * Returns the committed version.
+    * race re-homes the staged delta at the winner's next version — a
+    * pure rename, O(1) data I/O ([[commitLoop]]) — over every
+    * interleaving that keeps the rows it appends to: content-preserving
+    * ones (append / compact / binpack) and overlay ones (posdelete /
+    * posupdate / merge-on-read / posdelete-compact). The delta
+    * references NO existing rows and re-homes to a version STRICTLY
+    * LATER than any racer tombstone, so no overlay can mask it.
+    * Rewrites and schema changes conflict loudly. Returns the committed
+    * version.
     */
   def append(spark: SparkSession, incoming: DataFrame, path: String,
              format: String = "parquet", statsCols: Seq[String] = Nil,
-             partitionCols: Seq[String] = Nil, retries: Int = 5): Long = {
+             partitionCols: Seq[String] = Nil): Long = {
     import org.apache.spark.sql.functions._
     val cur = currentVersion(spark, path)
     val next = cur.getOrElse(0L) + 1
@@ -4175,63 +3984,12 @@ object SnapshotTable {
           .load(new Path(path, deltaDir).toString)
       writeStatsSidecar(spark, path, deltaDir, written,
         effStats.map(c => physmap.getOrElse(c, c)))
-      val fault = appendCommitFault
-      appendCommitFault = () => ()
-      fault()
-      val f = fs(spark, new Path(path))
-      var stagedDir = deltaDir
-      var parentV = cur
-      var parentM = parent
-      var attempt = 0
-      while (true) {
-        val v = parentV.getOrElse(0L) + 1
-        val dirAtV = if (dirVersion(stagedDir) == v) stagedDir else {
-          val renamed = stageDir(v)
-          renameStaged(f, path, stagedDir, renamed)
-          renamed
-        }
-        stagedDir = dirAtV
-        try {
-          commit(spark, path, v, Manifest(
-            parentM.map(_.dirs).getOrElse(Nil) :+ dirAtV, format,
-            None, Some(committedSchema), effStats,
-            parentM.map(_.tombstones).getOrElse(Nil),
-            parentM.flatMap(_.morKey), kind = Some("append"),
-            partitionCols = effParts,
-            constraints = parentM.map(_.constraints).getOrElse(Nil),
-            physmap = physmap, physRetired = parentRetired,
-            hashesValid = parentM.forall(_.hashesValid),
-            posDeletes = parentM.map(_.posDeletes).getOrElse(Nil),
-            partEvolved = parentM.exists(_.partEvolved)))
-          return v
-        } catch {
-          case _: CommitConflictException =>
-            // posupdate and merge-on-read racers are safe for a plain
-            // append: the staged delta references NO existing rows, and
-            // its dir re-homes to a version STRICTLY LATER than any
-            // racer tombstone, so the overlay can never mask it —
-            // matching commitPositionalDelta's insert-only whitelist
-            val (winnerV, winnerM, _) = rebaseWinnerChain(spark, path,
-              parentV.getOrElse(0L), "append", Some(committedSchema), effParts,
-              (cv, k) => if (k != "append" && k != "fast-forward" &&
-                  k != "compact" && k != "binpack" &&
-                  k != "posdelete" && k != "posupdate" && k != "merge-on-read" &&
-                  k != "posdelete-compact")
-                throw new java.io.IOException(
-                  s"append at $path lost the commit race to version $cv (kind '$k'); " +
-                    "only content-preserving interleavings (append/compact/binpack/" +
-                    "posdelete/posupdate/merge-on-read) rebase " +
-                    "automatically — re-run the append against the current snapshot"),
-              expectPhysmap = physmap)
-            attempt += 1
-            if (attempt >= retries) throw new java.io.IOException(
-              s"append at $path lost $retries consecutive commit races; " +
-                "giving up — retry under lower commit contention")
-            parentV = Some(winnerV)
-            parentM = Some(winnerM)
-        }
+      commitLoop(spark, path, "append", cur.getOrElse(0L), parent, Seq(deltaDir),
+          admits = Seq("append", "fast-forward", "compact", "binpack", "posdelete",
+            "posupdate", "merge-on-read", "posdelete-compact")) { (v, base, _) =>
+        Some(appendManifest(base, atVersion(deltaDir, v), format, None,
+          committedSchema, effStats, effParts, physmap, parentRetired))
       }
-      throw new IllegalStateException("unreachable")
     } finally { if (weCached) { incoming.unpersist(); () } }
   }
 
@@ -4328,18 +4086,18 @@ object SnapshotTable {
     * epoch's rows (physical names, hive layout, written executor-side);
     * this writes its stats sidecar and lands an ordinary APPEND commit
     * carrying the `(queryId, epochId)` marker [[streamEpochCommitted]]
-    * replays against. Concurrency mirrors [[append]]'s rebase (content-
-    * preserving interleavings re-home the dir), with one extra gate: a
-    * racer that turns out to be ANOTHER INCARNATION of this same query
-    * committing this same epoch (zombie driver) makes our staged delta
-    * a duplicate — it is dropped and the winner's version returned, so
-    * exactly-once holds even under concurrent drivers. Terminal failure
-    * reclaims the staged dir and its stats sidecar.
+    * replays against. Concurrency admits what [[append]] does, for the
+    * same reason (an epoch's rows reference no existing rows), with one
+    * extra gate: a racer that turns out to be ANOTHER INCARNATION of
+    * this same query committing this same epoch (zombie driver) makes
+    * our staged delta a duplicate — it is dropped and the winner's
+    * version returned, so exactly-once holds even under concurrent
+    * drivers. Terminal failure reclaims the staged dir and its stats
+    * sidecar.
     */
   private[graft] def commitStreamAppend(spark: SparkSession, path: String,
       stagedDir0: String, plan: StreamWritePlan,
-      queryId: String, epochId: Long, retries: Int = 5): Long = {
-    import org.apache.spark.sql.functions.col
+      queryId: String, epochId: Long): Long = {
     val f = fs(spark, new Path(path))
     val writtenReader = spark.read.format(plan.format)
     val written =
@@ -4348,101 +4106,48 @@ object SnapshotTable {
         .load(new Path(path, stagedDir0).toString)
     writeStatsSidecar(spark, path, stagedDir0, written,
       plan.statsCols.map(c => plan.physmap.getOrElse(c, c)))
-    var stagedDir = stagedDir0
-    var parentV = currentVersion(spark, path)
-    var parentM = parentV.map(v => readManifestChecked(spark, path, v))
-    // zombie gate, upfront edition: another incarnation may have landed
-    // this epoch between the caller's check and this parent resolution —
-    // the conflict-path gate below only fires when the version SLOT
-    // collides, which it no longer would
-    if (streamEpochCommitted(spark, path, queryId, epochId)) {
-      f.delete(new Path(path, stagedDir), true)
-      f.delete(statsDir(path, stagedDir), true)
-      return parentV.getOrElse(throw new IllegalStateException(
-        s"epoch marker present but no current version at $path"))
-    }
-    var attempt = 0
-    try {
-      if (plan.creates && parentM.isDefined)
-        throw new java.io.IOException(
-          s"streaming sink at $path resolved against an empty path but another " +
-            "writer created the table first — restart the query so the schema " +
-            "contract re-resolves against the committed table")
-      // a long-running stream races table DDL WITHOUT ever colliding on
-      // a version slot: a constraint added, a schema evolved, a column
-      // renamed, or partitioning changed BETWEEN epochs would otherwise
-      // be silently REGRESSED by this epoch's manifest (which re-states
-      // the plan's query-start view) and un-enforced by its writers —
-      // refuse loudly; the query restart re-resolves the plan
-      parentM.foreach { pm =>
-        val drift =
-          pm.schema.exists(_ != plan.committedSchema) ||
-            pm.physmap != plan.physmap ||
-            pm.partitionCols != plan.partitionCols ||
-            pm.constraints != plan.constraints
-        if (drift) throw new java.io.IOException(
-          s"streaming sink at $path: the table's schema, column mapping, " +
-            "partitioning, or constraints changed since the query started " +
-            "(DDL mid-stream); restart the query so the write plan " +
-            "re-resolves against the current table")
-      }
-      while (true) {
-        val v = parentV.getOrElse(0L) + 1
-        if (dirVersion(stagedDir) != v) {
-          val r = stageDir(v); renameStaged(f, path, stagedDir, r); stagedDir = r
+    val parentV = currentVersion(spark, path)
+    commitLoop(spark, path, "streaming append", parentV.getOrElse(0L),
+        parentV.map(v => readManifestChecked(spark, path, v)), Seq(stagedDir0),
+        admits = Seq("append", "fast-forward", "compact", "binpack", "posdelete",
+          "posupdate", "merge-on-read", "posdelete-compact"),
+        reclaim = Some(Nil)) { (v, base, chain) =>
+      if (streamEpochCommitted(spark, path, queryId, epochId)) {
+        // zombie gate, checked on every attempt: another incarnation
+        // landed this epoch before the parent resolution or in our slot
+        stagedPaths(path, atVersion(stagedDir0, v)).foreach(f.delete(_, true))
+        None
+      } else {
+        // DDL gate against the parent the query resolved: a long-running
+        // stream races table DDL WITHOUT ever colliding on a version
+        // slot — a constraint added, a schema evolved, a column renamed,
+        // or partitioning changed BETWEEN epochs would otherwise be
+        // silently REGRESSED by this epoch's manifest (which re-states
+        // the plan's query-start view) and un-enforced by its writers.
+        // A retry's winner chain passed the admission check instead.
+        if (chain.isEmpty) {
+          if (plan.creates && base.isDefined) throw new java.io.IOException(
+            s"streaming sink at $path resolved against an empty path but another " +
+              "writer created the table first — restart the query so the schema " +
+              "contract re-resolves against the committed table")
+          base.foreach { pm =>
+            val drift =
+              pm.schema.exists(_ != plan.committedSchema) ||
+                pm.physmap != plan.physmap ||
+                pm.partitionCols != plan.partitionCols ||
+                pm.constraints != plan.constraints
+            if (drift) throw new java.io.IOException(
+              s"streaming sink at $path: the table's schema, column mapping, " +
+                "partitioning, or constraints changed since the query started " +
+                "(DDL mid-stream); restart the query so the write plan " +
+                "re-resolves against the current table")
+          }
         }
-        try {
-          commit(spark, path, v, Manifest(
-            parentM.map(_.dirs).getOrElse(Nil) :+ stagedDir, plan.format,
-            None, Some(plan.committedSchema), plan.statsCols,
-            parentM.map(_.tombstones).getOrElse(Nil),
-            parentM.flatMap(_.morKey), kind = Some("append"),
-            partitionCols = plan.partitionCols,
-            constraints = parentM.map(_.constraints).getOrElse(plan.constraints),
-            physmap = plan.physmap, physRetired = plan.physRetired,
-            hashesValid = parentM.forall(_.hashesValid),
-            posDeletes = parentM.map(_.posDeletes).getOrElse(Nil),
-            streamEpoch = Some((queryId, epochId)),
-            partEvolved = parentM.exists(_.partEvolved)))
-          return v
-        } catch {
-          case _: CommitConflictException =>
-            if (streamEpochCommitted(spark, path, queryId, epochId)) {
-              f.delete(new Path(path, stagedDir), true)
-              f.delete(statsDir(path, stagedDir), true)
-              return currentVersion(spark, path).getOrElse(
-                throw new IllegalStateException(
-                  s"epoch marker present but no current version at $path"))
-            }
-            val (winnerV, winnerM, _) = rebaseWinnerChain(spark, path,
-              parentV.getOrElse(0L), "streaming append",
-              Some(plan.committedSchema), plan.partitionCols,
-              (cv, k) => if (k != "append" && k != "fast-forward" &&
-                  k != "compact" && k != "binpack" &&
-                  k != "posdelete" && k != "posupdate" && k != "merge-on-read" &&
-                  k != "posdelete-compact")
-                throw new java.io.IOException(
-                  s"streaming append at $path lost the commit race to version " +
-                    s"$cv (kind '$k'); only content-preserving interleavings " +
-                    "rebase automatically — restart the query against the " +
-                    "current snapshot"),
-              expectPhysmap = plan.physmap)
-            attempt += 1
-            if (attempt >= retries) throw new java.io.IOException(
-              s"streaming append at $path lost $retries consecutive commit " +
-                "races; giving up — retry under lower commit contention")
-            parentV = Some(winnerV)
-            parentM = Some(winnerM)
-        }
+        Some(appendManifest(base, atVersion(stagedDir0, v), plan.format, None,
+          plan.committedSchema, plan.statsCols, plan.partitionCols, plan.physmap,
+          plan.physRetired).copy(streamEpoch = Some((queryId, epochId)),
+          constraints = base.fold(plan.constraints)(_.constraints)))
       }
-      throw new IllegalStateException("unreachable")
-    } catch {
-      case e: Throwable =>
-        try {
-          f.delete(new Path(path, stagedDir), true)
-          f.delete(statsDir(path, stagedDir), true)
-        } catch { case _: Throwable => () }
-        throw e
     }
   }
 
@@ -4845,12 +4550,21 @@ object SnapshotTable {
     * log flags it like a rewrite — consumers re-sync via [[readAt]].
     *
     * CONCURRENT APPENDS and MERGE-ON-READS are safe: a commit that
-    * loses the version-slot race REBASES — delta dir, sidecars, and
-    * tombstone re-home by pure rename at the new version, which is
-    * serially exact because change values come from the batch, never
-    * the table (see [[rebaseLostMergeOnRead]]). Rewrites, schema or
-    * partition changes, or a winner pinned to a different key refuse
-    * loudly; re-running the merge is O(change batch).
+    * loses the version-slot race REBASES ([[commitLoop]]) — delta dir,
+    * sidecars, and tombstone re-home by pure rename at the new version
+    * (the tombstone keeps its uuid and gains the version prefix
+    * [[applyTombstones]] orders by), and the table is never scanned.
+    * That is serially exact because change values come from the
+    * CHANGE BATCH, never the table: the re-homed tombstone masks the
+    * interleaved appends' rows for the changed keys — exactly what a
+    * serial append-then-merge would do — and the upserts are
+    * byte-identical either way. A binpack is content-preserving (the
+    * tombstone masks its merged dir like any earlier dir), and racing
+    * merge-on-reads (two CDC-apply sinks) stack at distinct versions,
+    * each masking strictly below its own, provided the chain stays
+    * keyed on ONE column — a winner pinned to a different key refuses.
+    * Rewrites (overwrite / compact / COW merge) and schema or partition
+    * changes refuse loudly; re-running the merge is O(change batch).
     */
   def mergeOnRead(spark: SparkSession, changes: DataFrame, path: String,
                   keyCol: String, deleteCol: Option[String] = None,
@@ -4883,24 +4597,11 @@ object SnapshotTable {
       val (winning, upserts) =
         winningAndUpserts(gatedChanges, keyCol, deleteCol, orderCol, tableSchema)
       val nChanges = winning.count()
-      if (nChanges == 0) {
-        // a batch that touches nothing (e.g. deleteWhere matching zero
-        // rows) must not pin morKey or grow the overlay — commit an
-        // audit version IDENTICAL to the parent (streaming sinks keep
-        // their one-commit-per-batch trail; reads pay nothing new)
-        try commit(spark, path, next, m.copy(kind = Some("merge-on-read")))
-        catch {
-          case _: CommitConflictException =>
-            // nothing staged: the audit no-op re-homes as a copy of the
-            // WINNER's manifest (same acceptance rule as the real rebase)
-            val (rv, rout) = rebaseLostMergeOnRead(spark, path, m, cur,
-              tableSchema, keyCol, None, None, textCol, statsCols,
-              expectedItems, fpp, retries = 5)
-            return MergeOnReadStats(rv, 0L, 0L, 0L, rout)
-        }
-        return MergeOnReadStats(next, 0L, 0L, 0L, m.tombstones.size)
-      }
-      val nUpserts = upserts.count()
+      // a batch that touches nothing (e.g. deleteWhere matching zero
+      // rows) must not pin morKey or grow the overlay — it commits an
+      // audit version IDENTICAL to its base (streaming sinks keep their
+      // one-commit-per-batch trail; reads pay nothing new)
+      val nUpserts = if (nChanges == 0) 0L else upserts.count()
       val deltaDir = if (nUpserts == 0) None else {
         val d = stageDir(next)
         stagedWrite(upserts, new Path(path, d), m.format, m.partitionCols,
@@ -4911,210 +4612,80 @@ object SnapshotTable {
       // the key's prior row (the replacement lives in the delta dir,
       // committed at the same version the mask exempts), a delete masks
       // it with no replacement. One small file — keys are delta-scale.
-      val tName = f"t$next%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-      winning.filter(col(keyCol).isNotNull).select(col(keyCol))
-        .coalesce(1)
-        .write.mode("overwrite").format(m.format)
-        .save(tombstonePath(path, tName).toString)
-      val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
-      // delta-dir sidecars mirror ingest's: stats for pruning, and —
-      // when the dedup gate is live — the hash sidecar plus the bloom
-      // extended with the upserts' content. A pure-delete commit (no
-      // delta dir) carries the parent's bloom BY REFERENCE: nothing was
-      // added, so it still over-covers. A commit that adds rows it
-      // cannot fold into the bloom (no textCol / no prior / params
-      // changed) must name NO bloom — a stale name would claim coverage
-      // the upserts break, letting a later dup of them probe negative.
-      val bloomName = deltaDir match {
-        case None => m.bloom
-        case Some(d) =>
-          lazy val written = {
-            val r = spark.read.format(m.format)
-            (if (m.partitionCols.isEmpty) r
-             else r.schema(physSchema(tableSchema, m.physmap)))
-              .load(new Path(path, d).toString)
-          }
-          writeStatsSidecar(spark, path, d, written, effStats.map(m.physOf))
-          textCol.flatMap { tc =>
-            writeHashSidecar(spark, path, d, written, m.physOf(tc), m.format)
-            readBloom(spark, path, cur).flatMap { prior =>
-              val deltaBloom = bloomOf(written,
-                xxhash64(contentKey(col(m.physOf(tc)))), expectedItems, fpp)
-              if (!prior.isCompatible(deltaBloom)) None
-              else {
-                prior.mergeInPlace(deltaBloom)
-                val name = f"b$next%08d-${d.takeRight(8)}.bin"
-                writeBloomAt(spark, path, name, prior)
-                Some(name)
-              }
+      val tName = if (nChanges == 0) None else {
+        val t = f"t$next%08d-${java.util.UUID.randomUUID().toString.take(8)}"
+        winning.filter(col(keyCol).isNotNull).select(col(keyCol))
+          .coalesce(1)
+          .write.mode("overwrite").format(m.format)
+          .save(tombstonePath(path, t).toString)
+        Some(t)
+      }
+      def readStaged(d: String) = {
+        val r = spark.read.format(m.format)
+        (if (m.partitionCols.isEmpty) r else r.schema(physSchema(tableSchema, m.physmap)))
+          .load(new Path(path, d).toString)
+      }
+      lazy val written0 = readStaged(deltaDir.get)
+      // delta-dir sidecars mirror ingest's: stats for pruning, and the
+      // hash sidecar when the dedup gate is live
+      deltaDir.foreach { d =>
+        writeStatsSidecar(spark, path, d, written0,
+          (if (statsCols.nonEmpty) statsCols else m.statsCols).map(m.physOf))
+        textCol.foreach(tc =>
+          writeHashSidecar(spark, path, d, written0, m.physOf(tc), m.format))
+      }
+      var outstanding = 0
+      val version = commitLoop(spark, path, "merge-on-read", cur, Some(m),
+          deltaDir.toSeq ++ tName,
+          admits = Seq("append", "fast-forward", "merge-on-read", "binpack")) {
+        (v, base, chain) =>
+          val b = base.get
+          outstanding = b.tombstones.size + tName.size
+          if (tName.isEmpty) Some(b.copy(kind = Some("merge-on-read")))
+          else {
+            b.morKey.filter(_ != keyCol).foreach(k => throw new java.io.IOException(
+              s"merge-on-read at $path lost the commit race to an overlay keyed on '$k' " +
+                s"(this merge is keyed on '$keyCol'); the chain pins one key column — " +
+                "re-run the merge against the current snapshot after a rewrite clears it"))
+            val delta = deltaDir.map(atVersion(_, v))
+            // bloom: a pure-delete commit carries its base's BY REFERENCE
+            // (nothing was added, so it still over-covers); upserts fold
+            // into it. A commit that adds rows it cannot fold (no textCol
+            // / no bloom / params changed) must name NO bloom — a stale
+            // name would claim coverage the upserts break, letting a
+            // later dup of them probe negative.
+            val bloom = delta match {
+              case None => b.bloom
+              case Some(d) =>
+                textCol.flatMap { tc =>
+                  readBloom(spark, path, v - 1).flatMap { prior =>
+                    val deltaBloom = bloomOf(if (chain.isEmpty) written0 else readStaged(d),
+                      xxhash64(contentKey(col(m.physOf(tc)))), expectedItems, fpp)
+                    if (!prior.isCompatible(deltaBloom)) None
+                    else {
+                      prior.mergeInPlace(deltaBloom)
+                      val name = f"b$v%08d-${d.takeRight(8)}.bin"
+                      writeBloomAt(spark, path, name, prior)
+                      Some(name)
+                    }
+                  }
+                }
             }
+            Some(Manifest(b.dirs ++ delta, b.format, bloom, Some(tableSchema),
+              if (statsCols.nonEmpty) statsCols else b.statsCols,
+              b.tombstones ++ tName.map(atVersion(_, v)), Some(keyCol),
+              kind = Some("merge-on-read"), partitionCols = b.partitionCols,
+              constraints = b.constraints, physmap = b.physmap,
+              physRetired = b.physRetired, hashesValid = b.hashesValid,
+              posDeletes = b.posDeletes, partEvolved = b.partEvolved))
           }
       }
-      val fault = morCommitFault
-      morCommitFault = () => ()
-      fault()
-      try {
-        commit(spark, path, next, Manifest(m.dirs ++ deltaDir.toSeq, m.format,
-          bloomName, Some(tableSchema), effStats,
-          m.tombstones :+ tName, Some(keyCol), kind = Some("merge-on-read"),
-          partitionCols = m.partitionCols, constraints = m.constraints,
-          physmap = m.physmap, physRetired = m.physRetired,
-          hashesValid = m.hashesValid, posDeletes = m.posDeletes,
-          partEvolved = m.partEvolved))
-        MergeOnReadStats(next, nChanges, nUpserts, nChanges - nUpserts,
-          m.tombstones.size + 1)
-      } catch {
-        case _: CommitConflictException =>
-          val (rv, rout) = rebaseLostMergeOnRead(spark, path, m, cur,
-            tableSchema, keyCol, deltaDir, Some(tName), textCol, statsCols,
-            expectedItems, fpp, retries = 5)
-          MergeOnReadStats(rv, nChanges, nUpserts, nChanges - nUpserts, rout)
-      }
+      MergeOnReadStats(version, nChanges, nUpserts, nChanges - nUpserts, outstanding)
     } finally { if (weCached) { changes.unpersist(); () } }
-  }
-
-  /** Test seam: invoked exactly once immediately before [[mergeOnRead]]'s
-    * first commit attempt (after all staging), then self-clears. Lets
-    * specs inject a deterministic concurrent commit to drive the rebase
-    * path. No-op in production.
-    */
-  private[graft] var morCommitFault: () => Unit = () => ()
-
-  /** Optimistic-concurrency rebase for a LOST merge-on-read commit.
-    * A MOR commit is (delta dir of winning upserts, key tombstone); its
-    * change values come from the CHANGE BATCH, never from table content,
-    * so rebasing onto interleaved APPENDS is serially exact: the
-    * tombstone re-homed at the higher rebased version masks the
-    * interleaved appends' rows for the changed keys — exactly what a
-    * serial append-then-merge would have done — and the upsert rows are
-    * byte-identical either way. Interleaved MERGE-ON-READs rebase too
-    * (two CDC-apply sinks racing): both overlays mask strictly below
-    * their own commit version, so stacking them at distinct versions
-    * reproduces the serial outcome, provided the chain stays keyed on
-    * ONE column (a winner that pinned a different `morKey` refuses).
-    * Everything re-homes by pure rename (delta dir + hash/stats
-    * sidecars via [[renameStaged]]; the tombstone file keeps its uuid,
-    * gaining the new version prefix [[applyTombstones]] orders by) — the
-    * table is never scanned. Bloom: the winner's bloom covers
-    * parent ∪ interleaved content; with a delta dir and a live dedup
-    * gate the delta's bloom re-merges into it (O(delta), re-reading the
-    * page-cache-hot staged upserts); a pure-delete rebase carries the
-    * winner's bloom by reference; a delta the gate cannot fold (no
-    * textCol / incompatible params / winner names none) names NO bloom,
-    * same as the first-attempt rule. Rewrites (overwrite / compact /
-    * binpack / COW merge), schema or partition changes refuse loudly —
-    * re-running the merge against the current snapshot is O(change).
-    */
-  private def rebaseLostMergeOnRead(spark: SparkSession, path: String,
-      parentM: Manifest, parentV: Long, tableSchema: StructType,
-      keyCol: String, deltaDir0: Option[String], tomb0: Option[String],
-      textCol: Option[String], statsColsParam: Seq[String],
-      expectedItems: Long, fpp: Double, retries: Int): (Long, Int) = {
-    import org.apache.spark.sql.functions._
-    val f = fs(spark, new Path(path))
-    var deltaDir = deltaDir0
-    var tomb = tomb0
-    var attempt = 0
-    while (true) {
-      // binpack is content-preserving: rebasing over it is the serial
-      // binpack-then-merge outcome (the re-homed tombstone masks the
-      // merged dir like any earlier dir)
-      val (winnerV, winnerM, _) = rebaseWinnerChain(spark, path,
-        parentV, "merge-on-read", Some(tableSchema), parentM.partitionCols,
-        (cv, k) => if (k != "append" && k != "fast-forward" &&
-            k != "merge-on-read" && k != "binpack")
-          throw new java.io.IOException(
-            s"merge-on-read at $path lost the commit race to version $cv (kind '$k'); " +
-              "only append/merge-on-read/binpack interleavings rebase automatically — " +
-              "re-run the merge against the current snapshot"),
-        expectPhysmap = parentM.physmap)
-      if (tomb.nonEmpty) winnerM.morKey.filter(_ != keyCol).foreach(k =>
-        throw new java.io.IOException(
-          s"merge-on-read at $path lost the commit race to an overlay keyed on '$k' " +
-            s"(this merge is keyed on '$keyCol'); the chain pins one key column — " +
-            "re-run the merge against the current snapshot after a rewrite clears it"))
-      val next = winnerV + 1
-      if (deltaDir.isEmpty && tomb.isEmpty) {
-        // audit no-op: nothing staged, commit the winner's state as-is
-        try {
-          commit(spark, path, next, winnerM.copy(kind = Some("merge-on-read")))
-          return (next, winnerM.tombstones.size)
-        } catch {
-          case _: CommitConflictException =>
-            attempt += 1
-            if (attempt >= retries) throw new java.io.IOException(
-              s"merge-on-read at $path lost $retries consecutive commit races; " +
-                "giving up — retry under lower commit contention")
-        }
-      } else {
-        val newDelta = deltaDir.map { d =>
-          val nd = stageDir(next)
-          renameStaged(f, path, d, nd)
-          nd
-        }
-        val newTomb = tomb.map { t =>
-          val nt = f"t$next%08d-${t.drop(t.indexOf('-') + 1)}"
-          if (!f.rename(tombstonePath(path, t), tombstonePath(path, nt)))
-            throw new java.io.IOException(
-              s"rebase could not rename tombstone $t to $nt under $path")
-          nt
-        }
-        val effStats =
-          if (statsColsParam.nonEmpty) statsColsParam else winnerM.statsCols
-        val bloomName = newDelta match {
-          case None => winnerM.bloom
-          case Some(d) =>
-            textCol.flatMap { tc =>
-              readBloom(spark, path, winnerV).flatMap { wb =>
-                val written = {
-                  val r = spark.read.format(winnerM.format)
-                  (if (winnerM.partitionCols.isEmpty) r
-                   else r.schema(physSchema(tableSchema, winnerM.physmap)))
-                    .load(new Path(path, d).toString)
-                }
-                val deltaBloom = bloomOf(written,
-                  xxhash64(contentKey(col(winnerM.physOf(tc)))), expectedItems, fpp)
-                if (!wb.isCompatible(deltaBloom)) None
-                else {
-                  wb.mergeInPlace(deltaBloom)
-                  val name = f"b$next%08d-${d.takeRight(8)}.bin"
-                  writeBloomAt(spark, path, name, wb)
-                  Some(name)
-                }
-              }
-            }
-        }
-        try {
-          commit(spark, path, next, Manifest(winnerM.dirs ++ newDelta.toSeq,
-            winnerM.format, bloomName, Some(tableSchema), effStats,
-            winnerM.tombstones ++ newTomb.toSeq, Some(keyCol),
-            kind = Some("merge-on-read"), partitionCols = winnerM.partitionCols,
-            constraints = winnerM.constraints,
-            physmap = winnerM.physmap, physRetired = winnerM.physRetired,
-            hashesValid = winnerM.hashesValid, posDeletes = winnerM.posDeletes,
-            partEvolved = winnerM.partEvolved))
-          return (next, winnerM.tombstones.size + 1)
-        } catch {
-          case _: CommitConflictException =>
-            attempt += 1
-            if (attempt >= retries) throw new java.io.IOException(
-              s"merge-on-read at $path lost $retries consecutive commit races; " +
-                "giving up — retry under lower commit contention")
-            deltaDir = newDelta
-            tomb = newTomb
-        }
-      }
-    }
-    throw new IllegalStateException("unreachable")
   }
 
   final case class PosDeleteStats(version: Long, nDeleted: Long,
                                   nFilesTouched: Long, committed: Boolean)
-
-  /** Test seam like the other commit faults: fires once before
-    * [[deleteWherePositional]]'s first commit attempt.
-    */
-  private[graft] var posDeleteCommitFault: () => Unit = () => ()
 
   /** SQL's `DELETE FROM t WHERE ...` as a POSITIONAL merge-on-read
     * commit — Iceberg v2's deletion-vector contract, and the tier that
@@ -5144,8 +4715,7 @@ object SnapshotTable {
     * are not retro-matched.
     */
   def deleteWherePositional(spark: SparkSession, path: String,
-                            predicate: Column,
-                            retries: Int = 5): PosDeleteStats = {
+                            predicate: Column): PosDeleteStats = {
     import org.apache.spark.sql.functions._
     val cur = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot at $path"))
@@ -5174,14 +4744,11 @@ object SnapshotTable {
       return PosDeleteStats(cur, 0L, 0L, committed = false)
     }
     val nFiles = written.select("file").distinct().count()
-    val fault = posDeleteCommitFault
-    posDeleteCommitFault = () => ()
-    fault()
     // rebase rules live in the shared kernel: file-preserving
     // interleavings rebase, rewrites refuse, overlapping positional
     // racers (same rows) refuse as write-write conflicts
     val v = commitPositionalDelta(spark, path, cur, None, Some(name),
-      "positional delete", retries)
+      "positional delete")
     PosDeleteStats(v, nDeleted, nFiles, committed = true)
   }
 
@@ -5197,62 +4764,40 @@ object SnapshotTable {
     * no-op by construction (the folded mask equals the union), so the
     * streaming data read rolls past its commit; [[addedBetween]] still
     * refuses ranges crossing it (mask equality is not provable from
-    * names alone — conservative, never wrong). Concurrency: a lost
-    * race re-resolves and re-folds the WINNER's list (bounded
-    * retries); racing appends/posdeletes/MORs all compose.
+    * names alone — conservative, never wrong). Concurrency: a fold
+    * rewrites no data file, so every interleaving that keeps the files
+    * the ordinals reference composes (appends, positional deletes and
+    * updates, merge-on-reads, other folds); a lost race re-folds the
+    * WINNER's list ([[commitLoop]]), and rewrites refuse.
     */
-  def compactPosDeletes(spark: SparkSession, path: String,
-                        retries: Int = 5): Long = {
+  def compactPosDeletes(spark: SparkSession, path: String): Long = {
     import org.apache.spark.sql.functions.col
-    var cur = currentVersion(spark, path).getOrElse(
+    val cur = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot at $path"))
-    var m = readManifestChecked(spark, path, cur)
-    var attempt = 0
-    while (true) {
-      if (m.posDeletes.size <= 1) return cur // nothing to fold
-      val name = f"p${cur + 1}%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-      m.posDeletes.map(n =>
-          spark.read.format(m.format).load(posDeletePath(path, n).toString))
-        .reduce(_ unionByName _)
-        .select(col("file"), col("ord"))
-        .distinct() // racing folds may have duplicated entries; the mask is a set
-        .write.mode("overwrite").format(m.format)
-        .save(posDeletePath(path, name).toString)
-      try {
-        commit(spark, path, cur + 1, m.copy(posDeletes = Seq(name),
-          kind = Some("posdelete-compact")))
-        return cur + 1
-      } catch {
-        case _: CommitConflictException =>
-          val (winnerV, winnerM, _) = rebaseWinnerChain(spark, path,
-            cur, "posdelete compaction", m.schema, m.partitionCols,
-            (v, k) => if (k != "append" && k != "fast-forward" &&
-                k != "posdelete" && k != "posupdate" && k != "merge-on-read" &&
-                k != "posdelete-compact")
-              throw new java.io.IOException(
-                s"posdelete compaction at $path lost the commit race to " +
-                  s"version $v (kind '$k'); re-run against the current snapshot"),
-            expectPhysmap = m.physmap)
-          attempt += 1
-          if (attempt >= retries) throw new java.io.IOException(
-            s"posdelete compaction at $path lost $retries consecutive commit " +
-              "races; giving up — retry under lower commit contention")
-          // re-fold from the winner's list: a racer may have added a
-          // NEW sidecar our fold misses
-          cur = winnerV
-          m = winnerM
+    commitLoop(spark, path, "posdelete compaction", cur,
+        Some(readManifestChecked(spark, path, cur)), Nil,
+        admits = Seq("append", "fast-forward", "posdelete", "posupdate",
+          "merge-on-read", "posdelete-compact")) { (v, base, _) =>
+      val b = base.get
+      if (b.posDeletes.size <= 1) None // nothing to fold
+      else {
+        // folds its BASE's list: on a retry that is the winner's, which
+        // may carry a racer's new sidecar an earlier fold missed
+        val name = f"p$v%08d-${java.util.UUID.randomUUID().toString.take(8)}"
+        b.posDeletes.map(n =>
+            spark.read.format(b.format).load(posDeletePath(path, n).toString))
+          .reduce(_ unionByName _)
+          .select(col("file"), col("ord"))
+          .distinct() // racing folds may have duplicated entries; the mask is a set
+          .write.mode("overwrite").format(b.format)
+          .save(posDeletePath(path, name).toString)
+        Some(b.copy(posDeletes = Seq(name), kind = Some("posdelete-compact")))
       }
     }
-    throw new IllegalStateException("unreachable")
   }
 
   final case class PosUpdateStats(version: Long, nUpdated: Long,
                                   committed: Boolean)
-
-  /** Test seam like the other commit faults: fires once before
-    * [[updateWherePositional]]'s first commit attempt.
-    */
-  private[graft] var posUpdateCommitFault: () => Unit = () => ()
 
   /** SQL's `UPDATE t SET c = expr, ... WHERE ...` as a committed
     * POSITIONAL merge-on-read operator — the keyless UPDATE completing
@@ -5285,8 +4830,7 @@ object SnapshotTable {
     * retro-matched.
     */
   def updateWherePositional(spark: SparkSession, path: String,
-                            predicate: Column, set: Map[String, Column],
-                            retries: Int = 5): PosUpdateStats = {
+                            predicate: Column, set: Map[String, Column]): PosUpdateStats = {
     import org.apache.spark.sql.functions._
     require(set.nonEmpty, "updateWherePositional: SET map is empty")
     val cur = currentVersion(spark, path).getOrElse(
@@ -5324,11 +4868,8 @@ object SnapshotTable {
       val updDir = stageDir(cur + 1)
       stagedWrite(gated.select(schema.fieldNames.map(col(_)).toSeq: _*),
         new Path(path, updDir), m.format, m.partitionCols, m.physmap)
-      val fault = posUpdateCommitFault
-      posUpdateCommitFault = () => ()
-      fault()
       val v = commitPositionalDelta(spark, path, cur, Some(updDir), Some(name),
-        "positional update", retries)
+        "positional update")
       PosUpdateStats(v, nUpdated, committed = true)
     } finally { gated.unpersist(); () }
   }
@@ -5359,10 +4900,22 @@ object SnapshotTable {
     * exact and cheap: our victims exclude rows the parent snapshot
     * already masked, so intersecting against the racers' (delta-scale)
     * sidecars — folded ones included — can only flag true racers.
+    *
+    * A keyed MERGE-ON-READ racer is never safe to rebase over: every
+    * positional-delta commit carries a READ SET evaluated at
+    * `scannedV` — the victims of a sidecar-carrying command (the racer
+    * may have upserted the rows these ordinals mask; stacking would
+    * duplicate an updated row) and the NOT-MATCHED decisions of an
+    * insert-only MERGE (the racer may have upserted the very key this
+    * commit inserts — two visible rows for one key). The positional
+    * overlap gate cannot see either (tombstones are keyed, not
+    * positional), so both shapes refuse loudly. Terminal failure
+    * reclaims the staged dir, its stats sidecar and the delete sidecar:
+    * they are uniquely named and referenced by no manifest.
     */
   private[graft] def commitPositionalDelta(spark: SparkSession, path: String,
       scannedV: Long, stagedDir0: Option[String], sidecar: Option[String],
-      opName: String, retries: Int = 5): Long = {
+      opName: String): Long = {
     require(stagedDir0.nonEmpty || sidecar.nonEmpty,
       s"$opName commit with neither staged data nor a delete sidecar")
     val m = readManifestChecked(spark, path, scannedV)
@@ -5380,97 +4933,37 @@ object SnapshotTable {
       writeStatsSidecar(spark, path, d, written,
         m.statsCols.map(c => m.physmap.getOrElse(c, c)))
     }
-    val f = fs(spark, new Path(path))
-    var stagedDir = stagedDir0
-    var parentV = scannedV
-    var parentM = m
-    var attempt = 0
-    try {
-      while (true) {
-        val v = parentV + 1
-        stagedDir = stagedDir.map { d =>
-          if (dirVersion(d) == v) d
-          else { val r = stageDir(v); renameStaged(f, path, d, r); r }
-        }
-        try {
-          commit(spark, path, v, parentM.copy(
-            dirs = parentM.dirs ++ stagedDir.toSeq,
-            bloom = if (stagedDir.isDefined) None else parentM.bloom,
-            posDeletes = parentM.posDeletes ++ sidecar.toSeq,
-            kind = Some(kind)))
-          return v
-        } catch {
-          case _: CommitConflictException =>
-            // a keyed MERGE-ON-READ racer is NEVER safe to rebase over
-            // here: every positional-delta commit carries a READ SET
-            // evaluated at scannedV — victims for a sidecar-carrying
-            // command (the racer may have upserted the same rows these
-            // ordinals mask; stacking would duplicate an updated row),
-            // and the NOT-MATCHED decisions of an insert-only MERGE
-            // (the racer may have upserted the very key this commit
-            // inserts — two visible rows for one key). The positional
-            // overlap gate below cannot see either (tombstones are
-            // keyed, not positional), so refuse loudly in both shapes.
-            val (winnerV, winnerM, _) = rebaseWinnerChain(spark, path,
-              parentV, opName, parentM.schema, parentM.partitionCols,
-              (cv, k) => {
-                val ok = k == "append" || k == "fast-forward" ||
-                  k == "posdelete" || k == "posupdate" || k == "posdelete-compact"
-                if (!ok) throw new java.io.IOException(
-                  if (k == "merge-on-read")
-                    s"$opName at $path lost the commit race to a keyed " +
-                      s"merge-on-read commit (version $cv) — the racer's " +
-                      "upserts may invalidate this command's victim or " +
-                      "not-matched decisions (stacking could duplicate or " +
-                      "resurrect rows); re-run against the current snapshot"
-                  else
-                    s"$opName at $path lost the commit race to version $cv " +
-                      s"(kind '$k'); the rewrite may have moved the rows these " +
-                      "ordinals reference — re-run against the current snapshot")
-              },
-              expectPhysmap = parentM.physmap)
-            // write-write conflict gate: sidecars the racers ADDED since
-            // our parent must not touch our victims
-            val racerSidecars =
-              winnerM.posDeletes.filterNot(parentM.posDeletes.toSet)
-            sidecar.filter(_ => racerSidecars.nonEmpty).foreach { ours =>
-              val ourDf = spark.read.format(m.format)
-                .load(posDeletePath(path, ours).toString)
-              val theirs = racerSidecars.map(n => spark.read.format(m.format)
-                  .load(posDeletePath(path, n).toString))
-                .reduce(_ unionByName _)
-              if (ourDf.join(theirs, Seq("file", "ord"), "left_semi")
-                  .limit(1).count() > 0)
-                throw new java.io.IOException(
-                  s"$opName at $path lost the commit race to a concurrent " +
-                    "positional delete/update touching the SAME rows — " +
-                    "stacking them would duplicate or resurrect rows; " +
-                    "re-run against the current snapshot")
-            }
-            attempt += 1
-            if (attempt >= retries) throw new java.io.IOException(
-              s"$opName at $path lost $retries consecutive commit " +
-                "races; giving up — retry under lower commit contention")
-            parentV = winnerV
-            parentM = winnerM
-        }
+    commitLoop(spark, path, opName, scannedV, Some(m), stagedDir0.toSeq,
+        admits = Seq("append", "fast-forward", "posdelete", "posupdate",
+          "posdelete-compact"),
+        why = {
+          case "merge-on-read" => "the keyed racer's upserts may invalidate this " +
+            "command's victim or not-matched decisions (stacking could duplicate or " +
+            "resurrect rows)"
+          case _ => "the rewrite may have moved the rows these ordinals reference"
+        },
+        reclaim = Some(sidecar.toSeq.map(posDeletePath(path, _)))) { (v, base, _) =>
+      val b = base.get
+      // write-write conflict gate: sidecars the racers ADDED since the
+      // scanned snapshot must not touch our victims
+      val racerSidecars = b.posDeletes.filterNot(m.posDeletes.toSet)
+      sidecar.filter(_ => racerSidecars.nonEmpty).foreach { ours =>
+        val ourDf = spark.read.format(m.format)
+          .load(posDeletePath(path, ours).toString)
+        val theirs = racerSidecars.map(n => spark.read.format(m.format)
+            .load(posDeletePath(path, n).toString))
+          .reduce(_ unionByName _)
+        if (ourDf.join(theirs, Seq("file", "ord"), "left_semi")
+            .limit(1).count() > 0)
+          throw new java.io.IOException(
+            s"$opName at $path lost the commit race to a concurrent " +
+              "positional delete/update touching the SAME rows — " +
+              "stacking them would duplicate or resurrect rows; " +
+              "re-run against the current snapshot")
       }
-      throw new IllegalStateException("unreachable")
-    } catch {
-      case e: Throwable =>
-        // terminal failure: the staged dir, its stats sidecar, and the
-        // delete sidecar are uniquely named and referenced by NO
-        // manifest — delete them instead of leaking storage with no GC
-        // (covers the V2 row-level writers and the positional operators
-        // alike; best-effort, the commit error is what surfaces)
-        try {
-          stagedDir.foreach { d =>
-            f.delete(new Path(path, d), true)
-            f.delete(statsDir(path, d), true)
-          }
-          sidecar.foreach(n => f.delete(posDeletePath(path, n), true))
-        } catch { case _: Throwable => () }
-        throw e
+      val dir = stagedDir0.map(atVersion(_, v))
+      Some(b.copy(dirs = b.dirs ++ dir, bloom = if (dir.isDefined) None else b.bloom,
+        posDeletes = b.posDeletes ++ sidecar, kind = Some(kind)))
     }
   }
 

@@ -3880,8 +3880,8 @@ object TrainingData {
   // ---- d31_concurrent_ingest: racing appends, deterministic table -----
   // The multi-writer contract as a registry row: two ingests RACE from
   // the same parent snapshot (a real barrier, not a simulation — the
-  // loser's commit hits the version-slot conflict and rebases per
-  // SnapshotTable.rebaseLostAppend, re-deduping its staged delta
+  // loser's commit hits the version-slot conflict and rebases through
+  // SnapshotTable.commitLoop, re-deduping its staged delta
   // against the winner's hash sidecars at O(delta)). The batches
   // overlap each other AND the base, so every conflict class fires;
   // because overlapping rows are byte-identical and dedup is by

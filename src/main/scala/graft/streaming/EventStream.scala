@@ -186,7 +186,7 @@ object EventStream {
     * COMMITS, by contrast, need no single-writer assumption: both this
     * sink's ingests and its compactions rebase onto a concurrent
     * append's winning commit instead of failing (see
-    * `SnapshotTable.rebaseLostAppend`/`rebaseLostCompact`) — only
+    * `SnapshotTable.commitLoop`) — only
     * vacuum's grace window carries the caveat above.
     */
   final case class Maintenance(everyBatches: Int = 100, keep: Int = 2,

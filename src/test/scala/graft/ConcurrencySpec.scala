@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
   * that loses the version-slot race rebases its staged delta onto the
   * winner's state — re-deduped, re-homed under the new commit version,
   * bloom re-merged — instead of failing. Deterministic conflicts are
-  * injected through the `ingestCommitFault` seam (which fires once
-  * between staging and the first commit attempt); one test races real
-  * threads through the whole path.
+  * injected through the `commitFault` seam (which fires before every
+  * commit attempt and clears itself); one test races real threads
+  * through the whole path.
   */
 class ConcurrencySpec extends SparkSpec {
 
@@ -32,7 +32,7 @@ class ConcurrencySpec extends SparkSpec {
     SnapshotTable.ingest(spark, docs(0 until 20), path, "text", expectedItems = 1000L)
     // the fault fires between our staging and our commit: a concurrent
     // ingest takes version 2, so ours must land at 3
-    SnapshotTable.ingestCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, docs(40 until 60), path, "text",
           expectedItems = 1000L); () }
     val st = SnapshotTable.ingest(spark, docs(20 until 40), path, "text",
@@ -62,7 +62,7 @@ class ConcurrencySpec extends SparkSpec {
     val path = tmp("graft-race2")
     SnapshotTable.ingest(spark, docs(0 until 20), path, "text", expectedItems = 1000L)
     // racer commits 30..49 first; our staged 20..39 must drop 30..39
-    SnapshotTable.ingestCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, docs(30 until 50), path, "text",
           expectedItems = 1000L); () }
     val st = SnapshotTable.ingest(spark, docs(20 until 40), path, "text",
@@ -83,7 +83,7 @@ class ConcurrencySpec extends SparkSpec {
     import spark.implicits._
     val path = tmp("graft-race3")
     SnapshotTable.ingest(spark, docs(0 until 20), path, "text", expectedItems = 1000L)
-    SnapshotTable.ingestCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       val changes = Seq((1L, "en", "rewritten body 1"))
         .toDF("doc_id", "lang", "text")
       SnapshotTable.merge(spark, changes, path, "doc_id"); ()
@@ -107,7 +107,7 @@ class ConcurrencySpec extends SparkSpec {
       .toDF("doc_id", "lang", "text")
     SnapshotTable.ingest(spark, pdocs(0 until 20), path, "text",
       expectedItems = 1000L, partitionCols = Seq("lang"))
-    SnapshotTable.ingestCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, pdocs(40 until 60), path, "text",
           expectedItems = 1000L); () }
     val st = SnapshotTable.ingest(spark, pdocs(20 until 40), path, "text",
@@ -130,7 +130,7 @@ class ConcurrencySpec extends SparkSpec {
     SnapshotTable.ingest(spark, docs(30 until 60), path, "text", expectedItems = 1000L)
     // the fault fires between compact's staging and its commit: a
     // concurrent append takes version 3, the compaction lands at 4
-    SnapshotTable.compactCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, docs(60 until 80), path, "text",
           expectedItems = 1000L); () }
     SnapshotTable.compact(spark, path, textCol = Some("text"),
@@ -161,7 +161,7 @@ class ConcurrencySpec extends SparkSpec {
         .toDF("doc_id", "lang", "text", "is_deleted"),
       path, "doc_id", deleteCol = Some("is_deleted"), textCol = Some("text"),
       expectedItems = 1000L)
-    SnapshotTable.compactCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, docs(50 until 70), path, "text",
           expectedItems = 1000L); () }
     SnapshotTable.compact(spark, path, textCol = Some("text"),
@@ -187,7 +187,7 @@ class ConcurrencySpec extends SparkSpec {
     val path = tmp("graft-race8")
     SnapshotTable.ingest(spark, docs(0 until 20), path, "text", expectedItems = 1000L)
     SnapshotTable.ingest(spark, docs(20 until 40), path, "text", expectedItems = 1000L)
-    SnapshotTable.compactCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.compact(spark, path, textCol = Some("text"),
           expectedItems = 1000L); () }
     val e = intercept[java.io.IOException] {
@@ -275,7 +275,7 @@ class ConcurrencySpec extends SparkSpec {
     val xText = "alpha bravo charlie delta echo foxtrot golf hotel india juliet kilo lima"
     // winner commits xText in the loser's commit window — AFTER the
     // loser's entry gate ran, so only the rebase re-gate can catch it
-    SnapshotTable.ingestCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.ingestFuzzy(spark,
         Seq((100L, xText)).toDF("doc_id", "text"),
         path, "doc_id", "text", expectedItems = 1000L)
@@ -339,7 +339,7 @@ class ConcurrencySpec extends SparkSpec {
     SnapshotTable.ingest(spark, docs(30 until 40), path, "text", expectedItems = 1000L)
     // the fault fires between binpack's staging and its commit: a
     // concurrent append takes version 4, the merge lands at 5
-    SnapshotTable.binpackCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, docs(50 until 70), path, "text",
           expectedItems = 1000L); () }
     val st = SnapshotTable.compactSmall(spark, path, smallDirBytes = Long.MaxValue)
@@ -368,7 +368,7 @@ class ConcurrencySpec extends SparkSpec {
     // the fault fires between our staging and our commit: a maintenance
     // loop's binpack takes version 3, so ours must rebase to 4 — the
     // exact race every streaming sink with Maintenance(maxChainDirs) runs
-    SnapshotTable.ingestCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.compactSmall(spark, path, smallDirBytes = Long.MaxValue); () }
     val st = SnapshotTable.ingest(spark, docs(30 until 50), path, "text",
       expectedItems = 1000L)
@@ -388,7 +388,7 @@ class ConcurrencySpec extends SparkSpec {
     val path = tmp("graft-race13")
     SnapshotTable.ingest(spark, docs(0 until 20), path, "text", expectedItems = 1000L)
     SnapshotTable.ingest(spark, docs(20 until 30), path, "text", expectedItems = 1000L)
-    SnapshotTable.morCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.compactSmall(spark, path, smallDirBytes = Long.MaxValue); () }
     import spark.implicits._
     val st = SnapshotTable.mergeOnRead(spark,
@@ -407,7 +407,7 @@ class ConcurrencySpec extends SparkSpec {
     SnapshotTable.ingest(spark, docs(0 until 20), path, "text", expectedItems = 1000L)
     // the fault fires between MOR staging and its commit: a concurrent
     // append takes version 2, the merge lands at 3
-    SnapshotTable.morCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, docs(20 until 40), path, "text",
           expectedItems = 1000L); () }
     import spark.implicits._
@@ -442,7 +442,7 @@ class ConcurrencySpec extends SparkSpec {
   test("a lost pure-delete merge-on-read rebases; a rewrite interleaving refuses") {
     val path = tmp("graft-race11")
     SnapshotTable.ingest(spark, docs(0 until 20), path, "text", expectedItems = 1000L)
-    SnapshotTable.morCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark, docs(20 until 30), path, "text",
           expectedItems = 1000L); () }
     val st = SnapshotTable.deleteWhere(spark, path, "doc_id",
@@ -455,7 +455,7 @@ class ConcurrencySpec extends SparkSpec {
     assert(m.bloom == SnapshotTable.readManifestChecked(spark, path, 2L).bloom, m)
     // a COMPACTION interleaving refuses loudly: the dirs the overlay
     // masks may have been rewritten under it
-    SnapshotTable.morCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.compact(spark, path, textCol = Some("text"),
           expectedItems = 1000L); () }
     val e = intercept[java.io.IOException](
@@ -471,7 +471,7 @@ class ConcurrencySpec extends SparkSpec {
     SnapshotTable.ingest(spark, docs(20 until 30), path, "text", expectedItems = 1000L)
     // the interleaved commit is a COMPACTION: the dirs the merge read
     // no longer exist, so the rebase must refuse with the kind named
-    SnapshotTable.binpackCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.compact(spark, path, textCol = Some("text"),
           expectedItems = 1000L); () }
     val e = intercept[java.io.IOException](
@@ -480,5 +480,70 @@ class ConcurrencySpec extends SparkSpec {
       e.getMessage)
     // the winner's compaction stands; content is intact
     assert(ids(path) == (0L until 30L).toSet)
+  }
+
+  /** Arms the seam with a racer that lands `race(i)` before EVERY commit
+    * attempt of the op under test (re-arming itself after each win), so
+    * the op loses every slot. Returns the op names the seam saw.
+    */
+  private def raceEverySlot(race: Int => Unit)(op: => Unit): (Seq[String], java.io.IOException) = {
+    val seen = Seq.newBuilder[String]
+    var i = 0
+    def racer(opName: String): Unit = {
+      seen += opName
+      race(i)
+      i += 1
+      SnapshotTable.commitFault = racer
+    }
+    SnapshotTable.commitFault = racer
+    val e = try intercept[java.io.IOException](op)
+      finally SnapshotTable.commitFault = _ => ()
+    (seen.result(), e)
+  }
+
+  private def unreferencedSnapDirs(path: String): Set[String] = {
+    val referenced = SnapshotTable.versions(spark, path)
+      .flatMap(v => SnapshotTable.readManifestChecked(spark, path, v).dirs).toSet
+    new java.io.File(path).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("snap-"))
+      .map(_.getName).toSet.diff(referenced)
+  }
+
+  test("an append losing every slot gives up after 5 publishes; its staging stays unreferenced") {
+    val path = tmp("graft-giveup-append")
+    SnapshotTable.ingest(spark, docs(0 until 10), path, "text", expectedItems = 1000L)
+    val (ops, e) = raceEverySlot(i =>
+      { SnapshotTable.append(spark, docs(100 + 10 * i until 110 + 10 * i), path); () }) {
+      SnapshotTable.append(spark, docs(10 until 20), path)
+    }
+    assert(e.getMessage.contains("lost 5 consecutive commit races"), e.getMessage)
+    assert(ops == Seq.fill(5)("append"), ops)
+    // exactly the five racer appends landed, nothing of the loser's
+    assert(SnapshotTable.versions(spark, path) == (1L to 6L))
+    assert(ids(path) == ((0L until 10L) ++ (100L until 150L)).toSet)
+    // the loser's staged dir (re-homed at the last slot it tried) is on
+    // disk but no retained manifest references it
+    val orphans = unreferencedSnapDirs(path)
+    assert(orphans.size == 1 && orphans.head.startsWith("snap-00000006"), orphans)
+  }
+
+  test("an ingest losing every slot gives up after 5 publishes; its staging stays unreferenced") {
+    val path = tmp("graft-giveup-ingest")
+    SnapshotTable.ingest(spark, docs(0 until 10), path, "text", expectedItems = 1000L)
+    val (ops, e) = raceEverySlot(i =>
+      { SnapshotTable.ingest(spark, docs(100 + 10 * i until 110 + 10 * i), path, "text",
+          expectedItems = 1000L); () }) {
+      SnapshotTable.ingest(spark, docs(10 until 20), path, "text", expectedItems = 1000L)
+    }
+    assert(e.getMessage.contains("lost 5 consecutive commit races"), e.getMessage)
+    assert(ops == Seq.fill(5)("ingest"), ops)
+    assert(SnapshotTable.versions(spark, path) == (1L to 6L))
+    assert(ids(path) == ((0L until 10L) ++ (100L until 150L)).toSet)
+    val orphans = unreferencedSnapDirs(path)
+    assert(orphans.size == 1 && orphans.head.startsWith("snap-00000006"), orphans)
+    // the loser's rows never entered the dedup universe: they ingest now
+    val again = SnapshotTable.ingest(spark, docs(10 until 20), path, "text",
+      expectedItems = 1000L)
+    assert(again.nNew == 10L, again)
   }
 }

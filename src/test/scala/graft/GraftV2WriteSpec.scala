@@ -101,7 +101,7 @@ class GraftV2WriteSpec extends SparkSpec {
     val path = tmp("graft-append-race")
     SnapshotTable.ingest(spark, docs(0 until 100), path, "text",
       expectedItems = 10000L, statsCols = Seq("doc_id"))
-    SnapshotTable.appendCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.append(spark, docs(100 until 130), path)
       ()
     }
@@ -118,7 +118,7 @@ class GraftV2WriteSpec extends SparkSpec {
     val path = tmp("graft-append-race-rw")
     SnapshotTable.ingest(spark, docs(0 until 100), path, "text",
       expectedItems = 10000L)
-    SnapshotTable.appendCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.write(spark, docs(0 until 10), path)
       ()
     }

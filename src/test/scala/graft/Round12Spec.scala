@@ -398,7 +398,7 @@ class Round12Spec extends SparkSpec {
             model = model.filterNot(p => p._1 >= dlo && p._1 <= dhi)
             record()
           case 11 => // RACING ingest: a concurrent append takes our
-            // version slot (injected via the ingestCommitFault seam)
+            // version slot (injected via the commitFault seam)
             // and our commit rebases — re-deduped against the racer's
             // sidecars. The model applies the WINNER's batch first,
             // then ours deduped against the result: content-identical
@@ -412,7 +412,7 @@ class Round12Spec extends SparkSpec {
               else freshDoc()
             }
             opsRun += s"racingIngest(x${xBatch.size}/y${yBatch.size})"
-            SnapshotTable.ingestCommitFault = () => {
+            SnapshotTable.commitFault = _ => {
               SnapshotTable.ingest(spark, yBatch.toDF("doc_id", textName),
                 path, textName, 1000L)
               ()
@@ -429,7 +429,7 @@ class Round12Spec extends SparkSpec {
             }
             record()
           case 12 => // RACING compact: a concurrent append takes the
-            // version slot (ingestCommitFault's compact twin) and the
+            // version slot (the same commitFault seam) and the
             // compaction rebases — compacted dir + the interleaved
             // delta. The model is "append applied, then a content
             // no-op": identical to sequential ops 0-then-3. When prior
@@ -437,7 +437,7 @@ class Round12Spec extends SparkSpec {
             // fuzzes the rebuilt-bloom-plus-append-sidecars path.
             val rBatch = (0 until 1 + r.nextInt(2)).map(_ => freshDoc())
             opsRun += s"racingCompact(y${rBatch.size})"
-            SnapshotTable.compactCommitFault = () => {
+            SnapshotTable.commitFault = _ => {
               SnapshotTable.ingest(spark, rBatch.toDF("doc_id", textName),
                 path, textName, 1000L)
               ()
@@ -479,7 +479,7 @@ class Round12Spec extends SparkSpec {
             catch { case _: IllegalStateException => () } // MOR overlay outstanding
             record()
           case 15 => // RACING merge-on-read: a concurrent ingest takes
-            // the version slot (morCommitFault seam) and the merge
+            // the version slot (commitFault seam) and the merge
             // rebases — delta + tombstone re-home at the new version.
             // Serial equivalence is the contract: the model applies the
             // WINNER's append first, then the merge's keyed changes on
@@ -494,7 +494,7 @@ class Round12Spec extends SparkSpec {
               rmDel.map(k => (k, s"rmd $seed-$k-$i", true)) ++
               rmIns.map { case (id, t) => (id, t, false) }
             opsRun += s"racingMor(u${rmUpd.size}/d${rmDel.size}/i${rmIns.size}/y${yMor.size})"
-            SnapshotTable.morCommitFault = () => {
+            SnapshotTable.commitFault = _ => {
               SnapshotTable.ingest(spark, yMor.toDF("doc_id", textName),
                 path, textName, 1000L)
               ()

@@ -1227,7 +1227,7 @@ class Round13Spec extends SparkSpec {
     assert(SnapshotTable.ingest(spark,
       Seq((20L, "bad 20")).toDF("doc_id", "text"), path, "text", 100L).nNew == 0L)
     // ...and survives a lost-commit-race rebase
-    SnapshotTable.ingestCommitFault = () =>
+    SnapshotTable.commitFault = _ =>
       { SnapshotTable.ingest(spark,
           Seq((30L, "doc 30")).toDF("doc_id", "text"), path, "text", 100L); () }
     SnapshotTable.ingest(spark,

@@ -328,7 +328,7 @@ class Round15Spec extends SparkSpec {
     assert(df.count() == 90L)
     assert(rep.nFilesKept < rep.nFilesTotal)
     // a racing posdelete between an ingest's staging and commit rebases
-    SnapshotTable.ingestCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.deleteWherePositional(spark, path, col("doc_id") === 20L)
       ()
     }
@@ -347,7 +347,7 @@ class Round15Spec extends SparkSpec {
     // the seam injects a CONCURRENT posdelete between this delete's
     // sidecar write and its commit: the loser must rebase onto the
     // winner's manifest and BOTH masks must apply afterwards
-    SnapshotTable.posDeleteCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.deleteWherePositional(spark, path, col("doc_id") === 7L)
       ()
     }
@@ -363,7 +363,7 @@ class Round15Spec extends SparkSpec {
     assert(m.posDeletes.size == 2, s"both sidecars must be referenced: ${m.posDeletes}")
     // a racing REWRITE must conflict loudly instead of rebasing onto
     // moved files
-    SnapshotTable.posDeleteCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.compact(spark, path, textCol = Some("text"),
         expectedItems = 10000L)
       ()

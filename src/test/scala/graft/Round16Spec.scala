@@ -92,7 +92,7 @@ class Round16Spec extends SparkSpec {
 
   test("updateWherePositional: racing posdelete rebases; racing compact conflicts loudly") {
     val path = table("graft-posupd-race")
-    SnapshotTable.posUpdateCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.deleteWherePositional(spark, path, col("doc_id") === 5L)
       ()
     }
@@ -103,7 +103,7 @@ class Round16Spec extends SparkSpec {
     assert(cur.count() == 399L) // the racing delete landed too
     assert(cur.filter(col("doc_id") === 7L).select("n_chars").head.getLong(0) == 777L)
     // a racing full compact moves files -> conflict, loudly
-    SnapshotTable.posUpdateCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.compact(spark, path, textCol = Some("text"),
         expectedItems = 10000L)
       ()
@@ -118,7 +118,7 @@ class Round16Spec extends SparkSpec {
   test("concurrent positional commands touching the SAME rows refuse as write-write conflicts") {
     val path = table("graft-posupd-ww")
     // racer updates doc 9 first; our update of the SAME row must refuse
-    SnapshotTable.posUpdateCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.updateWherePositional(spark, path,
         col("doc_id") === 9L, Map("n_chars" -> lit(111L)))
       ()
@@ -134,7 +134,7 @@ class Round16Spec extends SparkSpec {
     assert(cur.filter(col("doc_id") === 9L).select("n_chars").head.getLong(0) == 111L)
     // a racer deleting the row our update targets also refuses (the
     // update would resurrect the deleted row)
-    SnapshotTable.posUpdateCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.deleteWherePositional(spark, path, col("doc_id") === 10L)
       ()
     }
@@ -197,7 +197,7 @@ class Round16Spec extends SparkSpec {
   test("positional update racing a keyed merge-on-read refuses: no lost update, no orphans") {
     import spark.implicits._
     val path = table("graft-posupd-mor-race")
-    SnapshotTable.posUpdateCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.mergeOnRead(spark,
         Seq((160L, "merged-160", "lang1", 1L)).toDF("doc_id", "text", "lang", "n_chars"),
         path, "doc_id")
@@ -227,7 +227,7 @@ class Round16Spec extends SparkSpec {
   test("append rebases over posupdate and merge-on-read racers (insert-only is overlay-safe)") {
     import spark.implicits._
     val path = table("graft-append-over-mor")
-    SnapshotTable.appendCommitFault = () => {
+    SnapshotTable.commitFault = _ => {
       SnapshotTable.updateWherePositional(spark, path,
         col("doc_id") === 1L, Map("n_chars" -> lit(777777L)))
       SnapshotTable.mergeOnRead(spark,
