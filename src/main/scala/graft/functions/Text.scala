@@ -33,9 +33,11 @@ object Text {
   /** Distinct k-word shingles. Empty array when the doc is shorter than k
     * (Spark's `sequence(0, n)` counts *down* for negative n, so the guard
     * is required, not cosmetic). The token array is bound as a lambda
-    * variable (same reasoning as [[shingleHashes]]): when `toks` is a
-    * computed expression like split(), a direct reference inside the
-    * slice lambda re-inlines and re-evaluates it once per shingle.
+    * variable (a transform over a single-element array) so it is
+    * evaluated once per row: higher-order functions are interpreted with
+    * no common-subexpression elimination, so when `toks` is a computed
+    * expression like split(), a direct reference inside the slice lambda
+    * re-inlines and re-evaluates it once per shingle.
     */
   def shingles(toks: Column, k: Int): Column =
     element_at(transform(array(toks), tk =>
@@ -58,35 +60,13 @@ object Text {
           i => concat_ws(" ", slice(tk, i + 1, lit(k)))))
         .otherwise(array().cast("array<string>"))), 1)
 
-  /** Distinct k-token shingle HASHES: each token is xxhash64'd once, then
-    * k consecutive token-hashes are combined per window. Equivalent
-    * near-dup semantics to [[shingles]] (a set of shingle identities) at
-    * a fraction of the cost — no per-shingle string concatenation, and
-    * `array_distinct` compares longs, not strings. Use for hash-consuming
-    * pipelines (minhash); keep [[shingles]] where the literal shingle
-    * text matters.
-    */
-  def shingleHashes(toks: Column, k: Int): Column = {
-    // The token-hash array is bound as a LAMBDA VARIABLE (a transform over
-    // a single-element array) so it is evaluated once per row. Referencing
-    // the subexpression directly would re-inline it into every element_at
-    // — higher-order functions are interpreted, with no common-
-    // subexpression elimination, so that shape recomputes the entire hash
-    // array per access: O(n²·k) hashes/doc (measured 5× slower end-to-end).
-    val combined = transform(array(transform(toks, t => xxhash64(t))), th =>
-      when(size(th) >= k,
-        array_distinct(transform(sequence(lit(0), size(th) - k),
-          i => xxhash64((0 until k).map(j => element_at(th, i + j + 1)): _*))))
-        .otherwise(array().cast("array<bigint>")))
-    element_at(combined, 1)
-  }
-
   /** Portable 60-bit integer hash: the first 15 hex chars of md5, read
     * base-16. Bit-identical across engines — DuckDB replays it as
-    * `CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)` — so oracle-facing
-    * pipelines re-key on it and the correctness gate can hash-compare
-    * minhash/simhash results. xxhash64 stays the library fast path (no
-    * hex-string round trip, full 64 bits).
+    * `CAST(('0x' || substr(md5(x),1,15)) AS BIGINT)` — so the correctness
+    * gate can hash-compare minhash/simhash results. It is the one hash
+    * the near-dup and sampling operators key shingles, tokens and ids on
+    * (the fused kernels [[graft.plans.ShingleMd5Expr]] and
+    * [[graft.plans.WinnowingFpExpr]] compute it bit-exactly).
     */
   def md5Long(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
@@ -143,21 +123,6 @@ object Text {
     }: _*)
 
   // --- SimHash ---------------------------------------------------------
-
-  /** 32-bit SimHash over the token multiset: bit b is set when the sum of
-    * ±1 contributions (per token, sign of bit b of xxhash64(token)) is
-    * positive. Map-only; pairs come from banding on contiguous byte
-    * slices (exact Hamming verify after).
-    */
-  def simhash32(toks: Column): Column = {
-    val hashes = transform(toks, t => xxhash64(t))
-    val bits = (0 until 32).map { b =>
-      val contrib = aggregate(hashes, lit(0L),
-        (acc, h) => acc + when(shiftright(h, b).bitwiseAND(1L) === 1L, 1L).otherwise(-1L))
-      when(contrib > 0, lit(1L << b)).otherwise(lit(0L))
-    }
-    bits.reduce((a, b) => a.bitwiseOR(b))
-  }
 
   /** Hamming distance between two simhash longs. */
   def hamming(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))

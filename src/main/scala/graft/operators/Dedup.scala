@@ -106,23 +106,19 @@ object Dedup {
     * fraction of matching signature components.
     */
   def minhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        k: Int = 32, bands: Int = 8, shingleLen: Int = 3,
-                        portableHash: Boolean = false): DataFrame = {
+                        k: Int = 32, bands: Int = 8, shingleLen: Int = 3): DataFrame = {
     require(k % bands == 0,
       s"signature size $k must divide evenly into $bands bands or trailing components are dead")
-    val rows = k / bands
     // Explode shingles and take the k permutation-minima as a real
     // aggregation: map-side partial mins, one keyed shuffle, and — the
     // point — the signature is a materialized *attribute* afterwards.
     // A row-local signature expression gets re-inlined by projection
     // collapse and recomputed per band key and per candidate pair (over
     // 20× slower end-to-end on the benchmark corpus).
-    // Shingle identity is a combined token-hash long ([[Text.shingleHashes]])
-    // — no per-shingle string build, and array_distinct compares longs.
-    // `portableHash` re-keys shingle identity on the md5-derived
-    // [[Text.md5Long]] over the literal shingle string so a SQL oracle
-    // can replay the signature bit-for-bit; same pipeline otherwise.
-    val banded = minhashBanded(docs, idCol, textCol, k, bands, shingleLen, portableHash)
+    // Shingle identity is the md5-derived [[Text.md5Long]] over the
+    // literal shingle string, so a SQL oracle can replay the signature
+    // bit-for-bit.
+    val banded = minhashBanded(docs, idCol, textCol, k, bands, shingleLen)
     banded.as("a").join(banded.as("b"),
       col("a.band_key") === col("b.band_key") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"),
@@ -139,18 +135,16 @@ object Dedup {
     * rather than a row-local expression.
     */
   private[graft] def minhashBanded(docs: DataFrame, idCol: String, textCol: String,
-                                   k: Int, bands: Int, shingleLen: Int,
-                                   portableHash: Boolean): DataFrame =
-    bandSigs(minhashSigs(docs, idCol, textCol, k, shingleLen, portableHash), k, bands)
+                                   k: Int, bands: Int, shingleLen: Int): DataFrame =
+    bandSigs(minhashSigs(docs, idCol, textCol, k, shingleLen), k, bands)
 
   /** (id, sig) per document — the persistable signature form (k longs).
     * A table format stores exactly this per snapshot dir so later fuzzy
     * admissions read signatures, never payloads.
     */
   private[graft] def minhashSigs(docs: DataFrame, idCol: String, textCol: String,
-                                 k: Int, shingleLen: Int,
-                                 portableHash: Boolean): DataFrame = {
-    // Portable path: the fused [[graft.plans.ShingleMd5Expr]] kernel
+                                 k: Int, shingleLen: Int): DataFrame = {
+    // The fused [[graft.plans.ShingleMd5Expr]] kernel
     // replaces shingle-string build + md5→hex→conv per shingle (guide
     // §1.2 per-task work; same tier as the winnowing kernel). The
     // distinct moves AFTER hashing (array_distinct over longs, not
@@ -159,12 +153,8 @@ object Dedup {
     // observed) 60-bit collision collapses two rows whose minima
     // already coincided.
     val hashed = graft.Tables.spread(docs, col(idCol))
-      .select(col(idCol).as("id"),
-        if (portableHash)
-          explode(
-            graft.plans.ShingleMd5Expr(col(textCol), shingleLen, skipEmpty = false, distinct = true)).as("sh")
-        else
-          explode(Text.shingleHashes(Text.tokens(col(textCol)), shingleLen)).as("sh"))
+      .select(col(idCol).as("id"), explode(
+        graft.plans.ShingleMd5Expr(col(textCol), shingleLen, skipEmpty = false, distinct = true)).as("sh"))
       .select(col("id"), pmod(col("sh"), lit(Text.minhashPrime)).as("h"))
     // custom one-pass TypedImperativeAggregate (graft.plans.MinHashSigAgg):
     // one long[k] buffer per group instead of k separate min() aggregates
@@ -196,12 +186,11 @@ object Dedup {
   def newDocumentsFuzzy(existing: DataFrame, incoming: DataFrame,
                         idCol: String, textCol: String,
                         k: Int = 32, bands: Int = 8, shingleLen: Int = 3,
-                        tau: Double = 0.5,
-                        portableHash: Boolean = false): DataFrame = {
+                        tau: Double = 0.5): DataFrame = {
     require(k % bands == 0,
       s"signature size $k must divide evenly into $bands bands or trailing components are dead")
-    val ex = minhashBanded(existing, idCol, textCol, k, bands, shingleLen, portableHash)
-    val in = minhashBanded(incoming, idCol, textCol, k, bands, shingleLen, portableHash)
+    val ex = minhashBanded(existing, idCol, textCol, k, bands, shingleLen)
+    val in = minhashBanded(incoming, idCol, textCol, k, bands, shingleLen)
     incoming.join(fuzzyDupIds(ex, in, k, tau), col(idCol) === col("__dup"), "left_anti")
   }
 
@@ -731,21 +720,18 @@ object Dedup {
     * hence pairs per bucket — is 256× smaller at any corpus size.
     */
   def simhashCandidates(docs: DataFrame, idCol: String, textCol: String,
-                        maxHamming: Int = 3, portableHash: Boolean = false): DataFrame = {
+                        maxHamming: Int = 3): DataFrame = {
     require(maxHamming <= 3,
       "4-band slicing only guarantees candidate generation for Hamming <= 3")
     // Same materialization reasoning as minhash: per-bit ±1 sums as a
     // real aggregation (map-side combinable), simhash assembled from the
-    // aggregated attributes. `portableHash` swaps the token hash for the
-    // oracle-replayable [[Text.md5Long]], fused per row by
-    // [[graft.plans.ShingleMd5Expr]] with k = 1 (per-token hashes, no
-    // per-token string explode + hex round trip).
+    // aggregated attributes. The token hash is the oracle-replayable
+    // [[Text.md5Long]], fused per row by [[graft.plans.ShingleMd5Expr]]
+    // with k = 1 (per-token hashes, no per-token string explode + hex
+    // round trip).
     val tok = graft.Tables.spread(docs, col(idCol))
       .select(col(idCol).as("id"),
-        if (portableHash)
-          explode(graft.plans.ShingleMd5Expr(col(textCol), 1, skipEmpty = false)).as("h")
-        else
-          explode(transform(Text.tokens(col(textCol)), t => xxhash64(t))).as("h"))
+        explode(graft.plans.ShingleMd5Expr(col(textCol), 1, skipEmpty = false)).as("h"))
     // Round-17: the 64 per-bit ±1 sums + 64-way bit assembly fused into
     // one TypedImperativeAggregate ([[graft.plans.SimHashSigAgg]]) — a
     // single long[64] buffer pass per row instead of 64 aggregate
@@ -782,12 +768,11 @@ object Dedup {
     * shuffle but still paid interpreted per-gram hashing — the kernel
     * is ~4× over it on the md5 path.)
     *
-    * `portableHash` swaps xxhash64 for the md5-derived hash DuckDB can
-    * replay ([[Text.md5Long]]); both are bit-exact in the kernel.
+    * Gram hashes are the md5-derived 60-bit hash DuckDB can replay
+    * ([[Text.md5Long]]), bit-exact in the kernel.
     */
   def winnowingFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                            k: Int = 8, w: Int = 4,
-                            portableHash: Boolean = false): DataFrame = {
+                            k: Int = 8, w: Int = 4): DataFrame = {
     require(k >= 2 && w >= 1, s"degenerate winnowing params k=$k w=$w")
     val norm = regexp_replace(lower(trim(col(textCol))), "\\s+", " ")
     val base = graft.Tables.spread(docs, col(idCol))
@@ -795,7 +780,7 @@ object Dedup {
       .filter(length(col("txt")) >= k + w - 1)
     val fps = org.apache.spark.sql.GraftSqlShim.column(
       graft.plans.WinnowingFpExpr(
-        org.apache.spark.sql.GraftSqlShim.expression(col("txt")), k, w, portableHash))
+        org.apache.spark.sql.GraftSqlShim.expression(col("txt")), k, w))
     base.select(col("id"), explode(fps).as("fp"))
   }
 
@@ -850,27 +835,21 @@ object Dedup {
     * mass grows with dup content. Consumers: d19 (per-doc run stats),
     * d20 (span excision / cleaned-corpus materialization).
     *
-    * `portableHash` re-keys shingles on the md5-derived 60-bit hash the
-    * DuckDB oracle can replay; the library path keeps xxhash64.
+    * Shingles are keyed on the md5-derived 60-bit hash the DuckDB oracle
+    * can replay ([[Text.md5Long]]).
     */
   def repeatedRuns(docs: DataFrame, idCol: String, textCol: String,
-                   k: Int, portableHash: Boolean = false): DataFrame = {
+                   k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // Portable path: positioned shingle hashes from the fused
+    // Positioned shingle hashes from the fused
     // [[graft.plans.ShingleMd5Expr]] kernel — identical (pos, h) pairs
     // to posexplode(shinglesAt)+md5Long at a fraction of the per-row
     // cost (this subtree is planned TWICE: occurrence-count side and
     // probe side), so halving its unit cost pays double.
-    val pos =
-      if (portableHash) docs
-        .select(col(idCol),
-          posexplode(graft.plans.ShingleMd5Expr(col(textCol), k, skipEmpty = false)))
-        .select(col(idCol), col("pos").cast("long").as("pos"), col("col").as("h"))
-      else docs
-        .select(col(idCol),
-          posexplode(Text.shinglesAt(Text.tokens(col(textCol)), k)))
-        .select(col(idCol), col("pos").cast("long").as("pos"),
-          xxhash64(col("col")).as("h"))
+    val pos = docs
+      .select(col(idCol),
+        posexplode(graft.plans.ShingleMd5Expr(col(textCol), k, skipEmpty = false)))
+      .select(col(idCol), col("pos").cast("long").as("pos"), col("col").as("h"))
     val rep = pos.groupBy(col("h")).agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 2).select("h")
     val w = Window.partitionBy(col(idCol)).orderBy(col("pos"))

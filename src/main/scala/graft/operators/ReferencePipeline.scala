@@ -88,48 +88,46 @@ object ReferencePipeline {
       case _ =>
         "This dataset contains observations made by the Institute of Ocean Sciences of Fisheries and Oceans (DFO) using CTDs mounted on rosettes."
     }
-    spark.read.option("wholetext", "true").format("text").load(pathGlob)
-      .select(input_file_name().as("path"), col("value"))
-      .as[(String, String)].mapPartitions { it =>
-        it.map { case (path, content) =>
-          val p = IosFileParser.parse(path.split('/').last, content)
-          // mission id normalized to %04d-%03d like write_ctd_ncfile.py:48-51;
-          // unparsable missions keep their raw string (we convert archives,
-          // not crash on them — soft-fail semantics like the outer script)
-          val missionRaw = p.administration.get("MISSION")
-            .orElse(p.administration.get("CRUISE")).map(_.trim).getOrElse("")
-          val missionId = missionRaw.split('-') match {
-            case Array(a, b) if scala.util.Try(a.toInt).isSuccess &&
-                scala.util.Try(b.toInt).isSuccess => f"${a.toInt}%04d-${b.toInt}%03d"
-            case _ => missionRaw
-          }
-          // event number from LOCATION, else guessed from the filename
-          // (write_ctd_ncfile.py:79-84)
-          val eventId = p.location.get("EVENT NUMBER").map(_.trim).getOrElse {
-            val tail = p.filename.split('-').last
-            if (tail.length > 4) tail.dropRight(4) else tail
-          }
-          val profileId = s"$missionId-${("0" * math.max(0, 4 - eventId.length)) + eventId}"
-          (p.filename, featureType, summary, summary,
-            "Institute of Ocean Sciences, 9860 West Saanich Road, Sidney, B.C., Canada",
-            "http://www.pac.dfo-mpo.gc.ca/science/oceans/data-donnees/index-eng.html",
-            "time", missionId, eventId, profileId,
-            p.administration.get("COUNTRY").map(_.trim),
-            p.administration.get("SCIENTIST").map(_.trim),
-            p.administration.get("PROJECT").map(_.trim),
-            p.administration.get("AGENCY").map(_.trim),
-            p.administration.get("PLATFORM").map(_.trim),
-            p.instrument.get("TYPE").map(_.trim),
-            p.instrument.get("MODEL").map(_.trim),
-            p.instrument.get("SERIAL NUMBER").map(_.trim),
-            p.latitude, p.longitude,
-            IosFileParser.headerJson(p))
+    IosReader.rawFiles(spark, pathGlob).mapPartitions { it =>
+      it.map { case (name, content) =>
+        val p = IosFileParser.parse(name, content)
+        // mission id normalized to %04d-%03d like write_ctd_ncfile.py:48-51;
+        // unparsable missions keep their raw string (we convert archives,
+        // not crash on them — soft-fail semantics like the outer script)
+        val missionRaw = p.administration.get("MISSION")
+          .orElse(p.administration.get("CRUISE")).map(_.trim).getOrElse("")
+        val missionId = missionRaw.split('-') match {
+          case Array(a, b) if scala.util.Try(a.toInt).isSuccess &&
+              scala.util.Try(b.toInt).isSuccess => f"${a.toInt}%04d-${b.toInt}%03d"
+          case _ => missionRaw
         }
-      }.toDF("filename", "featureType", "title", "summary", "institution",
-        "infoUrl", "cdm_profile_variables", "mission_id", "event_number",
-        "profile_id", "country", "scientist", "project", "agency", "platform",
-        "instrument_type", "instrument_model", "instrument_serial_number",
-        "latitude", "longitude", "header")
+        // event number from LOCATION, else guessed from the filename
+        // (write_ctd_ncfile.py:79-84)
+        val eventId = p.location.get("EVENT NUMBER").map(_.trim).getOrElse {
+          val tail = p.filename.split('-').last
+          if (tail.length > 4) tail.dropRight(4) else tail
+        }
+        val profileId = s"$missionId-${("0" * math.max(0, 4 - eventId.length)) + eventId}"
+        (p.filename, featureType, summary, summary,
+          "Institute of Ocean Sciences, 9860 West Saanich Road, Sidney, B.C., Canada",
+          "http://www.pac.dfo-mpo.gc.ca/science/oceans/data-donnees/index-eng.html",
+          "time", missionId, eventId, profileId,
+          p.administration.get("COUNTRY").map(_.trim),
+          p.administration.get("SCIENTIST").map(_.trim),
+          p.administration.get("PROJECT").map(_.trim),
+          p.administration.get("AGENCY").map(_.trim),
+          p.administration.get("PLATFORM").map(_.trim),
+          p.instrument.get("TYPE").map(_.trim),
+          p.instrument.get("MODEL").map(_.trim),
+          p.instrument.get("SERIAL NUMBER").map(_.trim),
+          p.latitude, p.longitude,
+          IosFileParser.headerJson(p))
+      }
+    }.toDF("filename", "featureType", "title", "summary", "institution",
+      "infoUrl", "cdm_profile_variables", "mission_id", "event_number",
+      "profile_id", "country", "scientist", "project", "agency", "platform",
+      "instrument_type", "instrument_model", "instrument_serial_number",
+      "latitude", "longitude", "header")
   }
 
   /** Per-VARIABLE CF attributes — the metadata block `OceanNcVar.add_var`

@@ -50,20 +50,15 @@ object Sampling {
     * replacement, reproducible on any cluster layout because u comes
     * from content, not an RNG. Rows with non-positive weight get -∞
     * (never selected).
+    *
+    * u is the md5-derived 60-bit hash ([[graft.functions.Text.md5Long]])
+    * of the id's decimal string, plus one, over 2^60, so a SQL oracle
+    * replays the selection: 2^60 is exactly representable, so the
+    * division is bit-identical across engines.
     */
-  def esKey(idCol: Column, weightCol: Column,
-            portableHash: Boolean = false): Column = {
-    // uniform u in (0,1] from the id hash: xxhash64 fast path, or the
-    // md5-derived 60-bit hash ([[graft.functions.Text.md5Long]]) when the
-    // selection must be replayable by a SQL oracle (2^60 is exactly
-    // representable, so the division is bit-identical across engines)
-    val u =
-      if (portableHash)
-        (graft.functions.Text.md5Long(idCol.cast("string")) + 1L) /
-          lit(1.152921504606846976e18)
-      else
-        (shiftrightunsigned(xxhash64(idCol.cast("string")), 1) + 1L) /
-          lit(9.223372036854775808e18)
+  def esKey(idCol: Column, weightCol: Column): Column = {
+    val u = (graft.functions.Text.md5Long(idCol.cast("string")) + 1L) /
+      lit(1.152921504606846976e18)
     when(weightCol > 0.0, log(u) / weightCol.cast("double"))
       .otherwise(lit(Double.NegativeInfinity))
   }
@@ -75,12 +70,11 @@ object Sampling {
     * Appends the `es_key` column (ties broken by id for a total order).
     */
   def weightedSample(df: DataFrame, idCol: String, weightCol: String,
-                     strataCol: String, k: Int,
-                     portableHash: Boolean = false): DataFrame = {
+                     strataCol: String, k: Int): DataFrame = {
     // non-positive weights are excluded outright — they must not occupy
     // heap slots when a stratum has fewer than k positive-weight rows
     val keyed = df.filter(col(weightCol) > 0.0)
-      .withColumn("es_key", esKey(col(idCol), col(weightCol), portableHash))
+      .withColumn("es_key", esKey(col(idCol), col(weightCol)))
     TopK.perKey(keyed, Seq(strataCol), Seq(("es_key", false), (idCol, true)), k)
   }
 }

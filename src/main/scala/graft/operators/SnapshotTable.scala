@@ -2641,7 +2641,8 @@ object SnapshotTable {
     * manifest rename; the previous snapshot's files are retained, so
     * in-flight readers finish on the exact file set they resolved.
     * Same rewrite kernel as [[Sink.compact]] (scan → repartition to
-    * ceil(bytes/target) → write), different publication contract.
+    * ceil(bytes/target) → write; a z-order rewrite rounds that count
+    * up to a power of two), different publication contract.
     *
     * With `textCol` set, compaction also REPAIRS the incremental-ingest
     * sidecars for chains that started from a plain [[write]] (which
@@ -2722,8 +2723,14 @@ object SnapshotTable {
     val sorted =
       if (zorderCols.nonEmpty) {
         import org.apache.spark.sql.functions.col
+        // Morton cells are aligned at powers of two, so over evenly spread
+        // keys a power-of-two file count puts every range boundary near a
+        // cell edge. Any other count cuts cells: 3 files over a square
+        // grid each hold some x = 0 row, so an x-slice never prunes.
+        // Files stay between half the target and the target.
+        val nZ = Iterator.iterate(1)(_ * 2).dropWhile(_ < nOut).next()
         df.withColumn("__z", ZOrder.zValue(zorderCols.map(df(_)), zorderBits))
-          .repartitionByRange(nOut, pcols :+ col("__z"): _*)
+          .repartitionByRange(nZ, pcols :+ col("__z"): _*)
           .sortWithinPartitions(pcols :+ col("__z"): _*).drop("__z")
       } else if (sortCols.nonEmpty)
         df.repartitionByRange(nOut, pcols ++ sortCols.map(df(_)): _*)
@@ -4154,14 +4161,18 @@ object SnapshotTable {
   // ---- fuzzy (near-dup) incremental ingest -------------------------------
 
   /** Signature sidecar location for one data dir. The minhash parameters
-    * are ENCODED IN THE PATH (`k<k>s<shingleLen>[p]`): a caller changing
+    * are ENCODED IN THE PATH (`k<k>s<shingleLen>p`): a caller changing
     * them simply misses the old sidecars and pays the self-healing
     * payload recompute below — never a silent signature-shape mismatch.
+    * The `p` suffix names the md5-derived shingle hash
+    * ([[graft.functions.Text.md5Long]]). Unsuffixed `k<k>s<shingleLen>`
+    * dirs hold xxhash64 signatures written by earlier versions; they
+    * must never be read as md5 signatures (no component would match, so
+    * every near-dup would be admitted), so this name never resolves to
+    * them.
     */
-  private def minhashDir(path: String, dataDir: String,
-                         k: Int, shingleLen: Int, portable: Boolean) =
-    new Path(new Path(new Path(path, "_minhash"),
-      s"k${k}s$shingleLen${if (portable) "p" else ""}"), dataDir)
+  private def minhashDir(path: String, dataDir: String, k: Int, shingleLen: Int) =
+    new Path(new Path(new Path(path, "_minhash"), s"k${k}s${shingleLen}p"), dataDir)
 
   /** A signature sidecar is trustworthy only once its write JOB finished
     * — the `_SUCCESS` marker, not bare directory existence: sidecars are
@@ -4186,7 +4197,7 @@ object SnapshotTable {
     * signatures) instead of O(table):
     *
     *  1. Every fuzzy ingest PERSISTS its delta's minhash signatures as a
-    *     sidecar (`_minhash/k<k>s<len>/<dir>`, k longs ≈ 260 B per doc —
+    *     sidecar (`_minhash/k<k>s<len>p/<dir>`, k longs ≈ 260 B per doc —
     *     ~0.1% of a 100 TB corpus), so later admissions band-join the
     *     batch against SIGNATURE metadata, never payload text.
     *  2. A dir without a sidecar (plain-ingest history, a compaction's
@@ -4204,9 +4215,9 @@ object SnapshotTable {
     * rewrite materializes the overlay — the same conservative
     * deleted-content rule as the exact bloom. `tau`/`k`/`bands`/
     * `shingleLen` should stay constant per table; a change just forfeits
-    * the sidecar fast path for pre-change dirs. Set `portableHash` only
-    * when an external SQL replay of admissions is required (the fast
-    * path hashes shingles with xxhash64). Concurrency: BOTH tiers are
+    * the sidecar fast path for pre-change dirs. Shingles hash with the
+    * md5-derived [[graft.functions.Text.md5Long]], so an external SQL
+    * replay of admissions is possible. Concurrency: BOTH tiers are
     * race-safe — the fuzzy gate runs against the snapshot resolved at
     * entry, and on a lost commit race the delegated [[ingest]] rebase
     * re-runs it (via `rebaseRegate`) against exactly the racer-added
@@ -4222,7 +4233,6 @@ object SnapshotTable {
   def ingestFuzzy(spark: SparkSession, incoming: DataFrame, path: String,
                   idCol: String, textCol: String, tau: Double = 0.5,
                   k: Int = 32, bands: Int = 8, shingleLen: Int = 3,
-                  portableHash: Boolean = false,
                   expectedItems: Long = 1000000L, fpp: Double = 0.01,
                   format: String = "parquet", statsCols: Seq[String] = Nil,
                   evolveSchema: Boolean = false,
@@ -4241,7 +4251,7 @@ object SnapshotTable {
         case Some(v) =>
           val m = readManifestChecked(spark, path, v)
           val exSigs = m.dirs.map { d =>
-            val sd = minhashDir(path, d, k, shingleLen, portableHash)
+            val sd = minhashDir(path, d, k, shingleLen)
             if (minhashSidecarReady(f, sd))
               spark.read.format(m.format).load(sd.toString).select(col("sig"))
             else {
@@ -4257,7 +4267,7 @@ object SnapshotTable {
               // _SUCCESS re-check keeps half-published dirs untrusted.
               val sigs = graft.operators.Dedup.minhashSigs(
                 scanDirsAt(spark, path, v, Seq(d)), idCol, textCol,
-                k, shingleLen, portableHash).select(col("sig"))
+                k, shingleLen).select(col("sig"))
               val tmp = new Path(sd.getParent,
                 s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
               sigs.write.mode("overwrite").format(m.format).save(tmp.toString)
@@ -4272,7 +4282,7 @@ object SnapshotTable {
             val exBanded = graft.operators.Dedup.bandSigs(
               exSigs.reduce(_ unionByName _), k, bands)
             val inBanded = graft.operators.Dedup.minhashBanded(
-              incoming, idCol, textCol, k, bands, shingleLen, portableHash)
+              incoming, idCol, textCol, k, bands, shingleLen)
             incoming.join(
               graft.operators.Dedup.fuzzyDupIds(exBanded, inBanded, k, tau),
               col(idCol) === col("__dup"), "left_anti")
@@ -4290,7 +4300,7 @@ object SnapshotTable {
         (staged, racerDirs, winnerV) => {
           val wFormat = readManifestChecked(spark, path, winnerV).format
           val exSigs = racerDirs.map { d =>
-            val sd = minhashDir(path, d, k, shingleLen, portableHash)
+            val sd = minhashDir(path, d, k, shingleLen)
             if (minhashSidecarReady(f, sd))
               spark.read.format(wFormat).load(sd.toString).select(col("sig"))
             else
@@ -4299,14 +4309,14 @@ object SnapshotTable {
               // a path another committer owns
               graft.operators.Dedup.minhashSigs(
                 scanDirsAt(spark, path, winnerV, Seq(d)), idCol, textCol,
-                k, shingleLen, portableHash).select(col("sig"))
+                k, shingleLen).select(col("sig"))
           }
           if (exSigs.isEmpty) staged
           else {
             val exBanded = graft.operators.Dedup.bandSigs(
               exSigs.reduce(_ unionByName _), k, bands)
             val inBanded = graft.operators.Dedup.minhashBanded(
-              staged, idPhys, textPhys, k, bands, shingleLen, portableHash)
+              staged, idPhys, textPhys, k, bands, shingleLen)
             staged.join(
               graft.operators.Dedup.fuzzyDupIds(exBanded, inBanded, k, tau),
               col(idPhys) === col("__dup"), "left_anti")
@@ -4325,10 +4335,10 @@ object SnapshotTable {
       newM.dirs.filterNot(parentDirs).foreach { d =>
         graft.operators.Dedup.minhashSigs(
             scanDirsAt(spark, path, st.version, Seq(d)), idCol, textCol,
-            k, shingleLen, portableHash)
+            k, shingleLen)
           .select(col("sig"))
           .write.mode("overwrite").format(newM.format)
-          .save(minhashDir(path, d, k, shingleLen, portableHash).toString)
+          .save(minhashDir(path, d, k, shingleLen).toString)
       }
       FuzzyIngestStats(st.version, nIncoming, nIncoming - nSurvivors, st.nNew)
     } finally { if (weCached) { incoming.unpersist(); () } }

@@ -7,7 +7,6 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Winnowing fingerprint kernel (Schleimer, Wilkerson & Aiken, SIGMOD
@@ -22,18 +21,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * boundaries are walked once, each gram hashes a zero-copy byte range,
   * and the sliding min never leaves a local long array.
   *
-  * Hash parity is bit-exact with the forms it replaces:
-  *  - portable: `conv(substring(md5(gram),1,15),16,10)` = the digest's
-  *    first 60 bits big-endian (what DuckDB replays, [[graft.functions.Text.md5Long]]);
-  *  - fast path: Spark's `xxhash64(gram)` = XXH64 over the gram's UTF-8
-  *    bytes with Spark's seed 42.
+  * Hash parity is bit-exact with the form it replaces:
+  * `conv(substring(md5(gram),1,15),16,10)` = the digest's first 60 bits
+  * big-endian (what DuckDB replays, [[graft.functions.Text.md5Long]]).
   *
   * Inputs shorter than k+w−1 chars yield an empty array (the operator
   * filters them upstream; the declarative form's `sequence` would
   * misbehave there, so the kernel makes the degenerate case explicit).
   * Fingerprints keep first-occurrence order, matching `array_distinct`.
   */
-case class WinnowingFpExpr(child: Expression, k: Int, w: Int, portable: Boolean)
+case class WinnowingFpExpr(child: Expression, k: Int, w: Int)
     extends UnaryExpression {
 
   require(k >= 2 && w >= 1, s"degenerate winnowing params k=$k w=$w")
@@ -72,24 +69,18 @@ case class WinnowingFpExpr(child: Expression, k: Int, w: Int, portable: Boolean)
     offs(ci) = bytes.length
     val nGrams = nChars - k + 1
     val hs = new Array[Long](nGrams)
-    val md = if (portable) WinnowingFpExpr.digest.get() else null
+    val md = WinnowingFpExpr.digest.get()
     var p = 0
     while (p < nGrams) {
       val from = offs(p)
-      val len = offs(p + k) - from
-      hs(p) = if (portable) {
-        md.reset()
-        md.update(bytes, from, len)
-        val d = md.digest()
-        // first 15 hex chars of md5 parsed base-16 = first 60 bits BE
-        var acc = 0L
-        var j = 0
-        while (j < 7) { acc = (acc << 8) | (d(j) & 0xffL); j += 1 }
-        (acc << 4) | ((d(7) & 0xffL) >>> 4)
-      } else {
-        org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
-          bytes, Platform.BYTE_ARRAY_OFFSET + from, len, 42L)
-      }
+      md.reset()
+      md.update(bytes, from, offs(p + k) - from)
+      val d = md.digest()
+      // first 15 hex chars of md5 parsed base-16 = first 60 bits BE
+      var acc = 0L
+      var j = 0
+      while (j < 7) { acc = (acc << 8) | (d(j) & 0xffL); j += 1 }
+      hs(p) = (acc << 4) | ((d(7) & 0xffL) >>> 4)
       p += 1
     }
     // sliding min per full window; distinct in first-occurrence order

@@ -278,7 +278,7 @@ object TrainingData {
   // fraction — docs with no repeated run are absent by contract.
   private val d19k = 5
 
-  /** SQL twin of [[Dedup.repeatedRuns]] (portable-hash form) as the CTE
+  /** SQL twin of [[Dedup.repeatedRuns]] as the CTE
     * chain `w → u → p → rep → fl → marked → rid → runs` over the doc
     * table named by `src` — shared by d19, d20, and p3 so the three
     * replays cannot drift.
@@ -310,7 +310,7 @@ object TrainingData {
     (s, dir) => {
       val docs = t(s, dir, "documents")
       val runs = Dedup.repeatedRuns(Tables.spread(docs, col("doc_id")),
-        "doc_id", "text", d19k, portableHash = true)
+        "doc_id", "text", d19k)
       val toks = docs.select(col("doc_id"),
         size(Text.tokens(col("text"))).cast("long").as("n_toks"))
       runs.groupBy(col("doc_id"))
@@ -370,8 +370,7 @@ object TrainingData {
       // already dropped by the 80%-coverage gate in both forms.
       val docs = t(s, dir, "documents")
       val spreadDocs = Tables.spread(docs, col("doc_id"))
-      val runs = Dedup.repeatedRuns(spreadDocs, "doc_id", "text", d19k,
-        portableHash = true)
+      val runs = Dedup.repeatedRuns(spreadDocs, "doc_id", "text", d19k)
       val runList = runs.groupBy(col("doc_id"))
         .agg(collect_list(struct(col("p0"), col("p1"))).as("rs"),
           sum(col("p1") - col("p0") + 1).as("n_removed"))
@@ -425,7 +424,7 @@ object TrainingData {
   private val d17 = Q(
     (s, dir) => {
       val fps = Dedup.winnowingFingerprints(t(s, dir, "documents"),
-        "doc_id", "text", k = 8, w = 4, portableHash = true)
+        "doc_id", "text", k = 8, w = 4)
       Dedup.winnowingPairs(fps, maxFpDf = 100, minSharedFps = 3)
         .agg(count(lit(1)).as("n_pairs"),
           sum(when(col("shared") * 10 >= col("min_sz") * 8, 1L).otherwise(0L))
@@ -477,12 +476,10 @@ object TrainingData {
   // the portable md5-derived re-key ([[Text.md5Long]]) DuckDB replays the
   // ENTIRE minhash stack — shingles → 32 permutation minima → banded LSH
   // candidates → estimated Jaccard — bit-for-bit, so the summary is
-  // hash-compared, not just spec-pinned. DedupSpec still pins recall on
-  // the xxhash64 fast path.
+  // hash-compared, not just spec-pinned. DedupSpec still pins recall.
   private val d3 = Q(
     (s, dir) => {
-      Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text",
-          portableHash = true)
+      Dedup.minhashCandidates(t(s, dir, "documents"), "doc_id", "text")
         .agg(count(lit(1)).as("n_pairs"),
           sum(when(col("est_jaccard") >= 0.5, 1L).otherwise(0L)).as("n_ge_half"),
           Det.qz(avg(col("est_jaccard"))).as("avg_est"))
@@ -531,8 +528,7 @@ object TrainingData {
   // HUGEINT SUM carries exactly before the final BIGINT cast.
   private val d4 = Q(
     (s, dir) => {
-      Dedup.simhashCandidates(t(s, dir, "documents"), "doc_id", "text",
-          portableHash = true)
+      Dedup.simhashCandidates(t(s, dir, "documents"), "doc_id", "text")
         .agg(count(lit(1)).as("n_pairs"),
           coalesce(min(col("hamming")), lit(-1L)).as("min_hamming"),
           Det.qz(coalesce(avg(col("hamming")), lit(-1.0))).as("avg_hamming"))
@@ -768,8 +764,7 @@ object TrainingData {
   private val t20 = Q(
     (s, dir) => {
       val sampled = graft.operators.Sampling.weightedSample(
-        t(s, dir, "documents"), "doc_id", "n_chars", "lang", 20,
-        portableHash = true)
+        t(s, dir, "documents"), "doc_id", "n_chars", "lang", 20)
       sampled.groupBy(col("lang"))
         .agg(count(lit(1)).as("n_sampled"),
           Det.davg(col("n_chars").cast("double")).as("avg_sampled_chars"),
@@ -799,13 +794,11 @@ object TrainingData {
   // decision is oracle-replayed: DuckDB rebuilds the candidates like d3
   // and resolves clusters with a recursive transitive closure whose
   // per-node minimum reachable id IS the min-label fixpoint the
-  // distributed loop converges to. DedupSpec still pins recall on the
-  // xxhash64 fast path.
+  // distributed loop converges to. DedupSpec still pins recall.
   private val d13 = Q(
     (s, dir) => {
       val docs = t(s, dir, "documents")
-      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text",
-          portableHash = true)
+      val pairs = Dedup.minhashCandidates(docs, "doc_id", "text")
         .filter(col("est_jaccard") >= 0.5)
       val cc = Dedup.connectedComponents(pairs, "id1", "id2")
       val removed = cc.filter(col("id") =!= col("cluster"))
@@ -2474,7 +2467,7 @@ object TrainingData {
       val kept = staged.filter(col("g_kept"))
         .select(col("doc_id"), col("source"), col("text"), col("n_toks"))
       val removed = Dedup.repeatedRuns(Tables.spread(kept, col("doc_id")),
-          "doc_id", "text", d19k, portableHash = true)
+          "doc_id", "text", d19k)
         .groupBy(col("doc_id"))
         .agg(sum(col("p1") - col("p0") + 1).as("n_removed"))
       val substr = kept.join(removed, Seq("doc_id"), "left")
@@ -4242,7 +4235,7 @@ object TrainingData {
       Dedup.newDocumentsFuzzy(
           docs.filter(col("doc_id") < 300),
           docs.filter(col("doc_id") >= 300),
-          "doc_id", "text", tau = 0.5, portableHash = true)
+          "doc_id", "text", tau = 0.5)
         .select(col("doc_id"), col("lang"))
         .orderBy("doc_id")
     },
@@ -4295,9 +4288,9 @@ object TrainingData {
       val docs = t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("text"))
       SnapshotTable.ingestFuzzy(s, docs.filter(col("doc_id") < 300), path,
-        "doc_id", "text", portableHash = true, expectedItems = 100000L)
+        "doc_id", "text", expectedItems = 100000L)
       SnapshotTable.ingestFuzzy(s, docs.filter(col("doc_id") >= 300), path,
-        "doc_id", "text", portableHash = true, expectedItems = 100000L)
+        "doc_id", "text", expectedItems = 100000L)
       ()
     }
 

@@ -1,7 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import java.net.URI
 import java.sql.Timestamp
 
 /** One parsed file, flattened for Spark (profile-level metadata). */
@@ -47,16 +49,24 @@ case class IosObservation(
   */
 object IosReader {
 
-  private def rawFiles(spark: SparkSession, pathGlob: String): DataFrame =
+  /** (file name, whole content) per file. `input_file_name()` is a
+    * URL-encoded URI (`a dir/x y%z.ctd` comes back as
+    * `file:///…/a%20dir/x%20y%25z.ctd`), so the name is decoded here, once,
+    * to the on-disk name the DSv2 `format("ios")` source reports.
+    */
+  private[graft] def rawFiles(spark: SparkSession, pathGlob: String): Dataset[(String, String)] = {
+    import spark.implicits._
     spark.read.option("wholetext", "true").format("text").load(pathGlob)
-      .select(input_file_name().as("path"), col("value"))
+      .select(input_file_name(), col("value")).as[(String, String)]
+      .map { case (uri, content) => (new Path(new URI(uri)).getName, content) }
+  }
 
   /** One row per file: header metadata, coordinates, UTC start time. */
   def profiles(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    rawFiles(spark, pathGlob).as[(String, String)].mapPartitions { it =>
-      it.map { case (path, content) =>
-        val p = IosFileParser.parse(path.split('/').last, content)
+    rawFiles(spark, pathGlob).mapPartitions { it =>
+      it.map { case (name, content) =>
+        val p = IosFileParser.parse(name, content)
         IosProfile(p.filename, p.headerVersion,
           p.administration.get("MISSION").orElse(p.administration.get("CRUISE")),
           p.administration.get("AGENCY"), p.administration.get("PROJECT"),
@@ -75,9 +85,9 @@ object IosReader {
     */
   def observations(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    rawFiles(spark, pathGlob).as[(String, String)].mapPartitions { it =>
-      it.flatMap { case (path, content) =>
-        val p = IosFileParser.parse(path.split('/').last, content)
+    rawFiles(spark, pathGlob).mapPartitions { it =>
+      it.flatMap { case (name, content) =>
+        val p = IosFileParser.parse(name, content)
         val pads: Int => Option[String] =
           i => p.details.lift(i).map(_.pad.trim).filter(_.nonEmpty)
             .orElse(p.file.get("PAD").map(_.trim))

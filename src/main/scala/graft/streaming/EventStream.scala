@@ -298,7 +298,6 @@ object EventStream {
   def fuzzySink(incoming: DataFrame, path: String, idCol: String,
                 textCol: String, tau: Double = 0.5, k: Int = 32,
                 bands: Int = 8, shingleLen: Int = 3,
-                portableHash: Boolean = false,
                 expectedItems: Long = 1000000L,
                 fpp: Double = 0.01,
                 checkpoint: Option[String] = None,
@@ -310,7 +309,7 @@ object EventStream {
         import graft.operators.SnapshotTable
         SnapshotTable.ingestFuzzy(
           batch.sparkSession, batch, path, idCol, textCol, tau, k, bands,
-          shingleLen, portableHash, expectedItems, fpp,
+          shingleLen, expectedItems, fpp,
           statsCols = statsCols)
         maintenance.foreach { m =>
           if (batchId > 0 && batchId % m.everyBatches == 0)

@@ -199,6 +199,23 @@ class IosReaderSpec extends SparkSpec {
     assert(p.data == Vector(Vector("12.3", "6.78")))
   }
 
+  test("every reader reports the on-disk filename, not the URL-encoded path") {
+    // a space and a percent sign: input_file_name() renders both
+    // URL-encoded (%20, %25), the DSv2 source reports the plain name
+    val dir = Files.createDirectories(
+      Files.createTempDirectory("graft-ios-names").resolve("a dir"))
+    Files.write(dir.resolve("x y%z.ctd"),
+      fmtFixture("(1X,F5.1,1X,F5.2)", "  12.3  6.78").getBytes("ISO-8859-1"))
+    val glob = s"$dir/*.ctd"
+    def names(df: org.apache.spark.sql.DataFrame): Set[String] =
+      df.select("filename").distinct().collect().map(_.getString(0)).toSet
+    val want = Set("x y%z.ctd")
+    assert(names(spark.read.format("ios").load(glob)) == want)
+    assert(names(IosReader.profiles(spark, glob)) == want)
+    assert(names(IosReader.observations(spark, glob)) == want)
+    assert(names(graft.operators.ReferencePipeline.cfAttributes(spark, glob)) == want)
+  }
+
   test("unusable FORMAT falls back to channel-detail widths") {
     // Q is not a descriptor → parser throws → width path (6|6)
     val p1 = IosFileParser.parse("bad.ctd",

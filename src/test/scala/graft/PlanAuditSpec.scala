@@ -219,7 +219,7 @@ class PlanAuditSpec extends SparkSpec {
   test("d17: winnowing fingerprints build map-side, no per-character shuffle") {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     val fps = graft.operators.Dedup.winnowingFingerprints(
-      docs, "doc_id", "text", k = 8, w = 4, portableHash = true)
+      docs, "doc_id", "text", k = 8, w = 4)
     val p = fps.queryExecution
       .explainString(org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
     // the only permissible exchange is Tables.spread's small-input

@@ -407,7 +407,7 @@ class Round14Spec extends SparkSpec {
       expectedItems = 10000L)
     assert(s1.nNew == 1500L && s1.nFuzzyDropped == 0L)
     // sidecar persisted for the delta dir
-    val mhRoot = new java.io.File(path, "_minhash/k32s3")
+    val mhRoot = new java.io.File(path, "_minhash/k32s3p")
     assert(mhRoot.isDirectory && mhRoot.listFiles().nonEmpty, "signature sidecar missing")
     val payloadBytes = new java.io.File(path).listFiles()
       .filter(_.getName.startsWith("snap-")).flatMap(_.listFiles())
@@ -460,6 +460,29 @@ class Round14Spec extends SparkSpec {
       .filter(_.startsWith("snap-")).toSet
     assert(mhRoot.listFiles().map(_.getName).toSet.subsetOf(liveDirs),
       "expire left minhash sidecars of deleted dirs behind")
+  }
+
+  test("ingestFuzzy never reads unsuffixed (xxhash64-era) signature sidecars") {
+    import spark.implicits._
+    val path = tmp("graft-fuzzy-legacy")
+    def words(i: Long): String = {
+      val md = java.security.MessageDigest.getInstance("MD5")
+      (0 until 100).map { j =>
+        md.digest(s"$i:$j".getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
+      }.mkString(" ")
+    }
+    SnapshotTable.ingestFuzzy(spark, (0L until 20L).map(i => (i, words(i))).toDF("doc_id", "text"),
+      path, "doc_id", "text", expectedItems = 1000L)
+    // earlier versions wrote xxhash64 signatures under `_minhash/k32s3`;
+    // plant complete sidecars there whose all -1 signatures match nothing
+    val poison = Seq(Seq.fill(32)(-1L)).toDF("sig")
+    dataDirs(path).foreach { d =>
+      poison.write.mode("overwrite").parquet(new java.io.File(path, s"_minhash/k32s3/$d").toString)
+    }
+    val nearDup = (900L, words(7L).split(" ").take(95).mkString(" ") + " tail drift here")
+    val s2 = SnapshotTable.ingestFuzzy(spark, Seq(nearDup).toDF("doc_id", "text"),
+      path, "doc_id", "text", expectedItems = 1000L)
+    assert(s2.nFuzzyDropped == 1L, s"near-dup admitted through an unsuffixed sidecar: $s2")
   }
 
   test("manifest round-trip: physmap and physretired survive commit/parse; pre-r14 readers would fail loudly (unknown tag)") {

@@ -13,32 +13,28 @@ class Round7Spec extends SparkSpec {
   private def exprOf(c: org.apache.spark.sql.Column) =
     org.apache.spark.sql.GraftSqlShim.expression(c)
 
-  test("winnowing kernel matches the declarative HOF form bit-for-bit (both hashes)") {
+  test("winnowing kernel matches the declarative HOF form bit-for-bit (md5 hash)") {
     import graft.functions.Text
     val k = 8; val w = 4
     val norm = regexp_replace(lower(trim(col("text"))), "\\s+", " ")
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").as("id"), norm.as("txt"))
       .filter(length(col("txt")) >= k + w - 1)
-    for (portable <- Seq(true, false)) {
-      val hashOf = (g: org.apache.spark.sql.Column) =>
-        if (portable) Text.md5Long(g) else xxhash64(g)
-      // the reference formulation: hash per gram, windowed array_min,
-      // array_distinct — evaluated interpretively (slow but obviously
-      // faithful to Schleimer et al. §2)
-      val gramHashes = transform(sequence(lit(0), length(col("txt")) - k),
-        pos => hashOf(substr(col("txt"), pos + 1, lit(k))))
-      val declarative = element_at(
-        transform(array(gramHashes), hs =>
-          array_distinct(transform(sequence(lit(0), size(hs) - w),
-            i => array_min(slice(hs, i + 1, lit(w)))))), 1)
-      val native = exprCol(graft.plans.WinnowingFpExpr(exprOf(col("txt")), k, w, portable))
-      val diff = base
-        .select(col("id"), declarative.as("d"), native.as("n"))
-        .filter(col("d") =!= col("n"))
-        .count()
-      assert(diff == 0, s"kernel diverges from the HOF form (portable=$portable)")
-    }
+    // the reference formulation: hash per gram, windowed array_min,
+    // array_distinct — evaluated interpretively (slow but obviously
+    // faithful to Schleimer et al. §2)
+    val gramHashes = transform(sequence(lit(0), length(col("txt")) - k),
+      pos => Text.md5Long(substr(col("txt"), pos + 1, lit(k))))
+    val declarative = element_at(
+      transform(array(gramHashes), hs =>
+        array_distinct(transform(sequence(lit(0), size(hs) - w),
+          i => array_min(slice(hs, i + 1, lit(w)))))), 1)
+    val native = exprCol(graft.plans.WinnowingFpExpr(exprOf(col("txt")), k, w))
+    val diff = base
+      .select(col("id"), declarative.as("d"), native.as("n"))
+      .filter(col("d") =!= col("n"))
+      .count()
+    assert(diff == 0, "kernel diverges from the HOF form")
   }
 
   test("SQ8 ADC dot expression matches the interpreted HOF fold (incl. null semantics)") {
