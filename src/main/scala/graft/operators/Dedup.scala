@@ -615,14 +615,21 @@ object Dedup {
     * distributed per-level loop runs exactly as before (checkpoint once,
     * one distributed CC per level) — billions of mr edges at 100 TB
     * never collect.
+    *
+    * A NaN weight counts as +∞ on both paths: Spark SQL orders NaN above
+    * every double, so `w >= λ` keeps a NaN edge at every level, while the
+    * driver path's Scala `>=` would drop it — the weights are normalized
+    * before either path runs.
     */
   private[graft] def connectedComponentsAtLevels(
-      edgesW: DataFrame, id1: String, id2: String, wCol: String,
+      edgesW0: DataFrame, id1: String, id2: String, wCol: String,
       thresholds: Seq[Double],
       driverEdgeLimit: Int = 4 << 20): DataFrame = {
     require(thresholds.nonEmpty &&
       thresholds == thresholds.sorted(Ordering[Double].reverse),
       s"thresholds must be descending, got $thresholds")
+    val edgesW = edgesW0.withColumn(wCol,
+      nanvl(col(wCol).cast("double"), lit(Double.PositiveInfinity)))
     val spark = edgesW.sparkSession
     val integralIds = edgesW.schema(id1).dataType match {
       case org.apache.spark.sql.types.ByteType | org.apache.spark.sql.types.ShortType |

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
 
@@ -605,13 +605,12 @@ object SnapshotTable {
     val committedSchema = nullableSchema(df.schema)
     val physmap = assignPhysical(committedSchema, parentPhys, parentRetired)
     val dir = stageDir(next)
-    stagedWrite(gated, new Path(path, dir), format, effParts, physmap)
-    // declare the schema at the stats re-read: a zero-row PARTITIONED
-    // overwrite (CREATE TABLE of a partitioned table) stages no data
-    // files at all, and a bare load of the empty dir cannot infer
-    writeStatsSidecar(spark, path, dir,
-      spark.read.format(format).schema(physSchema(committedSchema, physmap))
-        .load(new Path(path, dir).toString),
+    stagedWrite("write", gated, new Path(path, dir), format, effParts, physmap)
+    // the declared schema also covers a zero-row PARTITIONED overwrite
+    // (CREATE TABLE of a partitioned table), which stages no data files
+    // a bare load could infer from
+    writeStatsSidecar("write", path, dir,
+      readStaged(spark, path, dir, format, Some(committedSchema), physmap),
       effStats.map(c => physmap.getOrElse(c, c)))
     commit(spark, path, next, Manifest(Seq(dir), format, None,
       Some(committedSchema), effStats, kind = Some("overwrite"),
@@ -642,7 +641,8 @@ object SnapshotTable {
       c.mode match {
         case "drop" => out = out.filter(!violates)
         case _ =>
-          val bad = out.filter(violates).limit(3).collect()
+          val bad = phase(df.sparkSession, op, "constraint check")(
+            out.filter(violates).limit(3).collect())
           if (bad.nonEmpty) throw new IllegalArgumentException(
             s"$op batch violates CHECK constraint '${c.name}' (${c.expr}); " +
               s"first violating row(s): ${bad.map(_.toString.take(160)).mkString("; ")}. " +
@@ -928,19 +928,17 @@ object SnapshotTable {
     requirePartitionable(effParts, committedSchema, "appendBranch")
     val physmap = assignPhysical(committedSchema, parent0.physmap,
       parent0.physRetired)
-    val weCached = incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    // cached only for fail-mode probes, as in [[append]]
+    val weCached = parent0.constraints.exists(_.mode != "drop") &&
+      incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (weCached) incoming.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val gated = enforceConstraints(incoming, parent0.constraints, "appendBranch")
       val deltaDir = stageDir(headV0 + 1)
-      stagedWrite(gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
+      stagedWrite("appendBranch", gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
         new Path(path, deltaDir), format, effParts, physmap)
-      val writtenReader = spark.read.format(format)
-      val written =
-        (if (effParts.isEmpty) writtenReader
-         else writtenReader.schema(physSchema(committedSchema, physmap)))
-          .load(new Path(path, deltaDir).toString)
-      writeStatsSidecar(spark, path, deltaDir, written,
+      writeStatsSidecar("appendBranch", path, deltaDir,
+        readStaged(spark, path, deltaDir, format, Some(committedSchema), physmap),
         effStats.map(c => physmap.getOrElse(c, c)))
       commitLoop(spark, path, s"appendBranch('$name')", headV0, Some(parent0),
           Seq(deltaDir), admits = Nil, ref = Some(name)) { (v, base, _) =>
@@ -1234,13 +1232,6 @@ object SnapshotTable {
       case None => requested
     }
 
-  /** Stage a snapshot directory, Hive-layout-partitioned when the table
-    * is: `dir/<k1>=<v1>/.../part-*.parquet`. Partition values live in
-    * the path, not the files — Spark's partition discovery restores the
-    * columns on read (each manifest dir is a discovery root; the
-    * first non-`k=v` path segment stops the upward walk, so the
-    * snapshot-dir name never parses as a partition).
-    */
   /** `schema` with every field renamed to its physical (on-disk) name —
     * what data files actually carry and what raw (pre-alias) readers
     * must declare. Identity when the manifest has no column mapping.
@@ -1303,19 +1294,25 @@ object SnapshotTable {
     out
   }
 
-  /** Stage `df` (logical column names) to `dest`, translating to the
-    * table's physical names at this single choke point — every data
-    * write in the file goes through here, so "files carry physical
-    * names" holds by construction. Partition columns are translated
-    * too, though rename/drop refuse on them (identity in practice).
-    */
-  /** Stage one commit's data files. On a PARTITIONED table the write
-    * distribution matters at scale: a naive `partitionBy` makes every
-    * task open a file per partition value it happens to hold — at
-    * thousands of tasks × hundreds of values that is the small-files
-    * explosion (millions of files per commit). The session conf
-    * `spark.graft.write.distribution` picks the Iceberg
-    * write.distribution-mode answer:
+  /** Stage one commit's data files from `df` (logical column names) into
+    * `dest` and return the number of rows written, as counted by the
+    * write job itself ([[GraftSqlShim.saveCounted]]) — callers never
+    * re-read the dir to learn it. Names translate to the table's
+    * physical names here, the single choke point every data write in
+    * the file goes through, so "files carry physical names" holds by
+    * construction (partition columns too, though rename/drop refuse on
+    * them). A partitioned table is written Hive-layout,
+    * `dest/<k1>=<v1>/.../part-*`: partition values live in the path and
+    * Spark's partition discovery restores them on read (each manifest
+    * dir is a discovery root; the first non-`k=v` segment stops the
+    * upward walk, so the snapshot-dir name never parses as a partition).
+    *
+    * On a PARTITIONED table the write distribution matters at scale: a
+    * naive `partitionBy` makes every task open a file per partition
+    * value it happens to hold — at thousands of tasks × hundreds of
+    * values that is the small-files explosion (millions of files per
+    * commit). The session conf `spark.graft.write.distribution` picks
+    * the Iceberg write.distribution-mode answer:
     *   - `none` (default): no extra exchange — callers that already
     *     cluster (compact's range-exchange, sorted ingests) pay nothing
     *   - `hash`: one exchange on the partition columns — each value
@@ -1328,9 +1325,9 @@ object SnapshotTable {
     * Unpartitioned writes never re-shuffle here (their file count is
     * the caller's repartition decision).
     */
-  private def stagedWrite(df: DataFrame, dest: Path, format: String,
+  private def stagedWrite(op: String, df: DataFrame, dest: Path, format: String,
                           partitionCols: Seq[String],
-                          physmap: Map[String, String] = Map.empty): Unit = {
+                          physmap: Map[String, String] = Map.empty): Long = {
     import org.apache.spark.sql.functions.col
     val out =
       if (physmap.isEmpty) df
@@ -1349,9 +1346,32 @@ object SnapshotTable {
           s"spark.graft.write.distribution must be one of " +
             s"none|hash|rebalance|range; got '$other'")
       }
-    val w = clustered.write.mode("overwrite").format(format)
-    (if (parts.nonEmpty) w.partitionBy(parts: _*) else w)
-      .save(dest.toString)
+    phase(df.sparkSession, op, "staged write")(
+      GraftSqlShim.saveCounted(clustered, format, parts, dest.toString))
+  }
+
+  /** Run `body` with every Spark job it launches described as
+    * `graft <op>: <what>` (`spark.job.description`, what the UI and
+    * listeners show), then restore the caller's description.
+    */
+  private def phase[T](spark: SparkSession, op: String, what: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val prev = sc.getLocalProperty(key)
+    sc.setLocalProperty(key, s"graft $op: $what")
+    try body finally sc.setLocalProperty(key, prev)
+  }
+
+  /** Raw re-read of a data dir graft staged: physical column names, and
+    * the committed schema DECLARED so the load infers nothing (no footer
+    * job) and partition values come back in their declared types. Only a
+    * pre-r13 manifest (`schema` None) falls back to inference.
+    */
+  private def readStaged(spark: SparkSession, path: String, dir: String,
+                         format: String, schema: Option[StructType],
+                         physmap: Map[String, String]): DataFrame = {
+    val r = spark.read.format(format)
+    schema.fold(r)(s => r.schema(physSchema(s, physmap))).load(new Path(path, dir).toString)
   }
 
   /** First data file of one snapshot dir, if any — a dir's files share
@@ -1616,6 +1636,19 @@ object SnapshotTable {
   private[graft] def posDeletePath(path: String, name: String) =
     new Path(posDeletesRoot(path), name)
 
+  /** Positional-delete sidecar layout: (file subpath, row ordinal). */
+  private val posDeleteSchema = StructType(Seq(
+    org.apache.spark.sql.types.StructField("file", org.apache.spark.sql.types.StringType),
+    org.apache.spark.sql.types.StructField("ord", org.apache.spark.sql.types.LongType)))
+
+  /** The union of the named positional-delete sidecars, schema declared
+    * (no footer inference job).
+    */
+  private def readPosDeletes(spark: SparkSession, path: String, format: String,
+                             names: Seq[String]): DataFrame =
+    spark.read.format(format).schema(posDeleteSchema)
+      .load(names.map(posDeletePath(path, _).toString): _*)
+
   /** [[rawScan]] plus — when `withPos` — each row's (file subpath, row
     * ordinal) identity from the parquet scan's `_metadata` struct: the
     * positional-delete join key. The subpath ([[fileSubpath]] — the
@@ -1700,9 +1733,7 @@ object SnapshotTable {
     val bytes = posDeleteBytes(spark, path, m.posDeletes)
     val memoKey = path + "|" + m.posDeletes.sorted.mkString(",") + "|" + bytes
     if (vintageCheckedPosDeletes.contains(memoKey)) return
-    val bare = m.posDeletes.map(n =>
-        spark.read.format(m.format).load(posDeletePath(path, n).toString))
-      .reduce(_ unionByName _)
+    val bare = readPosDeletes(spark, path, m.format, m.posDeletes)
       .filter(!col("file").contains("/")).limit(1).count()
     if (bare > 0) throw bareNamePosDeleteError(path)
     if (vintageCheckedPosDeletes.size >= vintageMemoMaxEntries)
@@ -1716,9 +1747,7 @@ object SnapshotTable {
                               keepPosCols: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions._
     requireSubpathKeyedPosDeletes(spark, path, m)
-    val pd = m.posDeletes.map(n =>
-        spark.read.format(m.format).load(posDeletePath(path, n).toString))
-      .reduce(_ unionByName _)
+    val pd = readPosDeletes(spark, path, m.format, m.posDeletes)
       .select(col("file").as("__graft_delf"), col("ord").as("__graft_delo"))
     val bytes = posDeleteBytes(spark, path, m.posDeletes)
     val build = if (bytes <= tombstoneBroadcastMaxBytes) broadcast(pd) else pd
@@ -1746,10 +1775,7 @@ object SnapshotTable {
     if (names.isEmpty) return Some(Map.empty)
     if (posDeleteBytes(spark, path, names) > tombstoneBroadcastMaxBytes) None
     else {
-      val pd = names.map(n =>
-          spark.read.format(m.format).load(posDeletePath(path, n).toString))
-        .reduce(_ unionByName _)
-      val mask = pd.select("file", "ord").collect()
+      val mask = readPosDeletes(spark, path, m.format, names).collect()
         .groupBy(_.getString(0))
         .map { case (file, rows) => file -> rows.map(_.getLong(1)).sorted }
         .toMap
@@ -1796,8 +1822,7 @@ object SnapshotTable {
     if (tombstoneBytes(spark, path, m.tombstones) > tombstoneBroadcastMaxBytes) None
     else {
       val perName = m.tombstones.map { name =>
-        val df = spark.read.format(m.format)
-          .load(tombstonePath(path, name).toString).select(col(key))
+        val df = readTombstone(spark, path, m, key, name).select(col(key))
         val conv = org.apache.spark.sql.catalyst.CatalystTypeConverters
           .createToCatalystConverter(df.schema.head.dataType)
         (dirVersion(name), df.collect().iterator
@@ -1830,6 +1855,18 @@ object SnapshotTable {
   private def tombstonesRoot(path: String) = new Path(path, "_tombstones")
   private[graft] def tombstonePath(path: String, name: String) =
     new Path(tombstonesRoot(path), name)
+
+  /** One tombstone sidecar: the merge-on-read key column, declared at its
+    * table type (no footer inference job; only a pre-r13 manifest with
+    * no schema infers).
+    */
+  private def readTombstone(spark: SparkSession, path: String, m: Manifest,
+                            key: String, name: String): DataFrame = {
+    val r = spark.read.format(m.format)
+    m.schema.flatMap(_.fields.find(_.name == key))
+      .fold(r)(f => r.schema(StructType(Seq(f.copy(nullable = true)))))
+      .load(tombstonePath(path, name).toString)
+  }
 
   /** Commit version encoded in a staged artifact name
     * (`snap-<v>-<uuid>` / `t<v>-<uuid>` — both from the same zero-padded
@@ -1918,7 +1955,7 @@ object SnapshotTable {
     val key = m.morKey.getOrElse(throw new IllegalStateException(
       s"manifest at $path lists tombstones but no morkey — corrupt manifest"))
     val ts = m.tombstones.map { name =>
-      spark.read.format(m.format).load(tombstonePath(path, name).toString)
+      readTombstone(spark, path, m, key, name)
         .select(col(key).as("__graft_tk"), lit(dirVersion(name)).as("__graft_tsv"))
     }.reduce(_ unionByName _)
       .groupBy(col("__graft_tk")).agg(max(col("__graft_tsv")).as("__graft_tsv"))
@@ -2000,11 +2037,12 @@ object SnapshotTable {
     org.apache.spark.sql.types.StructField("n_nonnull", org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("bloom", org.apache.spark.sql.types.BinaryType)))
 
-  private def writeStatsSidecar(spark: SparkSession, path: String, dataDir: String,
+  private def writeStatsSidecar(op: String, path: String, dataDir: String,
                                 writtenIn: => DataFrame, statsCols: Seq[String]): Unit = {
     import org.apache.spark.sql.functions._
     if (statsCols.isEmpty) return
     val written = writtenIn
+    val spark = written.sparkSession
     val byName = written.schema.fields.map(f => f.name -> f.dataType).toMap
     val cols = statsCols.filter(c => byName.get(c).exists(dt =>
       numEncoder(dt).isDefined || dt == org.apache.spark.sql.types.StringType))
@@ -2021,8 +2059,8 @@ object SnapshotTable {
     // One pass over the just-written files; stats rows are metadata
     // (files × columns), so the driver-side reshape is a few KB even at
     // thousand-file commits — the same scale class as a manifest.
-    val perFile = written.groupBy(input_file_name().as("__file"))
-      .agg(aggs.head, aggs.tail: _*).collect()
+    val perFile = phase(spark, op, "stats sidecar")(written
+      .groupBy(input_file_name().as("__file")).agg(aggs.head, aggs.tail: _*).collect())
     val rows = perFile.flatMap { r =>
       val fname = fileSubpath(r.getAs[String]("__file"), dataDir)
       cols.map { c =>
@@ -2066,9 +2104,9 @@ object SnapshotTable {
       else {
         val maxN = rows.map(_._7).maxOption.getOrElse(0L)
         val items = math.max(1024L, maxN)
-        val aggs = strCols.map(c => org.apache.spark.sql.GraftSqlShim.column(
+        val aggs = strCols.map(c => GraftSqlShim.column(
           graft.plans.BloomAgg(
-            org.apache.spark.sql.GraftSqlShim.expression(col(c)),
+            GraftSqlShim.expression(col(c)),
             items, 0.02).toAggregateExpression()).as(s"__bl_$c"))
         val agged = written.groupBy(input_file_name().as("__file"))
           .agg(aggs.head, aggs.tail: _*)
@@ -2085,9 +2123,10 @@ object SnapshotTable {
             lit(null).cast("long").as("n_nonnull"),
             col("e.bloom").as("bloom")))
       }
-    bloomRows.fold(rangeRows)(rangeRows.unionByName(_))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(statsDir(path, dataDir).toString)
+    phase(spark, op, "stats sidecar")(GraftSqlShim.saveCounted(
+      bloomRows.fold(rangeRows)(rangeRows.unionByName(_)).coalesce(1),
+      "parquet", Nil, statsDir(path, dataDir).toString))
+    ()
   }
 
   /** Extracted range constraint from one predicate conjunct: closed
@@ -2516,9 +2555,9 @@ object SnapshotTable {
         import org.apache.spark.sql.functions.{col => c, lit, when}
         val probes = pointStr.map { case (colName, value) =>
           when(c("col") === colName,
-            org.apache.spark.sql.GraftSqlShim.column(
+            GraftSqlShim.column(
               graft.plans.BloomMightContainBinary(
-                org.apache.spark.sql.GraftSqlShim.expression(c("bloom")),
+                GraftSqlShim.expression(c("bloom")),
                 org.apache.spark.sql.catalyst.expressions.Literal(
                   value.getBytes(java.nio.charset.StandardCharsets.UTF_8)))))
             .otherwise(lit(null).cast("boolean"))
@@ -2742,7 +2781,7 @@ object SnapshotTable {
           .drop("__spread")
       } else df.repartition(nOut)
     val nextDir = stageDir(v + 1)
-    stagedWrite(sorted, new Path(path, nextDir), m.format, m.partitionCols,
+    stagedWrite("compact", sorted, new Path(path, nextDir), m.format, m.partitionCols,
       m.physmap)
     // Compaction also collapses an append chain back to ONE directory.
     // The hash sidecar — when the whole chain has one — collapses by
@@ -2753,12 +2792,7 @@ object SnapshotTable {
     // rebuild it from the just-written compacted output (see scaladoc).
     import org.apache.spark.sql.functions.{col, xxhash64}
     // raw re-read of the freshly-written files: PHYSICAL column names
-    lazy val written = {
-      val r = spark.read.format(m.format)
-      (if (m.partitionCols.isEmpty) r
-       else m.schema.fold(r)(s => r.schema(physSchema(s, m.physmap))))
-        .load(new Path(path, nextDir).toString)
-    }
+    lazy val written = readStaged(spark, path, nextDir, m.format, m.schema, m.physmap)
     // A tombstone overlay makes BOTH carry-forward shortcuts invalid:
     // the old hash sidecars and bloom still contain the masked rows'
     // content, and compaction is exactly the point where deleted content
@@ -2772,11 +2806,11 @@ object SnapshotTable {
     val srcSidecars = m.dirs.map(d => hashesDir(path, d))
     if (!m.hasOverlay && m.hashesValid &&
         srcSidecars.nonEmpty && srcSidecars.forall(f.exists))
-      spark.read.format(m.format).load(srcSidecars.map(_.toString): _*)
-        .write.mode("overwrite").format(m.format)
-        .save(hashesDir(path, nextDir).toString)
+      phase(spark, "compact", "hash sidecar")(GraftSqlShim.saveCounted(
+        readHashes(spark, m.format, srcSidecars), m.format, Nil,
+        hashesDir(path, nextDir).toString))
     else textCol.foreach(tc =>
-      writeHashSidecar(spark, path, nextDir, written, m.physOf(tc), m.format))
+      writeHashSidecar("compact", path, nextDir, written, m.physOf(tc), m.format))
     // Only a manifest-NAMED bloom carries forward; a legacy per-version
     // file is keyed on the pre-contentKey hash and must not be laundered
     // into a named reference (readBloom would then trust it). A chain
@@ -2787,7 +2821,7 @@ object SnapshotTable {
       case (some @ Some(_), _) if !m.hasOverlay => some
       case (_, Some(tc)) =>
         val name = f"b${v + 1}%08d-${nextDir.takeRight(8)}.bin"
-        val b = bloomOf(written, xxhash64(contentKey(col(m.physOf(tc)))),
+        val b = bloomOf("compact", written, xxhash64(contentKey(col(m.physOf(tc)))),
           expectedItems, fpp)
         writeBloomAt(spark, path, name, b)
         rebuiltBloom = Some(b)
@@ -2795,7 +2829,7 @@ object SnapshotTable {
       case _ => None
     }
     val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
-    writeStatsSidecar(spark, path, nextDir, written,
+    writeStatsSidecar("compact", path, nextDir, written,
       effStats.map(m.physOf))
     val committedSchema = m.schema.getOrElse(nullableSchema(written.schema))
     val parentDirs = m.dirs.toSet
@@ -2822,8 +2856,7 @@ object SnapshotTable {
             val merged =
               if (appendAdded.isEmpty) Some(rb)
               else {
-                val ab = bloomOf(spark.read.format(m.format)
-                  .load(sidecars.map(_.toString): _*),
+                val ab = bloomOf("compact", readHashes(spark, m.format, sidecars),
                   xxhash64(col("__h")), expectedItems, fpp)
                 if (rb.isCompatible(ab)) { rb.mergeInPlace(ab); Some(rb) } else None
               }
@@ -2927,22 +2960,18 @@ object SnapshotTable {
           .drop("__spread")
       } else df.repartition(nOut)
     val nextDir = stageDir(v + 1)
-    stagedWrite(spread, new Path(path, nextDir), m.format, m.partitionCols,
+    stagedWrite("binpack", spread, new Path(path, nextDir), m.format, m.partitionCols,
       m.physmap)
     // hash sidecar: pure union of the merged inputs' sidecars — content
     // is unchanged, so no payload is re-hashed
     val srcSidecars = smalls.map(s => hashesDir(path, s._1))
     if (srcSidecars.forall(f.exists))
-      spark.read.format(m.format).load(srcSidecars.map(_.toString): _*)
-        .write.mode("overwrite").format(m.format)
-        .save(hashesDir(path, nextDir).toString)
-    lazy val written = {
-      val r = spark.read.format(m.format)
-      (if (m.partitionCols.isEmpty) r
-       else m.schema.fold(r)(s => r.schema(physSchema(s, m.physmap))))
-        .load(new Path(path, nextDir).toString)
-    }
-    writeStatsSidecar(spark, path, nextDir, written, m.statsCols.map(m.physOf))
+      phase(spark, "binpack", "hash sidecar")(GraftSqlShim.saveCounted(
+        readHashes(spark, m.format, srcSidecars), m.format, Nil,
+        hashesDir(path, nextDir).toString))
+    writeStatsSidecar("binpack", path, nextDir,
+      readStaged(spark, path, nextDir, m.format, m.schema, m.physmap),
+      m.statsCols.map(m.physOf))
     val merged = smalls.map(_._1).toSet
     val version = commitLoop(spark, path, "binpack", v, Some(m), Seq(nextDir),
         admits = Seq("append", "fast-forward")) { (cv, base, _) =>
@@ -3198,9 +3227,7 @@ object SnapshotTable {
         if (newPd.isEmpty) None
         else {
           val pre = rawScanPos(spark, path, mp.get, withPos = true)
-          val sidecar = newPd.map(n => spark.read.format(mv.format)
-              .load(posDeletePath(path, n).toString))
-            .reduce(_ unionByName _)
+          val sidecar = readPosDeletes(spark, path, mv.format, newPd)
             .select(col("file").as("__graft_cf"), col("ord").as("__graft_co"))
           Some(remap(pre.join(broadcast(sidecar),
               pre(posFileCol) === col("__graft_cf") &&
@@ -3228,8 +3255,7 @@ object SnapshotTable {
             val key = mv.morKey.getOrElse(throw new IllegalStateException(
               s"merge-on-read commit $v at $path lists tombstones but no " +
                 "morkey — corrupt manifest"))
-            val keys = newTs.map(n => spark.read.format(mv.format)
-                .load(tombstonePath(path, n).toString)
+            val keys = newTs.map(n => readTombstone(spark, path, mv, key, n)
                 .select(col(key).as("__graft_ck")))
               .reduce(_ unionByName _).distinct()
             val pre = readAt(spark, path, v - 1)
@@ -3564,13 +3590,23 @@ object SnapshotTable {
   private def hashesDir(path: String, dataDir: String) =
     new Path(new Path(path, "_hashes"), dataDir)
 
-  private def writeHashSidecar(spark: SparkSession, path: String, dataDir: String,
+  private def writeHashSidecar(op: String, path: String, dataDir: String,
                                data: DataFrame, textCol: String, format: String): Unit = {
     import org.apache.spark.sql.functions._
-    data.select(contentKey(col(textCol)).as("__h"))
-      .write.mode("overwrite").format(format)
-      .save(hashesDir(path, dataDir).toString)
+    phase(data.sparkSession, op, "hash sidecar")(GraftSqlShim.saveCounted(
+      data.select(contentKey(col(textCol)).as("__h")), format, Nil,
+      hashesDir(path, dataDir).toString))
+    ()
   }
+
+  private val hashSidecarSchema = StructType(Seq(
+    org.apache.spark.sql.types.StructField("__h", org.apache.spark.sql.types.StringType)))
+
+  /** The union of the given `_hashes` dirs, schema declared (no footer
+    * inference job).
+    */
+  private def readHashes(spark: SparkSession, format: String, dirs: Seq[Path]): DataFrame =
+    spark.read.format(format).schema(hashSidecarSchema).load(dirs.map(_.toString): _*)
 
   /** Union of the chain's hash sidecars when they all exist AND the
     * manifest still trusts them (`trusted` — false after a
@@ -3588,7 +3624,7 @@ object SnapshotTable {
     val f = fs(spark, new Path(path))
     val sidecars = dirs.map(d => hashesDir(path, d))
     if (trusted && sidecars.nonEmpty && sidecars.forall(f.exists))
-      spark.read.format(format).load(sidecars.map(_.toString): _*)
+      readHashes(spark, format, sidecars)
     else read(spark, path).select(contentKey(col(textCol)).as("__h"))
   }
 
@@ -3613,14 +3649,21 @@ object SnapshotTable {
       }
   }
 
-  /** stat.bloomFilter NPEs on zero input rows (its merge sees a null
-    * partial) — every bloom-build site routes through this guard.
+  /** The bloom `df.stat.bloomFilter(keyCol, expectedItems, fpp)` builds,
+    * byte for byte, in ONE aggregate: the same `bloom_filter_agg` over
+    * the same bit count. Zero input rows aggregate to NULL (where
+    * `stat.bloomFilter` would NPE), which maps to the empty filter
+    * `BloomFilter.create(expectedItems, fpp)`.
     */
-  private def bloomOf(df: DataFrame, keyCol: org.apache.spark.sql.Column,
-                      expectedItems: Long, fpp: Double): org.apache.spark.util.sketch.BloomFilter =
-    if (df.limit(1).count() == 0)
-      org.apache.spark.util.sketch.BloomFilter.create(expectedItems, fpp)
-    else df.stat.bloomFilter(keyCol, expectedItems, fpp)
+  private[graft] def bloomOf(op: String, df: DataFrame, keyCol: org.apache.spark.sql.Column,
+                      expectedItems: Long, fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+    import org.apache.spark.util.sketch.BloomFilter
+    val bits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
+    val bytes = phase(df.sparkSession, op, "bloom")(df.select(
+      GraftSqlShim.bloomFilterAgg(keyCol, expectedItems, bits))
+      .head().getAs[Array[Byte]](0))
+    if (bytes == null) BloomFilter.create(expectedItems, fpp) else BloomFilter.readFrom(bytes)
+  }
 
   private def writeBloomAt(spark: SparkSession, path: String, name: String,
                            bloom: org.apache.spark.util.sketch.BloomFilter): Unit = {
@@ -3783,7 +3826,7 @@ object SnapshotTable {
       // and the filter rides the cached plan below (one batch pass).
       val gated = enforceConstraints(incoming,
         parent.map(_.constraints).getOrElse(Nil), "ingest")
-      val nIncoming = gated.count()
+      val nIncoming = phase(spark, "ingest", "batch count")(gated.count())
       // Prior-content bloom (keyed on xxhash64 of the CONTENT KEY): the
       // sidecar when present (O(1)), else ONE rebuild scan of the
       // current snapshot (zero-row-guarded — a committed EMPTY snapshot
@@ -3791,7 +3834,7 @@ object SnapshotTable {
       // a duplicate pass as probe-negative.
       val priorBloom = cur.map { v =>
         readBloom(spark, path, v).getOrElse(
-          bloomOf(read(spark, path), xxhash64(contentKey(col(textCol))),
+          bloomOf("ingest", read(spark, path), xxhash64(contentKey(col(textCol))),
             expectedItems, fpp))
       }
       val delta = priorBloom match {
@@ -3812,21 +3855,16 @@ object SnapshotTable {
       // Canonical column order: the committed schema's. An evolved batch
       // appends its new columns after the table's; a reordered batch
       // lands in table order.
-      stagedWrite(delta.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
+      val nNew = stagedWrite("ingest",
+        delta.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
         new Path(path, deltaDir), format, effParts, physmap)
-      // The delta is on disk: count it and build its bloom from the
-      // WRITTEN files (one small scan — never re-executes the dedup plan).
-      // A partitioned dir reads with the committed schema so partition
-      // values come back in their declared types, not path-inferred ones.
-      // Raw re-reads see PHYSICAL column names.
-      def readStaged(dir: String) = {
-        val r = spark.read.format(format)
-        (if (effParts.isEmpty) r else r.schema(physSchema(committedSchema, physmap)))
-          .load(new Path(path, dir).toString)
-      }
-      val written = readStaged(deltaDir)
-      val nNew = written.count()
-      val deltaBloom = bloomOf(written,
+      // The delta is on disk (the write counted it): build its bloom from
+      // the WRITTEN files (one small scan — never re-executes the dedup
+      // plan). Raw re-reads see PHYSICAL column names.
+      def staged(dir: String) =
+        readStaged(spark, path, dir, format, Some(committedSchema), physmap)
+      val written = staged(deltaDir)
+      val deltaBloom = bloomOf("ingest", written,
         xxhash64(contentKey(col(physText))), expectedItems, fpp)
       val merged = priorBloom match {
         case Some(prior) if prior.isCompatible(deltaBloom) =>
@@ -3834,7 +3872,7 @@ object SnapshotTable {
         case Some(_) =>
           // caller changed (expectedItems, fpp) mid-table: rebuild once
           // over the whole next snapshot so coverage stays total
-          bloomOf(read(spark, path).select(col(textCol))
+          bloomOf("ingest", read(spark, path).select(col(textCol))
             .unionByName(written.select(col(physText).as(textCol))),
             xxhash64(contentKey(col(textCol))), expectedItems, fpp)
         case None => deltaBloom
@@ -3847,8 +3885,8 @@ object SnapshotTable {
       // [[vacuum]] reclaims never-committed staging artifacts once they
       // age past its grace window.
       val bloomName = f"b$next%08d-${deltaDir.takeRight(8)}.bin"
-      writeHashSidecar(spark, path, deltaDir, written, physText, format)
-      writeStatsSidecar(spark, path, deltaDir, written,
+      writeHashSidecar("ingest", path, deltaDir, written, physText, format)
+      writeStatsSidecar("ingest", path, deltaDir, written,
         effStats.map(c => physmap.getOrElse(c, c)))
       writeBloomAt(spark, path, bloomName, merged)
       var nCommitted = nNew
@@ -3870,29 +3908,30 @@ object SnapshotTable {
               }
             if (appendAdded.nonEmpty) {
               val f = fs(spark, new Path(path))
-              val stagedRead = readStaged(dir)
+              val stagedRead = staged(dir)
               val sidecars = appendAdded.map(d => hashesDir(path, d))
               val theirs =
-                if (sidecars.forall(f.exists))
-                  spark.read.format(format).load(sidecars.map(_.toString): _*)
+                if (sidecars.forall(f.exists)) readHashes(spark, format, sidecars)
                 else rawScan(spark, path,
                     base.get.copy(dirs = appendAdded, tombstones = Nil))
                   .select(contentKey(col(textCol)).as("__h"))
               val survExact = stagedRead.join(theirs,
                 contentKey(stagedRead(physText)) === col("__h"), "left_anti")
               val surv = rebaseRegate.fold(survExact)(g => g(survExact, appendAdded, v - 1))
-              val nSurv = surv.count()
-              if (nSurv != stagedRead.count()) {
+              val nSurv = phase(spark, "ingest", "rebase")(surv.count())
+              // nCommitted is the staged dir's row count (the write's, or
+              // the last rewrite's)
+              if (nSurv != nCommitted) {
                 // a racer admitted some of our content first: rewrite the
                 // survivors (raw, already-physical names — no translation)
                 // and swap them in under the staged name
                 val tmp = stageDir(v)
-                stagedWrite(surv.select(physSchema(committedSchema, physmap)
+                stagedWrite("ingest", surv.select(physSchema(committedSchema, physmap)
                   .fieldNames.map(col(_)).toSeq: _*),
                   new Path(path, tmp), format, effParts.map(c => physmap.getOrElse(c, c)))
-                val rewritten = readStaged(tmp)
-                writeHashSidecar(spark, path, tmp, rewritten, physText, format)
-                writeStatsSidecar(spark, path, tmp, rewritten,
+                val rewritten = staged(tmp)
+                writeHashSidecar("ingest", path, tmp, rewritten, physText, format)
+                writeStatsSidecar("ingest", path, tmp, rewritten,
                   effStats.map(c => physmap.getOrElse(c, c)))
                 stagedPaths(path, dir).foreach(f.delete(_, true))
                 renameStaged(f, path, tmp, dir)
@@ -3974,22 +4013,20 @@ object SnapshotTable {
     val parentRetired = parent.map(_.physRetired).getOrElse(Nil)
     val physmap = assignPhysical(committedSchema,
       parent.map(_.physmap).getOrElse(Map.empty), parentRetired)
-    // constraint gate before any staging I/O (fail-mode probes scan the
-    // batch; stagedWrite scans it again — cache only what WE cached)
-    val weCached = incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE
+    // constraint gate before any staging I/O. Fail-mode probes scan the
+    // batch and stagedWrite scans it again, so the batch is cached then
+    // (only what WE cached); otherwise the write is its only scan.
+    val constraints = parent.map(_.constraints).getOrElse(Nil)
+    val weCached = constraints.exists(_.mode != "drop") &&
+      incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (weCached) incoming.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val gated = enforceConstraints(incoming,
-        parent.map(_.constraints).getOrElse(Nil), "append")
+      val gated = enforceConstraints(incoming, constraints, "append")
       val deltaDir = stageDir(next)
-      stagedWrite(gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
+      stagedWrite("append", gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
         new Path(path, deltaDir), format, effParts, physmap)
-      val writtenReader = spark.read.format(format)
-      val written =
-        (if (effParts.isEmpty) writtenReader
-         else writtenReader.schema(physSchema(committedSchema, physmap)))
-          .load(new Path(path, deltaDir).toString)
-      writeStatsSidecar(spark, path, deltaDir, written,
+      writeStatsSidecar("append", path, deltaDir,
+        readStaged(spark, path, deltaDir, format, Some(committedSchema), physmap),
         effStats.map(c => physmap.getOrElse(c, c)))
       commitLoop(spark, path, "append", cur.getOrElse(0L), parent, Seq(deltaDir),
           admits = Seq("append", "fast-forward", "compact", "binpack", "posdelete",
@@ -4106,12 +4143,9 @@ object SnapshotTable {
       stagedDir0: String, plan: StreamWritePlan,
       queryId: String, epochId: Long): Long = {
     val f = fs(spark, new Path(path))
-    val writtenReader = spark.read.format(plan.format)
-    val written =
-      (if (plan.partitionCols.isEmpty) writtenReader
-       else writtenReader.schema(physSchema(plan.committedSchema, plan.physmap)))
-        .load(new Path(path, stagedDir0).toString)
-    writeStatsSidecar(spark, path, stagedDir0, written,
+    writeStatsSidecar("streaming append", path, stagedDir0,
+      readStaged(spark, path, stagedDir0, plan.format, Some(plan.committedSchema),
+        plan.physmap),
       plan.statsCols.map(c => plan.physmap.getOrElse(c, c)))
     val parentV = currentVersion(spark, path)
     commitLoop(spark, path, "streaming append", parentV.getOrElse(0L),
@@ -4270,7 +4304,7 @@ object SnapshotTable {
                 k, shingleLen).select(col("sig"))
               val tmp = new Path(sd.getParent,
                 s".tmp-${java.util.UUID.randomUUID().toString.take(8)}")
-              sigs.write.mode("overwrite").format(m.format).save(tmp.toString)
+              GraftSqlShim.saveCounted(sigs, m.format, Nil, tmp.toString)
               if (!f.exists(sd) && f.rename(tmp, sd) &&
                   minhashSidecarReady(f, sd))
                 spark.read.format(m.format).load(sd.toString).select(col("sig"))
@@ -4333,12 +4367,10 @@ object SnapshotTable {
         if (st.version == 1L) Set.empty[String]
         else readManifestChecked(spark, path, st.version - 1).dirs.toSet
       newM.dirs.filterNot(parentDirs).foreach { d =>
-        graft.operators.Dedup.minhashSigs(
+        GraftSqlShim.saveCounted(graft.operators.Dedup.minhashSigs(
             scanDirsAt(spark, path, st.version, Seq(d)), idCol, textCol,
-            k, shingleLen)
-          .select(col("sig"))
-          .write.mode("overwrite").format(newM.format)
-          .save(minhashDir(path, d, k, shingleLen).toString)
+            k, shingleLen).select(col("sig")),
+          newM.format, Nil, minhashDir(path, d, k, shingleLen).toString)
       }
       FuzzyIngestStats(st.version, nIncoming, nIncoming - nSurvivors, st.nNew)
     } finally { if (weCached) { incoming.unpersist(); () } }
@@ -4360,10 +4392,10 @@ object SnapshotTable {
     * both SQL-equality-shaped: a NULL-key change row matches no
     * current row (NULL = NULL is not true), so it never updates or
     * deletes — an upsert with a NULL key simply inserts; and rows TIED
-    * on `orderCol` within a key resolve arbitrarily (same contract as
-    * Delta's MERGE under a non-deterministic source) — make `orderCol`
-    * unique per key (a sequence/commit-lsn) when replay determinism
-    * matters.
+    * on `orderCol` within a key resolve to a delete when one of them
+    * deletes, else arbitrarily (same contract as Delta's MERGE under a
+    * non-deterministic source) — make `orderCol` unique per key (a
+    * sequence/commit-lsn) when replay determinism matters.
     *
     * The rewrite is one keyed `left_anti` (current minus changed keys)
     * plus a union of the winning upserts — Catalyst/AQE pick broadcast
@@ -4406,41 +4438,31 @@ object SnapshotTable {
       // no contract
       val gatedChanges = enforceConstraints(changes, m.constraints, "merge",
         exempt = deleteCol.map(dc => coalesce(col(dc).cast("boolean"), lit(false))))
-      val (winning, upserts) =
-        winningAndUpserts(gatedChanges, keyCol, deleteCol, orderCol, tableSchema)
-      val nChanges = winning.count()
-      val nUpserts = upserts.count()
-      val nDeletes = nChanges - nUpserts
-      val changedKeys = winning.select(col(keyCol).as("__mk"))
+      val cb = resolveChanges("merge", gatedChanges, keyCol, deleteCol, orderCol, tableSchema)
+      val changedKeys = cb.winning.select(col(keyCol).as("__mk"))
       val next = current
         .join(changedKeys, current(keyCol) === col("__mk"), "left_anti")
-        .unionByName(upserts)
+        .unionByName(cb.upserts)
       val nextDir = stageDir(cur + 1)
-      stagedWrite(next, new Path(path, nextDir), m.format, m.partitionCols,
-        m.physmap)
-      val written = {
-        val r = spark.read.format(m.format)
-        (if (m.partitionCols.isEmpty) r
-         else r.schema(physSchema(tableSchema, m.physmap)))
-          .load(new Path(path, nextDir).toString)
-      }
-      val rowsAfter = written.count()
+      val rowsAfter = stagedWrite("merge", next, new Path(path, nextDir), m.format,
+        m.partitionCols, m.physmap)
+      lazy val written = readStaged(spark, path, nextDir, m.format, Some(tableSchema), m.physmap)
       // sidecars: the merged output IS the new dedup universe
       val bloomName = textCol.map { tc =>
-        writeHashSidecar(spark, path, nextDir, written, m.physOf(tc), m.format)
+        writeHashSidecar("merge", path, nextDir, written, m.physOf(tc), m.format)
         val name = f"b${cur + 1}%08d-${nextDir.takeRight(8)}.bin"
         writeBloomAt(spark, path, name,
-          bloomOf(written, xxhash64(contentKey(col(m.physOf(tc)))),
+          bloomOf("merge", written, xxhash64(contentKey(col(m.physOf(tc)))),
             expectedItems, fpp))
         name
       }
       val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
-      writeStatsSidecar(spark, path, nextDir, written, effStats.map(m.physOf))
+      writeStatsSidecar("merge", path, nextDir, written, effStats.map(m.physOf))
       commit(spark, path, cur + 1, Manifest(Seq(nextDir), m.format, bloomName,
         Some(tableSchema), effStats, kind = Some("merge"),
         partitionCols = m.partitionCols, constraints = m.constraints,
         physmap = m.physmap, physRetired = m.physRetired))
-      MergeStats(cur + 1, nChanges, nUpserts, nDeletes, rowsAfter)
+      MergeStats(cur + 1, cb.nChanges, cb.nUpserts, cb.nChanges - cb.nUpserts, rowsAfter)
     } finally { if (weCached) { changes.unpersist(); () } }
   }
 
@@ -4468,50 +4490,63 @@ object SnapshotTable {
           s"${f.name}: ${f.dataType.simpleString}").distinct.mkString(", ")}")
   }
 
+  /** A change batch resolved for commit: the winning rows, the winning
+    * upserts projected to the table's column order, and their counts.
+    */
+  private final case class ChangeBatch(winning: DataFrame, upserts: DataFrame,
+                                       nChanges: Long, nUpserts: Long)
+
   /** Latest-wins within the batch, or a loud duplicate-key error — the
     * per-key resolution both merge flavors apply before touching the
-    * table (see [[merge]]'s scaladoc for the tie and NULL-key edges).
-    * NULL keys are EXEMPT from resolution: they have no collision
-    * semantics (NULL = NULL is not true — each one "simply inserts"),
-    * so two NULL-key rows are neither duplicates of each other nor
-    * collapsed to a latest winner; they all pass through.
+    * table (see [[merge]]'s scaladoc for the tie and NULL-key edges),
+    * shared so the two flavors' "same keyed change-batch semantics"
+    * contract cannot diverge. NULL keys are EXEMPT from resolution: they
+    * have no collision semantics (NULL = NULL is not true — each one
+    * "simply inserts"), so two NULL-key rows are neither duplicates of
+    * each other nor collapsed to a latest winner; they all pass through.
+    *
+    * The duplicate-key check and both counts come from ONE aggregate
+    * over the (cached) batch: per key its row count and whether its
+    * winner deletes, then the sums. Rows tied on `orderCol` resolve to a
+    * delete first, in the aggregate and in the winning-row window alike,
+    * so the counts always describe the rows the commit writes.
     */
-  private def winningRows(changes: DataFrame, keyCol: String,
-                          orderCol: Option[String]): DataFrame = {
+  private def resolveChanges(op: String, changes: DataFrame, keyCol: String,
+                             deleteCol: Option[String], orderCol: Option[String],
+                             tableSchema: StructType): ChangeBatch = {
     import org.apache.spark.sql.functions._
-    val keyed = changes.filter(col(keyCol).isNotNull)
-    val nullKeyed = changes.filter(col(keyCol).isNull)
-    val resolved = orderCol match {
-      case Some(oc) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(keyCol)).orderBy(col(oc).desc)
-        keyed.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-      case None =>
-        val dup = keyed.groupBy(col(keyCol)).agg(count(lit(1)).as("__n"))
-          .filter(col("__n") > 1).limit(1).collect()
-        if (dup.nonEmpty) throw new IllegalArgumentException(
-          s"duplicate key ${dup.head.get(0)} in merge batch with no orderCol: " +
-            "latest-wins needs an ordering column to be well-defined")
-        keyed
-    }
-    resolved.unionByName(nullKeyed)
-  }
-
-  /** The per-batch resolution both merge flavors share: (winning rows,
-    * winning upserts projected to the table's column order). Factored
-    * so a semantics change to delete-flag handling cannot diverge the
-    * two flavors' "same keyed change-batch semantics" contract.
-    */
-  private def winningAndUpserts(changes: DataFrame, keyCol: String,
-                                deleteCol: Option[String], orderCol: Option[String],
-                                tableSchema: StructType): (DataFrame, DataFrame) = {
-    import org.apache.spark.sql.functions._
-    val winning = winningRows(changes, keyCol, orderCol)
     val isDelete = deleteCol.map(dc => coalesce(col(dc).cast("boolean"), lit(false)))
       .getOrElse(lit(false))
-    (winning, winning.filter(!isDelete)
-      .select(tableSchema.fieldNames.map(col(_)).toSeq: _*))
+    val winnerDeletes = orderCol.fold(max(isDelete))(oc =>
+      max(struct(col(oc).as("o"), isDelete.as("d"))).getField("d"))
+    val k = col("__k")
+    val r = phase(changes.sparkSession, op, "change resolution")(changes
+      .groupBy(col(keyCol).as("__k"))
+      .agg(count(lit(1)).as("__n"), sum(isDelete.cast("long")).as("__nd"),
+        winnerDeletes.as("__wd"))
+      .agg(max(when(k.isNotNull, col("__n"))),
+        first(when(k.isNotNull && col("__n") > 1, k), ignoreNulls = true),
+        coalesce(sum(when(k.isNull, col("__n")).otherwise(1L)), lit(0L)),
+        coalesce(sum(when(k.isNull, col("__n") - col("__nd"))
+          .otherwise(when(col("__wd"), 0L).otherwise(1L))), lit(0L)))
+      .head())
+    if (orderCol.isEmpty && !r.isNullAt(0) && r.getLong(0) > 1)
+      throw new IllegalArgumentException(
+        s"duplicate key ${r.get(1)} in merge batch with no orderCol: " +
+          "latest-wins needs an ordering column to be well-defined")
+    val winning = orderCol match {
+      case Some(oc) =>
+        val w = org.apache.spark.sql.expressions.Window
+          .partitionBy(col(keyCol)).orderBy(col(oc).desc, isDelete.desc)
+        changes.filter(col(keyCol).isNotNull)
+          .withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+          .unionByName(changes.filter(col(keyCol).isNull))
+      case None => changes
+    }
+    ChangeBatch(winning,
+      winning.filter(!isDelete).select(tableSchema.fieldNames.map(col(_)).toSeq: _*),
+      r.getLong(2), r.getLong(3))
   }
 
   final case class MergeOnReadStats(version: Long, nChanges: Long, nUpserts: Long,
@@ -4604,45 +4639,37 @@ object SnapshotTable {
       // pre-resolution, deletes exempt
       val gatedChanges = enforceConstraints(changes, m.constraints, "merge-on-read",
         exempt = deleteCol.map(dc => coalesce(col(dc).cast("boolean"), lit(false))))
-      val (winning, upserts) =
-        winningAndUpserts(gatedChanges, keyCol, deleteCol, orderCol, tableSchema)
-      val nChanges = winning.count()
+      val cb = resolveChanges("merge-on-read", gatedChanges, keyCol, deleteCol,
+        orderCol, tableSchema)
+      val nChanges = cb.nChanges
       // a batch that touches nothing (e.g. deleteWhere matching zero
       // rows) must not pin morKey or grow the overlay — it commits an
       // audit version IDENTICAL to its base (streaming sinks keep their
       // one-commit-per-batch trail; reads pay nothing new)
-      val nUpserts = if (nChanges == 0) 0L else upserts.count()
-      val deltaDir = if (nUpserts == 0) None else {
-        val d = stageDir(next)
-        stagedWrite(upserts, new Path(path, d), m.format, m.partitionCols,
-          m.physmap)
-        Some(d)
-      }
+      val deltaDir = if (cb.nUpserts == 0) None else Some(stageDir(next))
+      val nUpserts = deltaDir.fold(0L)(d => stagedWrite("merge-on-read", cb.upserts,
+        new Path(path, d), m.format, m.partitionCols, m.physmap))
       // the tombstone lists EVERY winning non-null key: an upsert masks
       // the key's prior row (the replacement lives in the delta dir,
       // committed at the same version the mask exempts), a delete masks
       // it with no replacement. One small file — keys are delta-scale.
       val tName = if (nChanges == 0) None else {
         val t = f"t$next%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-        winning.filter(col(keyCol).isNotNull).select(col(keyCol))
-          .coalesce(1)
-          .write.mode("overwrite").format(m.format)
-          .save(tombstonePath(path, t).toString)
+        phase(spark, "merge-on-read", "tombstone")(GraftSqlShim.saveCounted(
+          cb.winning.filter(col(keyCol).isNotNull).select(col(keyCol)).coalesce(1),
+          m.format, Nil, tombstonePath(path, t).toString))
         Some(t)
       }
-      def readStaged(d: String) = {
-        val r = spark.read.format(m.format)
-        (if (m.partitionCols.isEmpty) r else r.schema(physSchema(tableSchema, m.physmap)))
-          .load(new Path(path, d).toString)
-      }
-      lazy val written0 = readStaged(deltaDir.get)
+      def staged(d: String) =
+        readStaged(spark, path, d, m.format, Some(tableSchema), m.physmap)
+      lazy val written0 = staged(deltaDir.get)
       // delta-dir sidecars mirror ingest's: stats for pruning, and the
       // hash sidecar when the dedup gate is live
       deltaDir.foreach { d =>
-        writeStatsSidecar(spark, path, d, written0,
+        writeStatsSidecar("merge-on-read", path, d, written0,
           (if (statsCols.nonEmpty) statsCols else m.statsCols).map(m.physOf))
         textCol.foreach(tc =>
-          writeHashSidecar(spark, path, d, written0, m.physOf(tc), m.format))
+          writeHashSidecar("merge-on-read", path, d, written0, m.physOf(tc), m.format))
       }
       var outstanding = 0
       val version = commitLoop(spark, path, "merge-on-read", cur, Some(m),
@@ -4669,7 +4696,8 @@ object SnapshotTable {
               case Some(d) =>
                 textCol.flatMap { tc =>
                   readBloom(spark, path, v - 1).flatMap { prior =>
-                    val deltaBloom = bloomOf(if (chain.isEmpty) written0 else readStaged(d),
+                    val deltaBloom = bloomOf("merge-on-read",
+                      if (chain.isEmpty) written0 else staged(d),
                       xxhash64(contentKey(col(m.physOf(tc)))), expectedItems, fpp)
                     if (!prior.isCompatible(deltaBloom)) None
                     else {
@@ -4743,17 +4771,16 @@ object SnapshotTable {
     // rows, and funneling the sidecar through one task would serialize
     // it — the sidecar is a DIRECTORY, readers load it whole, and tiny
     // single-file outputs from small deletes cost nothing
-    victims0.select(col(posFileCol).as("file"), col(posOrdCol).as("ord"))
-      .write.mode("overwrite").format(m.format)
-      .save(posDeletePath(path, name).toString)
-    val written = spark.read.format(m.format)
-      .load(posDeletePath(path, name).toString)
-    val nDeleted = written.count()
+    val nDeleted = phase(spark, "positional delete", "positional sidecar")(
+      GraftSqlShim.saveCounted(
+        victims0.select(col(posFileCol).as("file"), col(posOrdCol).as("ord")),
+        m.format, Nil, posDeletePath(path, name).toString))
     if (nDeleted == 0L) {
       fs(spark, new Path(path)).delete(posDeletePath(path, name), true)
       return PosDeleteStats(cur, 0L, 0L, committed = false)
     }
-    val nFiles = written.select("file").distinct().count()
+    val nFiles = phase(spark, "positional delete", "positional sidecar")(
+      readPosDeletes(spark, path, m.format, Seq(name)).select("file").distinct().count())
     // rebase rules live in the shared kernel: file-preserving
     // interleavings rebase, rewrites refuse, overlapping positional
     // racers (same rows) refuse as write-write conflicts
@@ -4794,13 +4821,10 @@ object SnapshotTable {
         // folds its BASE's list: on a retry that is the winner's, which
         // may carry a racer's new sidecar an earlier fold missed
         val name = f"p$v%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-        b.posDeletes.map(n =>
-            spark.read.format(b.format).load(posDeletePath(path, n).toString))
-          .reduce(_ unionByName _)
-          .select(col("file"), col("ord"))
-          .distinct() // racing folds may have duplicated entries; the mask is a set
-          .write.mode("overwrite").format(b.format)
-          .save(posDeletePath(path, name).toString)
+        // racing folds may have duplicated entries; the mask is a set
+        phase(spark, "posdelete compaction", "positional sidecar")(GraftSqlShim.saveCounted(
+          readPosDeletes(spark, path, b.format, b.posDeletes).distinct(),
+          b.format, Nil, posDeletePath(path, name).toString))
         Some(b.copy(posDeletes = Seq(name), kind = Some("posdelete-compact")))
       }
     }
@@ -4866,17 +4890,16 @@ object SnapshotTable {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val name = f"p${cur + 1}%08d-${java.util.UUID.randomUUID().toString.take(8)}"
-      gated.select(col(posFileCol).as("file"), col(posOrdCol).as("ord"))
-        .write.mode("overwrite").format(m.format)
-        .save(posDeletePath(path, name).toString)
-      val nUpdated = spark.read.format(m.format)
-        .load(posDeletePath(path, name).toString).count()
+      val nUpdated = phase(spark, "positional update", "positional sidecar")(
+        GraftSqlShim.saveCounted(
+          gated.select(col(posFileCol).as("file"), col(posOrdCol).as("ord")),
+          m.format, Nil, posDeletePath(path, name).toString))
       if (nUpdated == 0L) {
         fs(spark, new Path(path)).delete(posDeletePath(path, name), true)
         return PosUpdateStats(cur, 0L, committed = false)
       }
       val updDir = stageDir(cur + 1)
-      stagedWrite(gated.select(schema.fieldNames.map(col(_)).toSeq: _*),
+      stagedWrite("positional update", gated.select(schema.fieldNames.map(col(_)).toSeq: _*),
         new Path(path, updDir), m.format, m.partitionCols, m.physmap)
       val v = commitPositionalDelta(spark, path, cur, Some(updDir), Some(name),
         "positional update")
@@ -4934,13 +4957,10 @@ object SnapshotTable {
       else if (sidecar.isDefined) "posdelete"
       else "append"
     stagedDir0.foreach { d =>
-      val schema = m.schema.getOrElse(nullableSchema(readAt(spark, path, scannedV).schema))
-      val reader = spark.read.format(m.format)
-      val written =
-        (if (m.partitionCols.isEmpty) reader
-         else reader.schema(physSchema(schema, m.physmap)))
-          .load(new Path(path, d).toString)
-      writeStatsSidecar(spark, path, d, written,
+      writeStatsSidecar(opName, path, d,
+        readStaged(spark, path, d, m.format,
+          Some(m.schema.getOrElse(nullableSchema(readAt(spark, path, scannedV).schema))),
+          m.physmap),
         m.statsCols.map(c => m.physmap.getOrElse(c, c)))
     }
     commitLoop(spark, path, opName, scannedV, Some(m), stagedDir0.toSeq,
@@ -4958,13 +4978,10 @@ object SnapshotTable {
       // scanned snapshot must not touch our victims
       val racerSidecars = b.posDeletes.filterNot(m.posDeletes.toSet)
       sidecar.filter(_ => racerSidecars.nonEmpty).foreach { ours =>
-        val ourDf = spark.read.format(m.format)
-          .load(posDeletePath(path, ours).toString)
-        val theirs = racerSidecars.map(n => spark.read.format(m.format)
-            .load(posDeletePath(path, n).toString))
-          .reduce(_ unionByName _)
-        if (ourDf.join(theirs, Seq("file", "ord"), "left_semi")
-            .limit(1).count() > 0)
+        val ourDf = readPosDeletes(spark, path, m.format, Seq(ours))
+        val theirs = readPosDeletes(spark, path, m.format, racerSidecars)
+        if (phase(spark, opName, "rebase")(ourDf.join(theirs, Seq("file", "ord"), "left_semi")
+            .limit(1).count()) > 0)
           throw new java.io.IOException(
             s"$opName at $path lost the commit race to a concurrent " +
               "positional delete/update touching the SAME rows — " +

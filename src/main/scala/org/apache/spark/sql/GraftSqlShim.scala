@@ -28,4 +28,54 @@ object GraftSqlShim {
     */
   def normalizeFloats(e: catalyst.expressions.Expression): catalyst.expressions.Expression =
     catalyst.optimizer.NormalizeFloatingNumbers.normalize(e)
+
+  /** `df.write.mode("overwrite").format(format).partitionBy(partitionCols*)
+    * .save(path)` that also returns the rows written. It plans the
+    * command `DataFrameWriter.save` plans for a V1 source
+    * (`DataSource.planForWriting`), runs it the way
+    * `DataFrameWriter.runCommand` does, and reads `numOutputRows` off the
+    * executed `DataWritingCommandExec` — a count the write job already
+    * made, so the caller never re-reads the files to learn it.
+    */
+  def saveCounted(df: DataFrame, format: String, partitionCols: Seq[String],
+                  path: String): Long = {
+    import execution.datasources.{DataSource, DataSourceUtils}
+    val ds = df.asInstanceOf[classic.Dataset[_]]
+    val session = ds.sparkSession
+    val partOpt =
+      if (partitionCols.isEmpty) Map.empty[String, String]
+      else Map(DataSourceUtils.PARTITIONING_COLUMNS_KEY ->
+        DataSourceUtils.encodePartitioningColumns(partitionCols))
+    val cmd = DataSource(session, className = format, partitionColumns = partitionCols,
+        options = partOpt + ("path" -> path))
+      .planForWriting(SaveMode.Overwrite, ds.logicalPlan)
+    val qe = new execution.QueryExecution(session, cmd, ds.queryExecution.tracker,
+      shuffleCleanupMode =
+        execution.QueryExecution.determineShuffleCleanupMode(session.sessionState.conf))
+    qe.assertCommandExecuted()
+    val written = qe.commandExecuted.collectFirst {
+      case r: catalyst.plans.logical.CommandResult => writeExec(r.commandPhysicalPlan)
+    }.flatten.getOrElse(throw new IllegalStateException(
+      s"write to $path executed no DataWritingCommandExec"))
+    written.metrics("numOutputRows").value
+  }
+
+  /** The write node of an executed command plan. Under AQE the command
+    * sits below `AdaptiveSparkPlanExec`, and a write whose child
+    * shuffles is wrapped in a result query stage.
+    */
+  private def writeExec(p: execution.SparkPlan)
+      : Option[execution.command.DataWritingCommandExec] = p match {
+    case w: execution.command.DataWritingCommandExec => Some(w)
+    case a: execution.adaptive.AdaptiveSparkPlanExec => writeExec(a.executedPlan)
+    case s: execution.adaptive.QueryStageExec => writeExec(s.plan)
+    case other => other.children.iterator.map(writeExec).collectFirst { case Some(w) => w }
+  }
+
+  /** `bloom_filter_agg(c, expectedItems, numBits)` — the aggregate
+    * `df.stat.bloomFilter` runs, as a Column to select alongside others.
+    */
+  def bloomFilterAgg(c: Column, expectedItems: Long, numBits: Long): Column =
+    Column.internalFn("bloom_filter_agg", c,
+      functions.lit(expectedItems), functions.lit(numBits))
 }

@@ -66,6 +66,21 @@ class Round18Spec extends SparkSpec {
     assert(!fast.exists { case (id, lvl, _, _) => lvl == 0 && id >= 4 })
   }
 
+  test("multi-level CC: a NaN edge weight joins every level on both paths") {
+    val lvls = Seq(0.9, 0.8, 0.7)
+    def canon(df: org.apache.spark.sql.DataFrame) =
+      df.select("id", "lvl", "cluster", "sz").as[(Long, Int, Long, Long)]
+        .collect().sorted.toSeq
+    val edges = levelEdges.unionByName(Seq((30L, 31L, Double.NaN)).toDF("id1", "id2", "mr"))
+    val fast = canon(Dedup.connectedComponentsAtLevels(edges, "id1", "id2", "mr", lvls))
+    val dist = canon(Dedup.connectedComponentsAtLevels(
+      edges, "id1", "id2", "mr", lvls, driverEdgeLimit = 0))
+    assert(fast == dist, s"fast=$fast\ndist=$dist")
+    // Spark orders NaN above every double: the edge passes w >= λ everywhere
+    assert(lvls.indices.forall(l =>
+      fast.contains((30L, l, 30L, 2L)) && fast.contains((31L, l, 30L, 2L))), fast)
+  }
+
   // ---- kernels: generated code path ≡ interpreted eval -----------------
 
   test("kernel doGenCode: codegen'd projection matches interpreted eval") {
