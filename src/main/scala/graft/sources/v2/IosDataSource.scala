@@ -79,11 +79,20 @@ object IosTable {
     StructField("value", DoubleType),
     StructField("obs_time_utc", TimestampType)))
 
+  /** The files `pattern` (a path or a glob) matches. A pattern that
+    * matches nothing fails with the `[PATH_NOT_FOUND]` error Spark's file
+    * sources (and so `IosReader`) raise for it, and one that matches only
+    * directories fails too: either way the scan would silently be empty.
+    */
   def expandGlob(pattern: String): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(pattern)
     val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-    matched.filter(_.isFile).map(_.getPath.toString)
+    if (matched.isEmpty) throw new org.apache.spark.sql.AnalysisException(
+      "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(path).toString))
+    val files = matched.filter(_.isFile).map(_.getPath.toString)
+    require(files.nonEmpty, s"ios: $pattern matches only directories, no file")
+    files
   }
 }
 

@@ -5,26 +5,27 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Corpus-wide conversion of EVERY file the reference's own test loop
-  * runs (tests/test.py:48-55: ctd_mooring, ctd_profile, bot — plus the
-  * current_meter file its suite ships but loops separately), each pinned
-  * by per-file row/channel counts and the geo code the reference's
-  * 51-polygon ios_polygons.geojson resolves. Zero skips: the inventory
-  * itself is asserted, so a file that stops parsing OR disappears from
-  * the glob fails loudly.
+/** Corpus-wide conversion of EVERY file in the IOS fixture corpus
+  * (src/test/resources/ios/, laid out like the reference's
+  * tests/test_files/: ctd_mooring, ctd_profile, bot — the directories its
+  * test loop runs, tests/test.py:48-55 — plus current_meter), each pinned
+  * by per-file row/channel counts and the geo code its position resolves
+  * to over the corpus's 51-polygon ios_polygons.geojson. Zero skips: the
+  * inventory itself is asserted, so a file that stops parsing OR
+  * disappears from the glob fails loudly. The corpus README derives
+  * every pin from the file text.
   */
 class IosCorpusSpec extends SparkSpec {
 
-  private val base =
-    "/root/reference/cioos_data_transform/ios_data_transform/ios_data_transform/tests/test_files"
+  private val base = IosFixtures.base
 
   private def listDir(dir: String): Seq[String] =
     Files.list(Paths.get(s"$base/$dir")).iterator().asScala
       .map(_.toString).filterNot(_.endsWith(".geojson")).toSeq.sorted
 
-  // the reference test loop's directories with their expected inventory
+  // the corpus directories with their expected inventory
   private val inventory = Map(
-    "ctd_mooring" -> 9, "ctd_profile" -> 6, "bot" -> 19, "current_meter" -> 1)
+    "ctd_mooring" -> 2, "ctd_profile" -> 6, "bot" -> 3, "current_meter" -> 1)
 
   test("inventory: the reference's test corpus is fully enumerated") {
     inventory.foreach { case (dir, n) =>
@@ -70,48 +71,58 @@ class IosCorpusSpec extends SparkSpec {
   }
 
   test("convertArchive resolves every corpus file to its pinned geo code and stats") {
-    // expected (geo_code, n_vars, n_values) per file, computed once
-    // through this pipeline against the reference's ios_polygons.geojson
-    // and pinned: multi-polygon hits concatenate like find_geographic_area
+    // expected (geo_code, n_vars, n_values) per file, derived from the
+    // file text: geo_code = every polygon of ios_polygons.geojson that
+    // contains the header's LATITUDE/LONGITUDE, in catalog order, spaces
+    // → '-', each followed by a space (find_geographic_area); n_vars =
+    // distinct BODC codes over the channels IosFunctions.channelRules
+    // keeps; n_values = NUMBER OF RECORDS × kept channels
     val svi = "Southern-Vancouver-Island-Shelf-(Stations-B-and-D) "
     val sviC = "Southern-Vancouver-Island-Shelf-(Station-C) " + svi
     val nvi = "Northern-Vancouver-Island-Shelf "
     val want: Map[String, (String, Long, Long)] = Map(
-      "a1_20080429_20080518_0034m.ctd" -> (svi, 2L, 5294L),
-      "a1_20140627_20150801_0035m.ctd" -> (svi, 3L, 57621L),
-      "a1_20140627_20150801_0100m.ctd" -> (svi, 3L, 57621L),
-      "a1_20140627_20150801_0175m.ctd" -> (svi, 3L, 57621L),
-      "a1_20140627_20150801_0300m.ctd" -> (svi, 3L, 172863L),
-      "a1_20140627_20150801_0489m.ctd" -> (svi, 3L, 57621L),
-      "e01_20140628_20150801_0035m.ctd" -> (svi, 3L, 57345L),
-      "e01_20140628_20150801_0075m.ctd" -> (svi, 3L, 57345L),
-      "e01_20140628_20150801_0093m.ctd" -> (svi, 3L, 172101L),
+      // 48 31.8 N 126 12 W: B-and-D box only. Date, Time ignored;
+      // Temperature TEMPS901, Salinity PSALST01, Conductivity CNDCST01;
+      // 24 records × 3
+      "a1_20080429_20080518_0034m.ctd" -> (svi, 3L, 72L),
+      // 48 39 N 126 21 W: inside the Station-C box, which sits inside
+      // B-and-D and comes first in the catalog. Pressure PRESPR01,
+      // Temperature TEMPS901, Salinity PSALST01; 13 records × 3
+      "e01_20140628_20150801_0035m.ctd" -> (sviC, 3L, 39L),
+      // 71 23.31 N 116 38.19 W: Canadian Arctic Archipelago South only.
+      // PRESPR01, depth, TEMPS901, DOXYZZ01 (mL/L), DOXMZZ01 (umol/kg),
+      // PSALST01, CNDCST01; Transmissivity, Fluorescence, PAR, bin count
+      // and Flag ignored; 189 records × 7
       "2017-020-0474.ctd" -> ("Canadian-Arctic-Archipelago-South ", 7L, 1323L),
-      "2017-08-0091.ctd" -> ("Alaska-Basin-East Line-P ", 6L, 2970L),
-      "2017-23-0042.ctd" -> ("Hecate-Strait ", 6L, 1170L),
-      "2017-42-1021.ctd" -> ("Northern-Vancouver-Island-Shelf ", 6L, 732L),
-      "2017-64-0027.ctd" -> ("Tidal-Mixed ", 6L, 894L),
-      "2017-78-0130.ctd" -> ("Johnston-and-Discovery ", 6L, 1470L),
-      "1990-033-0002.che" -> (svi, 6L, 48L),
-      "1990-033-0003.che" -> (svi, 3L, 9L),
-      "1990-033-0004.che" -> (svi + "Line-P ", 3L, 9L),
-      "1990-033-0005.che" -> (sviC, 3L, 9L),
-      "1990-033-0006.che" -> (sviC, 3L, 9L),
-      "1990-033-0007.che" -> (svi, 3L, 9L),
-      "1990-033-0008.che" -> (svi, 6L, 60L),
-      "1990-033-0009.che" -> (svi, 6L, 54L),
-      "1990-033-0010.che" -> (svi + "Line-P ", 6L, 42L),
-      "1990-033-0011.che" -> (svi, 6L, 48L),
-      "1990-033-0012.che" -> (svi, 6L, 42L),
-      "1990-033-0013.che" -> (svi, 6L, 60L),
-      "1990-033-0014.che" -> (svi, 6L, 60L),
-      "1990-033-0015.che" -> (svi, 6L, 42L),
-      "1990-033-0016.che" -> (svi, 6L, 36L),
-      "1990-033-0017.che" -> (nvi, 6L, 36L),
-      "1990-033-0018.che" -> (nvi, 6L, 60L),
-      "1990-033-0019.che" -> (nvi, 6L, 60L),
-      "1990-033-0020.che" -> (nvi, 6L, 60L),
-      "A1_19921028_19930504_0035m.CUR" -> (svi, 3L, 27066L))
+      // 49 17 N 134 40 W: Alaska Basin East (catalog #12) and Line P
+      // (#42). PRESPR01, TEMPS901, TEMPS902, PSALST01, PSALST02,
+      // DOXYZZ01; 25 records × 6
+      "2017-08-0091.ctd" -> ("Alaska-Basin-East Line-P ", 6L, 150L),
+      // 53 24 N 130 54 W: Hecate Strait. PRESPR01, depth, TEMPS901,
+      // PSALST01, DOXYZZ01, CNDCST01; 30 records × 6
+      "2017-23-0042.ctd" -> ("Hecate-Strait ", 6L, 180L),
+      // 50 30 N 128 20 W: NVI shelf. Same six codes; PAR, Flag ignored;
+      // 20 records × 6
+      "2017-42-1021.ctd" -> (nvi, 6L, 120L),
+      // 48 30 N 123 12 W: Tidal Mixed. Oxygen in umol/kg → DOXMZZ01;
+      // 15 records × 6
+      "2017-64-0027.ctd" -> ("Tidal-Mixed ", 6L, 90L),
+      // 50 20 N 125 25 W: Johnstone and Discovery; 18 records × 6
+      "2017-78-0130.ctd" -> ("Johnstone-and-Discovery ", 6L, 108L),
+      // 48 36 N 125 48 W: B-and-D only. PRESPR01, TEMPS601 (IPTS-68),
+      // PSALST01, DOXYZZ01 and three distinct nutrient codes; Sample
+      // number and both Flag channels ignored; 8 records × 7
+      "1990-033-0002.che" -> (svi, 7L, 56L),
+      // 48 42 N 126 48 W: B-and-D (#22) and Line P (#42), in catalog
+      // order, not name order. PRESPR01, TEMPS601, PSALST01, DOXYZZ01;
+      // 5 records × 4
+      "1990-033-0004.che" -> (svi + "Line-P ", 4L, 20L),
+      // 50 40 N 128 00 W: NVI shelf. PRESPR01, TEMPS601, SSALST01 (PPT)
+      // and three nutrient codes; 4 records × 6
+      "1990-033-0017.che" -> (nvi, 6L, 24L),
+      // 48 32 N 126 11.5 W: B-and-D only. Pressure PRESPR01, Temperature
+      // ('deg C') TEMPST01; Speed, Direction, Tilt ignored; 12 records × 2
+      "A1_19921028_19930504_0035m.CUR" -> (svi, 2L, 24L))
     val catalog = graft.functions.Geo.catalogFromGeoJson(
       spark, s"$base/ios_polygons.geojson")
     val got = inventory.keys.toSeq.flatMap { dir =>

@@ -70,15 +70,14 @@ class IosFunctionsSpec extends SparkSpec {
   }
 
   test("geoArea over the reference's own polygon catalog tags a real profile") {
-    val gj = "/root/reference/cioos_data_transform/ios_data_transform/" +
-      "ios_data_transform/tests/test_files/ios_polygons.geojson"
+    val gj = s"${IosFixtures.base}/ios_polygons.geojson"
     val catalog = Geo.catalogFromGeoJson(spark, gj)
     assert(catalog.length == 51)
-    // the 2017-020-0474.ctd profile sits at 71.3885N 116.6365W; the
-    // reference's own ray cast over this catalog assigns it to the
-    // Canadian Arctic Archipelago South polygon (the header's free-text
-    // GEOGRAPHIC AREA says Beaufort Sea, but assign_geo_code uses the
-    // polygons, as we do)
+    // the corpus catalog (src/test/resources/ios/ios_polygons.geojson)
+    // has the reference file's size; the 2017-020-0474.ctd profile sits
+    // at 71.3885N 116.6365W, inside the Canadian Arctic Archipelago South
+    // polygon and no other (the header's free-text GEOGRAPHIC AREA says
+    // Beaufort Sea, but assign_geo_code uses the polygons, as we do)
     val tag = Seq((-116.6365, 71.3885)).toDF("lon", "lat")
       .select(Geo.geoAreaLarge($"lon", $"lat", catalog).as("g")).as[String].head()
     assert(tag == "Canadian-Arctic-Archipelago-South ", s"got '$tag'")

@@ -4,14 +4,14 @@ import graft.sources.{IosFileParser, IosReader}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
-/** End-to-end pins for the IOS source against the reference repo's own
-  * public sample files (read-only): header metadata, coordinate signing,
-  * timezone conversion, record counts, pad-null behavior, parquet sink.
+/** End-to-end pins for the IOS source against the IOS fixture corpus
+  * (src/test/resources/ios/; its README lists what each file plants):
+  * header metadata, coordinate signing, timezone conversion, record
+  * counts, pad-null behavior, parquet sink.
   */
 class IosReaderSpec extends SparkSpec {
 
-  private val base =
-    "/root/reference/cioos_data_transform/ios_data_transform/ios_data_transform/tests/test_files"
+  private val base = IosFixtures.base
 
   test("parses a CTD profile header exactly") {
     val f = s"$base/ctd_profile/2017-020-0474.ctd"

@@ -4,12 +4,12 @@ import graft.sources.IosReader
 import org.apache.spark.sql.functions._
 
 /** The DSv2 `ios` format must agree with the mapPartitions reader and
-  * prune columns at the source.
+  * prune columns at the source. Reads the IOS fixture corpus
+  * (src/test/resources/ios/; `ctd_profile/` holds six files).
   */
 class IosV2SourceSpec extends SparkSpec {
 
-  private val base =
-    "/root/reference/cioos_data_transform/ios_data_transform/ios_data_transform/tests/test_files"
+  private val base = IosFixtures.base
 
   test("v2 source rows equal IosReader.observations") {
     for (glob <- Seq(s"$base/bot/1990-033-0002.che",
@@ -22,6 +22,22 @@ class IosV2SourceSpec extends SparkSpec {
       assert(v2.length == v1.length && v2.length > 0)
       v2.zip(v1).foreach { case (a, b) => assert(a == b, s"$a != $b") }
     }
+  }
+
+  test("a path that matches no file fails in both readers, naming it") {
+    val missing = s"$base/no_such_dir/*.ctd"
+    for (read <- Seq[() => Unit](
+        () => spark.read.format("ios").load(missing).collect(),
+        () => IosReader.observations(spark, missing).collect())) {
+      val e = intercept[org.apache.spark.sql.AnalysisException](read())
+      assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+      assert(e.getMessage.contains("no_such_dir/*.ctd"), e.getMessage)
+    }
+    // a directory is no file either: the v2 source refuses it by name
+    // rather than scan nothing
+    val dir = intercept[IllegalArgumentException](
+      spark.read.format("ios").load(s"$base/ctd_profile").collect())
+    assert(dir.getMessage.contains("ctd_profile"), dir.getMessage)
   }
 
   test("source-level column pruning reaches the scan") {

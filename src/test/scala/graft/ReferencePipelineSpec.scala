@@ -3,27 +3,30 @@ package graft
 import graft.operators.ReferencePipeline
 import org.apache.spark.sql.functions._
 
-/** End-to-end conversion of the reference's sample archive through the
-  * full pipeline: parse → classify → BODC → geo → partitioned sink.
+/** End-to-end conversion of the IOS fixture corpus
+  * (src/test/resources/ios/, see its README) through the full pipeline:
+  * parse → classify → BODC → geo → partitioned sink.
   */
 class ReferencePipelineSpec extends SparkSpec {
 
-  private val base =
-    "/root/reference/cioos_data_transform/ios_data_transform/ios_data_transform/tests/test_files"
+  private val base = IosFixtures.base
 
   test("standardize assigns reference-style BODC codes per file") {
     val std = ReferencePipeline.standardize(spark, s"$base/ctd_profile/2017-020-0474.ctd")
-    val codes = std.select("channel_name", "bodc").distinct()
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    // a channel name can carry several codes (the file has two
+    // Oxygen:Dissolved:SBE channels), so the codes are grouped per name:
+    // a plain toMap would keep whichever row the shuffle returned last
+    val codes: Map[String, Set[String]] = std.select("channel_name", "bodc").distinct()
+      .collect().groupBy(_.getString(0)).map { case (k, rs) => k -> rs.map(_.getString(1)).toSet }
     // temperature ITS90 → TEMPS9 + 01; salinity PSS-78 → PSALST01;
     // oxygen mL/L → DOXYZZ01, umol/kg → DOXMZZ01; pressure fixed name
-    assert(codes("Temperature:Primary") == "TEMPS901")
-    assert(codes("Salinity:T0:C0") == "PSALST01")
-    assert(codes("Oxygen:Dissolved:SBE") == "DOXYZZ01")
-    assert(codes("Pressure") == "PRESPR01")
-    assert(codes("Depth") == "depth")
+    assert(codes("Temperature:Primary") == Set("TEMPS901"))
+    assert(codes("Salinity:T0:C0") == Set("PSALST01"))
+    assert(codes("Oxygen:Dissolved:SBE") == Set("DOXYZZ01", "DOXMZZ01"))
+    assert(codes("Pressure") == Set("PRESPR01"))
+    assert(codes("Depth") == Set("depth"))
     // conductivity S/m → CNDCST01
-    assert(codes("Conductivity:Primary") == "CNDCST01")
+    assert(codes("Conductivity:Primary") == Set("CNDCST01"))
     // excluded channels never appear
     assert(!codes.contains("Transmissivity"))
   }
@@ -39,12 +42,12 @@ class ReferencePipelineSpec extends SparkSpec {
 
   test("convertArchive writes prunable parquet and reports per-file stats") {
     val out = "target/tmp/ref_pipeline"
-    // the reference's own 51-polygon geojson catalog drives geo-tagging
+    // the corpus's 51-polygon geojson catalog drives geo-tagging
     val catalog = graft.functions.Geo.catalogFromGeoJson(spark, s"$base/ios_polygons.geojson")
     val summary = ReferencePipeline.convertArchive(spark, s"$base/ctd_profile/*.ctd", out, catalog)
     val rows = summary.collect()
     assert(rows.length == 6)
-    // the Beaufort-Sea-area profiles resolve to a real polygon name
+    // the Arctic profile (2017-020-0474) resolves to a catalog polygon name
     assert(rows.exists(_.getAs[String]("geo_code").contains("Canadian-Arctic")))
     assert(rows.forall(_.getAs[Long]("n_vars") >= 5))
     assert(rows.forall(r => r.getAs[Long]("n_nonnull") <= r.getAs[Long]("n_values")))
