@@ -114,17 +114,23 @@ object IosFunctions {
 
   // --- BODC codes ------------------------------------------------------
 
-  /** Variable class + units → BODC base code and the suffix width used by
-    * the uniquifying iteration (OceanNcVar.__get_bodc_code,
+  /** Variable class + channel name + units → BODC base code, before the
+    * uniquifying suffix [[bodcCode]] adds (OceanNcVar.__get_bodc_code,
     * OceanNcVar.py:213-258). Pressure and depth get fixed names
-    * (PRESPR01 / depth) per OceanNcVar.py:86-99.
+    * (PRESPR01 / depth) per OceanNcVar.py:86-99. The nutrient species
+    * comes from the channel name (`Nitrate_plus_Nitrite`, `Silicate`,
+    * `Phosphate`, as in [[channelRules]]): IOS nutrient units are all
+    * `umol/L` and name no species.
     */
-  def bodcBase(cls: Column, units: Column): Column = {
+  def bodcBase(cls: Column, name: Column, units: Column): Column = {
     val u = upper(units)
-    when(cls === "temperature",
-      when(u.contains("ITS90") || u.contains("ITS-90"), "TEMPS9")
-        .when(u.contains("IPTS-68") || u.contains("IPTS68"), "TEMPS6")
-        .otherwise("TEMPST"))
+    val n = upper(name)
+    when(cls === "pressure", "PRESPR01")
+      .when(cls === "depth", "depth")
+      .when(cls === "temperature",
+        when(u.contains("ITS90") || u.contains("ITS-90"), "TEMPS9")
+          .when(u.contains("IPTS-68") || u.contains("IPTS68"), "TEMPS6")
+          .otherwise("TEMPST"))
       .when(cls === "salinity",
         when(u.contains("PSS-78"), "PSALST").otherwise("SSALST"))
       .when(cls === "oxygen",
@@ -134,11 +140,21 @@ object IosFunctions {
       .when(cls === "conductivity",
         when(u.contains("MS/CM"), "CNDCSTX").otherwise("CNDCST"))
       .when(cls === "nutrient",
-        when(u.contains("NITRATE"), "NTRZAAZ")
-          .when(u.contains("PHOSPHATE"), "PHOSAAZ")
+        when(n.contains("NITRATE"), "NTRZAAZ")
+          .when(n.contains("PHOSPHATE"), "PHOSAAZ")
           .otherwise("SLCAAAZ"))
       .otherwise(lit(null))
   }
+
+  /** The BODC code of the `rank`-th channel (1-based) sharing one
+    * [[bodcBase]] within a file — the window equivalent of OceanNcVar's
+    * "retry until the code is unused" loop: pressure and depth keep their
+    * fixed names, nutrients take a bare suffix, the rest two digits.
+    */
+  def bodcCode(cls: Column, base: Column, rank: Column): Column =
+    when(cls.isin("pressure", "depth"), base)
+      .when(cls === "nutrient", concat(base, rank.cast("string")))
+      .otherwise(concat(base, lpad(rank.cast("string"), 2, "0")))
 
   // --- Per-variable CF attributes --------------------------------------
 

@@ -1,8 +1,9 @@
 package graft.operators
 
+import graft.Jobs
 import graft.functions.{Geo, IosFunctions}
 import graft.sources.IosReader
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,12 +12,17 @@ import org.apache.spark.sql.functions._
   * channels → assign BODC codes → null pads → geo-tag → write), done
   * as one declarative plan over the whole archive.
   *
-  * Scale shape: parsing is per-file parallel (wholetext), channel
-  * standardization is map-only column logic, BODC suffix dedup is a
-  * per-file window (partition key = filename — millions of small
-  * windows, no global sort), geo-tagging is unrolled point-in-polygon
-  * (map-only), and the sink partitions by variable class for prunable
-  * downstream reads.
+  * Scale shape: the archive is listed once per call, and each file is
+  * parsed once, executor-side, into one row carrying its profile
+  * metadata and its values; geo-tagging is unrolled point-in-polygon
+  * (map-only), evaluated once per file before the values are exploded;
+  * channel standardization is map-only column logic; BODC suffix dedup
+  * is one window over the value rows keyed on the file's full path
+  * (millions of small windows, no global sort, no join, and files that
+  * share a name in different directories keep apart). A conversion runs
+  * that plan once: the sink partitions by variable class for prunable
+  * downstream reads, and the per-variable sidecar and the summary read
+  * the written product back.
   */
 object ReferencePipeline {
 
@@ -24,41 +30,40 @@ object ReferencePipeline {
     * geo_code and profile metadata attached to every value row.
     */
   def standardize(spark: SparkSession, pathGlob: String,
-                  geoCatalog: Seq[Geo.NamedPolygon] = Geo.testCatalog): DataFrame = {
-    val obs = IosReader.observations(spark, pathGlob)
-    val prof = IosReader.profiles(spark, pathGlob)
-      .select(col("filename"), col("mission"), col("station"),
-        col("event_number"), col("latitude"), col("longitude"),
-        col("start_time_utc"),
-        // geoAreaLarge: O(1) expression size, so real catalogs (50+
-        // polygons) don't blow analyzer recursion
-        Geo.geoAreaLarge(col("longitude"), col("latitude"), geoCatalog).as("geo_code"))
+                  geoCatalog: Seq[Geo.NamedPolygon] = Geo.testCatalog): DataFrame =
+    standardize(IosReader.rawFiles(spark, pathGlob), geoCatalog)
 
-    val classified = obs
+  private def standardize(files: Dataset[(String, String)],
+                          geoCatalog: Seq[Geo.NamedPolygon]): DataFrame = {
+    import files.sparkSession.implicits._
+    val perFile = files.map { case (uri, content) =>
+      val p = IosReader.parseRaw(uri, content)
+      val prof = IosReader.profileOf(p)
+      (uri, prof.mission, prof.station, prof.event_number, prof.latitude, prof.longitude,
+        prof.start_time_utc, IosReader.observationsOf(p).toSeq)
+    }.toDF("path", "mission", "station", "event_number", "latitude", "longitude",
+      "start_time_utc", "obs")
+      // geoAreaLarge: O(1) expression size, so real catalogs (50+
+      // polygons) don't blow analyzer recursion
+      .withColumn("geo_code", Geo.geoAreaLarge(col("longitude"), col("latitude"), geoCatalog))
+
+    // one rank per channel number within (file × base code); the file's
+    // path, not its name, keys the window, so same-named files in two
+    // directories never share suffix counters
+    val byBase = Window.partitionBy(col("path"), col("bodc_base")).orderBy(col("channel_no"))
+    perFile
+      .select(col("path"), inline(col("obs")), col("mission"), col("station"),
+        col("event_number"), col("latitude"), col("longitude"), col("start_time_utc"),
+        col("geo_code"))
       .withColumn("var_class", IosFunctions.classifyChannel(col("channel_name")))
       .filter(col("var_class") =!= "ignore")
-
-    // BODC codes are per *channel*, not per value row: rank the distinct
-    // channels within (file × base code) — the window equivalent of
-    // OceanNcVar's "retry until the code is unused" loop — then join the
-    // code back onto the value rows.
-    val chanIdx = classified.select(col("filename").as("f2"), col("channel_no").as("c2"),
-      col("var_class").as("vc2"), col("units").as("u2")).distinct()
-      .withColumn("bodc_base2", when(col("vc2") === "pressure", "PRESPR01")
-        .when(col("vc2") === "depth", "depth")
-        .otherwise(IosFunctions.bodcBase(col("vc2"), col("u2"))))
-      .withColumn("chan_rn", row_number().over(
-        Window.partitionBy(col("f2"), col("bodc_base2")).orderBy(col("c2"))))
-      .withColumn("bodc", when(col("vc2").isin("pressure", "depth"), col("bodc_base2"))
-        .when(col("vc2") === "nutrient", concat(col("bodc_base2"), col("chan_rn").cast("string")))
-        .otherwise(concat(col("bodc_base2"), lpad(col("chan_rn").cast("string"), 2, "0"))))
-      .select(col("f2"), col("c2"), col("bodc"))
-
-    classified
-      .join(chanIdx, classified("filename") === col("f2") &&
-        classified("channel_no") === col("c2"))
-      .drop("f2", "c2")
-      .join(prof, "filename")
+      .withColumn("bodc_base",
+        IosFunctions.bodcBase(col("var_class"), col("channel_name"), col("units")))
+      .withColumn("bodc", IosFunctions.bodcCode(col("var_class"), col("bodc_base"),
+        dense_rank().over(byBase)))
+      .select("filename", "channel_no", "channel_name", "units", "row_idx", "raw", "value",
+        "obs_time_utc", "var_class", "bodc", "mission", "station", "event_number",
+        "latitude", "longitude", "start_time_utc", "geo_code")
   }
 
   /** Per-dataset CF global attributes — the metadata block
@@ -70,8 +75,11 @@ object ReferencePipeline {
     * interchange metadata parquet cannot carry in its schema.
     */
   def cfAttributes(spark: SparkSession, pathGlob: String,
-                   datasetType: String = "ctd"): DataFrame = {
-    import spark.implicits._
+                   datasetType: String = "ctd"): DataFrame =
+    cfAttributes(IosReader.rawFiles(spark, pathGlob), datasetType)
+
+  private def cfAttributes(files: Dataset[(String, String)], datasetType: String): DataFrame = {
+    import files.sparkSession.implicits._
     import graft.sources.IosFileParser
     // the dataset type is CALLER-supplied, exactly like the reference's
     // per-archive ftype argument — every sample file carries a TIME
@@ -88,9 +96,9 @@ object ReferencePipeline {
       case _ =>
         "This dataset contains observations made by the Institute of Ocean Sciences of Fisheries and Oceans (DFO) using CTDs mounted on rosettes."
     }
-    IosReader.rawFiles(spark, pathGlob).mapPartitions { it =>
-      it.map { case (name, content) =>
-        val p = IosFileParser.parse(name, content)
+    files.mapPartitions { it =>
+      it.map { case (uri, content) =>
+        val p = IosReader.parseRaw(uri, content)
         // mission id normalized to %04d-%03d like write_ctd_ncfile.py:48-51;
         // unparsable missions keep their raw string (we convert archives,
         // not crash on them — soft-fail semantics like the outer script)
@@ -170,18 +178,28 @@ object ReferencePipeline {
     * (`_cf_attributes/`, JSON) and the per-variable attribute sidecar
     * (`_cf_variable_attributes/`, JSON). Returns the per-file summary
     * (the reference prints one log line per converted file; we return it
-    * as data).
+    * as data), read from the written product: collect it before
+    * `outDir` is removed. Every job this call runs is described
+    * `graft convertArchive: <phase>`, except the parallel file-listing
+    * job a many-file glob launches, which Spark describes itself.
     */
   def convertArchive(spark: SparkSession, pathGlob: String, outDir: String,
                      geoCatalog: Seq[Geo.NamedPolygon] = Geo.testCatalog,
                      datasetType: String = "ctd"): DataFrame = {
-    val std = standardize(spark, pathGlob, geoCatalog)
-    std.write.mode("overwrite").partitionBy("var_class").parquet(outDir)
-    cfAttributes(spark, pathGlob, datasetType).write.mode("overwrite")
-      .json(s"$outDir/_cf_attributes")
-    cfVariableAttributes(std).write.mode("overwrite")
-      .json(s"$outDir/_cf_variable_attributes")
-    std.groupBy(col("filename"), col("mission"), col("geo_code"))
+    def phase[T](what: String)(body: => T): T = Jobs.phase(spark, "convertArchive", what)(body)
+    val files = IosReader.rawFiles(spark, pathGlob)
+    val std = standardize(files, geoCatalog)
+    phase("write product")(
+      std.write.mode("overwrite").partitionBy("var_class").parquet(outDir))
+    phase("write cf attributes")(
+      cfAttributes(files, datasetType).write.mode("overwrite").json(s"$outDir/_cf_attributes"))
+    // the sidecar and the summary scan the written product (declared
+    // schema: no inference job) instead of parsing the archive again
+    val product = spark.read.schema(std.schema).parquet(outDir)
+    phase("write cf variable attributes")(
+      cfVariableAttributes(product).write.mode("overwrite")
+        .json(s"$outDir/_cf_variable_attributes"))
+    product.groupBy(col("filename"), col("mission"), col("geo_code"))
       .agg(countDistinct(col("bodc")).as("n_vars"), count(lit(1)).as("n_values"),
         count(col("value")).as("n_nonnull"))
   }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.hadoop.fs.Path
 
+import graft.Jobs.phase
+
 /** Minimal table-format layering over the sink: versioned snapshots with
   * an atomic manifest commit, so rewrites (compaction, overwrite) are
   * safe under concurrent readers — the ACID property [[Sink.compact]]'s
@@ -1348,18 +1350,6 @@ object SnapshotTable {
       }
     phase(df.sparkSession, op, "staged write")(
       GraftSqlShim.saveCounted(clustered, format, parts, dest.toString))
-  }
-
-  /** Run `body` with every Spark job it launches described as
-    * `graft <op>: <what>` (`spark.job.description`, what the UI and
-    * listeners show), then restore the caller's description.
-    */
-  private def phase[T](spark: SparkSession, op: String, what: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val key = "spark.job.description"
-    val prev = sc.getLocalProperty(key)
-    sc.setLocalProperty(key, s"graft $op: $what")
-    try body finally sc.setLocalProperty(key, prev)
   }
 
   /** Raw re-read of a data dir graft staged: physical column names, and

@@ -124,7 +124,7 @@ object ReferenceOps {
       FROM (SELECT p_partkey, $chanCase AS channel FROM part) a
       ORDER BY p_partkey"""))
 
-  // ---- r6_bodc_code: units→code, windowed suffix dedup ----------------
+  // ---- r6_bodc_code: name/units→code, windowed suffix dedup -----------
   private val unitsCase =
     "CASE p_partkey % 10 " +
       "WHEN 0 THEN 'Deg C (ITS90)' WHEN 2 THEN 'PSS-78' WHEN 3 THEN 'mL/L' " +
@@ -137,15 +137,10 @@ object ReferenceOps {
         .withColumn("units", expr(unitsCase))
         .withColumn("var_class", F.classifyChannel(col("channel")))
         .filter(col("var_class") =!= "ignore")
-      val base = when(col("var_class") === "pressure", "PRESPR01")
-        .when(col("var_class") === "depth", "depth")
-        .otherwise(F.bodcBase(col("var_class"), col("units")))
       val wBase = Window.partitionBy(col("p_brand"), col("bodc_base")).orderBy(col("p_partkey"))
-      p.withColumn("bodc_base", base)
+      p.withColumn("bodc_base", F.bodcBase(col("var_class"), col("channel"), col("units")))
         .withColumn("rn", row_number().over(wBase))
-        .withColumn("bodc", when(col("var_class").isin("pressure", "depth"), col("bodc_base"))
-          .when(col("var_class") === "nutrient", concat(col("bodc_base"), col("rn").cast("string")))
-          .otherwise(concat(col("bodc_base"), lpad(col("rn").cast("string"), 2, "0"))))
+        .withColumn("bodc", F.bodcCode(col("var_class"), col("bodc_base"), col("rn")))
         .select(col("p_partkey"), col("p_brand"), col("channel"), col("units"),
           col("var_class"), col("bodc"))
         .orderBy("p_partkey")
@@ -173,8 +168,8 @@ object ReferenceOps {
                WHEN var_class = 'conductivity' THEN
                  CASE WHEN instr(upper(units),'MS/CM')>0 THEN 'CNDCSTX' ELSE 'CNDCST' END
                WHEN var_class = 'nutrient' THEN
-                 CASE WHEN instr(upper(units),'NITRATE')>0 THEN 'NTRZAAZ'
-                      WHEN instr(upper(units),'PHOSPHATE')>0 THEN 'PHOSAAZ' ELSE 'SLCAAAZ' END
+                 CASE WHEN instr(upper(channel),'NITRATE')>0 THEN 'NTRZAAZ'
+                      WHEN instr(upper(channel),'PHOSPHATE')>0 THEN 'PHOSAAZ' ELSE 'SLCAAAZ' END
           END AS bodc_base
         FROM chans)
       SELECT p_partkey, p_brand, channel, units, var_class,

@@ -49,64 +49,70 @@ case class IosObservation(
   */
 object IosReader {
 
-  /** (file name, whole content) per file. `input_file_name()` is a
-    * URL-encoded URI (`a dir/x y%z.ctd` comes back as
-    * `file:///…/a%20dir/x%20y%25z.ctd`), so the name is decoded here, once,
-    * to the on-disk name the DSv2 `format("ios")` source reports.
+  /** (file URI, whole content) per file, from one listing of `pathGlob`.
+    * The URI is unique per file, so it can key per-file work across
+    * directories; [[parseRaw]] turns it into the file's name.
     */
   private[graft] def rawFiles(spark: SparkSession, pathGlob: String): Dataset[(String, String)] = {
     import spark.implicits._
     spark.read.option("wholetext", "true").format("text").load(pathGlob)
       .select(input_file_name(), col("value")).as[(String, String)]
-      .map { case (uri, content) => (new Path(new URI(uri)).getName, content) }
   }
 
-  /** One row per file: header metadata, coordinates, UTC start time. */
+  /** Parse one [[rawFiles]] row. `input_file_name()` is a URL-encoded URI
+    * (`a dir/x y%z.ctd` comes back as `file:///…/a%20dir/x%20y%25z.ctd`),
+    * so the name is decoded here, once, to the on-disk name the DSv2
+    * `format("ios")` source reports.
+    */
+  private[graft] def parseRaw(uri: String, content: String): IosFileParser.Parsed =
+    IosFileParser.parse(new Path(new URI(uri)).getName, content)
+
+  /** One parsed file's header metadata, coordinates and UTC start time. */
+  private[graft] def profileOf(p: IosFileParser.Parsed): IosProfile =
+    IosProfile(p.filename, p.headerVersion,
+      p.administration.get("MISSION").orElse(p.administration.get("CRUISE")),
+      p.administration.get("AGENCY"), p.administration.get("PROJECT"),
+      p.location.get("STATION"), p.location.get("EVENT NUMBER"),
+      p.latitude, p.longitude,
+      p.startTimeUtc.map(Timestamp.from),
+      p.timeIncrementSeconds, p.nRecords, p.channels.length, p.data.length,
+      IosFileParser.headerJson(p))
+
+  /** One parsed file's values in long format, pad→null applied and, for
+    * time-series files (TIME INCREMENT present), the reference's
+    * `start + i·dt` observation time.
+    */
+  private[graft] def observationsOf(p: IosFileParser.Parsed): Iterator[IosObservation] = {
+    val pads: Int => Option[String] =
+      i => p.details.lift(i).map(_.pad.trim).filter(_.nonEmpty)
+        .orElse(p.file.get("PAD").map(_.trim))
+    p.data.iterator.zipWithIndex.flatMap { case (row, ri) =>
+      p.channels.iterator.zipWithIndex.map { case (ch, ci) =>
+        val rawV = row.lift(ci).getOrElse("")
+        val parsed = scala.util.Try(rawV.toDouble).toOption
+        val v = parsed.filterNot(d => pads(ci).flatMap(pd =>
+          scala.util.Try(pd.toDouble).toOption).contains(d))
+        val obsTime = for {
+          st <- p.startTimeUtc
+          dt <- p.timeIncrementSeconds
+          // microsecond precision, same quantization as the v2 source
+        } yield Timestamp.from(st.plusNanos((dt * 1e6 * ri).toLong * 1000L))
+        IosObservation(p.filename, ch.no, ch.name, ch.units, ri, rawV, v, obsTime)
+      }
+    }
+  }
+
+  /** One row per file: [[profileOf]] each file. */
   def profiles(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    rawFiles(spark, pathGlob).mapPartitions { it =>
-      it.map { case (name, content) =>
-        val p = IosFileParser.parse(name, content)
-        IosProfile(p.filename, p.headerVersion,
-          p.administration.get("MISSION").orElse(p.administration.get("CRUISE")),
-          p.administration.get("AGENCY"), p.administration.get("PROJECT"),
-          p.location.get("STATION"), p.location.get("EVENT NUMBER"),
-          p.latitude, p.longitude,
-          p.startTimeUtc.map(Timestamp.from),
-          p.timeIncrementSeconds, p.nRecords, p.channels.length, p.data.length,
-          IosFileParser.headerJson(p))
-      }
-    }.toDF()
+    rawFiles(spark, pathGlob).map { case (uri, content) => profileOf(parseRaw(uri, content)) }.toDF()
   }
 
-  /** Long-format observations with pad→null applied and, for time-series
-    * files (TIME INCREMENT present), the reference's `start + i·dt`
-    * observation time.
-    */
+  /** Long-format observations: [[observationsOf]] each file. */
   def observations(spark: SparkSession, pathGlob: String): DataFrame = {
     import spark.implicits._
-    rawFiles(spark, pathGlob).mapPartitions { it =>
-      it.flatMap { case (name, content) =>
-        val p = IosFileParser.parse(name, content)
-        val pads: Int => Option[String] =
-          i => p.details.lift(i).map(_.pad.trim).filter(_.nonEmpty)
-            .orElse(p.file.get("PAD").map(_.trim))
-        p.data.iterator.zipWithIndex.flatMap { case (row, ri) =>
-          p.channels.iterator.zipWithIndex.map { case (ch, ci) =>
-            val rawV = row.lift(ci).getOrElse("")
-            val parsed = scala.util.Try(rawV.toDouble).toOption
-            val v = parsed.filterNot(d => pads(ci).flatMap(pd =>
-              scala.util.Try(pd.toDouble).toOption).contains(d))
-            val obsTime = for {
-              st <- p.startTimeUtc
-              dt <- p.timeIncrementSeconds
-              // microsecond precision, same quantization as the v2 source
-            } yield Timestamp.from(st.plusNanos((dt * 1e6 * ri).toLong * 1000L))
-            IosObservation(p.filename, ch.no, ch.name, ch.units, ri, rawV, v, obsTime)
-          }
-        }
-      }
-    }.toDF()
+    rawFiles(spark, pathGlob)
+      .flatMap { case (uri, content) => observationsOf(parseRaw(uri, content)) }.toDF()
   }
 
   /** Incremental-ingest file diff (utils.compare_file_list,

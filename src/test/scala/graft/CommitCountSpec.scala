@@ -1,9 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.GraftTestBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, GraftSqlShim}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -21,48 +17,7 @@ class CommitCountSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** One job seen by [[jobsOf]]: its description and every call site it
-    * carries (job and stage, short and long forms).
-    */
-  private final case class Job(description: Option[String], callSites: String) {
-    /** A parquet footer-inference job (`SchemaMergeUtils
-      * .mergeSchemasInParallel`). Spark drops its own `sql` frames from
-      * call sites, so that job reports the reader entry it ran under
-      * (`DataFrameReader.load`/`.parquet`) — the only jobs a reader
-      * launches while it resolves a relation.
-      */
-    def infersSchema: Boolean =
-      callSites.contains("SchemaMergeUtils") || callSites.contains("mergeSchemasInParallel") ||
-        callSites.contains("DataFrameReader.")
-  }
-
-  /** The jobs `body` launches (tagged by this thread), with its result. */
-  private def jobsOf[T](body: => T): (T, Seq[Job]) = {
-    val sc = spark.sparkContext
-    val tag = s"commit-count-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val p = Option(e.properties)
-        if (p.flatMap(x => Option(x.getProperty("spark.job.tags")))
-            .exists(_.split(",").contains(tag)))
-          seen.add(Job(p.flatMap(x => Option(x.getProperty("spark.job.description"))),
-            (p.toSeq.flatMap(x => Seq(x.getProperty("callSite.short"),
-              x.getProperty("callSite.long"))) ++
-              e.stageInfos.flatMap(s => Seq(s.name, s.details))).mkString("\n")))
-      }
-    }
-    sc.addSparkListener(listener)
-    sc.addJobTag(tag)
-    try {
-      val out = body
-      GraftTestBus.drain(sc)
-      (out, seen.asScala.toSeq)
-    } finally {
-      sc.removeJobTag(tag)
-      sc.removeSparkListener(listener)
-    }
-  }
+  private def jobsOf[T](body: => T) = JobProbe.jobsOf(spark)(body)
 
   private def docs(ks: Seq[Long]): DataFrame = {
     import spark.implicits._

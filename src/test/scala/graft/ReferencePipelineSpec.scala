@@ -1,15 +1,28 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.nio.file.StandardCopyOption.REPLACE_EXISTING
+
 import graft.operators.ReferencePipeline
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end conversion of the IOS fixture corpus
   * (src/test/resources/ios/, see its README) through the full pipeline:
   * parse → classify → BODC → geo → partitioned sink.
   */
-class ReferencePipelineSpec extends SparkSpec {
+class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val base = IosFixtures.base
+
+  /** (channel_no, channel_name, bodc) → value rows. */
+  private def codeRows(std: DataFrame): Map[(Int, String, String), Long] =
+    std.groupBy("channel_no", "channel_name", "bodc").count().collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2)) -> r.getLong(3)).toMap
 
   test("standardize assigns reference-style BODC codes per file") {
     val std = ReferencePipeline.standardize(spark, s"$base/ctd_profile/2017-020-0474.ctd")
@@ -137,5 +150,92 @@ class ReferencePipelineSpec extends SparkSpec {
       s"$base/bot/1990-033-0002.che", datasetType = "bot").collect()
     assert(bot.head.getAs[String]("featureType") == "profile")
     assert(bot.head.getAs[String]("summary").contains("water samples"))
+  }
+
+  test("files sharing a name in two directories standardize apart") {
+    // a/x.ctd is 2017-020-0474.ctd (mission 2017-020), b/x.ctd is
+    // 2017-42-1021.ctd (mission 2017-42): one name, two files
+    val root = Paths.get("target/tmp/ios_same_name").toAbsolutePath
+    val files = Seq("a" -> "2017-020-0474.ctd", "b" -> "2017-42-1021.ctd")
+    files.foreach { case (dir, f) =>
+      Files.copy(Paths.get(s"$base/ctd_profile/$f"),
+        Files.createDirectories(root.resolve(dir)).resolve("x.ctd"), REPLACE_EXISTING)
+    }
+    val both = ReferencePipeline.standardize(spark, s"$root/*/x.ctd")
+    val alone = files.map { case (dir, _) => ReferencePipeline.standardize(spark, s"$root/$dir/x.ctd") }
+    assert(both.count() == alone.map(_.count()).sum)
+    alone.foreach { one =>
+      val mission = one.select("mission").distinct().collect().map(_.getString(0)).toSeq
+      assert(mission.size == 1)
+      // each file keeps the codes and row counts it gets alone: no
+      // suffix counter shared with the other file (CNDCST02, PSALST02)
+      assert(codeRows(both.filter(col("mission") === mission.head)) == codeRows(one),
+        s"mission ${mission.head}")
+    }
+  }
+
+  test("nutrient species come from the channel name (1990-033-0017.che)") {
+    val std = ReferencePipeline.standardize(spark, s"$base/bot/1990-033-0017.che")
+    val codes = std.filter(col("var_class") === "nutrient")
+      .select("channel_name", "bodc").distinct().collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    // channels 6-8 are Nitrate_plus_Nitrite, Silicate and Phosphate, all
+    // umol/L: three species, one channel each, so each code takes the
+    // first suffix — a bare 1, as nutrient suffixes are not zero-padded
+    assert(codes == Map("Nitrate_plus_Nitrite" -> "NTRZAAZ1",
+      "Silicate" -> "SLCAAAZ1", "Phosphate" -> "PHOSAAZ1"))
+    val longNames = ReferencePipeline.cfVariableAttributes(std).collect()
+      .map(r => r.getAs[String]("name") -> r.getAs[String]("long_name")).toMap
+    assert(longNames("NTRZAAZ1") == "Mole Concentration of Nitrate and Nitrite in Sea Water")
+    assert(longNames("SLCAAAZ1") == "Mole Concentration of Silicate in Sea Water")
+    assert(longNames("PHOSAAZ1") == "Mole Concentration of Phosphate in Sea Water")
+  }
+
+  test("standardize parses each file once: one text scan and no join") {
+    val plan = ReferencePipeline.standardize(spark, s"$base/ctd_profile/*.ctd")
+      .queryExecution.executedPlan
+    val textScans = collect(plan) {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[TextFileFormat] => s
+    }
+    assert(textScans.size == 1, plan.treeString)
+    assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan.treeString)
+  }
+
+  /** One conversion of a 36-file archive — six copies of each fixture
+    * profile, enough files that listing them runs a Spark job — with the
+    * jobs it ran and the archive's bytes.
+    */
+  private lazy val probedConversion: (Seq[JobProbe.Job], Long) = {
+    val dir = Files.createDirectories(Paths.get("target/tmp/ios_probe_archive").toAbsolutePath)
+    val profiles = new java.io.File(s"$base/ctd_profile").listFiles().toSeq
+    for (f <- profiles; i <- 1 to 6)
+      Files.copy(f.toPath, dir.resolve(s"c$i-${f.getName}"), REPLACE_EXISTING)
+    val (_, jobs) = JobProbe.jobsOf(spark)(ReferencePipeline.convertArchive(
+      spark, s"$dir/*.ctd", "target/tmp/ios_probe_out"))
+    (jobs, profiles.map(_.length).sum * 6)
+  }
+
+  test("convertArchive lists the archive once and describes every other job by its phase") {
+    val (jobs, _) = probedConversion
+    // Spark sets its own description on the parallel listing job,
+    // over the caller's
+    val (listings, rest) =
+      jobs.partition(_.description.exists(_.startsWith("Listing leaf files and directories")))
+    assert(listings.size == 1, s"listing jobs: $listings")
+    val bare = rest.filterNot(_.description.exists(_.startsWith("graft convertArchive: ")))
+    assert(bare.isEmpty, s"undescribed jobs: $bare")
+    val phases = rest.flatMap(_.description).map(_.stripPrefix("graft convertArchive: ")).toSet
+    assert(phases == Set("write product", "write cf attributes",
+      "write cf variable attributes"), phases)
+  }
+
+  test("one convertArchive call reads the archive's text at most twice") {
+    val (jobs, archiveBytes) = probedConversion
+    // the per-variable sidecar reads the written parquet product, not the
+    // archive; every other phase reads text
+    val textBytes = jobs.filterNot(_.description.contains(
+      "graft convertArchive: write cf variable attributes")).map(_.inputBytes).sum
+    assert(textBytes >= archiveBytes && textBytes <= 2 * archiveBytes,
+      s"read $textBytes text bytes for a $archiveBytes-byte archive")
   }
 }
