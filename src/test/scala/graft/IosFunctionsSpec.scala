@@ -54,6 +54,58 @@ class IosFunctionsSpec extends SparkSpec {
     assert(out.toSeq == cases.map(_._2))
   }
 
+  test("every BODC branch: class, base, code and CF attributes") {
+    // one input per branch of OceanNcVar.__get_bodc_code, in its order;
+    // expected values typed from the reference (OceanNcVar.py:44-258)
+    val cases = Seq(
+      ("Pressure", "decibar", "pressure", "PRESPR01", "PRESPR01",
+        "Pressure", "sea_water_pressure", "decibar"),
+      ("Depth", "metres", "depth", "depth", "depth",
+        "Depth in meters", "depth_below_sea_level_in_meters", "m"),
+      ("Temperature:Primary", "'deg C (ITS90)'", "temperature", "TEMPS9", "TEMPS901",
+        "Sea Water Temperature", "sea_water_temperature", "deg C"),
+      ("Temperature:Secondary", "deg C (ITS-90)", "temperature", "TEMPS9", "TEMPS901",
+        "Sea Water Temperature", "sea_water_temperature", "deg C"),
+      ("Temperature", "deg C (IPTS-68)", "temperature", "TEMPS6", "TEMPS601",
+        "Sea Water Temperature", "sea_water_temperature", "deg C"),
+      ("Temperature:Reversing", "IPTS68", "temperature", "TEMPS6", "TEMPS601",
+        "Sea Water Temperature", "sea_water_temperature", "deg C"),
+      ("Temperature", "", "temperature", "TEMPST", "TEMPST01",
+        "Sea Water Temperature", "sea_water_temperature", "deg C"),
+      ("Salinity:T0:C0", "PSS-78", "salinity", "PSALST", "PSALST01",
+        "Sea Water Practical Salinity", "sea_water_practical_salinity", "PSS-78"),
+      ("Salinity", "ppt", "salinity", "SSALST", "SSALST01",
+        "Sea Water Practical Salinity", "sea_water_practical_salinity", "PPT"),
+      ("Oxygen:Dissolved", "mL/L", "oxygen", "DOXYZZ", "DOXYZZ01",
+        "Oxygen concentration", "dissolved_oxygen_concentration", "mL/L"),
+      ("Oxygen:Dissolved:SBE", "umol/kg", "oxygen", "DOXMZZ", "DOXMZZ01",
+        "Oxygen concentration", "dissolved_oxygen_concentration", "umol/kg"),
+      ("Oxygen:Dissolved", "umol/L", "oxygen", "DOXY", "DOXY01",
+        "Oxygen concentration", "dissolved_oxygen_concentration", "umol/L"),
+      ("Conductivity:Primary", "mS/cm", "conductivity", "CNDCSTX", "CNDCSTX01",
+        "Sea Water Electrical Conductivity", "sea_water_electrical_conductivity", "mS/cm"),
+      ("Conductivity", "S/m", "conductivity", "CNDCST", "CNDCST01",
+        "Sea Water Electrical Conductivity", "sea_water_electrical_conductivity", "S/m"),
+      ("Nitrate_plus_Nitrite", "umol/L", "nutrient", "NTRZAAZ", "NTRZAAZ1",
+        "Mole Concentration of Nitrate and Nitrite in Sea Water",
+        "mole_concentration_of_nitrate_and_nitrite_in_sea_water", "umol/L"),
+      ("Phosphate", "umol/L", "nutrient", "PHOSAAZ", "PHOSAAZ1",
+        "Mole Concentration of Phosphate in Sea Water",
+        "mole_concentration_of_phosphate_in_sea_water", "umol/L"),
+      ("Silicate", "umol/L", "nutrient", "SLCAAAZ", "SLCAAAZ1",
+        "Mole Concentration of Silicate in Sea Water",
+        "mole_concentration_of_silicate_in_sea_water", "umol/L"))
+    val got = cases.map(c => (c._1, c._2)).toDF("name", "units")
+      .withColumn("cls", F.classifyChannel($"name"))
+      .withColumn("base", F.bodcBase($"cls", $"name", $"units"))
+      .withColumn("bodc", F.bodcCode($"cls", $"base", lit(1)))
+      .select($"name", $"units", $"cls", $"base", $"bodc",
+        F.cfLongName($"cls", $"bodc"), F.cfStandardName($"cls", $"bodc"),
+        F.cfCanonicalUnits($"cls", $"bodc"))
+      .as[(String, String, String, String, String, String, String, String)].collect()
+    assert(got.toSeq == cases)
+  }
+
   test("point-in-polygon: interior, exterior, multi-containment, None") {
     val df = Seq(
       (-130.0 + 0.5, 50.5),  // inside north box AND coastal strip
