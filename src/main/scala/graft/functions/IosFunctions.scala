@@ -1,5 +1,6 @@
 package graft.functions
 
+import graft.sources.IosFileParser
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
@@ -10,22 +11,19 @@ import org.apache.spark.sql.functions._
   */
 object IosFunctions {
 
+  /** A flat CASE over (condition, value) branches, NULL when none holds. */
+  private def cases(branches: Seq[(Column, Any)]): Column =
+    branches.tail.foldLeft(when(branches.head._1, branches.head._2)) {
+      case (acc, (c, v)) => acc.when(c, v)
+    }
+
   // --- Time ------------------------------------------------------------
 
-  /** Hours to ADD to a local IOS timestamp to reach UTC, by zone label.
-    * Mirrors ObsFile.get_date (ObsFile.py:160-213): GMT/UTC 0, PST +8,
-    * PDT +7, MST +7, MDT +6, AST +4, ADT +3.
+  /** Local timestamp + zone label → UTC timestamp, by
+    * [[IosFileParser.tzOffsetHours]].
     */
-  val tzOffsetHours: Seq[(String, Int)] = Seq(
-    "UTC" -> 0, "GMT" -> 0, "PST" -> 8, "PDT" -> 7,
-    "MST" -> 7, "MDT" -> 6, "AST" -> 4, "ADT" -> 3)
-
-  /** Local timestamp + zone label → UTC timestamp. */
   def iosToUtc(ts: Column, tz: Column): Column = {
-    val offs = tzOffsetHours.tail.foldLeft(
-      when(upper(tz) === tzOffsetHours.head._1, lit(tzOffsetHours.head._2))) {
-      case (acc, (name, h)) => acc.when(upper(tz) === name, lit(h))
-    }.otherwise(lit(null))
+    val offs = cases(IosFileParser.tzOffsetHours.map { case (name, h) => (upper(tz) === name, h) })
     timestamp_micros(unix_micros(ts) + offs.cast("long") * 3600000000L)
   }
 
@@ -112,39 +110,76 @@ object IosFunctions {
     s"CASE ${whens.mkString(" ")} ELSE 'ignore' END"
   }
 
-  // --- BODC codes ------------------------------------------------------
+  // --- BODC codes and per-variable CF attributes ----------------------
+
+  /** One branch of OceanNcVar.__get_bodc_code (OceanNcVar.py:213-258)
+    * with the CF attributes `OceanNcVar.add_var` writes for it
+    * (OceanNcVar.py:44-152): a channel of class `cls` whose units (or,
+    * with `onName`, whose name) contain any of `keywords` gets the BODC
+    * base code `base`. Empty `keywords` is the class fallback.
+    */
+  final case class BodcRule(cls: String, onName: Boolean, keywords: Seq[String], base: String,
+                            longName: String, standardName: String, units: String)
+
+  /** The branches of __get_bodc_code in its evaluation order, tried in
+    * order within a class; each class ends in its fallback. Pressure and depth get fixed names
+    * (OceanNcVar.py:86-99). The nutrient species comes from the channel
+    * name (`Nitrate_plus_Nitrite`, `Silicate`, `Phosphate`, as in
+    * [[channelRules]]): IOS nutrient units are all `umol/L` and name no
+    * species.
+    */
+  val bodcRules: Seq[BodcRule] = {
+    val umolPerL = "umol/L"
+    def rule(cls: String, keywords: String*)(base: String, cf: (String, String, String)) =
+      BodcRule(cls, onName = false, keywords, base, cf._1, cf._2, cf._3)
+    // a units rule whose keyword is its own canonical unit
+    def ownUnit(cls: String, base: String, cf: (String, String, String)) = rule(cls, cf._3)(base, cf)
+    def nutrient(keyword: Option[String], base: String, species: String) =
+      BodcRule("nutrient", onName = true, keyword.toSeq, base,
+        s"Mole Concentration of $species in Sea Water",
+        s"mole_concentration_of_${species.toLowerCase.replace(' ', '_')}_in_sea_water", umolPerL)
+    val temp = ("Sea Water Temperature", "sea_water_temperature", "deg C")
+    val sal = ("Sea Water Practical Salinity", "sea_water_practical_salinity", "PSS-78")
+    val oxy = ("Oxygen concentration", "dissolved_oxygen_concentration", "mL/L")
+    val cond = ("Sea Water Electrical Conductivity", "sea_water_electrical_conductivity", "mS/cm")
+    Seq(
+      rule("pressure")("PRESPR01", ("Pressure", "sea_water_pressure", "decibar")),
+      rule("depth")("depth", ("Depth in meters", "depth_below_sea_level_in_meters", "m")),
+      rule("temperature", "ITS90", "ITS-90")("TEMPS9", temp),
+      rule("temperature", "IPTS-68", "IPTS68")("TEMPS6", temp),
+      rule("temperature")("TEMPST", temp),
+      ownUnit("salinity", "PSALST", sal),
+      rule("salinity")("SSALST", sal.copy(_3 = "PPT")),
+      ownUnit("oxygen", "DOXYZZ", oxy),
+      ownUnit("oxygen", "DOXMZZ", oxy.copy(_3 = "umol/kg")),
+      rule("oxygen")("DOXY", oxy.copy(_3 = umolPerL)),
+      ownUnit("conductivity", "CNDCSTX", cond),
+      rule("conductivity")("CNDCST", cond.copy(_3 = "S/m")),
+      nutrient(Some("NITRATE"), "NTRZAAZ", "Nitrate and Nitrite"),
+      nutrient(Some("PHOSPHATE"), "PHOSAAZ", "Phosphate"),
+      nutrient(None, "SLCAAAZ", "Silicate"))
+  }
+
+  /** A CASE with one branch per class of [[bodcRules]]: `of` its rules. */
+  private def byClass(cls: Column)(of: Seq[BodcRule] => Column): Column =
+    cases(bodcRules.map(_.cls).distinct.map(c => (cls === c, of(bodcRules.filter(_.cls == c)))))
+
+  /** One class's `value`: that of the first of its keyed `rules` whose
+    * `test` holds, else that of its fallback rule.
+    */
+  private def firstRule(rules: Seq[BodcRule], test: BodcRule => Column,
+                        value: BodcRule => String): Column = {
+    val (keyed, fallback) = rules.partition(_.keywords.nonEmpty)
+    if (keyed.isEmpty) lit(value(fallback.head))
+    else cases(keyed.map(r => (test(r), value(r)))).otherwise(value(fallback.head))
+  }
 
   /** Variable class + channel name + units → BODC base code, before the
-    * uniquifying suffix [[bodcCode]] adds (OceanNcVar.__get_bodc_code,
-    * OceanNcVar.py:213-258). Pressure and depth get fixed names
-    * (PRESPR01 / depth) per OceanNcVar.py:86-99. The nutrient species
-    * comes from the channel name (`Nitrate_plus_Nitrite`, `Silicate`,
-    * `Phosphate`, as in [[channelRules]]): IOS nutrient units are all
-    * `umol/L` and name no species.
+    * uniquifying suffix [[bodcCode]] adds: the first of the class's
+    * [[bodcRules]] whose keyword the units (or name) contain.
     */
-  def bodcBase(cls: Column, name: Column, units: Column): Column = {
-    val u = upper(units)
-    val n = upper(name)
-    when(cls === "pressure", "PRESPR01")
-      .when(cls === "depth", "depth")
-      .when(cls === "temperature",
-        when(u.contains("ITS90") || u.contains("ITS-90"), "TEMPS9")
-          .when(u.contains("IPTS-68") || u.contains("IPTS68"), "TEMPS6")
-          .otherwise("TEMPST"))
-      .when(cls === "salinity",
-        when(u.contains("PSS-78"), "PSALST").otherwise("SSALST"))
-      .when(cls === "oxygen",
-        when(u.contains("ML/L"), "DOXYZZ")
-          .when(u.contains("UMOL/KG"), "DOXMZZ")
-          .otherwise("DOXY"))
-      .when(cls === "conductivity",
-        when(u.contains("MS/CM"), "CNDCSTX").otherwise("CNDCST"))
-      .when(cls === "nutrient",
-        when(n.contains("NITRATE"), "NTRZAAZ")
-          .when(n.contains("PHOSPHATE"), "PHOSAAZ")
-          .otherwise("SLCAAAZ"))
-      .otherwise(lit(null))
-  }
+  def bodcBase(cls: Column, name: Column, units: Column): Column =
+    byClass(cls)(firstRule(_, r => containsAny(if (r.onName) name else units, r.keywords), _.base))
 
   /** The BODC code of the `rank`-th channel (1-based) sharing one
     * [[bodcBase]] within a file — the window equivalent of OceanNcVar's
@@ -156,65 +191,32 @@ object IosFunctions {
       .when(cls === "nutrient", concat(base, rank.cast("string")))
       .otherwise(concat(base, lpad(rank.cast("string"), 2, "0")))
 
-  // --- Per-variable CF attributes --------------------------------------
-
-  /** CF `long_name` for a standardized channel — the per-variable block
-    * `OceanNcVar.add_var` writes next to every NetCDF variable
-    * (OceanNcVar.py:44-152; nutrient names from __get_bodc_code,
-    * OceanNcVar.py:239-256). Keyed on the variable class, with the BODC
-    * code disambiguating the nutrient species.
+  /** One CF attribute of a standardized channel from its class and
+    * suffixed BODC code: the `field` of the class's rule whose base the
+    * code starts with, else of its fallback. A base that is the prefix of
+    * another (DOXY of DOXYZZ, CNDCST of CNDCSTX) is tried after it.
     */
-  def cfLongName(cls: Column, bodc: Column): Column =
-    when(cls === "depth", "Depth in meters")
-      .when(cls === "pressure", "Pressure")
-      .when(cls === "temperature", "Sea Water Temperature")
-      .when(cls === "salinity", "Sea Water Practical Salinity")
-      .when(cls === "oxygen", "Oxygen concentration")
-      .when(cls === "conductivity", "Sea Water Electrical Conductivity")
-      .when(cls === "nutrient",
-        when(bodc.startsWith("NTRZAAZ"), "Mole Concentration of Nitrate and Nitrite in Sea Water")
-          .when(bodc.startsWith("PHOSAAZ"), "Mole Concentration of Phosphate in Sea Water")
-          .when(bodc.startsWith("SLCAAAZ"), "Mole Concentration of Silicate in Sea Water"))
-      .otherwise(lit(null).cast("string"))
+  private def cfAttribute(field: BodcRule => String)(cls: Column, bodc: Column): Column =
+    byClass(cls) { rules =>
+      if (rules.map(field).distinct.size == 1) lit(field(rules.head))
+      else firstRule(rules.sortBy(-_.base.length), r => bodc.startsWith(r.base), field)
+    }
 
-  /** CF `standard_name` twin of [[cfLongName]] (OceanNcVar.py:44-152).
-    * The reference's longitude branch sets standard_name='latitude'
-    * (OceanNcVar.py:63 — an evident copy-paste slip that would break CF
-    * compliance checkers); we emit 'longitude' in the coordinate rows and
-    * note the divergence here rather than reproduce it.
-    */
-  def cfStandardName(cls: Column, bodc: Column): Column =
-    when(cls === "depth", "depth_below_sea_level_in_meters")
-      .when(cls === "pressure", "sea_water_pressure")
-      .when(cls === "temperature", "sea_water_temperature")
-      .when(cls === "salinity", "sea_water_practical_salinity")
-      .when(cls === "oxygen", "dissolved_oxygen_concentration")
-      .when(cls === "conductivity", "sea_water_electrical_conductivity")
-      .when(cls === "nutrient",
-        when(bodc.startsWith("NTRZAAZ"), "mole_concentration_of_nitrate_and_nitrite_in_sea_water")
-          .when(bodc.startsWith("PHOSAAZ"), "mole_concentration_of_phosphate_in_sea_water")
-          .when(bodc.startsWith("SLCAAAZ"), "mole_concentration_of_silicate_in_sea_water"))
-      .otherwise(lit(null).cast("string"))
+  /** CF `long_name` of a standardized channel. */
+  def cfLongName(cls: Column, bodc: Column): Column = cfAttribute(_.longName)(cls, bodc)
 
-  /** Canonical CF units for a standardized channel — the `bodc_units`
-    * side of __get_bodc_code (OceanNcVar.py:170-258): the BODC code
-    * already encodes which unit branch matched, so the canonical unit
-    * string derives from (class, code prefix) alone. CNDCSTX is tested
-    * before CNDCST (its prefix).
+  /** CF `standard_name` of a standardized channel. The reference's
+    * longitude branch sets standard_name='latitude' (OceanNcVar.py:63 —
+    * an evident copy-paste slip that would break CF compliance checkers);
+    * we emit 'longitude' in the coordinate rows and note the divergence
+    * here rather than reproduce it.
     */
-  def cfCanonicalUnits(cls: Column, bodc: Column): Column =
-    when(cls === "depth", "m")
-      .when(cls === "pressure", "decibar")
-      .when(cls === "temperature", "deg C")
-      .when(cls === "salinity",
-        when(bodc.startsWith("PSALST"), "PSS-78").otherwise("PPT"))
-      .when(cls === "oxygen",
-        when(bodc.startsWith("DOXYZZ"), "mL/L")
-          .when(bodc.startsWith("DOXMZZ"), "umol/kg").otherwise("umol/L"))
-      .when(cls === "conductivity",
-        when(bodc.startsWith("CNDCSTX"), "mS/cm").otherwise("S/m"))
-      .when(cls === "nutrient", "umol/L")
-      .otherwise(lit(null).cast("string"))
+  def cfStandardName(cls: Column, bodc: Column): Column = cfAttribute(_.standardName)(cls, bodc)
+
+  /** Canonical CF units of a standardized channel — the `bodc_units`
+    * side of __get_bodc_code (OceanNcVar.py:170-258).
+    */
+  def cfCanonicalUnits(cls: Column, bodc: Column): Column = cfAttribute(_.units)(cls, bodc)
 
   // --- Unit conversions (GSW-adjacent, deterministic scalar math) ------
 

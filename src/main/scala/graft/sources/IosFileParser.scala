@@ -40,7 +40,40 @@ object IosFileParser {
       details: Vector[ChannelDetail],
       data: Vector[Vector[String]])
 
-  private val tzOffsetHours = Map(
+  /** One value of a parsed file: data row `row`'s cell of `channel`,
+    * and for time-series files its time in epoch microseconds.
+    */
+  final case class Observation(channel: Channel, row: Int, raw: String,
+                               value: Option[Double], obsMicros: Option[Long])
+
+  /** `p`'s values in long format, for the channels `keep` admits: a value
+    * equal to its channel's pad (the channel-detail pad, else the file's
+    * `PAD`) is null (OceanNcVar.py:206-211), and a file with a start time
+    * and a time increment gets the reference's `start + i·dt` time
+    * (ObsFile.py:393-396). Pads resolve once per channel, times once per row.
+    */
+  def observations(p: Parsed, keep: Channel => Boolean = _ => true): Iterator[Observation] = {
+    def num(s: String) = scala.util.Try(s.toDouble).toOption
+    val filePad = p.file.get("PAD").map(_.trim)
+    val kept = p.channels.zipWithIndex.collect { case (ch, ci) if keep(ch) =>
+      (ch, ci, p.details.lift(ci).map(_.pad.trim).filter(_.nonEmpty).orElse(filePad).flatMap(num))
+    }
+    val start = for (st <- p.startTimeUtc; dt <- p.timeIncrementSeconds)
+      yield (st.getEpochSecond * 1000000L + st.getNano / 1000L, dt)
+    p.data.iterator.zipWithIndex.flatMap { case (row, ri) =>
+      val obsMicros = start.map { case (st, dt) => st + (dt * 1e6 * ri).toLong }
+      kept.iterator.map { case (ch, ci, pad) =>
+        val raw = row.lift(ci).getOrElse("")
+        Observation(ch, ri, raw, num(raw).filterNot(d => pad.contains(d)), obsMicros)
+      }
+    }
+  }
+
+  /** Hours to ADD to a local IOS timestamp to reach UTC, by zone label.
+    * Mirrors ObsFile.get_date (ObsFile.py:160-213): GMT/UTC 0, PST +8,
+    * PDT +7, MST +7, MDT +6, AST +4, ADT +3.
+    */
+  val tzOffsetHours: Seq[(String, Int)] = Seq(
     "UTC" -> 0, "GMT" -> 0, "PST" -> 8, "PDT" -> 7,
     "MST" -> 7, "MDT" -> 6, "AST" -> 4, "ADT" -> 3)
 
@@ -386,7 +419,7 @@ object IosFileParser {
     val s = raw.trim
     val tz = s.take(3).toUpperCase
     val rest = s.drop(3).trim
-    val offset = tzOffsetHours.get(tz)
+    val offset = tzOffsetHours.find(_._1 == tz).map(_._2)
     if (offset.isEmpty) return None
     val noFrac = DateTimeFormatter.ofPattern("yyyy/MM/dd HH:mm:ss")
     val local = scala.util.Try(LocalDateTime.parse(rest, fmtFull)).toOption

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.net.URI
@@ -42,10 +43,13 @@ case class IosObservation(
   * mapPartitions over [[IosFileParser]]) so ingest parallelism scales
   * with the file count — the way a million-file archive must be loaded.
   *
-  * The reference's per-file pipeline (ObsFile.import_data →
+  * Values come from [[IosFileParser.observations]], the kernel the DSv2
+  * `format("ios")` source emits through too, and both read files as
+  * UTF-8 (the text source's decoding), so the two readers agree row for
+  * row. The reference's per-file pipeline (ObsFile.import_data →
   * write_ctd_ncfile) becomes: `observations()` long rows → columnar
-  * transforms (classification, BODC codes, pad-null — graft.functions) →
-  * partitioned parquet sink.
+  * transforms (classification, BODC codes — graft.functions) →
+  * partitioned parquet sink (`ReferencePipeline.convertArchive`).
   */
 object IosReader {
 
@@ -78,29 +82,12 @@ object IosReader {
       p.timeIncrementSeconds, p.nRecords, p.channels.length, p.data.length,
       IosFileParser.headerJson(p))
 
-  /** One parsed file's values in long format, pad→null applied and, for
-    * time-series files (TIME INCREMENT present), the reference's
-    * `start + i·dt` observation time.
-    */
-  private[graft] def observationsOf(p: IosFileParser.Parsed): Iterator[IosObservation] = {
-    val pads: Int => Option[String] =
-      i => p.details.lift(i).map(_.pad.trim).filter(_.nonEmpty)
-        .orElse(p.file.get("PAD").map(_.trim))
-    p.data.iterator.zipWithIndex.flatMap { case (row, ri) =>
-      p.channels.iterator.zipWithIndex.map { case (ch, ci) =>
-        val rawV = row.lift(ci).getOrElse("")
-        val parsed = scala.util.Try(rawV.toDouble).toOption
-        val v = parsed.filterNot(d => pads(ci).flatMap(pd =>
-          scala.util.Try(pd.toDouble).toOption).contains(d))
-        val obsTime = for {
-          st <- p.startTimeUtc
-          dt <- p.timeIncrementSeconds
-          // microsecond precision, same quantization as the v2 source
-        } yield Timestamp.from(st.plusNanos((dt * 1e6 * ri).toLong * 1000L))
-        IosObservation(p.filename, ch.no, ch.name, ch.units, ri, rawV, v, obsTime)
-      }
+  /** One parsed file's values in long format: [[IosFileParser.observations]]. */
+  private[graft] def observationsOf(p: IosFileParser.Parsed): Iterator[IosObservation] =
+    IosFileParser.observations(p).map { o =>
+      IosObservation(p.filename, o.channel.no, o.channel.name, o.channel.units, o.row, o.raw,
+        o.value, o.obsMicros.map(m => Timestamp.from(DateTimeUtils.microsToInstant(m))))
     }
-  }
 
   /** One row per file: [[profileOf]] each file. */
   def profiles(spark: SparkSession, pathGlob: String): DataFrame = {
@@ -206,15 +193,5 @@ object IosReader {
       throw new NoSuchElementException(s".env is missing '$k'"))
     ArchiveJob(req(s"${ftype}_raw_folder"), req(s"${ftype}_nc_folder"),
       req("geojson_file"), patterns)
-  }
-
-  /** Reference-pipeline sink: long observations enriched with variable
-    * class (keyword rules) written as parquet partitioned by class — the
-    * partition-prunable layout downstream readers want.
-    */
-  def writeStandardized(spark: SparkSession, pathGlob: String, outDir: String): Unit = {
-    val obs = observations(spark, pathGlob)
-      .withColumn("var_class", graft.functions.IosFunctions.classifyChannel(col("channel_name")))
-    obs.write.mode("overwrite").partitionBy("var_class").parquet(outDir)
   }
 }

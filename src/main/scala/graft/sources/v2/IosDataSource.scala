@@ -5,6 +5,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -16,10 +17,11 @@ import java.util
   * layout with real source-level column pruning.
   *
   * Scale shape: the driver only expands the glob; each file is one
-  * InputPartition, parsed executor-side by the same pure
-  * [[IosFileParser]] the mapPartitions reader uses — a million-file
-  * archive reads with a million-way parallelizable scan and no driver
-  * content I/O.
+  * InputPartition, decoded as UTF-8 and parsed executor-side by the
+  * same pure [[IosFileParser]], with the same observation kernel
+  * ([[IosFileParser.observations]]), as the mapPartitions reader — a
+  * million-file archive reads with a million-way parallelizable scan and
+  * no driver content I/O.
   */
 class IosDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "ios"
@@ -255,52 +257,31 @@ class IosPartitionReader(path: String, columns: Array[String],
     val hp = new org.apache.hadoop.fs.Path(path)
     val fs = hp.getFileSystem(new org.apache.hadoop.conf.Configuration())
     val in = fs.open(hp)
-    val content = try {
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      new String(out.toByteArray, "ISO-8859-1")
-    } finally in.close()
+    // UTF-8, as Spark's text source decodes it for IosReader
+    val content = try new String(in.readAllBytes(), "UTF-8") finally in.close()
     val p = IosFileParser.parse(path.split('/').last, content)
     val fname = UTF8String.fromString(p.filename)
-    val pads: Int => Option[Double] = i =>
-      p.details.lift(i).map(_.pad.trim).filter(_.nonEmpty)
-        .orElse(p.file.get("PAD").map(_.trim))
-        .flatMap(s => scala.util.Try(s.toDouble).toOption)
     // channel-level pushdown: drop excluded channels ONCE, before the
     // data rows expand (row count scales with surviving channels); the
     // bloom (join build side summary) prunes alongside the exact filters
     val chBloom = channelBloom.map(IosBloom.decode)
-    val keptChannels = p.channels.zipWithIndex.filter { case (ch, _) =>
+    def keep(ch: IosFileParser.Channel): Boolean = {
       val attrs = Map[String, Any]("filename" -> p.filename,
         "channel_name" -> ch.name, "channel_no" -> ch.no)
       chBloom.forall(_.mightContainString(ch.name)) &&
         filters.forall(IosFilters.mightMatch(_, attrs))
     }
-    p.data.iterator.zipWithIndex.flatMap { case (row, ri) =>
-      keptChannels.iterator.map { case (ch, ci) =>
-        val rawV = row.lift(ci).getOrElse("")
-        val v = scala.util.Try(rawV.toDouble).toOption
-          .filterNot(d => pads(ci).contains(d))
-        val obsMicros: Option[Long] = for {
-          st <- p.startTimeUtc
-          dt <- p.timeIncrementSeconds
-          // epoch micros from second+nano (toEpochMilli would drop sub-ms
-          // start fractions and drift from the mapPartitions reader)
-        } yield st.getEpochSecond * 1000000L + st.getNano / 1000L + (dt * 1e6 * ri).toLong
-        val all: Map[String, Any] = Map(
-          "filename" -> fname,
-          "channel_no" -> ch.no,
-          "channel_name" -> UTF8String.fromString(ch.name),
-          "units" -> UTF8String.fromString(ch.units),
-          "row_idx" -> ri,
-          "raw" -> UTF8String.fromString(rawV),
-          "value" -> v.orNull,
-          "obs_time_utc" -> obsMicros.orNull)
-        InternalRow.fromSeq(columns.toSeq.map(all))
-      }
+    val project = columns.map[IosFileParser.Observation => Any] {
+      case "filename" => _ => fname
+      case "channel_no" => _.channel.no
+      case "channel_name" => o => UTF8String.fromString(o.channel.name)
+      case "units" => o => UTF8String.fromString(o.channel.units)
+      case "row_idx" => _.row
+      case "raw" => o => UTF8String.fromString(o.raw)
+      case "value" => _.value.getOrElse(null)
+      case "obs_time_utc" => _.obsMicros.getOrElse(null)
     }
+    IosFileParser.observations(p, keep).map(o => new GenericInternalRow(project.map(_(o))))
   }
 
   private var current: InternalRow = _

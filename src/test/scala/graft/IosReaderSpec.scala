@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 /** End-to-end pins for the IOS source against the IOS fixture corpus
   * (src/test/resources/ios/; its README lists what each file plants):
   * header metadata, coordinate signing, timezone conversion, record
-  * counts, pad-null behavior, parquet sink.
+  * counts, pad-null behavior.
   */
 class IosReaderSpec extends SparkSpec {
 
@@ -64,19 +64,6 @@ class IosReaderSpec extends SparkSpec {
     // TIME INCREMENT 10 min
     val d = times(1).getTimestamp(0).getTime - times(0).getTimestamp(0).getTime
     assert(d == 600000L)
-  }
-
-  test("writeStandardized: partitioned parquet sink round-trips") {
-    val out = "target/tmp/ios_std"
-    IosReader.writeStandardized(spark, s"$base/ctd_profile/*.ctd", out)
-    val back = spark.read.parquet(out)
-    assert(back.count() > 0)
-    val classes = back.select("var_class").distinct()
-      .collect().map(_.getString(0)).toSet
-    assert(Set("temperature", "salinity", "pressure", "depth", "oxygen").subsetOf(classes))
-    // partition pruning works: reading one class touches one directory
-    val temps = spark.read.parquet(out).filter(col("var_class") === "temperature")
-    assert(temps.count() > 0)
   }
 
   test("header_json carries the full original header like out.HEADER") {

@@ -12,8 +12,26 @@ class IosV2SourceSpec extends SparkSpec {
   private val base = IosFixtures.base
 
   test("v2 source rows equal IosReader.observations") {
+    // non-ASCII header bytes (UTF-8 `°`, `é`) decode alike in both readers
+    val utf8 = java.nio.file.Files.createTempDirectory("graft-ios-utf8")
+    java.nio.file.Files.write(utf8.resolve("utf8.ctd"),
+      """*IOS HEADER VERSION 2.0
+        |*FILE
+        |    START TIME          : UTC 2020/01/01 00:00:00.000
+        |    TIME INCREMENT      : 0 0 1 0 0
+        |    NUMBER OF RECORDS   : 2
+        |    $TABLE: CHANNELS
+        |    ! No Name         Units  Minimum  Maximum
+        |    !--- ------------ ------ -------- --------
+        |       1 Temperature  °C     0        10
+        |       2 Salinité     PSU    0        40
+        |    $END
+        |*END OF HEADER
+        |  1.0  30.5
+        |  3.0  31.5
+        |""".stripMargin.getBytes("UTF-8"))
     for (glob <- Seq(s"$base/bot/1990-033-0002.che",
-      s"$base/ctd_mooring/a1_20080429_20080518_0034m.ctd")) {
+      s"$base/ctd_mooring/a1_20080429_20080518_0034m.ctd", s"$utf8/*.ctd")) {
       val v2 = spark.read.format("graft.sources.v2.IosDataSource").load(glob)
         .orderBy("filename", "row_idx", "channel_no").collect()
       val v1 = IosReader.observations(spark, glob)
@@ -22,6 +40,8 @@ class IosV2SourceSpec extends SparkSpec {
       assert(v2.length == v1.length && v2.length > 0)
       v2.zip(v1).foreach { case (a, b) => assert(a == b, s"$a != $b") }
     }
+    assert(spark.read.format("ios").load(s"$utf8/*.ctd").select("units").distinct()
+      .collect().map(_.getString(0)).toSet == Set("°C", "PSU"))
   }
 
   test("a path that matches no file fails in both readers, naming it") {
