@@ -22,13 +22,13 @@ object Sink {
       .partitionBy(partitionCols: _*).save(path)
   }
 
-  /** Bucketed managed table: `nBuckets` hash buckets on `bucketCol`,
-    * sorted inside each bucket — joins and aggregations on the bucket
-    * key read co-located data with no exchange.
+  /** Bucketed table at `location`: `nBuckets` hash buckets on
+    * `bucketCol`, sorted inside each bucket — joins and aggregations on
+    * the bucket key read co-located data with no exchange.
     */
-  def writeBucketed(df: DataFrame, table: String, format: String,
+  def writeBucketed(df: DataFrame, table: String, location: String, format: String,
                     bucketCol: String, nBuckets: Int): Unit =
-    df.write.mode("overwrite").format(format)
+    df.write.mode("overwrite").format(format).option("path", location)
       .bucketBy(nBuckets, bucketCol).sortBy(bucketCol)
       .saveAsTable(table)
 

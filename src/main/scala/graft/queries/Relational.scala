@@ -1402,22 +1402,12 @@ object Relational {
   // the join a sort-merge at every sf (a broadcast would also skip the
   // exchange, but only while one side stays small — the bucketed SMJ is
   // the shape that survives 100×). Tables stage once per (sf dir,
-  // process): the in-memory catalog forgets them across JVMs, so a
-  // stale managed location left by a previous process is cleared first.
+  // process), in the application's scratch dir ([[graft.Tables.scratch]]).
   private def q43Table(s: SparkSession, dir: String, src: String, key: String): DataFrame = {
-    // collision-free table key: md5 of the sf dir's UTF-8 path. A
-    // 32-bit hashCode collision between two sf dirs in one process
-    // would silently serve the wrong scale's data; md5 cannot.
-    val dirKey = java.security.MessageDigest.getInstance("MD5")
-      .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    val tbl = s"graft_q43_${src}_$dirKey"
-    if (!s.catalog.tableExists(tbl)) {
-      s.sql(s"DROP TABLE IF EXISTS $tbl")
-      val loc = new org.apache.hadoop.fs.Path(
-        s.sessionState.conf.warehousePath, tbl)
-      loc.getFileSystem(s.sparkContext.hadoopConfiguration).delete(loc, true)
-      graft.operators.Sink.writeBucketed(t(s, dir, src), tbl, "parquet", key, 8)
-    }
+    val tbl = s"graft_q43_${src}_${graft.Tables.dirKey(dir)}"
+    if (!s.catalog.tableExists(tbl))
+      graft.operators.Sink.writeBucketed(t(s, dir, src), tbl,
+        new java.io.File(graft.Tables.scratch(s), tbl).toString, "parquet", key, 8)
     s.table(tbl)
   }
 

@@ -2187,73 +2187,27 @@ object TrainingData {
             .otherwise(col("text")).as("text")), path)
     }
 
-  /** SnapshotTable fixture staging shared by d11/d23/d24/d25, keyed
-    * by (prefix, sf dir) under a PER-USER tmp subdirectory (a shared
-    * host's world-writable tmpdir must not serve — or block deleting —
-    * another user's staging). Content is deterministic per sf dir, so
-    * reuse across calls is sound; anything other than exactly the
-    * `expect` version set — a crashed half-stage, a stale vintage — is
-    * torn down and rebuilt rather than trusted.
+  /** SnapshotTable fixture staging shared by d11 and d23–d54, keyed by
+    * (prefix, sf dir) in the application's scratch dir
+    * ([[Tables.scratch]]), so every fixture is staged by the code
+    * that is running and removed when the SparkContext stops. Content is
+    * deterministic per sf dir, so reuse within the application is sound;
+    * anything other than exactly the `expect` version set — a crashed
+    * half-stage, a commit planted on top — is torn down and rebuilt
+    * rather than trusted.
     */
-  private[graft] def fixturePath(dir: String, prefix: String): String = {
-    val user = Integer.toHexString(
-      System.getProperty("user.name", "anon").hashCode)
-    new java.io.File(
-      new java.io.File(System.getProperty("java.io.tmpdir"), s"graft-$user"),
-      s"$prefix-${Integer.toHexString(dir.hashCode)}").toString
-  }
-
-  /** Metadata-only vintage stamp of the fixture's SOURCE table: total
-    * bytes + newest mtime of `documents.parquet` (file or directory).
-    * The fixture dir outlives a single process (tmpdir persists across
-    * driver rounds), so "versions == {1,2}" alone would happily serve a
-    * fixture staged from a PREVIOUS generation of the testdata — the
-    * stamp detects a regenerated source without reading any data.
-    */
-  /** Bump when the STAGED ARTIFACT's semantics change (not just the
-    * source data) — e.g. manifests gaining recorded commit kinds that a
-    * metadata query reads back: a fixture staged by older code would
-    * pass the versions+vintage freshness check while serving the old
-    * manifest shape. The epoch rides the stamp, so every fixture
-    * restages exactly once per bump.
-    */
-  // epoch 3: file identity in stats/posdelete sidecars moved from bare
-  // names to snapshot-dir-relative subpaths (identical on unpartitioned
-  // fixtures, but restage everything once so no cached partitioned
-  // sidecar carries the colliding-name vintage)
-  private val fixtureEpoch = 3
-
-  private def sourceStamp(s: SparkSession, dir: String): String = {
-    val p = new org.apache.hadoop.fs.Path(dir, "documents.parquet")
-    val f = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val st = f.getFileStatus(p)
-    val parts =
-      if (st.isFile) Array(st)
-      else f.listStatus(p).filter(_.isFile)
-    s"e$fixtureEpoch:${parts.map(_.getLen).sum}:${parts.map(_.getModificationTime).max}"
-  }
+  private[graft] def fixturePath(s: SparkSession, dir: String, prefix: String): String =
+    new java.io.File(Tables.scratch(s), s"$prefix-${Tables.dirKey(dir)}").toString
 
   private def stagedSnapshotFixture(s: SparkSession, dir: String, prefix: String,
                                     expect: Seq[Long] = Seq(1L, 2L))
                                    (build: String => Unit): String = {
-    val path = fixturePath(dir, prefix)
-    val hadoopConf = s.sparkContext.hadoopConfiguration
-    // reclaim the pre-r12 flat-tmpdir staging location, which nothing
-    // rebuilds or reads anymore (dead storage otherwise)
-    val legacy = new org.apache.hadoop.fs.Path(new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft-$prefix-${Integer.toHexString(dir.hashCode)}").toString)
-    legacy.getFileSystem(hadoopConf).delete(legacy, true)
-    val stamp = sourceStamp(s, dir)
-    val stampFile = new java.io.File(path, "_fixture_src")
-    val fresh = SnapshotTable.versions(s, path) == expect &&
-      stampFile.isFile &&
-      new String(java.nio.file.Files.readAllBytes(stampFile.toPath), "UTF-8") == stamp
-    if (!fresh) {
+    val path = fixturePath(s, dir, prefix)
+    if (SnapshotTable.versions(s, path) != expect) {
       val hp = new org.apache.hadoop.fs.Path(path)
-      val f = hp.getFileSystem(hadoopConf)
+      val f = hp.getFileSystem(s.sparkContext.hadoopConfiguration)
       // a failed teardown must fail HERE: building on top of a stale
-      // vintage would serve wrong v1/v2 content for this whole run
+      // table would serve wrong v1/v2 content for this whole run
       // (Hadoop's delete returns false instead of throwing)
       if (!f.delete(hp, true) && f.exists(hp)) throw new java.io.IOException(
         s"cannot remove stale fixture at $path; refusing to stage on top of it")
@@ -2261,8 +2215,6 @@ object TrainingData {
       val staged = SnapshotTable.versions(s, path)
       if (staged != expect) throw new IllegalStateException(
         s"fixture staging at $path produced versions $staged, expected $expect")
-      java.nio.file.Files.write(stampFile.toPath, stamp.getBytes("UTF-8"))
-      ()
     }
     path
   }
@@ -3373,29 +3325,27 @@ object TrainingData {
       val wH = Window.partitionBy(col("h")).orderBy(col("doc_id"), col("j"))
       // The kept-block subplan feeds four differently-pruned consumers
       // (vocab, totals, both scoring-join sides), so Catalyst plans four
-      // subtrees and ReusedExchange never fires — 12 documents scans /
-      // 56 exchanges in the r17 plan, 4x the scan I/O at corpus scale.
-      // A raw localCheckpoint of the KEPT tier was A/B-measured at sf1.0
-      // and REVERTED twice (r16, r17): within one action the scheduler
-      // overlaps the duplicate branches, so materializing the still-
-      // token-sized tier bought nothing. What does pay (r18, guide
-      // §2.4/§8) is collapsing first: aggregate kept tokens to per-doc
-      // (doc_id, lang, tk, c) counts — the SMALLEST tier every consumer
-      // can re-derive its input from — and stage THAT once per run
-      // (Tables.stageOnce, overwrite-on-every-call). The expensive
-      // langPredict+block-hash+window subtree now executes exactly once,
-      // and all four consumers re-read a vocabulary-scale parquet.
+      // subtrees and ReusedExchange never fires. Consumers read the
+      // count-collapsed (doc_id, lang, tk, c) tier — the smallest one
+      // every consumer can re-derive its input from — UNSTAGED. Writing
+      // that tier to parquet once per run (r18) cut the plan to 32
+      // exchanges but was reverted, as it never paid in wall clock: the
+      // r18 driver read p4 at 0.75x, the isolated sf1.0 A/B minimum went
+      // 6.85 -> 7.34 s, and the sf1.0 8-vs-32-core ratio was 0.96 (the
+      // staged write + re-read serializes the pipeline). A raw
+      // localCheckpoint of the kept tier was reverted twice before
+      // (r16, r17): within one action the scheduler overlaps the
+      // duplicate branches.
       // Decimal exactness of the count-weighted NLL sum: dsum casts each
       // addend to DECIMAL(28,6) first, and c identical decimal addends
       // sum to exactly addend*c, so sum(cast(-log p)*c) == dsum over the
       // exploded per-token rows (the t34 argument; oracle-confirmed).
       val kept = blocks.withColumn("rn", row_number().over(wH))
         .filter(col("rn") === 1)
-      val ktok = graft.Tables.stageOnce(
-        kept.select(col("doc_id"), col("lang"), explode(col("btoks")).as("tk"))
-          .groupBy(col("doc_id"), col("lang"), col("tk"))
-          .agg(count(lit(1)).as("c")),
-        "p4ktok")
+      val ktok = kept
+        .select(col("doc_id"), col("lang"), explode(col("btoks")).as("tk"))
+        .groupBy(col("doc_id"), col("lang"), col("tk"))
+        .agg(count(lit(1)).as("c"))
       val vocab = ktok.groupBy(col("lang").as("vlang"), col("tk").as("vtk"))
         .agg(sum(col("c")).as("cnt"))
       val totals = vocab.groupBy(col("vlang"))

@@ -14,9 +14,6 @@ import graft.operators.SnapshotTable
   */
 class CommitCountSpec extends SparkSpec {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def jobsOf[T](body: => T) = JobProbe.jobsOf(spark)(body)
 
   private def docs(ks: Seq[Long]): DataFrame = {

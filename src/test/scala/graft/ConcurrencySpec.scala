@@ -14,9 +14,6 @@ class ConcurrencySpec extends SparkSpec {
 
   import graft.operators.SnapshotTable
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def docs(ids: Range, lang: String = "en") = {
     import spark.implicits._
     ids.map(i => (i.toLong, lang, s"document body $i")).toDF("doc_id", "lang", "text")

@@ -12,9 +12,6 @@ import graft.operators.SnapshotTable
   */
 class GraftRowLevelSpec extends SparkSpec {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def withCatalog(test: String => Unit): Unit = {
     val wh = tmp("graft-rl-wh")
     val cat = s"grl${Integer.toHexString(wh.hashCode)}"

@@ -15,9 +15,6 @@ class GraftV2SourceSpec extends SparkSpec {
 
   import graft.operators.SnapshotTable
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def docs(ids: Range) = {
     import spark.implicits._
     ids.map(i => (i.toLong, s"text-$i", s"lang${i % 3}")).toDF("doc_id", "text", "lang")

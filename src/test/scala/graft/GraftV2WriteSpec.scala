@@ -14,9 +14,6 @@ import graft.operators.SnapshotTable
   */
 class GraftV2WriteSpec extends SparkSpec {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def docs(ids: Range) = {
     import spark.implicits._
     ids.map(i => (i.toLong, s"text-$i", s"lang${i % 3}")).toDF("doc_id", "text", "lang")

@@ -127,7 +127,7 @@ class IosCorpusSpec extends SparkSpec {
       spark, s"$base/ios_polygons.geojson")
     val got = inventory.keys.toSeq.flatMap { dir =>
       graft.operators.ReferencePipeline
-        .convertArchive(spark, s"$base/$dir/*.*", s"target/tmp/ios_corpus_$dir", catalog)
+        .convertArchive(spark, s"$base/$dir/*.*", tmp(s"ios_corpus_$dir"), catalog)
         .collect()
         .map(r => r.getAs[String]("filename") ->
           ((r.getAs[String]("geo_code"), r.getAs[Long]("n_vars"),

@@ -83,7 +83,7 @@ class IosReaderSpec extends SparkSpec {
   }
 
   test("recentFiles keeps only files inside the mod-time window ('new' mode gate)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_modtime")
+    val dir = java.nio.file.Paths.get(tmp("graft_modtime"))
     val fresh = dir.resolve("fresh.ctd"); val stale = dir.resolve("stale.ctd")
     java.nio.file.Files.writeString(fresh, "x")
     java.nio.file.Files.writeString(stale, "y")
@@ -190,7 +190,7 @@ class IosReaderSpec extends SparkSpec {
     // a space and a percent sign: input_file_name() renders both
     // URL-encoded (%20, %25), the DSv2 source reports the plain name
     val dir = Files.createDirectories(
-      Files.createTempDirectory("graft-ios-names").resolve("a dir"))
+      java.nio.file.Paths.get(tmp("graft-ios-names")).resolve("a dir"))
     Files.write(dir.resolve("x y%z.ctd"),
       fmtFixture("(1X,F5.1,1X,F5.2)", "  12.3  6.78").getBytes("ISO-8859-1"))
     val glob = s"$dir/*.ctd"
@@ -239,7 +239,8 @@ class IosReaderSpec extends SparkSpec {
   }
 
   test(".env import matches the reference's parsing quirks") {
-    val f = java.nio.file.Files.createTempFile("graft_env", ".env")
+    val f = java.nio.file.Files.createTempFile(
+      java.nio.file.Paths.get(tmp("graft_env")), "graft_env", ".env")
     java.nio.file.Files.write(f, java.util.Arrays.asList(
       "# deployment layout",
       "ctd_raw_folder : /data/raw/ctd/",

@@ -13,7 +13,7 @@ class IosV2SourceSpec extends SparkSpec {
 
   test("v2 source rows equal IosReader.observations") {
     // non-ASCII header bytes (UTF-8 `°`, `é`) decode alike in both readers
-    val utf8 = java.nio.file.Files.createTempDirectory("graft-ios-utf8")
+    val utf8 = java.nio.file.Paths.get(tmp("graft-ios-utf8"))
     java.nio.file.Files.write(utf8.resolve("utf8.ctd"),
       """*IOS HEADER VERSION 2.0
         |*FILE

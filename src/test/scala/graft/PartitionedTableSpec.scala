@@ -13,9 +13,6 @@ class PartitionedTableSpec extends SparkSpec {
 
   import graft.operators.SnapshotTable
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Bytes the plan's scans were BUILT over (the Round13Spec audit):
     * sum of leaf-relation sizes in the optimized plan — what file
     * pruning changes.

@@ -54,7 +54,7 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("convertArchive writes prunable parquet and reports per-file stats") {
-    val out = "target/tmp/ref_pipeline"
+    val out = tmp("ref_pipeline")
     // the corpus's 51-polygon geojson catalog drives geo-tagging
     val catalog = graft.functions.Geo.catalogFromGeoJson(spark, s"$base/ios_polygons.geojson")
     val summary = ReferencePipeline.convertArchive(spark, s"$base/ctd_profile/*.ctd", out, catalog)
@@ -72,7 +72,7 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("convertArchive emits the CF-attribute sidecar write_ctd_ncfile builds") {
-    val out = "target/tmp/ref_pipeline_cf"
+    val out = tmp("ref_pipeline_cf")
     ReferencePipeline.convertArchive(spark, s"$base/ctd_profile/*.ctd", out)
     val cf = spark.read.json(s"$out/_cf_attributes")
     val rows = cf.collect()
@@ -127,7 +127,7 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("convertArchive writes the per-variable sidecar next to the global one") {
-    val out = "target/tmp/ref_pipeline_cfv"
+    val out = tmp("ref_pipeline_cfv")
     ReferencePipeline.convertArchive(spark, s"$base/ctd_profile/2017-020-0474.ctd", out)
     val v = spark.read.json(s"$out/_cf_variable_attributes")
     // 7 measured channels (2 temp-class rows collapse? no: distinct bodc)
@@ -155,7 +155,7 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   test("files sharing a name in two directories standardize apart") {
     // a/x.ctd is 2017-020-0474.ctd (mission 2017-020), b/x.ctd is
     // 2017-42-1021.ctd (mission 2017-42): one name, two files
-    val root = Paths.get("target/tmp/ios_same_name").toAbsolutePath
+    val root = Paths.get(tmp("ios_same_name"))
     val files = Seq("a" -> "2017-020-0474.ctd", "b" -> "2017-42-1021.ctd")
     files.foreach { case (dir, f) =>
       Files.copy(Paths.get(s"$base/ctd_profile/$f"),
@@ -206,12 +206,12 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * jobs it ran and the archive's bytes.
     */
   private lazy val probedConversion: (Seq[JobProbe.Job], Long) = {
-    val dir = Files.createDirectories(Paths.get("target/tmp/ios_probe_archive").toAbsolutePath)
+    val dir = Paths.get(tmp("ios_probe_archive"))
     val profiles = new java.io.File(s"$base/ctd_profile").listFiles().toSeq
     for (f <- profiles; i <- 1 to 6)
       Files.copy(f.toPath, dir.resolve(s"c$i-${f.getName}"), REPLACE_EXISTING)
     val (_, jobs) = JobProbe.jobsOf(spark)(ReferencePipeline.convertArchive(
-      spark, s"$dir/*.ctd", "target/tmp/ios_probe_out"))
+      spark, s"$dir/*.ctd", tmp("ios_probe_out")))
     (jobs, profiles.map(_.length).sum * 6)
   }
 

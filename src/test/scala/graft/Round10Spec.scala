@@ -295,7 +295,7 @@ class Round10Spec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("d19fix").toString
+    val dir = tmp("d19fix")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("d19_exact_substr")(spark, dir)
       .collect().map(r =>
@@ -328,7 +328,7 @@ class Round10Spec extends SparkSpec {
       .toDF("doc_id", "text")
       .withColumn("lang", lit("en")).withColumn("source", lit("t"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-    val dir = java.nio.file.Files.createTempDirectory("d20fix").toString
+    val dir = tmp("d20fix")
     docs.coalesce(1).write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val out = SparkEntry.queries("d20_substr_excise")(spark, dir)
       .collect().map(r => r.getLong(0) ->

@@ -167,7 +167,7 @@ class Round11Spec extends SparkSpec {
   test("SnapshotTable.ingest admits exactly new-content rows, incrementally") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val path = tmp("graft-ingest")
     val b1 = Seq((1L, "alpha beta"), (2L, "gamma delta"), (3L, "alpha beta"))
       .toDF("doc_id", "text")
     val s1 = SnapshotTable.ingest(spark, b1, path, "text", expectedItems = 100L)
@@ -202,7 +202,7 @@ class Round11Spec extends SparkSpec {
   test("SnapshotTable.ingest dedups NULL payloads like any other content") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-ingest-null").toString
+    val path = tmp("graft-ingest-null")
     val b1 = Seq((1L, Some("alpha")), (2L, None)).toDF("doc_id", "text")
     assert(SnapshotTable.ingest(spark, b1, path, "text", 100L).nNew == 2L)
     // a second null-payload row IS a duplicate of the first — a raw md5
@@ -223,14 +223,14 @@ class Round11Spec extends SparkSpec {
     // coverage from the snapshot (never trust an absent/legacy bloom —
     // pre-contentKey blooms are keyed differently and would pass
     // duplicates as probe-negative)
-    val p1 = java.nio.file.Files.createTempDirectory("graft-write-ingest").toString
+    val p1 = tmp("graft-write-ingest")
     SnapshotTable.write(spark, Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"), p1)
     val s = SnapshotTable.ingest(spark,
       Seq((10L, "alpha"), (11L, "gamma")).toDF("doc_id", "text"), p1, "text", 100L)
     assert(s.nNew == 1L, s"dup of write()-committed content re-admitted: $s")
     assert(SnapshotTable.read(spark, p1).count() == 3L)
     // a committed EMPTY snapshot must not NPE the bloom fallback
-    val p2 = java.nio.file.Files.createTempDirectory("graft-empty-ingest").toString
+    val p2 = tmp("graft-empty-ingest")
     SnapshotTable.write(spark, Seq.empty[(Long, String)].toDF("doc_id", "text"), p2)
     val s2 = SnapshotTable.ingest(spark,
       Seq((1L, "a")).toDF("doc_id", "text"), p2, "text", 100L)
@@ -240,7 +240,7 @@ class Round11Spec extends SparkSpec {
   test("ingest leaves a caller-established cache on the batch in place") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-cache-ingest").toString
+    val path = tmp("graft-cache-ingest")
     val df = Seq((1L, "x y z")).toDF("doc_id", "text").persist()
     df.count()
     SnapshotTable.ingest(spark, df, path, "text", 100L)
@@ -253,7 +253,7 @@ class Round11Spec extends SparkSpec {
     import spark.implicits._
     import graft.operators.SnapshotTable
     import scala.jdk.CollectionConverters._
-    val path = java.nio.file.Files.createTempDirectory("graft-ingest-race").toString
+    val path = tmp("graft-ingest-race")
     SnapshotTable.ingest(spark, Seq((1L, "base")).toDF("doc_id", "text"), path, "text", 100L)
     // two committers race from the same parent state; staging names are
     // committer-unique, so whichever loses the manifest rename must
@@ -293,7 +293,7 @@ class Round11Spec extends SparkSpec {
   test("SnapshotTable compaction collapses an ingest chain; expire keeps shared dirs") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-ingest2").toString
+    val path = tmp("graft-ingest2")
     SnapshotTable.ingest(spark, Seq((1L, "a b")).toDF("doc_id", "text"), path, "text", 100L)
     SnapshotTable.ingest(spark, Seq((2L, "c d")).toDF("doc_id", "text"), path, "text", 100L)
     SnapshotTable.ingest(spark, Seq((3L, "e f")).toDF("doc_id", "text"), path, "text", 100L)

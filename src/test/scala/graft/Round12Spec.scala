@@ -13,7 +13,7 @@ class Round12Spec extends SparkSpec {
   test("readAt pins an old snapshot; later ingests never disturb it") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-timetravel").toString
+    val path = tmp("graft-timetravel")
     SnapshotTable.ingest(spark, Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
       path, "text", 100L)
     SnapshotTable.ingest(spark, Seq((3L, "gamma")).toDF("doc_id", "text"),
@@ -38,7 +38,7 @@ class Round12Spec extends SparkSpec {
   test("readAt of an expired or never-committed version fails loudly") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-tt-expired").toString
+    val path = tmp("graft-tt-expired")
     SnapshotTable.write(spark, Seq((1L, "a")).toDF("doc_id", "text"), path)
     SnapshotTable.write(spark, Seq((2L, "b")).toDF("doc_id", "text"), path)
     SnapshotTable.write(spark, Seq((3L, "c")).toDF("doc_id", "text"), path)
@@ -59,7 +59,7 @@ class Round12Spec extends SparkSpec {
     val reg = SparkEntry.queries("d11_snapshot_diff")(spark, sfDir)
     val rows = reg.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     import graft.operators.SnapshotTable
-    val fixture = graft.queries.TrainingData.fixturePath(sfDir, "d11")
+    val fixture = graft.queries.TrainingData.fixturePath(spark, sfDir, "d11")
     assert(SnapshotTable.versions(spark, fixture) == Seq(1L, 2L),
       "d11 must have staged a real two-version snapshot table")
     val n1 = SnapshotTable.readAt(spark, fixture, 1L).count()
@@ -67,16 +67,16 @@ class Round12Spec extends SparkSpec {
     assert(rows("removed") == n1 - n2, "diff counts must reconcile with the commits")
     assert(rows.getOrElse("added", 0L) == 0L)
     assert(rows("changed") + rows("unchanged") == n2)
-    // the fixture dir outlives driver rounds: a source-vintage mismatch
-    // must force a rebuild (versions == {1,2} alone is not freshness)
-    val stampFile = new java.io.File(fixture, "_fixture_src")
-    assert(stampFile.isFile, "fixture must carry its source stamp")
-    val good = java.nio.file.Files.readAllBytes(stampFile.toPath)
-    java.nio.file.Files.write(stampFile.toPath, "stale:0".getBytes("UTF-8"))
-    assert(SparkEntry.queries("d11_snapshot_diff")(spark, sfDir).collect().nonEmpty)
-    assert(java.util.Arrays.equals(
-      java.nio.file.Files.readAllBytes(stampFile.toPath), good),
-      "a stale source stamp must trigger a fixture rebuild that restores the stamp")
+    // a fixture carrying anything but exactly its staged versions — here
+    // a planted third commit — must be torn down and restaged, not served
+    import spark.implicits._
+    SnapshotTable.write(spark, Seq((-1L, "planted")).toDF("doc_id", "text"), fixture)
+    assert(SnapshotTable.versions(spark, fixture) == Seq(1L, 2L, 3L))
+    val again = SparkEntry.queries("d11_snapshot_diff")(spark, sfDir)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(SnapshotTable.versions(spark, fixture) == Seq(1L, 2L),
+      "a planted extra commit must trigger a restage to versions {1,2}")
+    assert(again == rows, "the restaged fixture must diff exactly as the first staging")
   }
 
   // ---- compaction repairs missing ingest sidecars -----------------------
@@ -84,7 +84,7 @@ class Round12Spec extends SparkSpec {
   test("compact(textCol) repairs sidecars so ingest after write() never reads payload") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-compact-repair").toString
+    val path = tmp("graft-compact-repair")
     // ~1 KB of low-compressibility text per row so the payload dwarfs
     // the ~33 B/row hash sidecar on disk — the input-size audit needs
     // the gap to be unmistakable.
@@ -140,7 +140,7 @@ class Round12Spec extends SparkSpec {
   test("vacuum removes aged unreferenced staging artifacts, keeps live state") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-vacuum").toString
+    val path = tmp("graft-vacuum")
     SnapshotTable.ingest(spark, Seq((1L, "alpha")).toDF("doc_id", "text"), path, "text", 100L)
     SnapshotTable.ingest(spark, Seq((2L, "beta")).toDF("doc_id", "text"), path, "text", 100L)
     // plant the lost-race debris: a staged-but-never-committed data dir,
@@ -182,7 +182,7 @@ class Round12Spec extends SparkSpec {
   test("addedBetween reads only the delta dirs; compaction in range fails loudly") {
     import spark.implicits._
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-changelog").toString
+    val path = tmp("graft-changelog")
     // big base (low-compressibility blobs) + tiny deltas: the O(delta)
     // claim is that reading "since v1" never touches the base bytes
     def blob(i: Long): String = {
@@ -268,7 +268,7 @@ class Round12Spec extends SparkSpec {
     val steps = sys.props.get("graft.model.steps").map(_.trim.toInt).getOrElse(12)
     for (seed <- seeds) {
       val r = new scala.util.Random(seed)
-      val path = java.nio.file.Files.createTempDirectory(s"graft-model-$seed").toString
+      val path = tmp(s"graft-model-$seed")
       var model = Vector.empty[(Long, String)]   // expected current rows
       var modelAt = Map.empty[Long, Vector[(Long, String)]] // per retained version
       var nextId = 0L

@@ -35,7 +35,7 @@ class Round13Spec extends SparkSpec {
 
   test("readWhere prunes to the files a range predicate can touch (bytes-read audited)") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-prune").toString
+    val path = tmp("graft-prune")
     // three append commits over DISJOINT doc_id ranges; the stats config
     // is stated once at table creation and inherited by later ingests
     SnapshotTable.ingest(spark, (0L until 600L).map(i => (i, blob(i))).toDF("doc_id", "text"),
@@ -71,7 +71,7 @@ class Round13Spec extends SparkSpec {
 
   test("readWhere without stats reads everything but stays correct; unsupported predicates never prune") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-prune-nostats").toString
+    val path = tmp("graft-prune-nostats")
     // no statsCols anywhere: the fallback path
     SnapshotTable.ingest(spark, (0L until 300L).map(i => (i, blob(i))).toDF("doc_id", "text"),
       path, "text", expectedItems = 10000L)
@@ -83,7 +83,7 @@ class Round13Spec extends SparkSpec {
     assert(df.collect().map(_.getLong(0)).toSeq == Seq(450L))
     // stats table, but a predicate shape extraction can't see through:
     // must keep all files and stay exact
-    val p2 = java.nio.file.Files.createTempDirectory("graft-prune-opaque").toString
+    val p2 = tmp("graft-prune-opaque")
     SnapshotTable.ingest(spark, (0L until 200L).map(i => (i, blob(i))).toDF("doc_id", "text"),
       p2, "text", expectedItems = 10000L, statsCols = Seq("doc_id"))
     val opaque = (col("doc_id") % 97L) === 0L
@@ -102,7 +102,7 @@ class Round13Spec extends SparkSpec {
 
   test("string stats prune with UTF-8 collation; IN lists prune by min/max envelope") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-prune-str").toString
+    val path = tmp("graft-prune-str")
     // two commits with disjoint lang alphabets
     SnapshotTable.ingest(spark,
       (0L until 100L).map(i => (i, s"doc a $i", if (i % 2 == 0) "aa" else "bb"))
@@ -123,7 +123,7 @@ class Round13Spec extends SparkSpec {
 
   test("compact with sortCols rebuilds stats whose intervals keep pruning sharp") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-prune-compact").toString
+    val path = tmp("graft-prune-compact")
     // interleaved commits: pre-compaction, every dir spans the full id
     // range, so a range predicate can prune nothing
     SnapshotTable.ingest(spark,
@@ -147,7 +147,7 @@ class Round13Spec extends SparkSpec {
 
   test("NaN doubles canonicalize to +inf in stats: Spark ordering semantics survive pruning") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-prune-nan").toString
+    val path = tmp("graft-prune-nan")
     SnapshotTable.ingest(spark,
       Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("doc_id", "text", "score"),
       path, "text", expectedItems = 100L, statsCols = Seq("score"))
@@ -170,7 +170,7 @@ class Round13Spec extends SparkSpec {
   test("timestamp stats prune time-slice reads in epoch-micros space") {
     import spark.implicits._
     def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val path = java.nio.file.Files.createTempDirectory("graft-prune-ts").toString
+    val path = tmp("graft-prune-ts")
     SnapshotTable.ingest(spark,
       Seq((1L, "a", t("2024-01-01 00:00:00")), (2L, "b", t("2024-01-01 12:00:00")))
         .toDF("doc_id", "text", "ts"),
@@ -192,7 +192,7 @@ class Round13Spec extends SparkSpec {
 
   test("z-order compaction makes BOTH interleaved dimensions prunable") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-prune-z").toString
+    val path = tmp("graft-prune-z")
     // a 64x64 grid: row i lives at (x, y) = (i % 64, i / 64), with a
     // short payload so the compaction fans out over many files
     val rows = (0L until 4096L).map(i => (i, i % 64, i / 64, blob(i).take(128)))
@@ -223,7 +223,7 @@ class Round13Spec extends SparkSpec {
 
   test("merge applies upserts and deletes as one committed snapshot") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-merge").toString
+    val path = tmp("graft-merge")
     SnapshotTable.ingest(spark,
       (0L until 10L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 1000L)
@@ -259,7 +259,7 @@ class Round13Spec extends SparkSpec {
 
   test("merge latest-wins needs orderCol; without it duplicate keys fail loudly") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-merge-dup").toString
+    val path = tmp("graft-merge-dup")
     SnapshotTable.write(spark, Seq((1L, "a"), (2L, "b")).toDF("doc_id", "text"), path)
     val dup = Seq((1L, "first", 10L), (1L, "last", 20L), (2L, "only", 5L))
       .toDF("doc_id", "text", "seq")
@@ -276,7 +276,7 @@ class Round13Spec extends SparkSpec {
 
   test("merge rejects change batches that do not match the table schema") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-merge-schema").toString
+    val path = tmp("graft-merge-schema")
     SnapshotTable.write(spark, Seq((1L, "a")).toDF("doc_id", "text"), path)
     val eMissing = intercept[IllegalArgumentException](
       SnapshotTable.merge(spark, Seq(Tuple1(1L)).toDF("doc_id"), path, "doc_id"))
@@ -287,7 +287,7 @@ class Round13Spec extends SparkSpec {
     val eEmpty = intercept[IllegalArgumentException](
       SnapshotTable.merge(spark,
         Seq((1L, "x")).toDF("doc_id", "text"),
-        java.nio.file.Files.createTempDirectory("graft-merge-none").toString, "doc_id"))
+        tmp("graft-merge-none"), "doc_id"))
     assert(eEmpty.getMessage.contains("no committed snapshot"))
   }
 
@@ -295,7 +295,7 @@ class Round13Spec extends SparkSpec {
 
   test("non-additive schema drift fails loudly BEFORE staging; versions unchanged") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-drift").toString
+    val path = tmp("graft-drift")
     SnapshotTable.ingest(spark, Seq((1L, "a", "en")).toDF("doc_id", "text", "lang"),
       path, "text", expectedItems = 100L)
     // missing column
@@ -323,7 +323,7 @@ class Round13Spec extends SparkSpec {
 
   test("additive evolution widens the schema; old snapshots read back null-filled") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val path = tmp("graft-evolve")
     SnapshotTable.ingest(spark, Seq((1L, "a")).toDF("doc_id", "text"),
       path, "text", expectedItems = 100L)
     SnapshotTable.ingest(spark, Seq((2L, "b", "en")).toDF("doc_id", "text", "lang"),
@@ -346,7 +346,7 @@ class Round13Spec extends SparkSpec {
 
   test("a manifest vanishing at open time surfaces the retained-range error, not FNFE") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-race").toString
+    val path = tmp("graft-race")
     SnapshotTable.write(spark, Seq((1L, "a")).toDF("doc_id", "text"), path)
     SnapshotTable.write(spark, Seq((2L, "b")).toDF("doc_id", "text"), path)
     // simulate the concurrent-expire race: the manifest disappears after
@@ -361,7 +361,7 @@ class Round13Spec extends SparkSpec {
   }
 
   test("fcPublish refuses an existing target and consumes tmp on success") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-fc").toFile
+    val dir = new java.io.File(tmp("graft-fc"))
     val fsDir = new org.apache.hadoop.fs.Path(dir.toString)
     def mk(name: String, content: String): org.apache.hadoop.fs.Path = {
       val p = new java.io.File(dir, name)
@@ -401,7 +401,7 @@ class Round13Spec extends SparkSpec {
 
   test("mergeOnRead commits O(delta): base files untouched, masked read exact") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-mor").toString
+    val path = tmp("graft-mor")
     SnapshotTable.ingest(spark,
       (0L until 600L).map(i => (i, blob(i))).toDF("doc_id", "text"),
       path, "text", expectedItems = 10000L, statsCols = Seq("doc_id"))
@@ -453,7 +453,7 @@ class Round13Spec extends SparkSpec {
 
   test("compact materializes the MOR overlay, resets it, and frees the dedup universe") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-mor-compact").toString
+    val path = tmp("graft-mor-compact")
     SnapshotTable.ingest(spark,
       (0L until 100L).map(i => (i, s"doc-$i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 1000L)
@@ -513,7 +513,7 @@ class Round13Spec extends SparkSpec {
 
   test("updateWhere SETs against the OLD row; deleteWhere commits tombstone-only") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-upd-del").toString
+    val path = tmp("graft-upd-del")
     SnapshotTable.write(spark,
       (0L until 10L).map(i => (i, i * 10L, i * 100L)).toDF("id", "a", "b"),
       path, statsCols = Seq("id"))
@@ -550,7 +550,7 @@ class Round13Spec extends SparkSpec {
 
   test("a narrowing cast blocks pruning: cast(score AS int) === 5 must keep the file holding 5.2") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-castprune").toString
+    val path = tmp("graft-castprune")
     // one commit per disjoint range so stats COULD prune if (mis)used
     SnapshotTable.ingest(spark, (0 until 50).map(i => (5.2 + i * 0.01, s"a$i"))
       .toDF("score", "text"), path, "text", 1000L, statsCols = Seq("score"))
@@ -573,7 +573,7 @@ class Round13Spec extends SparkSpec {
 
   test("NULL-key changes all insert; an empty change batch pins nothing") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-nullkey").toString
+    val path = tmp("graft-nullkey")
     SnapshotTable.write(spark,
       Seq((Some(1L), "a"), (Some(2L), "b")).toDF("doc_id", "text"), path)
     // two NULL-key inserts in ONE batch: neither duplicates of each
@@ -614,7 +614,7 @@ class Round13Spec extends SparkSpec {
 
   test("history derives every commit kind; filesMeta lists the pinned snapshot's files") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-history").toString
+    val path = tmp("graft-history")
     SnapshotTable.write(spark, Seq((1L, "a")).toDF("doc_id", "text"), path)
     SnapshotTable.ingest(spark, Seq((2L, "b")).toDF("doc_id", "text"), path, "text", 100L)
     SnapshotTable.mergeOnRead(spark, Seq((2L, "b2", false)).toDF("doc_id", "text", "del"),
@@ -651,7 +651,7 @@ class Round13Spec extends SparkSpec {
   test("the version log emits a merge-on-read commit as an applyable upsert+delete event") {
     import spark.implicits._
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-mor-log").toString
+    val path = tmp("graft-mor-log")
     SnapshotTable.ingest(spark, Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("doc_id", "text"),
       path, "text", 100L)
     SnapshotTable.mergeOnRead(spark,
@@ -702,7 +702,7 @@ class Round13Spec extends SparkSpec {
 
   test("rollback re-references a retained version as a new commit; pure metadata") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-rollback").toString
+    val path = tmp("graft-rollback")
     SnapshotTable.ingest(spark,
       (0L until 50L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 1000L)
@@ -740,7 +740,7 @@ class Round13Spec extends SparkSpec {
 
   test("expire after rollback keeps the re-referenced artifacts alive") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-rollback-exp").toString
+    val path = tmp("graft-rollback-exp")
     SnapshotTable.ingest(spark,
       (0L until 50L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 1000L)
@@ -766,7 +766,7 @@ class Round13Spec extends SparkSpec {
   test("a rollback across a pure-delete MOR commit is a flagged rewrite, not a silent no-op") {
     import spark.implicits._
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-rollback-mor").toString
+    val path = tmp("graft-rollback-mor")
     SnapshotTable.ingest(spark,
       (0L until 30L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 1000L)
@@ -809,7 +809,7 @@ class Round13Spec extends SparkSpec {
 
   test("maxVersionsPerBatch slices an earliest backfill into bounded, ordered batches") {
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-throttle").toString
+    val path = tmp("graft-throttle")
     ingestN(path, 0, 5)
     def run(cap: Option[Long]): Seq[Seq[Long]] = {
       val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
@@ -836,8 +836,8 @@ class Round13Spec extends SparkSpec {
 
   test("a throttled checkpointed consumer resumes without replay and keeps the cap") {
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-throttle-ckpt").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-throttle-ckpt-c").toString
+    val path = tmp("graft-throttle-ckpt")
+    val ckpt = tmp("graft-throttle-ckpt-c")
     ingestN(path, 0, 5)
     def run(): Seq[Long] = {
       val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
@@ -860,7 +860,7 @@ class Round13Spec extends SparkSpec {
 
   test("compactSmall merges only the small-dir tail; the big dir is kept by name and never read") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-binpack").toString
+    val path = tmp("graft-binpack")
     SnapshotTable.ingest(spark,
       (0L until 2000L).map(i => (i, blob(i))).toDF("doc_id", "text"),
       path, "text", expectedItems = 5000L)
@@ -925,7 +925,7 @@ class Round13Spec extends SparkSpec {
 
   test("compactSmall keeps the Hive partition layout and partition pruning") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-binpack-part").toString
+    val path = tmp("graft-binpack-part")
     (0 until 3).foreach { k =>
       val rows = (0 until 10).map { j =>
         val i = k * 10 + j
@@ -958,7 +958,7 @@ class Round13Spec extends SparkSpec {
 
   test("compactSmall refuses an outstanding merge-on-read overlay loudly") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-binpack-mor").toString
+    val path = tmp("graft-binpack-mor")
     SnapshotTable.ingest(spark,
       (0L until 30L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 1000L)
@@ -977,8 +977,8 @@ class Round13Spec extends SparkSpec {
 
   test("Trigger.AvailableNow drains the backlog in capped slices, then stops") {
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-availnow").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-availnow-c").toString
+    val path = tmp("graft-availnow")
+    val ckpt = tmp("graft-availnow-c")
     ingestN(path, 0, 5)
     def drain(): Seq[Seq[Long]] = {
       val batches = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
@@ -1007,12 +1007,12 @@ class Round13Spec extends SparkSpec {
 
   test("startTimestamp starts the changelog at the first commit at-or-after the instant") {
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-startts").toString
+    val path = tmp("graft-startts")
     ingestN(path, 0, 2)
     Thread.sleep(30); val mid = System.currentTimeMillis(); Thread.sleep(30)
     ingestN(path, 2, 3)
     def drain(startTs: Long): Seq[Long] = {
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-startts-c").toString
+      val ckpt = tmp("graft-startts-c")
       val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
       val q = SnapshotChangelog.readLog(spark, path, startTimestamp = Some(startTs))
         .writeStream.option("checkpointLocation", ckpt)
@@ -1033,7 +1033,7 @@ class Round13Spec extends SparkSpec {
       SnapshotChangelog.readLog(spark, path, startVersion = Some("earliest"),
         startTimestamp = Some(mid)).writeStream
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-startts-x").toString)
+          tmp("graft-startts-x"))
         .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => ()).start()
         .awaitTermination(60000)
     }
@@ -1045,7 +1045,7 @@ class Round13Spec extends SparkSpec {
     val e2 = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = SnapshotChangelog.readLog(spark, path, startTimestamp = Some(mid))
         .writeStream.option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-startts-y").toString)
+          tmp("graft-startts-y"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => ()).start()
       q.awaitTermination(120000); ()
@@ -1058,7 +1058,7 @@ class Round13Spec extends SparkSpec {
 
   test("a manifest written by a newer writer fails loudly instead of misreading") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-fwdcompat").toString
+    val path = tmp("graft-fwdcompat")
     SnapshotTable.ingest(spark,
       Seq((1L, "alpha")).toDF("doc_id", "text"), path, "text", 100L)
     // simulate a future writer: an unknown tagged line in the manifest.
@@ -1079,7 +1079,7 @@ class Round13Spec extends SparkSpec {
 
   test("snapshot tags pin versions through expire; gapped instants refuse loudly") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-tags").toString
+    val path = tmp("graft-tags")
     (1L to 4L).foreach(i => SnapshotTable.ingest(spark,
       ((i - 1) * 10 until i * 10).map(k => (k, s"doc $k")).toDF("doc_id", "text"),
       path, "text", expectedItems = 100L))
@@ -1113,7 +1113,7 @@ class Round13Spec extends SparkSpec {
     val eLog = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = SnapshotChangelog.readLog(spark, path, startTimestamp = Some(mid))
         .writeStream.option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-tags-c").toString)
+          tmp("graft-tags-c"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => ()).start()
       q.awaitTermination(120000); ()
@@ -1138,7 +1138,7 @@ class Round13Spec extends SparkSpec {
 
   test("fail-mode CHECK constraints gate every write path; NULL passes; deletes exempt") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-constraint").toString
+    val path = tmp("graft-constraint")
     SnapshotTable.ingest(spark,
       Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
       path, "text", expectedItems = 100L)
@@ -1194,7 +1194,7 @@ class Round13Spec extends SparkSpec {
 
   test("drop-mode constraints exclude violating rows; config survives compact and rebase") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-constraint-drop").toString
+    val path = tmp("graft-constraint-drop")
     SnapshotTable.ingest(spark,
       (0L until 5L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 100L)
@@ -1251,7 +1251,7 @@ class Round13Spec extends SparkSpec {
     // commit clamps to parent + 1 instead of stamping a smaller wall
     // clock — the tie/backward case that would break the history-row ↔
     // versionAtTimestamp round trip
-    val p1 = java.nio.file.Files.createTempDirectory("graft-clock1").toString
+    val p1 = tmp("graft-clock1")
     SnapshotTable.ingest(spark, Seq((1L, "a")).toDF("doc_id", "text"), p1, "text", 100L)
     val ahead = System.currentTimeMillis() + 60000L
     editTs(p1, 1L, ahead)
@@ -1271,7 +1271,7 @@ class Round13Spec extends SparkSpec {
     // flattened its successors must not have its effective instants
     // move BACKWARD when v1 expires — versionAtTimestamp would silently
     // hand an instant a state that did not exist at it
-    val p2 = java.nio.file.Files.createTempDirectory("graft-clock2").toString
+    val p2 = tmp("graft-clock2")
     (1L to 3L).foreach(i => SnapshotTable.ingest(spark,
       Seq((i, s"doc $i")).toDF("doc_id", "text"), p2, "text", 100L))
     val far = System.currentTimeMillis() + 1000L * 3600
@@ -1290,7 +1290,7 @@ class Round13Spec extends SparkSpec {
     val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
       val q = SnapshotChangelog.readLog(spark, p2, startTimestamp = Some(now))
         .writeStream.option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-clock2-c").toString)
+          tmp("graft-clock2-c"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .foreachBatch((_: org.apache.spark.sql.DataFrame, _: Long) => ()).start()
       q.awaitTermination(120000); ()
@@ -1311,7 +1311,7 @@ class Round13Spec extends SparkSpec {
 
   test("readAtTimestamp resolves wall-clock instants; expireOlderThan trims by age") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft-ts-travel").toString
+    val path = tmp("graft-ts-travel")
     SnapshotTable.ingest(spark,
       (0L until 10L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
       path, "text", expectedItems = 1000L)
@@ -1358,7 +1358,7 @@ class Round13Spec extends SparkSpec {
 
   test("maxVersionsPerBatch rejects non-positive and non-numeric values loudly") {
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-throttle-bad").toString
+    val path = tmp("graft-throttle-bad")
     ingestN(path, 0, 1)
     val e = intercept[IllegalArgumentException](
       SnapshotChangelog.readLog(spark, path, None, Some(0L)))

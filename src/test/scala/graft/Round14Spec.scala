@@ -13,9 +13,6 @@ class Round14Spec extends SparkSpec {
 
   import graft.operators.SnapshotTable
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def docs(n: Int) = {
     import spark.implicits._
     (0 until n).map(i => (i.toLong, s"text-$i", s"lang${i % 3}", i * 10L))

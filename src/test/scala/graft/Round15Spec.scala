@@ -13,9 +13,6 @@ class Round15Spec extends SparkSpec {
 
   import graft.operators.SnapshotTable
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   /** Rows with TWO content-ish columns so a table can switch its dedup
     * column across a drop: `a` values "X<i>", `b` values "Y<i>".
     */

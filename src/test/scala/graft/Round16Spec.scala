@@ -11,9 +11,6 @@ import graft.operators.SnapshotTable
   */
 class Round16Spec extends SparkSpec {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def table(prefix: String): String = {
     import spark.implicits._
     val path = tmp(prefix)

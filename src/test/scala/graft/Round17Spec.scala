@@ -11,9 +11,6 @@ import graft.sources.v2.GraftTable
   */
 class Round17Spec extends SparkSpec {
 
-  private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
   private def docs(r: Range) = {
     import spark.implicits._
     r.map(i => (i.toLong, s"t-$i")).toDF("doc_id", "text")

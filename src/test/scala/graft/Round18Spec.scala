@@ -4,8 +4,8 @@ import graft.operators.{BpeTrainer, Dedup}
 import org.apache.spark.sql.functions._
 
 /** Round-18 optimization pins: every change here reshapes an operator's
-  * EXECUTION (fewer actions, one staged pass, codegen instead of
-  * interpreted fallback) while its RESULTS must stay bit-identical —
+  * EXECUTION (fewer actions, codegen instead of interpreted fallback)
+  * while its RESULTS must stay bit-identical —
   * each test pins the rewritten path against the path it replaced.
   */
 class Round18Spec extends SparkSpec {
@@ -123,14 +123,5 @@ class Round18Spec extends SparkSpec {
       transform(graft.plans.ShingleMd5Expr.full(col("text"), 2, distinct = true),
         b => hex(b)).as("f"))
     assert(canon(fused) == canon(viaArrayDistinct))
-  }
-
-  // ---- stageOnce: unconditional overwrite, never a cross-run cache -----
-
-  test("stageOnce recomputes on every call (overwrite, no freshness check)") {
-    val a = graft.Tables.stageOnce(Seq((1L, "x")).toDF("id", "v"), "r18spec")
-    assert(a.as[(Long, String)].collect().toSeq == Seq((1L, "x")))
-    val b = graft.Tables.stageOnce(Seq((2L, "y"), (3L, "z")).toDF("id", "v"), "r18spec")
-    assert(b.as[(Long, String)].collect().sorted.toSeq == Seq((2L, "y"), (3L, "z")))
   }
 }

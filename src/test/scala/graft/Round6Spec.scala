@@ -63,10 +63,10 @@ class Round6Spec extends SparkSpec {
     val docs = Seq((1L, code), (2L, prose)).toDF("doc_id", "text")
     val q = SparkEntry.queries("t24_code_detect")
     // run the registry query against a scratch dir holding the fixture
-    val tmp = java.nio.file.Files.createTempDirectory("t24").toString
+    val dir = tmp("t24")
     docs.withColumn("lang", lit("en")).withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$tmp/documents.parquet")
-    val r = q(spark, tmp).collect().map(x =>
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val r = q(spark, dir).collect().map(x =>
       (x.getAs[Long]("doc_id"), x.getAs[Boolean]("is_code"))).toMap
     assert(r(1L), "code fixture not flagged as code")
     assert(!r(2L), "prose fixture flagged as code")

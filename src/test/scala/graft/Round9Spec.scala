@@ -174,7 +174,7 @@ class Round9Spec extends SparkSpec {
   }
 
   test("loader: all three supported ts vintages yield identical instants") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_vintages").toString
+    val dir = tmp("graft_vintages")
     val base = spark.range(5).selectExpr("id AS event_id",
       "timestamp_micros(1704067200000000 + id * 987654321) AS ts",
       "id AS user_id", "'a' AS event_type", "CAST(id AS DOUBLE) AS value",
@@ -207,7 +207,7 @@ class Round9Spec extends SparkSpec {
   }
 
   test("loader: a third ts physical vintage fails loudly, not as null casts") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_badvintage").toString
+    val dir = tmp("graft_badvintage")
     spark.range(3).selectExpr("id AS event_id", "CAST(id AS STRING) AS ts",
       "id AS user_id", "'a' AS event_type", "CAST(id AS DOUBLE) AS value",
       "'{}' AS props").write.mode("overwrite").parquet(s"$dir/events.parquet")

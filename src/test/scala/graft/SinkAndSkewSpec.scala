@@ -90,7 +90,7 @@ class SinkAndSkewSpec extends SparkSpec {
   test("partitioned parquet and ORC sinks round-trip with pruning columns") {
     val li = Tables.load(spark, sfDir, "lineitem")
     for (fmt <- Seq("parquet", "orc")) {
-      val out = s"target/tmp/sink_$fmt"
+      val out = tmp(s"sink_$fmt")
       Sink.writePartitioned(li, out, fmt, Seq("l_returnflag"), Seq("l_shipdate"))
       val back = spark.read.format(fmt).load(out)
       assert(back.count() == li.count())
@@ -100,7 +100,7 @@ class SinkAndSkewSpec extends SparkSpec {
   }
 
   test("compact rewrites fragmented output into size-targeted files") {
-    val out = "target/tmp/compact_test"
+    val out = tmp("compact_test")
     val li = Tables.load(spark, sfDir, "lineitem")
     // fragment: 64 tiny files
     li.repartition(64).write.mode("overwrite").parquet(out)
@@ -119,10 +119,9 @@ class SinkAndSkewSpec extends SparkSpec {
 
   test("snapshot table: compaction is an atomic commit; pinned readers see old-or-new, never a mix") {
     import graft.operators.SnapshotTable
-    val path = "target/tmp/snap_table"
+    val path = tmp("snap_table")
     val root = new org.apache.hadoop.fs.Path(path)
     val hfs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (hfs.exists(root)) hfs.delete(root, true)
 
     val li = Tables.load(spark, sfDir, "lineitem").select("l_orderkey", "l_quantity")
     val v1 = SnapshotTable.write(spark, li.repartition(16), path)
@@ -171,7 +170,7 @@ class SinkAndSkewSpec extends SparkSpec {
     assert(z == 39L, s"got $z")
 
     val li = Tables.load(spark, sfDir, "lineitem")
-    val out = "target/tmp/zorder"
+    val out = tmp("zorder")
     ZOrder.writeClustered(li, out, "parquet",
       Seq("l_partkey", "l_suppkey"), bits = 12, numFiles = 4)
     val back = spark.read.parquet(out)
@@ -189,20 +188,9 @@ class SinkAndSkewSpec extends SparkSpec {
   }
 
   test("bucketed table co-locates the join key") {
-    spark.sql("DROP TABLE IF EXISTS graft_li_bucketed")
-    // a previously aborted run can leave the managed location behind
-    // without catalog metadata; clear it or CTAS refuses to create
-    val loc = new java.io.File("spark-warehouse/graft_li_bucketed")
-    if (loc.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete()
-      }
-      rm(loc)
-    }
     Sink.writeBucketed(
       Tables.load(spark, sfDir, "lineitem").select("l_orderkey", "l_quantity"),
-      "graft_li_bucketed", "parquet", "l_orderkey", 4)
+      "graft_li_bucketed", tmp("graft_li_bucketed"), "parquet", "l_orderkey", 4)
     val t = spark.table("graft_li_bucketed")
     assert(t.count() > 0)
     // aggregation on the bucket key must not need a shuffle

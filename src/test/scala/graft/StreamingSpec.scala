@@ -294,7 +294,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming ingest: cross-batch content dedup through the committed table") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-stream-ingest").toString
+    val path = tmp("graft-stream-ingest")
     val input = MemoryStream[(Long, String)]
     val q = EventStream.ingestSink(
       input.toDF().toDF("doc_id", "text"), path, "text", expectedItems = 100L)
@@ -335,8 +335,8 @@ class StreamingSpec extends SparkSpec {
     // the checkpoint dir.
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-restart-ingest").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-restart-ckpt").toString
+    val path = tmp("graft-restart-ingest")
+    val ckpt = tmp("graft-restart-ckpt")
     val input = MemoryStream[(Long, String)]
     val df = input.toDF().toDF("doc_id", "text")
     val q1 = EventStream.ingestSink(df, path, "text",
@@ -383,8 +383,8 @@ class StreamingSpec extends SparkSpec {
     // the replay admit zero rows.
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-fuzzy-sink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-fuzzy-ckpt").toString
+    val path = tmp("graft-fuzzy-sink")
+    val ckpt = tmp("graft-fuzzy-ckpt")
     val input = MemoryStream[(Long, String)]
     val df = input.toDF().toDF("doc_id", "text")
     val base = "the quick brown fox jumps over the lazy dog again and again"
@@ -433,7 +433,7 @@ class StreamingSpec extends SparkSpec {
     // holding across the maintenance boundary.
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-maint-ingest").toString
+    val path = tmp("graft-maint-ingest")
     val input = MemoryStream[(Long, String)]
     val q = EventStream.ingestSink(
       input.toDF().toDF("doc_id", "text"), path, "text", expectedItems = 100L,
@@ -479,7 +479,7 @@ class StreamingSpec extends SparkSpec {
     // an idle-ish stream under default byte thresholds: ticks run
     // expire but SKIP the full-table rewrite (delta bytes tiny, chain
     // short), so the base dir from batch 0 survives un-rewritten
-    val path = java.nio.file.Files.createTempDirectory("graft-maint-idle").toString
+    val path = tmp("graft-maint-idle")
     val input = MemoryStream[(Long, String)]
     val q = EventStream.ingestSink(
       input.toDF().toDF("doc_id", "text"), path, "text", expectedItems = 100L,
@@ -501,7 +501,7 @@ class StreamingSpec extends SparkSpec {
     // grows past maxChainDirs: the tick must merge the SMALL TAIL
     // (kind `binpack` in the history, base dir kept by name) and never
     // run the O(table) compact
-    val path = java.nio.file.Files.createTempDirectory("graft-maint-binpack").toString
+    val path = tmp("graft-maint-binpack")
     val input = MemoryStream[(Long, String)]
     val q = EventStream.ingestSink(
       input.toDF().toDF("doc_id", "text"), path, "text", expectedItems = 100L,
@@ -534,7 +534,7 @@ class StreamingSpec extends SparkSpec {
     // a zero-age window keeps only the current snapshot at each tick; a
     // huge window retains the whole history regardless of `keep`
     def run(retain: Long, dir: String): Int = {
-      val path = java.nio.file.Files.createTempDirectory(dir).toString
+      val path = tmp(dir)
       val input = MemoryStream[(Long, String)]
       val q = EventStream.ingestSink(
         input.toDF().toDF("doc_id", "text"), path, "text", expectedItems = 100L,
@@ -555,8 +555,8 @@ class StreamingSpec extends SparkSpec {
   test("changelog stream tails commits exactly-once across restarts") {
     import graft.operators.SnapshotTable
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-cdc-stream").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-ckpt").toString
+    val path = tmp("graft-cdc-stream")
+    val ckpt = tmp("graft-cdc-ckpt")
     // v1 lands BEFORE the stream starts; startVersion=earliest replays it
     SnapshotTable.ingest(spark, Seq((1L, "alpha"), (2L, "beta")).toDF("doc_id", "text"),
       path, "text", 100L)
@@ -602,7 +602,7 @@ class StreamingSpec extends SparkSpec {
     q3.stop()
     // with allowRewrites the commit arrives flagged, full dir list
     got.clear()
-    val ckpt2 = java.nio.file.Files.createTempDirectory("graft-cdc-ckpt2").toString
+    val ckpt2 = tmp("graft-cdc-ckpt2")
     val q4 = SnapshotChangelog.changelogSink(spark, path,
       (delta, c) => { got.add((c.version, c.rewrite,
         delta.collect().map(_.getLong(0)).toSet)); () },
@@ -618,7 +618,7 @@ class StreamingSpec extends SparkSpec {
   test("changelog earliest-replay over a trimmed left edge emits a flagged baseline") {
     import graft.operators.SnapshotTable
     import graft.streaming.SnapshotChangelog
-    val path = java.nio.file.Files.createTempDirectory("graft-cdc-trim").toString
+    val path = tmp("graft-cdc-trim")
     SnapshotTable.ingest(spark, Seq((1L, "a")).toDF("doc_id", "text"), path, "text", 100L)
     SnapshotTable.ingest(spark, Seq((2L, "b")).toDF("doc_id", "text"), path, "text", 100L)
     SnapshotTable.ingest(spark, Seq((3L, "c")).toDF("doc_id", "text"), path, "text", 100L)
@@ -641,7 +641,7 @@ class StreamingSpec extends SparkSpec {
   test("upsertSink applies a CDC feed as O(batch) merge-on-read commits; maintenance folds the overlay") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-upsert-sink").toString
+    val path = tmp("graft-upsert-sink")
     val input = MemoryStream[(Long, String, Boolean, Long)]
     val q = EventStream.upsertSink(
       input.toDF().toDF("doc_id", "text", "del", "seq"), path, "doc_id",
@@ -693,8 +693,8 @@ class StreamingSpec extends SparkSpec {
     // version log records the replay.
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-upsert-restart").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-upsert-ckpt").toString
+    val path = tmp("graft-upsert-restart")
+    val ckpt = tmp("graft-upsert-ckpt")
     val input = MemoryStream[(Long, String, Boolean, Long)]
     val df = input.toDF().toDF("doc_id", "text", "del", "seq")
     def sink() = EventStream.upsertSink(df, path, "doc_id",
@@ -732,8 +732,8 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
     import scala.jdk.CollectionConverters._
-    val path = java.nio.file.Files.createTempDirectory("graft-cdc-e2e").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-cdc-e2e-ck").toString
+    val path = tmp("graft-cdc-e2e") + "/t"
+    val ckpt = tmp("graft-cdc-e2e-ck")
     val input = MemoryStream[(Long, String, Boolean)]
     val q = EventStream.upsertSink(
       input.toDF().toDF("k", "payload", "__del"), path, "k",
@@ -752,7 +752,7 @@ class StreamingSpec extends SparkSpec {
       Seq((1L, "one"), (2L, "two-v2"), (4L, "four")))
     // the change feed replays the apply history as events
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, String)]()
-    val feedCkpt = java.nio.file.Files.createTempDirectory("graft-cdc-e2e-fc").toString
+    val feedCkpt = tmp("graft-cdc-e2e-fc")
     val feed = spark.readStream.format("graft")
       .option("readChangeFeed", "true")
       .option("startVersion", "earliest").load(path)
@@ -788,8 +788,8 @@ class StreamingSpec extends SparkSpec {
   test("native streaming sink: per-epoch append commits; the first epoch creates the table") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-natsink").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-natsink-ckpt").toString
+    val path = tmp("graft-natsink") + "/t"
+    val ckpt = tmp("graft-natsink-ckpt")
     val input = MemoryStream[(Long, String)]
     val df = input.toDF().toDF("doc_id", "text")
     val q = df.writeStream.format("graft")
@@ -823,8 +823,8 @@ class StreamingSpec extends SparkSpec {
     // which re-runs an empty ingest) NO new version either.
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-natsink-r").toString + "/t"
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-natsink-rc").toString
+    val path = tmp("graft-natsink-r") + "/t"
+    val ckpt = tmp("graft-natsink-rc")
     val input = MemoryStream[(Long, String)]
     val df = input.toDF().toDF("doc_id", "text")
     def sink() = df.writeStream.format("graft")
@@ -858,8 +858,8 @@ class StreamingSpec extends SparkSpec {
   test("native sink to an existing partitioned table: hive layout, schema contract, constraints") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.SnapshotTable
-    val path = java.nio.file.Files.createTempDirectory("graft-natsink-p").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-natsink-pc").toString
+    val path = tmp("graft-natsink-p")
+    val ckpt = tmp("graft-natsink-pc")
     SnapshotTable.write(spark,
       Seq((1L, "seed", "en")).toDF("doc_id", "text", "lang"),
       path, partitionCols = Seq("lang"), statsCols = Seq("doc_id"))
@@ -886,7 +886,7 @@ class StreamingSpec extends SparkSpec {
     val e = intercept[Exception] {
       val qd = drifted.writeStream.format("graft")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-natsink-pc2").toString)
+          tmp("graft-natsink-pc2"))
         .start(path)
       input2.addData(Seq((9L, "x", "en", 1L)))
       try qd.processAllAvailable() finally qd.stop()
@@ -899,7 +899,7 @@ class StreamingSpec extends SparkSpec {
 
   test("native sink refuses Complete output mode loudly (append-only contract)") {
     implicit val sqlCtx = spark.sqlContext
-    val path = java.nio.file.Files.createTempDirectory("graft-natsink-cm").toString + "/t"
+    val path = tmp("graft-natsink-cm") + "/t"
     val input = MemoryStream[(Long, String)]
     val agg = input.toDF().toDF("doc_id", "text")
       .groupBy("text").count()
@@ -907,7 +907,7 @@ class StreamingSpec extends SparkSpec {
       val q = agg.writeStream.format("graft")
         .outputMode("complete")
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft-natsink-cmc").toString)
+          tmp("graft-natsink-cmc"))
         .start(path)
       input.addData(Seq((1L, "a")))
       try q.processAllAvailable() finally q.stop()
