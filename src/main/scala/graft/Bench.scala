@@ -123,17 +123,20 @@ object Bench {
     // run. The wait and its outcome are recorded in the JSON; exhausting
     // the retries publishes the contended run WITH an explicit marker
     // rather than not publishing at all. SPARK_GRAFT_QUIET_RETRIES=0
-    // disables the wait for dev loops.
+    // disables the wait for dev loops. "Quiet" is a load of at most
+    // hostCpus/16, stricter than the hostCpus/8 that marks the published
+    // run `load_contended`, so a run that starts has headroom below it.
     val quietRetries = sys.env.get("SPARK_GRAFT_QUIET_RETRIES").map(_.toInt).getOrElse(5)
     val quietSleepMs = 60000L
+    val quietLoad = hostCpus / 16.0
     var ambientLoad = loadAvg()
     var quietWaits = 0
-    while (ambientLoad >= 0 && ambientLoad > hostCpus / 8.0 && quietWaits < quietRetries) {
+    while (ambientLoad >= 0 && ambientLoad > quietLoad && quietWaits < quietRetries) {
       Thread.sleep(quietSleepMs)
       quietWaits += 1
       ambientLoad = loadAvg()
     }
-    val quietExhausted = ambientLoad >= 0 && ambientLoad > hostCpus / 8.0
+    val quietExhausted = ambientLoad >= 0 && ambientLoad > quietLoad
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // Parsed ONCE to an Int: the raw string feeds shuffle.partitions
     // (where "*" fails at query time anyway) AND the JSON line (where an

@@ -81,10 +81,10 @@ object SnapshotTable {
     * plain [[write]] commits); naming the bloom IN the manifest —
     * instead of a deterministic per-version filename — is what lets two
     * commit racers stage independent blooms without either overwriting
-    * the other's. `schema` is the committed table schema (absent on
-    * pre-r13 manifests): readers apply it EXPLICITLY, which both skips
-    * footer inference at scan planning and null-fills columns that were
-    * added after an old directory was written (additive evolution).
+    * the other's. `schema` is the committed table schema: readers apply
+    * it EXPLICITLY, which both skips footer inference at scan planning
+    * and null-fills columns that were added after an old directory was
+    * written (additive evolution).
     * `statsCols` is the table's persisted stats configuration — the
     * columns whose per-file min/max sidecars every subsequent commit
     * maintains, so scan pruning survives compaction without the caller
@@ -111,16 +111,21 @@ object SnapshotTable {
     * [[existingHashes]] must pay the one-scan payload fallback instead
     * of trusting them; incremental commits carry the flag forward and a
     * rewrite that regenerates sidecars from live content clears it.
+    * `kind` is the operator that committed the version (`overwrite`,
+    * `append`, `compact`, ...) — what [[history]], the change feed and
+    * [[commitLoop]]'s admission read. `ts` is the commit instant
+    * [[commit]] stamped; a manifest built for publishing leaves it 0,
+    * since [[commit]] stamps its own.
     */
   private[graft] final case class Manifest(dirs: Seq[String], format: String,
                                            bloom: Option[String],
-                                           schema: Option[StructType],
+                                           schema: StructType,
                                            statsCols: Seq[String],
                                            tombstones: Seq[String] = Nil,
                                            morKey: Option[String] = None,
-                                           kind: Option[String] = None,
+                                           kind: String,
                                            partitionCols: Seq[String] = Nil,
-                                           ts: Option[Long] = None,
+                                           ts: Long = 0L,
                                            constraints: Seq[Constraint] = Nil,
                                            physmap: Map[String, String] = Map.empty,
                                            physRetired: Seq[String] = Nil,
@@ -149,16 +154,26 @@ object SnapshotTable {
   final case class Constraint(name: String, mode: String, expr: String)
 
   /** Manifest file layout: line 1 the comma-separated dir list, line 2
-    * the format, then tagged optional lines (`bloom:`, `schema:`,
-    * `stats:`, `tombstones:`, `morkey:`, `partition:`). A bare untagged
-    * line 3 is a pre-r13 manifest's bloom name — still parsed, never
-    * written.
+    * the format, then one tagged line per field. Required on every
+    * manifest: `schema:` (the table schema as JSON), `kind:` (the
+    * committing operator) and `ts:` (the commit instant, epoch millis).
+    * Optional: `bloom:` (content-bloom file name), `stats:` (stats
+    * columns), `tombstones:` (merge-on-read sidecars), `morkey:` (their
+    * key column), `partition:` (partition columns), `partevolved:`
+    * (a repartition happened), `physmap:` (logical=physical column
+    * names), `physretired:` (retired physical names), `nohashes:`
+    * (untrusted `_hashes` sidecars), `posdel:` (positional-delete
+    * sidecars), `streamepoch:` (queryId=epoch of the last streaming
+    * commit) and `constraint:` (name:mode:expr, one line each).
     */
   private def readManifestFull(spark: SparkSession, path: String, v: Long): Manifest =
     parseManifestAt(spark, manifest(path, v))
 
   /** Parse one manifest FILE (main chain or a branch chain — the body
-    * format is identical; see [[commit]]).
+    * format is identical; see [[commit]]). A line with any other tag,
+    * an untagged line, or a missing required line means graft did not
+    * write this manifest (or a newer graft did): it fails loudly instead
+    * of misreading it.
     */
   private def parseManifestAt(spark: SparkSession, file: Path): Manifest = {
     val f = fs(spark, file)
@@ -221,24 +236,19 @@ object SnapshotTable {
           s"malformed constraint manifest line: '$l'")
         constraints += Constraint(rest.substring(0, i1),
           rest.substring(i1 + 1, i2), rest.substring(i2 + 1))
-      // forward-compat discipline: a tagged line this reader does not
-      // know means the manifest was written by a NEWER writer — fail
-      // loudly instead of silently misreading it (the legacy fallback
-      // below would otherwise adopt it as the bloom NAME, and bloom
-      // resolution would quietly break). Legacy pre-tag manifests named
-      // the bloom bare (`b00000002-xxxx.bin` — no ':'), so "contains a
-      // ':' in tag position" is exactly the newer-writer signature.
-      case l if l.contains(':') &&
-          l.takeWhile(_ != ':').matches("[A-Za-z][A-Za-z0-9_-]*") =>
+      case l =>
         throw new IllegalStateException(
-          s"manifest line with unknown tag '${l.takeWhile(_ != ':')}:' — written " +
-            "by a newer graft writer than this reader; upgrade the reader " +
+          s"manifest $file has a line with unknown tag '${l.takeWhile(_ != ':').take(80)}:' " +
+            "— written by a newer graft writer than this reader, or not by graft " +
             s"(line: '${l.take(80)}')")
-      case legacyBloomName => bloom = Some(legacyBloomName)
     }
-    Manifest(lines(0).split(",").toSeq, lines(1), bloom, schema, statsCols,
-      tombstones, morKey, kind, partitionCols, ts, constraints.result(),
-      physmap, physRetired, hashesValid, posDeletes, streamEpoch, partEvolved)
+    def required[T](tag: String, v: Option[T]): T = v.getOrElse(
+      throw new IllegalStateException(
+        s"manifest $file has no '$tag:' line — graft writes one on every commit"))
+    Manifest(lines(0).split(",").toSeq, lines(1), bloom, required("schema", schema),
+      statsCols, tombstones, morKey, required("kind", kind), partitionCols,
+      required("ts", ts), constraints.result(), physmap, physRetired, hashesValid,
+      posDeletes, streamEpoch, partEvolved)
   }
 
   /** [[readManifestFull]] with the missing-manifest failure mapped to
@@ -282,13 +292,13 @@ object SnapshotTable {
       .append(m.dirs.mkString(",")).append('\n')
       .append(m.format).append('\n')
     m.bloom.foreach(b => body.append("bloom:").append(b).append('\n'))
-    m.schema.foreach(s => body.append("schema:").append(s.json).append('\n'))
+    body.append("schema:").append(m.schema.json).append('\n')
     if (m.statsCols.nonEmpty)
       body.append("stats:").append(m.statsCols.mkString(",")).append('\n')
     if (m.tombstones.nonEmpty)
       body.append("tombstones:").append(m.tombstones.mkString(",")).append('\n')
     m.morKey.foreach(k => body.append("morkey:").append(k).append('\n'))
-    m.kind.foreach(k => body.append("kind:").append(k).append('\n'))
+    body.append("kind:").append(m.kind).append('\n')
     if (m.partitionCols.nonEmpty)
       body.append("partition:").append(m.partitionCols.mkString(",")).append('\n')
     if (m.partEvolved)
@@ -315,9 +325,8 @@ object SnapshotTable {
     // in one millisecond tick (or behind a skewed-back clock) still get
     // distinct, ordered instants — what makes the history-row ↔
     // versionAtTimestamp round trip EXACT rather than newest-of-a-tie.
-    // Read-side running-max monotonicization stays for legacy chains
-    // (pre-ts manifests fall back to file mtimes, which this discipline
-    // never stamped).
+    // Read-side running-max monotonicization stays for chains stamped
+    // before this clamp existed.
     val parentTs: Long =
       if (expectedNext <= 1L) Long.MinValue
       else try {
@@ -326,8 +335,7 @@ object SnapshotTable {
         val parentFile = ref.map(r => branchManifestFile(path, r, expectedNext - 1))
           .filter(f.exists)
           .getOrElse(manifest(path, expectedNext - 1))
-        parseManifestAt(spark, parentFile).ts.getOrElse(
-          f.getFileStatus(parentFile).getModificationTime)
+        parseManifestAt(spark, parentFile).ts
       } catch { case scala.util.control.NonFatal(_) => Long.MinValue }
     body.append("ts:")
       .append(math.max(System.currentTimeMillis(), parentTs + 1)).append('\n')
@@ -490,7 +498,7 @@ object SnapshotTable {
               s"commit conflict at $path with no current version — manifest store inconsistent"))
             val fresh = ((baseV + 1) to wv).map(cv => cv -> readManifestChecked(spark, path, cv))
             fresh.foreach { case (cv, cm) =>
-              val k = cm.kind.getOrElse("unknown")
+              val k = cm.kind
               if (!admits.contains(k)) throw new java.io.IOException(
                 s"$op at $path lost the commit race to version $cv (kind '$k'); " +
                   why.applyOrElse(k, (_: String) =>
@@ -503,7 +511,7 @@ object SnapshotTable {
         def refuse(what: String) = throw new java.io.IOException(
           s"$op at $path lost the commit race and the winner committed a different " +
             s"$what; re-run the $op against the current snapshot")
-        if (m.schema.exists(s => !wm.schema.forall(_ == s))) refuse("schema")
+        if (wm.schema != m.schema) refuse("schema")
         if (wm.partitionCols != m.partitionCols) refuse("partitioning")
         if (wm.physmap != m.physmap) refuse("column mapping")
         baseV = wv
@@ -566,9 +574,9 @@ object SnapshotTable {
       bloom: Option[String], schema: StructType, statsCols: Seq[String],
       partitionCols: Seq[String], physmap: Map[String, String],
       physRetired: Seq[String]): Manifest =
-    Manifest(base.map(_.dirs).getOrElse(Nil) :+ dir, format, bloom, Some(schema),
+    Manifest(base.map(_.dirs).getOrElse(Nil) :+ dir, format, bloom, schema,
       statsCols, base.map(_.tombstones).getOrElse(Nil), base.flatMap(_.morKey),
-      kind = Some("append"), partitionCols = partitionCols,
+      kind = "append", partitionCols = partitionCols,
       constraints = base.map(_.constraints).getOrElse(Nil), physmap = physmap,
       physRetired = physRetired, hashesValid = base.forall(_.hashesValid),
       posDeletes = base.map(_.posDeletes).getOrElse(Nil),
@@ -612,10 +620,10 @@ object SnapshotTable {
     // (CREATE TABLE of a partitioned table), which stages no data files
     // a bare load could infer from
     writeStatsSidecar("write", path, dir,
-      readStaged(spark, path, dir, format, Some(committedSchema), physmap),
+      readStaged(spark, path, dir, format, committedSchema, physmap),
       effStats.map(c => physmap.getOrElse(c, c)))
     commit(spark, path, next, Manifest(Seq(dir), format, None,
-      Some(committedSchema), effStats, kind = Some("overwrite"),
+      committedSchema, effStats, kind = "overwrite",
       partitionCols = effParts, constraints = constraints,
       physmap = physmap, physRetired = parentRetired))
   }
@@ -705,7 +713,7 @@ object SnapshotTable {
     }
     commit(spark, path, cur + 1, m.copy(
       constraints = m.constraints :+ Constraint(name, mode, exprSql),
-      kind = Some("constraint")))
+      kind = "constraint"))
     cur + 1
   }
 
@@ -921,9 +929,7 @@ object SnapshotTable {
     // the chain's committed format governs the staged delta — same
     // contract as every main-chain incremental commit
     val format = parent0.format
-    val tableSchema = parent0.schema.getOrElse(
-      nullableSchema(readFromManifest(spark, path, parent0).schema))
-    val committedSchema = mergedIngestSchema(tableSchema, incoming.schema,
+    val committedSchema = mergedIngestSchema(parent0.schema, incoming.schema,
       evolveSchema = false)
     val effStats = parent0.statsCols
     val effParts = parent0.partitionCols
@@ -940,7 +946,7 @@ object SnapshotTable {
       stagedWrite("appendBranch", gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
         new Path(path, deltaDir), format, effParts, physmap)
       writeStatsSidecar("appendBranch", path, deltaDir,
-        readStaged(spark, path, deltaDir, format, Some(committedSchema), physmap),
+        readStaged(spark, path, deltaDir, format, committedSchema, physmap),
         effStats.map(c => physmap.getOrElse(c, c)))
       commitLoop(spark, path, s"appendBranch('$name')", headV0, Some(parent0),
           Seq(deltaDir), admits = Nil, ref = Some(name)) { (v, base, _) =>
@@ -980,7 +986,7 @@ object SnapshotTable {
         "from the current head and re-stage (graft refuses non-fast-forward merges)")
     val headM = parseManifestAt(spark, branchManifestFile(path, name, chain.last))
     val published =
-      try commit(spark, path, base + 1, headM.copy(kind = Some("fast-forward")))
+      try commit(spark, path, base + 1, headM.copy(kind = "fast-forward"))
       catch { case _: CommitConflictException =>
         throw new IllegalStateException(
           s"fast-forward of branch '$name' at $path lost the publish race: " +
@@ -1030,7 +1036,7 @@ object SnapshotTable {
         s"(have: ${m.constraints.map(_.name).mkString(", ")})")
     commit(spark, path, cur + 1, m.copy(
       constraints = m.constraints.filterNot(_.name == name),
-      kind = Some("drop-constraint")))
+      kind = "drop-constraint"))
     cur + 1
   }
 
@@ -1098,13 +1104,10 @@ object SnapshotTable {
     val cur = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot at $path"))
     val m = readManifestChecked(spark, path, cur)
-    val schema = m.schema.getOrElse(throw new IllegalStateException(
-      s"$path has no committed schema (pre-r13 manifest); rewrite the table " +
-        "(write/compact) before renaming columns"))
-    require(schema.fieldNames.contains(oldName),
+    require(m.schema.fieldNames.contains(oldName),
       s"renameColumn: '$oldName' is not a table column " +
-        s"(${schema.fieldNames.mkString(", ")})")
-    if (newName != oldName && schema.fieldNames.exists(_.equalsIgnoreCase(newName)))
+        s"(${m.schema.fieldNames.mkString(", ")})")
+    if (newName != oldName && m.schema.fieldNames.exists(_.equalsIgnoreCase(newName)))
       throw new IllegalArgumentException(
         s"renameColumn: a column named '$newName' already exists " +
           "(Spark's default resolver is case-insensitive)")
@@ -1121,11 +1124,11 @@ object SnapshotTable {
     val newMap0 = m.physmap - oldName
     val newMap =
       if (newName == physical) newMap0 else newMap0 + (newName -> physical)
-    val newSchema = StructType(schema.fields.map(f =>
+    val newSchema = StructType(m.schema.fields.map(f =>
       if (f.name == oldName) f.copy(name = newName) else f))
     val newStats = m.statsCols.map(c => if (c == oldName) newName else c)
-    commit(spark, path, cur + 1, m.copy(schema = Some(newSchema),
-      statsCols = newStats, physmap = newMap, kind = Some("renamecol")))
+    commit(spark, path, cur + 1, m.copy(schema = newSchema,
+      statsCols = newStats, physmap = newMap, kind = "renamecol"))
     cur + 1
   }
 
@@ -1153,12 +1156,9 @@ object SnapshotTable {
     val cur = currentVersion(spark, path).getOrElse(
       throw new IllegalArgumentException(s"no committed snapshot at $path"))
     val m = readManifestChecked(spark, path, cur)
-    val schema = m.schema.getOrElse(throw new IllegalStateException(
-      s"$path has no committed schema (pre-r13 manifest); rewrite the table " +
-        "(write/compact) before dropping columns"))
-    require(schema.fieldNames.contains(name),
+    require(m.schema.fieldNames.contains(name),
       s"dropColumn: '$name' is not a table column " +
-        s"(${schema.fieldNames.mkString(", ")})")
+        s"(${m.schema.fieldNames.mkString(", ")})")
     requireColumnUnpinned(spark, path, m, name, "dropColumn")
     // the physical name is about to be written into the comma/colon-
     // delimited physretired manifest line; an unsafe original schema
@@ -1166,18 +1166,18 @@ object SnapshotTable {
     // or misparsed manifest — refuse loudly instead
     requireManifestSafe(m.physOf(name), "dropColumn",
       s"physical name of column '$name'")
-    val remaining = schema.fields.filterNot(_.name == name)
+    val remaining = m.schema.fields.filterNot(_.name == name)
     if (remaining.isEmpty || remaining.forall(f => m.partitionCols.contains(f.name)))
       throw new IllegalArgumentException(
         s"dropColumn: dropping '$name' would leave no data column at $path")
     commit(spark, path, cur + 1, m.copy(
-      schema = Some(StructType(remaining)),
+      schema = StructType(remaining),
       statsCols = m.statsCols.filterNot(_ == name),
       physmap = m.physmap - name,
       physRetired = (m.physRetired :+ m.physOf(name)).distinct,
       bloom = None,
       hashesValid = false,
-      kind = Some("dropcol")))
+      kind = "dropcol"))
     cur + 1
   }
 
@@ -1192,7 +1192,7 @@ object SnapshotTable {
     if (requested.nonEmpty) requested
     else cur.map(v => readManifestChecked(spark, path, v).statsCols).getOrElse(Nil)
 
-  private def nullableSchema(s: StructType): StructType =
+  private[graft] def nullableSchema(s: StructType): StructType =
     StructType(s.fields.map(_.copy(nullable = true)))
 
   // ---- identity partitioning --------------------------------------------
@@ -1354,15 +1354,13 @@ object SnapshotTable {
 
   /** Raw re-read of a data dir graft staged: physical column names, and
     * the committed schema DECLARED so the load infers nothing (no footer
-    * job) and partition values come back in their declared types. Only a
-    * pre-r13 manifest (`schema` None) falls back to inference.
+    * job) and partition values come back in their declared types.
     */
   private def readStaged(spark: SparkSession, path: String, dir: String,
-                         format: String, schema: Option[StructType],
-                         physmap: Map[String, String]): DataFrame = {
-    val r = spark.read.format(format)
-    schema.fold(r)(s => r.schema(physSchema(s, physmap))).load(new Path(path, dir).toString)
-  }
+                         format: String, schema: StructType,
+                         physmap: Map[String, String]): DataFrame =
+    spark.read.format(format).schema(physSchema(schema, physmap))
+      .load(new Path(path, dir).toString)
 
   /** First data file of one snapshot dir, if any — a dir's files share
     * one write job's schema, so one footer stands for the dir (the
@@ -1445,10 +1443,9 @@ object SnapshotTable {
   }
 
   /** The effective commit instant of every retained version, ascending —
-    * the recorded `ts:` manifest line (legacy pre-ts manifests fall back
-    * to the manifest file's modification time) monotonicized by a
-    * running max, so clock skew between racing committers can never
-    * make time travel non-monotonic. Driver metadata only, bounded by
+    * the recorded `ts:` manifest line monotonicized by a running max, so
+    * clock skew between racing committers can never make time travel
+    * non-monotonic. Driver metadata only, bounded by
     * the retention window — the same cost class as [[history]].
     */
   private[graft] def effectiveCommitTimes(spark: SparkSession,
@@ -1456,19 +1453,17 @@ object SnapshotTable {
     val f = fs(spark, versionsDir(path))
     // the running max SEEDS from the persisted clock floor — the eff
     // instant of the newest EXPIRED commit ([[expire]] writes it before
-    // dropping manifests). Without it, trimming a legacy chain whose
+    // dropping manifests). Without it, trimming a chain whose
     // skewed-ahead early commit had flattened its successors would make
     // the retained versions' effective instants DECREASE across the
     // expire, silently changing versionAtTimestamp answers and letting
     // the changelog's trimmed-left-edge completeness guard pass an
     // instant whose commits expired. (Commits stamped by this writer
     // are strictly increasing by construction, so the floor only ever
-    // matters for legacy/mtime chains.)
+    // matters for chains stamped before the clamp in [[commit]].)
     var eff = readClockFloor(f, path)
     versions(spark, path).map { v =>
-      val raw = readManifestChecked(spark, path, v).ts.getOrElse(
-        f.getFileStatus(manifest(path, v)).getModificationTime)
-      eff = math.max(eff, raw)
+      eff = math.max(eff, readManifestChecked(spark, path, v).ts)
       v -> eff
     }
   }
@@ -1556,13 +1551,10 @@ object SnapshotTable {
     // logical names — the column-mapping read half. Identity (and
     // therefore alias-free, preserving pre-r14 plans exactly) when no
     // rename/drop ever touched the table.
-    def reader = {
-      val r = spark.read.format(m.format)
-      m.schema.fold(r)(s => r.schema(physSchema(s, m.physmap)))
-    }
+    def reader = spark.read.format(m.format).schema(physSchema(m.schema, m.physmap))
     def toLogical(df: DataFrame): DataFrame =
       if (m.physmap.isEmpty) df
-      else df.select(m.schema.get.fieldNames.map(n =>
+      else df.select(m.schema.fieldNames.map(n =>
         col(m.physOf(n)).as(n)).toSeq: _*)
     if (m.partitionCols.isEmpty)
       toLogical(reader.load(m.dirs.map(d => new Path(path, d).toString): _*))
@@ -1577,7 +1569,7 @@ object SnapshotTable {
       val df = m.dirs.map(d => reader.load(new Path(path, d).toString))
         .reduceLeft(_ unionByName _)
       if (m.physmap.nonEmpty) toLogical(df)
-      else m.schema.fold(df)(s => df.select(s.fieldNames.map(col(_)).toSeq: _*))
+      else df.select(m.schema.fieldNames.map(col(_)).toSeq: _*)
     }
   }
 
@@ -1653,18 +1645,14 @@ object SnapshotTable {
     import org.apache.spark.sql.functions.col
     if (!withPos) rawScan(spark, path, m)
     else {
-      def reader = {
-        val r = spark.read.format(m.format)
-        m.schema.fold(r)(s => r.schema(physSchema(s, m.physmap)))
-      }
+      def reader = spark.read.format(m.format).schema(physSchema(m.schema, m.physmap))
       val posCols = Seq(fileSubpathMetaCol.as(posFileCol),
         col("_metadata.row_index").as(posOrdCol))
       def project(df: DataFrame): DataFrame = {
         val dataCols =
           if (m.physmap.nonEmpty)
-            m.schema.get.fieldNames.toSeq.map(n => col(m.physOf(n)).as(n))
-          else m.schema.map(_.fieldNames.toSeq.map(col(_)))
-            .getOrElse(df.columns.toSeq.map(col(_)))
+            m.schema.fieldNames.toSeq.map(n => col(m.physOf(n)).as(n))
+          else m.schema.fieldNames.toSeq.map(col(_))
         df.select(dataCols ++ posCols: _*)
       }
       if (m.partitionCols.isEmpty)
@@ -1847,13 +1835,12 @@ object SnapshotTable {
     new Path(tombstonesRoot(path), name)
 
   /** One tombstone sidecar: the merge-on-read key column, declared at its
-    * table type (no footer inference job; only a pre-r13 manifest with
-    * no schema infers).
+    * table type (no footer inference job).
     */
   private def readTombstone(spark: SparkSession, path: String, m: Manifest,
                             key: String, name: String): DataFrame = {
     val r = spark.read.format(m.format)
-    m.schema.flatMap(_.fields.find(_.name == key))
+    m.schema.fields.find(_.name == key)
       .fold(r)(f => r.schema(StructType(Seq(f.copy(nullable = true)))))
       .load(tombstonePath(path, name).toString)
   }
@@ -2463,8 +2450,7 @@ object SnapshotTable {
     val allRanges = terms.flatten.flatten
     val f = fs(spark, new Path(path))
     val typeOf: Map[String, DataType] =
-      m.schema.map(_.fields.map(fd => m.physOf(fd.name) -> fd.dataType).toMap)
-        .getOrElse(Map.empty)
+      m.schema.fields.map(fd => m.physOf(fd.name) -> fd.dataType).toMap
     // Partition-aware listing with PARTITION pruning: a `col=value`
     // subtree whose single-point stats no extracted range can intersect
     // is skipped WITHOUT listing its files — at 100 TB this is the
@@ -2618,7 +2604,7 @@ object SnapshotTable {
           val reader =
             if (m.partitionCols.isEmpty) reader0
             else reader0.option("basePath", new Path(path, d).toString)
-          val df0 = m.schema.fold(reader)(s => reader.schema(physSchema(s, m.physmap)))
+          val df0 = reader.schema(physSchema(m.schema, m.physmap))
             .load(paths.map(_.toString): _*)
           // the unpartitioned fast path feeds ALL dirs' kept files into
           // one scan, so the subpath must derive from each ROW's own
@@ -2629,14 +2615,12 @@ object SnapshotTable {
             else Seq(fileSubpathMetaCol.as(posFileCol),
               col("_metadata.row_index").as(posOrdCol))
           if (m.physmap.nonEmpty)
-            df0.select(m.schema.get.fieldNames.toSeq.map(n =>
+            df0.select(m.schema.fieldNames.toSeq.map(n =>
               col(m.physOf(n)).as(n)) ++ posCols: _*)
           else if (posCols.nonEmpty)
-            df0.select(m.schema.map(_.fieldNames.toSeq.map(col(_)))
-              .getOrElse(df0.columns.toSeq.map(col(_))) ++ posCols: _*)
+            df0.select(m.schema.fieldNames.toSeq.map(col(_)) ++ posCols: _*)
           else if (m.partitionCols.isEmpty) df0
-          else m.schema.fold(df0)(s => df0.select(
-            s.fieldNames.map(col(_)).toSeq: _*))
+          else df0.select(m.schema.fieldNames.map(col(_)).toSeq: _*)
         }
         // the tombstone overlay additionally needs each row's commit
         // version, so its per-dir scans tag before masking (the group
@@ -2801,11 +2785,9 @@ object SnapshotTable {
         hashesDir(path, nextDir).toString))
     else textCol.foreach(tc =>
       writeHashSidecar("compact", path, nextDir, written, m.physOf(tc), m.format))
-    // Only a manifest-NAMED bloom carries forward; a legacy per-version
-    // file is keyed on the pre-contentKey hash and must not be laundered
-    // into a named reference (readBloom would then trust it). A chain
-    // with NO named bloom gets one built from the compacted output when
-    // textCol is given, so the next ingest's probe path is O(delta).
+    // A chain with NO named bloom gets one built from the compacted
+    // output when textCol is given, so the next ingest's probe path is
+    // O(delta).
     var rebuiltBloom: Option[org.apache.spark.util.sketch.BloomFilter] = None
     val outBloomName = (m.bloom, textCol) match {
       case (some @ Some(_), _) if !m.hasOverlay => some
@@ -2821,7 +2803,6 @@ object SnapshotTable {
     val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
     writeStatsSidecar("compact", path, nextDir, written,
       effStats.map(m.physOf))
-    val committedSchema = m.schema.getOrElse(nullableSchema(written.schema))
     val parentDirs = m.dirs.toSet
     val committed = commitLoop(spark, path, "compaction", v, Some(m), Seq(nextDir),
         admits = Seq("append", "fast-forward"),
@@ -2857,8 +2838,8 @@ object SnapshotTable {
             }
           }
         }
-      Some(Manifest(dir +: appendAdded, m.format, bloom, Some(committedSchema),
-        effStats, kind = Some("compact"), partitionCols = m.partitionCols,
+      Some(Manifest(dir +: appendAdded, m.format, bloom, m.schema,
+        effStats, kind = "compact", partitionCols = m.partitionCols,
         constraints = base.get.constraints, physmap = m.physmap,
         physRetired = base.get.physRetired))
     }
@@ -2966,7 +2947,7 @@ object SnapshotTable {
     val version = commitLoop(spark, path, "binpack", v, Some(m), Seq(nextDir),
         admits = Seq("append", "fast-forward")) { (cv, base, _) =>
       Some(base.get.copy(dirs = base.get.dirs.filterNot(merged) :+ atVersion(nextDir, cv),
-        kind = Some("binpack")))
+        kind = "binpack"))
     }
     BinpackStats(version, smalls.size, bigs.size, smallBytes, committed = true)
   }
@@ -3009,7 +2990,7 @@ object SnapshotTable {
     // from the interior (between tagged islands) must not inflate the
     // older retained islands' instants; interior drops cannot lower
     // anyone's eff under the strictly-increasing stamp discipline, and
-    // legacy skewed chains predate tags. Overwrite-in-place is fine
+    // skewed pre-clamp chains predate tags. Overwrite-in-place is fine
     // under the same single-maintainer assumption as vacuum.
     val retainedHead = vs.filterNot(drop.toSet).head
     val leftPrefix = drop.filter(_ < retainedHead)
@@ -3035,8 +3016,7 @@ object SnapshotTable {
       m.posDeletes.filterNot(retainedPd)
         .foreach(n => f.delete(posDeletePath(path, n), true))
       f.delete(manifest(path, v), false)
-      (m.bloom.toSeq :+ legacyBloomFile(path, v).getName)
-        .filterNot(retainedBlooms)
+      m.bloom.filterNot(retainedBlooms)
         .foreach(n => f.delete(new Path(versionsDir(path), n), false))
     }
     drop.length
@@ -3159,12 +3139,9 @@ object SnapshotTable {
       s"changes: bad version range [$fromVersion, $to]")
     // the feed's column names/arity anchor at `schemaVersion` (>= to;
     // default to) — a WINDOWED feed served under a fixed relation schema
-    // (the catalog's `t$changes`) must not shape-shift with the window.
-    // The legacy no-embedded-schema fallback must read at the SAME
-    // anchor, or a rename between `to` and the anchor would mix vintages
-    val anchorV = schemaVersion.getOrElse(to)
-    val toM = readManifestChecked(spark, path, anchorV)
-    val toSchema = toM.schema.getOrElse(nullableSchema(readAt(spark, path, anchorV).schema))
+    // (the catalog's `t$changes`) must not shape-shift with the window
+    val toM = readManifestChecked(spark, path, schemaVersion.getOrElse(to))
+    val toSchema = toM.schema
     // physical → toVersion-vintage logical name (physicals are immutable,
     // so this re-names any version's frame into toVersion's schema)
     val toLogicalOfPhys: Map[String, String] =
@@ -3184,18 +3161,6 @@ object SnapshotTable {
       df.select((cols.toIndexedSeq :+ changeType.as("_change_type")
         :+ lit(v).as("_commit_version")): _*)
     }
-    def kindOf(v: Long, mv: Manifest, mp: Option[Manifest]): String =
-      mv.kind.getOrElse {
-        if (v == 1L) "create"
-        else mp match {
-          case None => "baseline"
-          case Some(p) =>
-            if (p.dirs.exists(d => !mv.dirs.contains(d))) "overwrite"
-            else if (mv.tombstones.size > p.tombstones.size) "merge-on-read"
-            else if (mv.dirs.size > p.dirs.size) "append"
-            else "noop"
-        }
-      }
     val frames = (fromVersion to to).flatMap { v =>
       val mv = readManifestChecked(spark, path, v)
       val mp = if (v == 1L) None
@@ -3225,16 +3190,14 @@ object SnapshotTable {
             .drop(posFileCol, posOrdCol), mp.get, lit("delete"), v))
         }
       }
-      val kind = kindOf(v, mv, mp)
-      kind match {
+      mv.kind match {
         case _ if v == 1L => addedDirRows.toSeq // creation baseline: inserts
         // a fast-forward publish is append-shaped: the branch head's dir
         // list is a superset of the fork state's, so the feed is exactly
         // the branch-staged dirs as inserts
         case "append" | "fast-forward" => addedDirRows.toSeq
         case "compact" | "binpack" | "posdelete-compact" | "constraint" |
-             "drop-constraint" | "renamecol" | "dropcol" | "repartition" |
-             "noop" => Nil
+             "drop-constraint" | "renamecol" | "dropcol" | "repartition" => Nil
         case "merge-on-read" =>
           val newTs = mv.tombstones.filterNot(mp.map(_.tombstones.toSet).getOrElse(Set.empty))
           // a MOR commit can add ZERO tombstones (an upsert batch whose
@@ -3293,7 +3256,7 @@ object SnapshotTable {
           }
         case "posdelete" | "posupdate" =>
           posVictims.toSeq ++ addedDirRows.toSeq
-        case _ => // overwrite / merge / rollback / baseline: full diff
+        case _ => // overwrite / merge / rollback: full diff
           Seq(remap(readAt(spark, path, v - 1), mp.get, lit("delete"), v),
             remap(readAt(spark, path, v), mv, lit("insert"), v))
       }
@@ -3367,7 +3330,7 @@ object SnapshotTable {
       s"cannot roll back to future version $toVersion (current is $cur)")
     if (toVersion == cur) return RollbackStats(cur, toVersion)
     val target = readManifestChecked(spark, path, toVersion)
-    commit(spark, path, cur + 1, target.copy(kind = Some("rollback")))
+    commit(spark, path, cur + 1, target.copy(kind = "rollback"))
     RollbackStats(cur + 1, toVersion)
   }
 
@@ -3414,13 +3377,12 @@ object SnapshotTable {
     require(cols.distinct == cols,
       s"repartitionTable at $path: duplicate columns in (${cols.mkString(", ")})")
     if (cols == m.partitionCols) return cur // idempotent no-op
-    val schema = m.schema.getOrElse(nullableSchema(rawScan(spark, path, m).schema))
-    val unknown = cols.filterNot(schema.fieldNames.contains)
+    val unknown = cols.filterNot(m.schema.fieldNames.contains)
     require(unknown.isEmpty,
       s"repartitionTable at $path: ${unknown.mkString(", ")} are not table " +
-        s"columns (schema: ${schema.fieldNames.mkString(", ")})")
+        s"columns (schema: ${m.schema.fieldNames.mkString(", ")})")
     commit(spark, path, cur + 1, m.copy(partitionCols = cols,
-      kind = Some("repartition"),
+      kind = "repartition",
       // only a chain that HAS old-layout dirs is mixed; a content-empty
       // table re-specs cleanly
       partEvolved = m.partEvolved || m.dirs.nonEmpty))
@@ -3465,8 +3427,7 @@ object SnapshotTable {
     * below the worst-case staging duration is safe only under strict
     * single-writer (see [[graft.streaming.EventStream.Maintenance]]).
     * Manifests themselves are never touched ([[expire]] owns version
-    * retention). Legacy per-version bloom files are always unreferenced
-    * (manifests name their blooms) and age out with the rest.
+    * retention).
     */
   /** Minimum effective grace for the STAGING-area sweep (10 min): the
     * worst-case gap between an executor's staging write and its
@@ -3550,12 +3511,6 @@ object SnapshotTable {
   // ---- incremental content-dedup ingest (the d14 bloom path over
   // commits) --------------------------------------------------------------
 
-  /** Pre-manifest-named bloom location (versions written before blooms
-    * were named in the manifest); also the fallback read path.
-    */
-  private def legacyBloomFile(path: String, v: Long) =
-    new Path(versionsDir(path), f"b$v%08d.bin")
-
   /** Content identity key: md5 of the payload, with NULL payloads mapped
     * to a sentinel no 32-hex-char md5 can equal. NULL content is still
     * content — two null-payload rows are duplicates of each other — and
@@ -3618,14 +3573,9 @@ object SnapshotTable {
     else read(spark, path).select(contentKey(col(textCol)).as("__h"))
   }
 
-  /** Resolve version v's bloom: ONLY the manifest-named sidecar. A
-    * legacy per-version file (pre-manifest-naming vintage) is
-    * deliberately NOT trusted: those blooms were keyed on
-    * xxhash64(payload), while the probe key is now xxhash64 of the
-    * [[contentKey]] — every legacy bit would be a false negative and a
-    * silently-broken coverage invariant. Returning None instead routes
-    * the caller to the one-scan rebuild, after which the table carries
-    * a correctly-keyed named bloom forever.
+  /** Resolve version v's bloom: the manifest-named sidecar, or None
+    * when the manifest names none (the caller then rebuilds it in one
+    * scan).
     */
   private def readBloom(spark: SparkSession, path: String,
                         v: Long): Option[org.apache.spark.util.sketch.BloomFilter] = {
@@ -3781,13 +3731,9 @@ object SnapshotTable {
     val parentDirs = parent.map(_.dirs).getOrElse(Nil)
     // Drift gate first: fail before any staging I/O. A first commit
     // defines the table schema; later commits check against the
-    // manifest's schema (or, for pre-r13 tables, the files' schema).
-    val tableSchema = parent.map(m =>
-      m.schema.getOrElse(nullableSchema(readAt(spark, path, cur.get).schema)))
-    val committedSchema = tableSchema match {
-      case None => nullableSchema(incoming.schema)
-      case Some(ts) => mergedIngestSchema(ts, incoming.schema, evolveSchema)
-    }
+    // manifest's schema.
+    val committedSchema = parent.fold(nullableSchema(incoming.schema))(m =>
+      mergedIngestSchema(m.schema, incoming.schema, evolveSchema))
     // the parent manifest is already parsed above — no second read
     val effStats =
       if (statsCols.nonEmpty) statsCols else parent.map(_.statsCols).getOrElse(Nil)
@@ -3852,7 +3798,7 @@ object SnapshotTable {
       // the WRITTEN files (one small scan — never re-executes the dedup
       // plan). Raw re-reads see PHYSICAL column names.
       def staged(dir: String) =
-        readStaged(spark, path, dir, format, Some(committedSchema), physmap)
+        readStaged(spark, path, dir, format, committedSchema, physmap)
       val written = staged(deltaDir)
       val deltaBloom = bloomOf("ingest", written,
         xxhash64(contentKey(col(physText))), expectedItems, fpp)
@@ -3892,7 +3838,7 @@ object SnapshotTable {
             // but keeps content the delta was already deduped against
             val appendAdded = (parentDirs +: chain.map(_._2.dirs)).zip(chain.map(_._2))
               .flatMap { case (prev, mm) =>
-                if (mm.kind.exists(k => k == "append" || k == "fast-forward"))
+                if (mm.kind == "append" || mm.kind == "fast-forward")
                   mm.dirs.diff(prev)
                 else Nil
               }
@@ -3990,12 +3936,8 @@ object SnapshotTable {
     val cur = currentVersion(spark, path)
     val next = cur.getOrElse(0L) + 1
     val parent = cur.map(v => readManifestChecked(spark, path, v))
-    val tableSchema = parent.map(m =>
-      m.schema.getOrElse(nullableSchema(readAt(spark, path, cur.get).schema)))
-    val committedSchema = tableSchema match {
-      case None => nullableSchema(incoming.schema)
-      case Some(ts) => mergedIngestSchema(ts, incoming.schema, evolveSchema = false)
-    }
+    val committedSchema = parent.fold(nullableSchema(incoming.schema))(m =>
+      mergedIngestSchema(m.schema, incoming.schema, evolveSchema = false))
     val effStats =
       if (statsCols.nonEmpty) statsCols else parent.map(_.statsCols).getOrElse(Nil)
     val effParts = inheritedPartitionCols(parent, partitionCols, "append")
@@ -4016,7 +3958,7 @@ object SnapshotTable {
       stagedWrite("append", gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
         new Path(path, deltaDir), format, effParts, physmap)
       writeStatsSidecar("append", path, deltaDir,
-        readStaged(spark, path, deltaDir, format, Some(committedSchema), physmap),
+        readStaged(spark, path, deltaDir, format, committedSchema, physmap),
         effStats.map(c => physmap.getOrElse(c, c)))
       commitLoop(spark, path, "append", cur.getOrElse(0L), parent, Seq(deltaDir),
           admits = Seq("append", "fast-forward", "compact", "binpack", "posdelete",
@@ -4049,10 +3991,7 @@ object SnapshotTable {
     currentVersion(spark, path) match {
       case Some(v) =>
         val m = readManifestChecked(spark, path, v)
-        val tableSchema = m.schema.getOrElse(
-          nullableSchema(readAt(spark, path, v).schema))
-        val committed = mergedIngestSchema(tableSchema, incoming,
-          evolveSchema = false)
+        val committed = mergedIngestSchema(m.schema, incoming, evolveSchema = false)
         StreamWritePlan(committed, m.format, m.statsCols, m.partitionCols,
           m.physmap, m.physRetired, m.constraints, creates = false)
       case None =>
@@ -4134,7 +4073,7 @@ object SnapshotTable {
       queryId: String, epochId: Long): Long = {
     val f = fs(spark, new Path(path))
     writeStatsSidecar("streaming append", path, stagedDir0,
-      readStaged(spark, path, stagedDir0, plan.format, Some(plan.committedSchema),
+      readStaged(spark, path, stagedDir0, plan.format, plan.committedSchema,
         plan.physmap),
       plan.statsCols.map(c => plan.physmap.getOrElse(c, c)))
     val parentV = currentVersion(spark, path)
@@ -4163,7 +4102,7 @@ object SnapshotTable {
               "contract re-resolves against the committed table")
           base.foreach { pm =>
             val drift =
-              pm.schema.exists(_ != plan.committedSchema) ||
+              pm.schema != plan.committedSchema ||
                 pm.physmap != plan.physmap ||
                 pm.partitionCols != plan.partitionCols ||
                 pm.constraints != plan.constraints
@@ -4414,11 +4353,10 @@ object SnapshotTable {
         s"no committed snapshot at $path to merge into; create the table with write/ingest"))
     val m = readManifestChecked(spark, path, cur)
     val current = readAt(spark, path, cur)
-    val tableSchema = m.schema.getOrElse(nullableSchema(current.schema))
     // contract checks: key exists on both sides; payload columns match
     // the table by name+type (merge does not evolve schema — evolution
     // belongs to ingest/write, where old-row semantics are defined)
-    requireChangeSchema(tableSchema, changes, keyCol, deleteCol, orderCol)
+    requireChangeSchema(m.schema, changes, keyCol, deleteCol, orderCol)
     val weCached = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (weCached) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
@@ -4428,7 +4366,7 @@ object SnapshotTable {
       // no contract
       val gatedChanges = enforceConstraints(changes, m.constraints, "merge",
         exempt = deleteCol.map(dc => coalesce(col(dc).cast("boolean"), lit(false))))
-      val cb = resolveChanges("merge", gatedChanges, keyCol, deleteCol, orderCol, tableSchema)
+      val cb = resolveChanges("merge", gatedChanges, keyCol, deleteCol, orderCol, m.schema)
       val changedKeys = cb.winning.select(col(keyCol).as("__mk"))
       val next = current
         .join(changedKeys, current(keyCol) === col("__mk"), "left_anti")
@@ -4436,7 +4374,7 @@ object SnapshotTable {
       val nextDir = stageDir(cur + 1)
       val rowsAfter = stagedWrite("merge", next, new Path(path, nextDir), m.format,
         m.partitionCols, m.physmap)
-      lazy val written = readStaged(spark, path, nextDir, m.format, Some(tableSchema), m.physmap)
+      lazy val written = readStaged(spark, path, nextDir, m.format, m.schema, m.physmap)
       // sidecars: the merged output IS the new dedup universe
       val bloomName = textCol.map { tc =>
         writeHashSidecar("merge", path, nextDir, written, m.physOf(tc), m.format)
@@ -4449,7 +4387,7 @@ object SnapshotTable {
       val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
       writeStatsSidecar("merge", path, nextDir, written, effStats.map(m.physOf))
       commit(spark, path, cur + 1, Manifest(Seq(nextDir), m.format, bloomName,
-        Some(tableSchema), effStats, kind = Some("merge"),
+        m.schema, effStats, kind = "merge",
         partitionCols = m.partitionCols, constraints = m.constraints,
         physmap = m.physmap, physRetired = m.physRetired))
       MergeStats(cur + 1, cb.nChanges, cb.nUpserts, cb.nChanges - cb.nUpserts, rowsAfter)
@@ -4613,13 +4551,12 @@ object SnapshotTable {
       throw new IllegalArgumentException(
         s"no committed snapshot at $path to merge into; create the table with write/ingest"))
     val m = readManifestChecked(spark, path, cur)
-    val tableSchema = m.schema.getOrElse(nullableSchema(rawScan(spark, path, m).schema))
     require(!keyCol.contains(",") && !keyCol.contains("\n"),
       s"merge-on-read key column name must not contain ',' or newlines: '$keyCol'")
     m.morKey.filter(_ != keyCol).foreach(k => throw new IllegalArgumentException(
       s"outstanding tombstones at $path are keyed on '$k'; a merge-on-read chain " +
         s"cannot switch to '$keyCol' until a rewrite (compact/write/merge) clears the overlay"))
-    requireChangeSchema(tableSchema, changes, keyCol, deleteCol, orderCol)
+    requireChangeSchema(m.schema, changes, keyCol, deleteCol, orderCol)
     val next = cur + 1
     val weCached = changes.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (weCached) changes.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -4630,7 +4567,7 @@ object SnapshotTable {
       val gatedChanges = enforceConstraints(changes, m.constraints, "merge-on-read",
         exempt = deleteCol.map(dc => coalesce(col(dc).cast("boolean"), lit(false))))
       val cb = resolveChanges("merge-on-read", gatedChanges, keyCol, deleteCol,
-        orderCol, tableSchema)
+        orderCol, m.schema)
       val nChanges = cb.nChanges
       // a batch that touches nothing (e.g. deleteWhere matching zero
       // rows) must not pin morKey or grow the overlay — it commits an
@@ -4651,7 +4588,7 @@ object SnapshotTable {
         Some(t)
       }
       def staged(d: String) =
-        readStaged(spark, path, d, m.format, Some(tableSchema), m.physmap)
+        readStaged(spark, path, d, m.format, m.schema, m.physmap)
       lazy val written0 = staged(deltaDir.get)
       // delta-dir sidecars mirror ingest's: stats for pruning, and the
       // hash sidecar when the dedup gate is live
@@ -4668,7 +4605,7 @@ object SnapshotTable {
         (v, base, chain) =>
           val b = base.get
           outstanding = b.tombstones.size + tName.size
-          if (tName.isEmpty) Some(b.copy(kind = Some("merge-on-read")))
+          if (tName.isEmpty) Some(b.copy(kind = "merge-on-read"))
           else {
             b.morKey.filter(_ != keyCol).foreach(k => throw new java.io.IOException(
               s"merge-on-read at $path lost the commit race to an overlay keyed on '$k' " +
@@ -4699,10 +4636,10 @@ object SnapshotTable {
                   }
                 }
             }
-            Some(Manifest(b.dirs ++ delta, b.format, bloom, Some(tableSchema),
+            Some(Manifest(b.dirs ++ delta, b.format, bloom, m.schema,
               if (statsCols.nonEmpty) statsCols else b.statsCols,
               b.tombstones ++ tName.map(atVersion(_, v)), Some(keyCol),
-              kind = Some("merge-on-read"), partitionCols = b.partitionCols,
+              kind = "merge-on-read", partitionCols = b.partitionCols,
               constraints = b.constraints, physmap = b.physmap,
               physRetired = b.physRetired, hashesValid = b.hashesValid,
               posDeletes = b.posDeletes, partEvolved = b.partEvolved))
@@ -4815,7 +4752,7 @@ object SnapshotTable {
         phase(spark, "posdelete compaction", "positional sidecar")(GraftSqlShim.saveCounted(
           readPosDeletes(spark, path, b.format, b.posDeletes).distinct(),
           b.format, Nil, posDeletePath(path, name).toString))
-        Some(b.copy(posDeletes = Seq(name), kind = Some("posdelete-compact")))
+        Some(b.copy(posDeletes = Seq(name), kind = "posdelete-compact"))
       }
     }
   }
@@ -4863,7 +4800,7 @@ object SnapshotTable {
     require(m.format == "parquet",
       "positional updates need parquet row ordinals (_metadata.row_index); " +
         s"table format is '${m.format}'")
-    val schema = m.schema.getOrElse(nullableSchema(readAt(spark, path, cur).schema))
+    val schema = m.schema
     val unknown = set.keys.filterNot(schema.fieldNames.contains).toSeq
     require(unknown.isEmpty,
       s"updateWherePositional: SET column(s) ${unknown.mkString(", ")} " +
@@ -4948,9 +4885,7 @@ object SnapshotTable {
       else "append"
     stagedDir0.foreach { d =>
       writeStatsSidecar(opName, path, d,
-        readStaged(spark, path, d, m.format,
-          Some(m.schema.getOrElse(nullableSchema(readAt(spark, path, scannedV).schema))),
-          m.physmap),
+        readStaged(spark, path, d, m.format, m.schema, m.physmap),
         m.statsCols.map(c => m.physmap.getOrElse(c, c)))
     }
     commitLoop(spark, path, opName, scannedV, Some(m), stagedDir0.toSeq,
@@ -4980,7 +4915,7 @@ object SnapshotTable {
       }
       val dir = stagedDir0.map(atVersion(_, v))
       Some(b.copy(dirs = b.dirs ++ dir, bloom = if (dir.isDefined) None else b.bloom,
-        posDeletes = b.posDeletes ++ sidecar, kind = Some(kind)))
+        posDeletes = b.posDeletes ++ sidecar, kind = kind))
     }
   }
 
@@ -5049,16 +4984,11 @@ object SnapshotTable {
     * kind and effective commit instant (`commit_ts` — the same
     * running-max-monotonicized clock [[versionAtTimestamp]] resolves
     * against, so `readAtTimestamp(history row's ts)` always returns
-    * that row's version). Every operator RECORDS its kind in the
-    * manifest (`overwrite`,
-    * `append`, `compact`, `merge`, `merge-on-read`), so the history —
-    * and downstream changelog consumers — can tell a content-no-op
-    * compaction from a content-changing COW merge, which the dir-diff
-    * alone cannot. Manifests written before kinds were recorded fall
-    * back to deriving from the parent diff: `create` (version 1),
-    * `append` (dirs grew), `merge-on-read` (tombstones grew), `rewrite`
-    * (a parent dir left the list), `baseline` (the retained left edge
-    * after [[expire]] trimmed its parent — diff unprovable), `noop`.
+    * that row's version). `kind` is the kind the committing operator
+    * RECORDED in the manifest (`overwrite`, `append`, `compact`,
+    * `merge`, `merge-on-read`, ...), so the history — and downstream
+    * changelog consumers — can tell a content-no-op compaction from a
+    * content-changing COW merge, which the dir-diff alone cannot.
     * Pure manifest metadata; no data files are opened.
     */
   def history(spark: SparkSession, path: String): DataFrame = {
@@ -5073,25 +5003,14 @@ object SnapshotTable {
       val m = ms(v)
       val eff = effTs(v)
       val parent = ms.get(v - 1)
-      val kind = m.kind.getOrElse {
-        if (v == 1L) "create"
-        else parent match {
-          case None => "baseline"
-          case Some(p) =>
-            if (p.dirs.exists(d => !m.dirs.contains(d))) "rewrite"
-            else if (m.tombstones.size > p.tombstones.size) "merge-on-read"
-            else if (m.dirs.size > p.dirs.size) "append"
-            else "noop"
-        }
-      }
       val added: Long = parent match {
         case Some(p) => m.dirs.count(d => !p.dirs.contains(d)).toLong
         case None => if (v == 1L) m.dirs.size.toLong else -1L
       }
-      org.apache.spark.sql.Row(v, kind, new java.sql.Timestamp(eff),
+      org.apache.spark.sql.Row(v, m.kind, new java.sql.Timestamp(eff),
         m.dirs.size.toLong, added,
         m.tombstones.size.toLong, m.format,
-        m.schema.map(_.size.toLong).getOrElse(-1L), m.statsCols.mkString(","))
+        m.schema.size.toLong, m.statsCols.mkString(","))
     }
     val schema = StructType(Seq(
       org.apache.spark.sql.types.StructField("version", org.apache.spark.sql.types.LongType, nullable = false),

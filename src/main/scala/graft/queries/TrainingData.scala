@@ -3753,8 +3753,7 @@ object TrainingData {
   // ---- d29_table_history: the DESCRIBE HISTORY metadata table -----------
   // One row per retained version with the commit kind RECORDED by the
   // operator in the manifest (overwrite/append/compact/merge/
-  // merge-on-read; pre-kind manifests fall back to the diff-derived
-  // class). Over the d28 fixture the history is a deterministic
+  // merge-on-read/...). Over the d28 fixture the history is a deterministic
   // function of the staged ops, so the oracle is a literal VALUES
   // relation — a cross-engine CONTRACT PIN of the kinds and counts
   // rather than a data replay (the fixture's determinism is what it

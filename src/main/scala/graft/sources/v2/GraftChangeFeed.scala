@@ -270,7 +270,7 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
     val parts = Seq.newBuilder[InputPartition]
     ((from + 1) to to).foreach { v =>
       val mv = SnapshotTable.readManifestChecked(spark, path, v)
-      val kind = if (v == 1L) "create" else mv.kind.getOrElse("unknown")
+      val kind = if (v == 1L) "create" else mv.kind
       lazy val mp = try SnapshotTable.readManifestChecked(spark, path, v - 1)
         catch { case e: IllegalArgumentException => throw new IllegalStateException(
           s"change feed of $path needs version ${v - 1} for the pre-images " +
@@ -316,8 +316,7 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
           requireLayout(mv, "append delta")
           insertFrames(mv.dirs.filterNot(mp.dirs.toSet))
         case "compact" | "binpack" | "posdelete-compact" | "constraint" |
-             "drop-constraint" | "renamecol" | "dropcol" | "repartition" |
-             "noop" => ()
+             "drop-constraint" | "renamecol" | "dropcol" | "repartition" => ()
         case "merge-on-read" =>
           val newTs = mv.tombstones.filterNot(mp.tombstones.toSet)
           val added = mv.dirs.filterNot(mp.dirs.toSet)

@@ -216,10 +216,7 @@ object GraftTable {
   def forVersion(spark: SparkSession, path: String, version: Long,
                  pinned: Boolean = false, cdf: Boolean = false): GraftTable = {
     val m = SnapshotTable.readManifestChecked(spark, path, version)
-    val logical = m.schema
-      .map(s => StructType(s.fields.map(_.copy(nullable = true))))
-      .getOrElse(SnapshotTable.readAt(spark, path, version).schema)
-    new GraftTable(spark, path, version, m, logical, pinned, cdf)
+    new GraftTable(spark, path, version, m, SnapshotTable.nullableSchema(m.schema), pinned, cdf)
   }
 
   /** A BRANCH head as a V2 table: the ref's head manifest pinned
@@ -232,10 +229,7 @@ object GraftTable {
     */
   def forBranch(spark: SparkSession, path: String, name: String): GraftTable = {
     val (v, m) = SnapshotTable.branchHeadManifest(spark, path, name)
-    val logical = m.schema
-      .map(s => StructType(s.fields.map(_.copy(nullable = true))))
-      .getOrElse(SnapshotTable.readFromManifest(spark, path, m).schema)
-    new GraftTable(spark, path, v, m, logical, pinned = true,
+    new GraftTable(spark, path, v, m, SnapshotTable.nullableSchema(m.schema), pinned = true,
       branch = Some(name))
   }
 }
@@ -1472,9 +1466,8 @@ class GraftDataStream(path: String, schemas: StreamSchemas, format: String,
     val retained = SnapshotTable.versions(spark, path).toSet
     val addedDirs = ((from + 1) to to).flatMap { v =>
       val mv = SnapshotTable.readManifestChecked(spark, path, v)
-      val kind = mv.kind.getOrElse("unknown")
       if (v == 1) mv.dirs // initial snapshot: the table's baseline rows
-      else kind match {
+      else mv.kind match {
         case "append" =>
           if (!retained(v - 1)) throw new IllegalStateException(
             s"version ${v - 1} of $path expired while the stream was down — " +

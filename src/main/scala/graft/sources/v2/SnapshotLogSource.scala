@@ -300,9 +300,8 @@ class SnapshotLogStream(path: String, startVersion: Option[String],
         emitted.map(d => new org.apache.hadoop.fs.Path(path, d).toString),
         emittedTs.map(t => SnapshotTable.tombstonePath(path, t).toString),
         // the manifest-recorded operator kind — what lets a consumer
-        // SKIP compactions (content no-ops) while re-syncing on merges;
-        // legacy manifests fall back to the diff-derived class
-        m.kind.getOrElse(if (rewrite) "rewrite" else "append")): InputPartition
+        // SKIP compactions (content no-ops) while re-syncing on merges
+        m.kind): InputPartition
     }.toArray
   }
 

@@ -140,7 +140,7 @@ class ConcurrencySpec extends SparkSpec {
     assert(m.dirs.size == 2, m.dirs)
     assert(m.dirs.head.startsWith("snap-00000004"), m.dirs)
     assert(m.dirs.exists(_.startsWith("snap-00000003")), m.dirs)
-    assert(m.kind.contains("compact"), m.kind)
+    assert(m.kind == "compact", m.kind)
     // the rebased manifest references the WINNER's bloom (which covers
     // parent ∪ append): replaying anything admits nothing
     val replay = SnapshotTable.ingest(spark, docs(0 until 80), path, "text",
@@ -167,7 +167,7 @@ class ConcurrencySpec extends SparkSpec {
       ((0L until 10L) ++ (20L until 40L) ++ (50L until 70L)).toSet)
     val m = SnapshotTable.readManifestChecked(spark, path,
       SnapshotTable.currentVersion(spark, path).get)
-    assert(m.tombstones.isEmpty && m.kind.contains("compact"), m)
+    assert(m.tombstones.isEmpty && m.kind == "compact", m)
     // deleted content LEFT the dedup universe at compaction even under
     // the race: a re-crawl of row 10 re-admits it...
     val re = SnapshotTable.ingest(spark, docs(10 until 11), path, "text",
@@ -349,7 +349,7 @@ class ConcurrencySpec extends SparkSpec {
     assert(m.dirs.size == 2, m.dirs)
     assert(m.dirs.head.startsWith("snap-00000004"), m.dirs)
     assert(m.dirs.last.startsWith("snap-00000005"), m.dirs)
-    assert(m.kind.contains("binpack"), m.kind)
+    assert(m.kind == "binpack", m.kind)
     // the rebased manifest references the WINNER's bloom (parent ∪
     // append): replaying anything admits nothing
     val replay = SnapshotTable.ingest(spark,
@@ -433,7 +433,7 @@ class ConcurrencySpec extends SparkSpec {
     val m = SnapshotTable.readManifestChecked(spark, path, 3L)
     assert(m.tombstones.size == 1 && m.tombstones.head.startsWith("t00000003"), m)
     assert(m.dirs.last.startsWith("snap-00000003"), m.dirs)
-    assert(m.kind.contains("merge-on-read") && m.morKey.contains("doc_id"), m)
+    assert(m.kind == "merge-on-read" && m.morKey.contains("doc_id"), m)
   }
 
   test("a lost pure-delete merge-on-read rebases; a rewrite interleaving refuses") {

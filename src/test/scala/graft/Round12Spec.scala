@@ -466,7 +466,7 @@ class Round12Spec extends SparkSpec {
             val restored = SnapshotTable.readManifestChecked(spark, path,
               SnapshotTable.currentVersion(spark, path).get)
             constraintOn = restored.constraints.nonEmpty
-            textName = restored.schema.get.fieldNames
+            textName = restored.schema.fieldNames
               .find(n => n == "text" || n == "body").get
             record()
           case 14 => // binpack: a pure layout op — content must be

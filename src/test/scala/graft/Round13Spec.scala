@@ -648,6 +648,47 @@ class Round13Spec extends SparkSpec {
     assert(e.getMessage.contains("retained versions"), e.getMessage)
   }
 
+  test("history reports the kind every operator records") {
+    import spark.implicits._
+    val path = tmp("graft-kinds")
+    def rows(ids: Seq[Long]) = ids.map(i => (i, s"doc $i", if (i % 2 == 0) "en" else "fr"))
+      .toDF("doc_id", "text", "language")
+    SnapshotTable.write(spark, (0L until 10L).map(i =>
+      (i, s"doc $i", if (i % 2 == 0) "en" else "fr", s"x$i"))
+      .toDF("doc_id", "text", "lang", "extra"), path)
+    SnapshotTable.ingest(spark, (10L until 20L).map(i =>
+      (i, s"doc $i", if (i % 2 == 0) "en" else "fr", s"x$i"))
+      .toDF("doc_id", "text", "lang", "extra"), path, "text", 1000L)
+    SnapshotTable.addConstraint(spark, path, "pos", "doc_id >= 0")
+    SnapshotTable.dropConstraint(spark, path, "pos")
+    SnapshotTable.renameColumn(spark, path, "lang", "language")
+    SnapshotTable.dropColumn(spark, path, "extra")
+    SnapshotTable.repartitionTable(spark, path, Seq("language"))
+    SnapshotTable.compact(spark, path, textCol = Some("text"), expectedItems = 1000L)
+    // a second small dir, so the binpack has two to merge
+    SnapshotTable.ingest(spark, rows(20L until 30L), path, "text", 1000L)
+    assert(SnapshotTable.compactSmall(spark, path).committed)
+    SnapshotTable.merge(spark, rows(Seq(3L, 40L)), path, "doc_id",
+      textCol = Some("text"), expectedItems = 1000L)
+    SnapshotTable.mergeOnRead(spark, Seq((5L, "mor 5", "fr", false), (6L, "x", "en", true))
+      .toDF("doc_id", "text", "language", "del"), path, "doc_id",
+      deleteCol = Some("del"), textCol = Some("text"), expectedItems = 1000L)
+    SnapshotTable.deleteWherePositional(spark, path, col("doc_id") === 7L)
+    SnapshotTable.updateWherePositional(spark, path, col("doc_id") === 8L,
+      Map("text" -> lit("updated 8")))
+    SnapshotTable.compactPosDeletes(spark, path)
+    SnapshotTable.rollback(spark, path, SnapshotTable.currentVersion(spark, path).get - 1)
+    SnapshotTable.createBranch(spark, path, "audit")
+    SnapshotTable.appendBranch(spark, rows(50L until 55L), path, "audit")
+    SnapshotTable.fastForward(spark, path, "audit")
+    val kinds = SnapshotTable.history(spark, path).orderBy("version")
+      .select("kind").as[String].collect().toSeq
+    assert(kinds == Seq("overwrite", "append", "constraint", "drop-constraint",
+      "renamecol", "dropcol", "repartition", "compact", "append", "binpack", "merge",
+      "merge-on-read", "posdelete", "posupdate", "posdelete-compact", "rollback",
+      "fast-forward"), kinds)
+  }
+
   test("the version log emits a merge-on-read commit as an applyable upsert+delete event") {
     import spark.implicits._
     import graft.streaming.SnapshotChangelog
@@ -899,7 +940,7 @@ class Round13Spec extends SparkSpec {
     // manifest: the big dir survives BY NAME (same files), plus ONE merged dir
     val m5 = SnapshotTable.readManifestChecked(spark, path, 5L)
     assert(m5.dirs.size == 2 && m5.dirs.head == bigDir, m5.dirs)
-    assert(m5.kind.contains("binpack"), m5.kind)
+    assert(m5.kind == "binpack", m5.kind)
     val bigFilesAfter = Option(new java.io.File(path, bigDir).listFiles()).get
       .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
       .map(f => f.getName -> f.length()).sortBy(_._1).toSeq
@@ -1061,19 +1102,32 @@ class Round13Spec extends SparkSpec {
     val path = tmp("graft-fwdcompat")
     SnapshotTable.ingest(spark,
       Seq((1L, "alpha")).toDF("doc_id", "text"), path, "text", 100L)
-    // simulate a future writer: an unknown tagged line in the manifest.
-    // The pre-discipline fallback would have adopted it as the bloom
-    // NAME and bloom resolution would quietly break; it must be loud.
     val mf = java.nio.file.Paths.get(path, "_versions", "v00000001.txt")
-    java.nio.file.Files.write(mf,
-      (new String(java.nio.file.Files.readAllBytes(mf), "UTF-8") +
-        "future-feature:some-payload\n").getBytes("UTF-8"))
-    val e = intercept[IllegalStateException](SnapshotTable.read(spark, path))
+    val committed = new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
+    def readAs(body: String): IllegalStateException = {
+      java.nio.file.Files.write(mf, body.getBytes("UTF-8"))
+      val e = intercept[IllegalStateException](SnapshotTable.read(spark, path))
+      assert(e.getMessage.contains("v00000001.txt"), e.getMessage)
+      e
+    }
+    // simulate a future writer: an unknown tagged line in the manifest
+    // must be loud, not adopted as some other field
+    val e = readAs(committed + "future-feature:some-payload\n")
     assert(e.getMessage.contains("unknown tag 'future-feature:'"), e.getMessage)
-    // bare legacy bloom names (no ':') still parse as the bloom
-    java.nio.file.Files.write(mf,
-      new String(java.nio.file.Files.readAllBytes(mf), "UTF-8")
-        .replace("future-feature:some-payload\n", "").getBytes("UTF-8"))
+    // a bare untagged line is not a bloom name: it fails the same way
+    val eBare = readAs(committed + "b00000001-deadbeef.bin\n")
+    assert(eBare.getMessage.contains("unknown tag 'b00000001-deadbeef.bin:'"),
+      eBare.getMessage)
+    // every manifest graft writes carries schema:, kind: and ts:; one
+    // without them is refused, naming the missing tag
+    Seq("schema", "kind", "ts").foreach { tag =>
+      val body = committed.split("\n").filterNot(_.startsWith(tag + ":"))
+        .mkString("", "\n", "\n")
+      assert(body != committed, s"no $tag: line in $committed")
+      val eMissing = readAs(body)
+      assert(eMissing.getMessage.contains(s"no '$tag:' line"), eMissing.getMessage)
+    }
+    java.nio.file.Files.write(mf, committed.getBytes("UTF-8"))
     assert(SnapshotTable.read(spark, path).count() == 1L)
   }
 
@@ -1256,7 +1310,7 @@ class Round13Spec extends SparkSpec {
     val ahead = System.currentTimeMillis() + 60000L
     editTs(p1, 1L, ahead)
     SnapshotTable.ingest(spark, Seq((2L, "b")).toDF("doc_id", "text"), p1, "text", 100L)
-    assert(SnapshotTable.readManifestChecked(spark, p1, 2L).ts.contains(ahead + 1L))
+    assert(SnapshotTable.readManifestChecked(spark, p1, 2L).ts == ahead + 1L)
     // rapid same-tick commits: instants stay strictly increasing, and
     // every history row round-trips to exactly its own version
     (3L to 6L).foreach(i => SnapshotTable.ingest(spark,
