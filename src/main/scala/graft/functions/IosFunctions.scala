@@ -5,9 +5,15 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Columnar re-expressions of the reference toolbox's per-record
-  * semantics (cioos_data_transform/ios_data_transform). Everything here
-  * is a `Column -> Column` built from Spark built-ins, so Catalyst sees
-  * through it (codegen, pushdown) — no UDFs.
+  * semantics (cioos_data_transform/ios_data_transform): `Column ->
+  * Column` functions built from Spark built-ins, so Catalyst sees
+  * through them (codegen, pushdown) — no UDFs.
+  *
+  * The channel rules ([[channelRules]], [[bodcRules]]) also have a
+  * per-channel evaluator over the same two tables ([[channelClass]],
+  * [[bodcBaseOf]], [[bodcCodeOf]]), so a file's channels can be
+  * standardized once each inside its parse task rather than once per
+  * value row.
   */
 object IosFunctions {
 
@@ -217,6 +223,38 @@ object IosFunctions {
     * side of __get_bodc_code (OceanNcVar.py:170-258).
     */
   def cfCanonicalUnits(cls: Column, bodc: Column): Column = cfAttribute(_.units)(cls, bodc)
+
+  // --- The channel rules, one channel at a time -----------------------
+
+  /** Case-blind containment as the Column rules test it: Spark's
+    * `upper()` maps case through ICU's root locale.
+    */
+  private def containsAnyOf(s: String, kws: Seq[String]): Boolean = {
+    val u = s.toUpperCase(java.util.Locale.ROOT)
+    kws.exists(k => u.contains(k.toUpperCase(java.util.Locale.ROOT)))
+  }
+
+  /** [[classifyChannel]] of one channel name. */
+  def channelClass(name: String): String =
+    channelRules.collectFirst {
+      case (cls, inc, exc) if containsAnyOf(name, inc) && !containsAnyOf(name, exc) => cls
+    }.getOrElse("ignore")
+
+  /** [[bodcBase]] of one channel of a kept class `cls`. */
+  def bodcBaseOf(cls: String, name: String, units: String): String = {
+    val (keyed, fallback) = bodcRules.filter(_.cls == cls).partition(_.keywords.nonEmpty)
+    keyed.find(r => containsAnyOf(if (r.onName) name else units, r.keywords))
+      .getOrElse(fallback.head).base
+  }
+
+  /** [[bodcCode]] of the `rank`-th channel sharing `base`, with the same
+    * strings: `lpad` keeps two characters, so rank 100 reads `10`.
+    */
+  def bodcCodeOf(cls: String, base: String, rank: Int): String = cls match {
+    case "pressure" | "depth" => base
+    case "nutrient" => base + rank
+    case _ => base + f"$rank%02d".take(2)
+  }
 
   // --- Unit conversions (GSW-adjacent, deterministic scalar math) ------
 

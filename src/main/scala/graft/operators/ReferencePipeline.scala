@@ -3,9 +3,9 @@ package graft.operators
 import graft.Jobs
 import graft.functions.{Geo, IosFunctions}
 import graft.sources.IosReader
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import java.sql.Timestamp
 
 /** The reference toolbox's end-to-end job, Spark-native: what
   * `ios_data_transform_script.py` does per file (parse → standardize
@@ -13,16 +13,18 @@ import org.apache.spark.sql.functions._
   * as one declarative plan over the whole archive.
   *
   * Scale shape: the archive is listed once per call, and each file is
-  * parsed once, executor-side, into one row carrying its profile
-  * metadata and its values; geo-tagging is unrolled point-in-polygon
-  * (map-only), evaluated once per file before the values are exploded;
-  * channel standardization is map-only column logic; BODC suffix dedup
-  * is one window over the value rows keyed on the file's full path
-  * (millions of small windows, no global sort, no join, and files that
-  * share a name in different directories keep apart). A conversion runs
-  * that plan once: the sink partitions by variable class for prunable
-  * downstream reads, and the per-variable sidecar and the summary read
-  * the written product back.
+  * parsed and standardized once, executor-side, into one row carrying
+  * its profile metadata and its kept channels' values: the channel rules
+  * run once per channel, and a duplicate's BODC suffix is counted within
+  * its own file, so `standardize` is map-only (no window, no exchange)
+  * and files that share a name in different directories keep apart.
+  * Geo-tagging is unrolled point-in-polygon (map-only), evaluated once
+  * per file before the values are exploded. A conversion runs that plan
+  * once through one rebalance on the variable class (one file per class
+  * directory at small scale, advisory-size files at large scale) into a
+  * sink partitioned by class for prunable downstream reads; the
+  * per-variable sidecar and the summary both come from one per-file
+  * aggregate of the written product.
   */
 object ReferencePipeline {
 
@@ -36,34 +38,17 @@ object ReferencePipeline {
   private def standardize(files: Dataset[(String, String)],
                           geoCatalog: Seq[Geo.NamedPolygon]): DataFrame = {
     import files.sparkSession.implicits._
-    val perFile = files.map { case (uri, content) =>
+    files.map { case (uri, content) =>
       val p = IosReader.parseRaw(uri, content)
-      val prof = IosReader.profileOf(p)
-      (uri, prof.mission, prof.station, prof.event_number, prof.latitude, prof.longitude,
-        prof.start_time_utc, IosReader.observationsOf(p).toSeq)
-    }.toDF("path", "mission", "station", "event_number", "latitude", "longitude",
-      "start_time_utc", "obs")
+      (IosReader.missionOf(p), p.location.get("STATION"), p.location.get("EVENT NUMBER"),
+        p.latitude, p.longitude, p.startTimeUtc.map(Timestamp.from),
+        IosReader.standardizedOf(p).toSeq)
+    }.toDF("mission", "station", "event_number", "latitude", "longitude", "start_time_utc", "obs")
       // geoAreaLarge: O(1) expression size, so real catalogs (50+
       // polygons) don't blow analyzer recursion
       .withColumn("geo_code", Geo.geoAreaLarge(col("longitude"), col("latitude"), geoCatalog))
-
-    // one rank per channel number within (file × base code); the file's
-    // path, not its name, keys the window, so same-named files in two
-    // directories never share suffix counters
-    val byBase = Window.partitionBy(col("path"), col("bodc_base")).orderBy(col("channel_no"))
-    perFile
-      .select(col("path"), inline(col("obs")), col("mission"), col("station"),
-        col("event_number"), col("latitude"), col("longitude"), col("start_time_utc"),
-        col("geo_code"))
-      .withColumn("var_class", IosFunctions.classifyChannel(col("channel_name")))
-      .filter(col("var_class") =!= "ignore")
-      .withColumn("bodc_base",
-        IosFunctions.bodcBase(col("var_class"), col("channel_name"), col("units")))
-      .withColumn("bodc", IosFunctions.bodcCode(col("var_class"), col("bodc_base"),
-        dense_rank().over(byBase)))
-      .select("filename", "channel_no", "channel_name", "units", "row_idx", "raw", "value",
-        "obs_time_utc", "var_class", "bodc", "mission", "station", "event_number",
-        "latitude", "longitude", "start_time_utc", "geo_code")
+      .select(inline(col("obs")), col("mission"), col("station"), col("event_number"),
+        col("latitude"), col("longitude"), col("start_time_utc"), col("geo_code"))
   }
 
   /** Per-dataset CF global attributes — the metadata block
@@ -102,8 +87,7 @@ object ReferencePipeline {
         // mission id normalized to %04d-%03d like write_ctd_ncfile.py:48-51;
         // unparsable missions keep their raw string (we convert archives,
         // not crash on them — soft-fail semantics like the outer script)
-        val missionRaw = p.administration.get("MISSION")
-          .orElse(p.administration.get("CRUISE")).map(_.trim).getOrElse("")
+        val missionRaw = IosReader.missionOf(p).map(_.trim).getOrElse("")
         val missionId = missionRaw.split('-') match {
           case Array(a, b) if scala.util.Try(a.toInt).isSuccess &&
               scala.util.Try(b.toInt).isSuccess => f"${a.toInt}%04d-${b.toInt}%03d"
@@ -144,33 +128,39 @@ object ReferencePipeline {
     * (file, variable), derived from the standardized observations plus
     * the four coordinate variables the reference adds to every dataset
     * (time / latitude / longitude / profile, write_ctd_ncfile.py:95-120).
-    * Plan shape: a distinct over the already-standardized channel
-    * attributes (tiny — #files × #channels) unioned with four literal
-    * rows per profile row; everything map-side below the distinct.
+    * Plan shape: [[perFile]]'s aggregate, then map-only: each file's
+    * variable set and the four coordinate rows exploded together.
     */
-  def cfVariableAttributes(std: DataFrame): DataFrame = {
-    val chans = std
-      .select(col("filename"), col("var_class"), col("bodc")).distinct()
-      .select(col("filename"), col("bodc").as("name"),
-        IosFunctions.cfLongName(col("var_class"), col("bodc")).as("long_name"),
-        IosFunctions.cfStandardName(col("var_class"), col("bodc")).as("standard_name"),
-        IosFunctions.cfCanonicalUnits(col("var_class"), col("bodc")).as("units"),
-        lit(null).cast("string").as("cf_role"))
-    val files = std.select(col("filename")).distinct()
+  def cfVariableAttributes(std: DataFrame): DataFrame = variableAttributes(perFile(std))
+
+  /** One row per (filename, mission, geo_code): the set of its
+    * (var_class, bodc) variables, its value rows and its non-null values.
+    */
+  private def perFile(std: DataFrame): DataFrame =
+    std.groupBy(col("filename"), col("mission"), col("geo_code"))
+      .agg(collect_set(struct(col("var_class"), col("bodc"))).as("vars"),
+        count(lit(1)).as("n_values"), count(col("value")).as("n_nonnull"))
+
+  private def variableAttributes(perFile: DataFrame): DataFrame = {
+    def attrs(name: Column, longName: Column, standardName: Column, units: Column,
+              cfRole: Column): Column =
+      struct(name.as("name"), longName.cast("string").as("long_name"),
+        standardName.cast("string").as("standard_name"), units.cast("string").as("units"),
+        cfRole.cast("string").as("cf_role"))
+    val measured = transform(col("vars"), v => attrs(v("bodc"),
+      IosFunctions.cfLongName(v("var_class"), v("bodc")),
+      IosFunctions.cfStandardName(v("var_class"), v("bodc")),
+      IosFunctions.cfCanonicalUnits(v("var_class"), v("bodc")), lit(null)))
     // the coordinate variables every dataset gets (add_var's str_id /
     // profile / lat / lon / time branches; lon's standard_name corrected
     // — see IosFunctions.cfStandardName)
-    val coords = Seq(
+    val coords = array(Seq(
       ("time", "time", "time", "seconds since 1970-01-01 00:00:00+0000", null: String),
       ("latitude", "Latitude", "latitude", "degrees_north", null: String),
       ("longitude", "Longitude", "longitude", "degrees_east", null: String),
       ("profile", null: String, null: String, null: String, "profile_id"))
-    val coordRows = coords.map { case (n, ln, sn, u, role) =>
-      files.select(col("filename"), lit(n).as("name"),
-        lit(ln).cast("string").as("long_name"), lit(sn).cast("string").as("standard_name"),
-        lit(u).cast("string").as("units"), lit(role).cast("string").as("cf_role"))
-    }.reduce(_ unionByName _)
-    chans.unionByName(coordRows)
+      .map { case (n, ln, sn, u, role) => attrs(lit(n), lit(ln), lit(sn), lit(u), lit(role)) }: _*)
+    perFile.select(col("filename"), inline(concat(measured, coords)))
   }
 
   /** Full conversion: standardized observations → parquet partitioned by
@@ -189,18 +179,16 @@ object ReferencePipeline {
     def phase[T](what: String)(body: => T): T = Jobs.phase(spark, "convertArchive", what)(body)
     val files = IosReader.rawFiles(spark, pathGlob)
     val std = standardize(files, geoCatalog)
-    phase("write product")(
-      std.write.mode("overwrite").partitionBy("var_class").parquet(outDir))
+    phase("write product")(std.hint("rebalance", col("var_class"))
+      .write.mode("overwrite").partitionBy("var_class").parquet(outDir))
     phase("write cf attributes")(
       cfAttributes(files, datasetType).write.mode("overwrite").json(s"$outDir/_cf_attributes"))
-    // the sidecar and the summary scan the written product (declared
+    // the sidecar and the summary aggregate the written product (declared
     // schema: no inference job) instead of parsing the archive again
-    val product = spark.read.schema(std.schema).parquet(outDir)
+    val byFile = perFile(spark.read.schema(std.schema).parquet(outDir))
     phase("write cf variable attributes")(
-      cfVariableAttributes(product).write.mode("overwrite")
-        .json(s"$outDir/_cf_variable_attributes"))
-    product.groupBy(col("filename"), col("mission"), col("geo_code"))
-      .agg(countDistinct(col("bodc")).as("n_vars"), count(lit(1)).as("n_values"),
-        count(col("value")).as("n_nonnull"))
+      variableAttributes(byFile).write.mode("overwrite").json(s"$outDir/_cf_variable_attributes"))
+    byFile.select(col("filename"), col("mission"), col("geo_code"),
+      size(col("vars")).cast("long").as("n_vars"), col("n_values"), col("n_nonnull"))
   }
 }

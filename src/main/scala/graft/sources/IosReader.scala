@@ -1,8 +1,10 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import graft.functions.IosFunctions
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.datasources.DataSource
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import java.net.URI
 import java.sql.Timestamp
@@ -38,6 +40,22 @@ case class IosObservation(
     value: Option[Double],
     obs_time_utc: Option[Timestamp])
 
+/** One [[IosObservation]] of a kept channel, with the channel's
+  * standardized variable class and BODC code: a row of
+  * `ReferencePipeline.standardize` before its profile columns.
+  */
+case class IosStandardized(
+    filename: String,
+    channel_no: Int,
+    channel_name: String,
+    units: String,
+    row_idx: Int,
+    raw: String,
+    value: Option[Double],
+    obs_time_utc: Option[Timestamp],
+    var_class: String,
+    bodc: String)
+
 /** Spark reader for IOS observation files: the driver only *lists* files;
   * content is read and parsed executor-side (`wholetext` rows →
   * mapPartitions over [[IosFileParser]]) so ingest parallelism scales
@@ -47,19 +65,38 @@ case class IosObservation(
   * `format("ios")` source emits through too, and both read files as
   * UTF-8 (the text source's decoding), so the two readers agree row for
   * row. The reference's per-file pipeline (ObsFile.import_data →
-  * write_ctd_ncfile) becomes: `observations()` long rows → columnar
-  * transforms (classification, BODC codes — graft.functions) →
-  * partitioned parquet sink (`ReferencePipeline.convertArchive`).
+  * write_ctd_ncfile) becomes: each file's long rows standardized in its
+  * parse task ([[standardizedOf]]: classification and BODC codes by the
+  * rule tables of graft.functions) → partitioned parquet sink
+  * (`ReferencePipeline.convertArchive`).
   */
 object IosReader {
 
+  /** What `pattern` (a path or a glob) matches, resolved on the driver
+    * with the session's Hadoop conf. A pattern that matches nothing fails
+    * with the `[PATH_NOT_FOUND]` error Spark's file sources raise for it,
+    * naming the qualified pattern.
+    */
+  private[graft] def globStatus(spark: SparkSession, pattern: String): Seq[FileStatus] = {
+    val path = new Path(pattern)
+    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
+    val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
+    if (matched.isEmpty) throw new AnalysisException(
+      "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(path).toString))
+    matched
+  }
+
   /** (file URI, whole content) per file, from one listing of `pathGlob`.
     * The URI is unique per file, so it can key per-file work across
-    * directories; [[parseRaw]] turns it into the file's name.
+    * directories; [[parseRaw]] turns it into the file's name. The text
+    * source gets the paths [[globStatus]] matched, not the glob, so it
+    * neither globs again nor stats the glob as a literal path; a matched
+    * directory is read whole.
     */
   private[graft] def rawFiles(spark: SparkSession, pathGlob: String): Dataset[(String, String)] = {
     import spark.implicits._
-    spark.read.option("wholetext", "true").format("text").load(pathGlob)
+    spark.read.option("wholetext", "true").option(DataSource.GLOB_PATHS_KEY, "false")
+      .format("text").load(globStatus(spark, pathGlob).map(_.getPath.toString): _*)
       .select(input_file_name(), col("value")).as[(String, String)]
   }
 
@@ -71,10 +108,13 @@ object IosReader {
   private[graft] def parseRaw(uri: String, content: String): IosFileParser.Parsed =
     IosFileParser.parse(new Path(new URI(uri)).getName, content)
 
+  /** A file's mission: its MISSION field, else its CRUISE field. */
+  private[graft] def missionOf(p: IosFileParser.Parsed): Option[String] =
+    p.administration.get("MISSION").orElse(p.administration.get("CRUISE"))
+
   /** One parsed file's header metadata, coordinates and UTC start time. */
   private[graft] def profileOf(p: IosFileParser.Parsed): IosProfile =
-    IosProfile(p.filename, p.headerVersion,
-      p.administration.get("MISSION").orElse(p.administration.get("CRUISE")),
+    IosProfile(p.filename, p.headerVersion, missionOf(p),
       p.administration.get("AGENCY"), p.administration.get("PROJECT"),
       p.location.get("STATION"), p.location.get("EVENT NUMBER"),
       p.latitude, p.longitude,
@@ -86,8 +126,33 @@ object IosReader {
   private[graft] def observationsOf(p: IosFileParser.Parsed): Iterator[IosObservation] =
     IosFileParser.observations(p).map { o =>
       IosObservation(p.filename, o.channel.no, o.channel.name, o.channel.units, o.row, o.raw,
-        o.value, o.obsMicros.map(m => Timestamp.from(DateTimeUtils.microsToInstant(m))))
+        o.value, obsTime(o))
     }
+
+  private def obsTime(o: IosFileParser.Observation): Option[Timestamp] =
+    o.obsMicros.map(m => Timestamp.from(DateTimeUtils.microsToInstant(m)))
+
+  /** One parsed file's values of kept channels, standardized: the
+    * channel rules run once per channel ([[IosFunctions.channelClass]],
+    * [[IosFunctions.bodcBaseOf]]), and a channel's BODC suffix is its
+    * dense rank by channel number among the kept channels sharing its
+    * base ([[IosFunctions.bodcCodeOf]]).
+    */
+  private[graft] def standardizedOf(p: IosFileParser.Parsed): Iterator[IosStandardized] = {
+    val kept = p.channels.map(ch => (ch, IosFunctions.channelClass(ch.name)))
+      .collect { case (ch, cls) if cls != "ignore" =>
+        (ch, cls, IosFunctions.bodcBaseOf(cls, ch.name, ch.units))
+      }
+    val codes = kept.map { case (ch, cls, base) =>
+      val rank = kept.collect { case (o, _, b) if b == base && o.no < ch.no => o.no }.distinct.size + 1
+      ch -> (cls, IosFunctions.bodcCodeOf(cls, base, rank))
+    }.toMap
+    IosFileParser.observations(p, codes.contains).map { o =>
+      val (cls, bodc) = codes(o.channel)
+      IosStandardized(p.filename, o.channel.no, o.channel.name, o.channel.units, o.row, o.raw,
+        o.value, obsTime(o), cls, bodc)
+    }
+  }
 
   /** One row per file: [[profileOf]] each file. */
   def profiles(spark: SparkSession, pathGlob: String): DataFrame = {

@@ -1,6 +1,7 @@
 package graft.sources.v2
 
-import graft.sources.IosFileParser
+import graft.sources.{IosFileParser, IosReader}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -81,18 +82,13 @@ object IosTable {
     StructField("value", DoubleType),
     StructField("obs_time_utc", TimestampType)))
 
-  /** The files `pattern` (a path or a glob) matches. A pattern that
-    * matches nothing fails with the `[PATH_NOT_FOUND]` error Spark's file
-    * sources (and so `IosReader`) raise for it, and one that matches only
-    * directories fails too: either way the scan would silently be empty.
+  /** The files `pattern` (a path or a glob) matches, by
+    * [[IosReader.globStatus]]: a pattern that matches nothing fails as it
+    * does in `IosReader`, and one that matches only directories fails
+    * too: either way the scan would silently be empty.
     */
-  def expandGlob(pattern: String): Seq[String] = {
-    val path = new org.apache.hadoop.fs.Path(pattern)
-    val fs = path.getFileSystem(new org.apache.hadoop.conf.Configuration())
-    val matched = Option(fs.globStatus(path)).map(_.toSeq).getOrElse(Seq.empty)
-    if (matched.isEmpty) throw new org.apache.spark.sql.AnalysisException(
-      "PATH_NOT_FOUND", Map("path" -> fs.makeQualified(path).toString))
-    val files = matched.filter(_.isFile).map(_.getPath.toString)
+  def expandGlob(spark: SparkSession, pattern: String): Seq[String] = {
+    val files = IosReader.globStatus(spark, pattern).filter(_.isFile).map(_.getPath.toString)
     require(files.nonEmpty, s"ios: $pattern matches only directories, no file")
     files
   }
@@ -218,7 +214,7 @@ class IosScan(pathPatterns: Seq[String], required: StructType,
   }
   override def planInputPartitions(): Array[InputPartition] = {
     val bloom = fileBloom.map(IosBloom.decode)
-    pathPatterns.flatMap(IosTable.expandGlob).distinct
+    pathPatterns.flatMap(IosTable.expandGlob(SparkSession.active, _)).distinct
       .filter { f =>
         val name = f.split('/').last
         val attrs = Map[String, Any]("filename" -> name)

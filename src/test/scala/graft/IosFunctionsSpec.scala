@@ -104,6 +104,60 @@ class IosFunctionsSpec extends SparkSpec {
         F.cfCanonicalUnits($"cls", $"bodc"))
       .as[(String, String, String, String, String, String, String, String)].collect()
     assert(got.toSeq == cases)
+
+    /** Class, base and rank-1 code of each (name, units) by the Column
+      * rules and by the per-channel evaluator of the same tables (base
+      * and code NULL for an ignored channel).
+      */
+    def bothWays(inputs: Seq[(String, String)]): (Seq[Product], Seq[Product]) = {
+      val columns = inputs.toDF("name", "units")
+        .withColumn("cls", F.classifyChannel($"name"))
+        .withColumn("base", F.bodcBase($"cls", $"name", $"units"))
+        .select($"name", $"units", $"cls", $"base", F.bodcCode($"cls", $"base", lit(1)))
+        .as[(String, String, String, String, String)].collect().toSeq
+      val perChannel = inputs.map { case (name, units) =>
+        val cls = F.channelClass(name)
+        if (cls == "ignore") (name, units, cls, null, null)
+        else {
+          val base = F.bodcBaseOf(cls, name, units)
+          (name, units, cls, base, F.bodcCodeOf(cls, base, 1))
+        }
+      }
+      (columns, perChannel)
+    }
+    val typed = cases.map(c => (c._1, c._2, c._3, c._4, c._5))
+    val (columns, perChannel) = bothWays(cases.map(c => (c._1, c._2)))
+    assert(columns == typed)
+    assert(perChannel == typed)
+
+    // mixed case and non-ASCII: Spark's upper() maps case through ICU's
+    // root locale, the per-channel evaluator through Locale.ROOT
+    val unusual = Seq(
+      ("Salinité", "PSS-78", "ignore", null, null), // É is no Y
+      ("salinity", "pss-78", "salinity", "PSALST", "PSALST01"),
+      ("Salınıty", "PSS-78", "salinity", "PSALST", "PSALST01"), // dotless ı uppercases to I
+      ("ſalinity", "‰", "salinity", "SSALST", "SSALST01"), // long ſ uppercases to S
+      ("temperature:its-90", "°C", "temperature", "TEMPST", "TEMPST01"),
+      ("Temperature", "°C (its-90)", "temperature", "TEMPS9", "TEMPS901"),
+      ("Température", "°C", "ignore", null, null),
+      ("oxygen:dissolved", "ml/l", "oxygen", "DOXYZZ", "DOXYZZ01"),
+      ("Oxygen:Dissolved", "µmol/kg", "oxygen", "DOXY", "DOXY01"), // µ uppercases to Greek Μ
+      ("SILICATE", "µmol/L", "nutrient", "SLCAAAZ", "SLCAAAZ1"),
+      ("Phosphate:Flag", "umol/L", "ignore", null, null))
+    val (unusualColumns, unusualPerChannel) = bothWays(unusual.map(c => (c._1, c._2)))
+    assert(unusualColumns == unusual)
+    assert(unusualPerChannel == unusual)
+
+    // suffix ranks: lpad keeps two characters, so rank 100 reads 10
+    val ranks = Seq(1, 9, 10, 11, 100)
+    val coded = Seq(("temperature", "TEMPS9"), ("nutrient", "NTRZAAZ"), ("pressure", "PRESPR01"))
+      .flatMap { case (cls, base) => ranks.map(r => (cls, base, r)) }
+    val rankedColumns = coded.toDF("cls", "base", "rank")
+      .select(F.bodcCode($"cls", $"base", $"rank")).as[String].collect().toSeq
+    val want = Seq("TEMPS901", "TEMPS909", "TEMPS910", "TEMPS911", "TEMPS910",
+      "NTRZAAZ1", "NTRZAAZ9", "NTRZAAZ10", "NTRZAAZ11", "NTRZAAZ100") ++ Seq.fill(5)("PRESPR01")
+    assert(rankedColumns == want)
+    assert(coded.map { case (cls, base, r) => F.bodcCodeOf(cls, base, r) } == want)
   }
 
   test("point-in-polygon: interior, exterior, multi-containment, None") {

@@ -8,7 +8,9 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.datasources.text.TextFileFormat
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.functions._
 
 /** End-to-end conversion of the IOS fixture corpus
@@ -201,6 +203,24 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(collect(plan) { case j: BaseJoinExec => j }.isEmpty, plan.treeString)
   }
 
+  test("standardize is map-only: no window and no exchange in its executed plan") {
+    val plan = ReferencePipeline.standardize(spark, s"$base/*/*.*")
+      .queryExecution.executedPlan
+    assert(collect(plan) { case w: WindowExec => w }.isEmpty, plan.treeString)
+    assert(collect(plan) { case e: Exchange => e }.isEmpty, plan.treeString)
+  }
+
+  test("convertArchive writes one parquet file per var_class directory") {
+    val out = Paths.get(tmp("ios_one_file_per_class"))
+    ReferencePipeline.convertArchive(spark, s"$base/*/*.*", out.toString)
+    val perClass = out.toFile.listFiles().filter(_.getName.startsWith("var_class="))
+      .map(d => d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+    // the corpus's seven classes, depth to nutrient
+    assert(perClass.keySet == Set("depth", "pressure", "temperature", "salinity", "oxygen",
+      "conductivity", "nutrient").map("var_class=" + _), perClass)
+    assert(perClass.values.forall(_ == 1), perClass)
+  }
+
   /** One conversion of a 36-file archive — six copies of each fixture
     * profile, enough files that listing them runs a Spark job — with the
     * jobs it ran and the archive's bytes.
@@ -227,6 +247,15 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val phases = rest.flatMap(_.description).map(_.stripPrefix("graft convertArchive: ")).toSet
     assert(phases == Set("write product", "write cf attributes",
       "write cf variable attributes"), phases)
+  }
+
+  test("convertArchive runs at most 6 jobs on the 36-file archive") {
+    val (jobs, _) = probedConversion
+    // the listing, the product's rebalance and write, the global
+    // sidecar, and the per-file aggregate and write of the variable
+    // sidecar: a window in standardize or a distinct in the sidecar
+    // would each add one
+    assert(jobs.size <= 6, jobs.map(_.description).mkString("\n"))
   }
 
   test("one convertArchive call reads the archive's text at most twice") {
