@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** Benchmark main: runs every registered query at SPARK_GRAFT_SF_DIR and
   * prints the driver's one-line JSON. `count()` forces full execution of
@@ -176,19 +178,32 @@ object Bench {
             Option(e.getMessage).getOrElse("").takeWhile(_ != '\n').take(160)))
       }
     }
+    // One stderr line per sweep: the classes Spark's codegen compiled
+    // during it and their compile seconds (the stdout JSON is unchanged).
+    // Sweep 1's count sizes Sessions.CodegenCacheEntries; a sweep 2 that
+    // compiles again means the cache evicted classes before reuse.
+    def codegen[T](sweep: Int)(body: => T): T = {
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val ns0 = CodeGenerator.compileTime
+      val out = body
+      System.err.println(s"graft.Bench: sweep $sweep codegen compiled " +
+        s"${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0} classes in " +
+        f"${(CodeGenerator.compileTime - ns0) / 1e9}%.2f s")
+      out
+    }
     // Sweep 1: every query once (these are the "cold" numbers).
     val preSweep1Load = loadAvg()
-    val sweep1 = selected.map { case (name, fn) => (name, fn, once(fn)) }
+    val sweep1 = codegen(1)(selected.map { case (name, fn) => (name, fn, once(fn)) })
     val preSweep2Load = loadAvg()
     // Sweep 2: every query again, minutes of other work later — except
     // queries that already failed (the error is the result; re-running
     // would bill a second failure's latency for nothing).
-    val twoSweeps = sweep1.map { case (name, fn, (cold, err1)) =>
+    val twoSweeps = codegen(2)(sweep1.map { case (name, fn, (cold, err1)) =>
       val (warm, err, sweeps) =
         if (err1.isDefined) (cold, err1, Seq(cold))
         else { val (w, e2) = once(fn); (math.min(cold, w), e2, Seq(cold, w)) }
       (R(name, cold, warm, err, sweeps), fn)
-    }
+    })
     // Sweep 3 (ARBITRATION, round-12 calibration): min-of-two discards a
     // spike that lands on ONE sweep, but r11 showed a softer failure
     // mode — ambient load below the contention flag still inflated

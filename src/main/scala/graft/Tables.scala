@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Schema-pinned readers for the driver-generated test tables.
   *
   * Every operator in the library takes `(SparkSession, sfDir)` and loads
   * through here so scans stay uniform (parquet, pushdown-friendly — no
-  * inferSchema surprises, no caching side effects).
+  * inferSchema surprises, no caching side effects). Schema-pinned: each
+  * load hands the reader the schema that inference would return, read
+  * from the same parquet footer on the driver ([[parquetSchema]]), so
+  * building a query over these tables launches no Spark job.
   *
   * `events.parquet` has shipped with two physical types for `ts` across
   * driver revisions: a nanosecond-precision INT64 (readable only with
@@ -37,7 +42,8 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(parquetSchema(spark, path)).parquet(path)
     if (name == "events") {
       val ts = df.schema("ts").dataType match {
         // nano INT64 vintage: integer `div` (not `/`) — double division
@@ -71,6 +77,22 @@ object Tables {
       df.select(col("event_id"), ts.as("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
     } else df
+  }
+
+  /** The schema `spark.read.parquet(path)` infers for a parquet file or a
+    * flat directory of Spark-written part files (no summary files),
+    * without the Spark job inference runs: the footer inference reads,
+    * the first part file by path, read on the driver.
+    */
+  def parquetSchema(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val footer = p.getFileSystem(spark.sessionState.newHadoopConf()).listStatus(p)
+      .filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.toString).headOption
+    footer.flatMap(f => GraftParquetShim.footerSchema(spark, Seq(f))).getOrElse(
+      throw new IllegalStateException(s"no parquet footer to read a schema from at $path"))
   }
 
   /** Guarantee at least the ambient parallelism before heavy per-row work.
@@ -154,6 +176,18 @@ object Sessions {
     // falling back to a shuffle
     .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
     .config("spark.ui.enabled", "false")
+    // Spark's generated-class cache (default 100 entries) evicts every
+    // class of a warm registry pass before it is reused, so each repeat
+    // query compiled again. A static conf: the first session of a JVM
+    // fixes it.
+    .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+
+  /** [[builderDefaults]]' generated-class cache size: the distinct
+    * classes one full 219-query `graft.Bench` sweep compiles (1,675 at
+    * sf0.1, then 21 more in its second sweep; Bench prints both on
+    * stderr), times about 2.4 for larger scales' plan variants.
+    */
+  val CodegenCacheEntries = 4096
 
   def local(cores: Int, shufflePartitions: Int): SparkSession = {
     val spark = builderDefaults(SparkSession.builder()

@@ -190,12 +190,13 @@ object IosFunctions {
   /** The BODC code of the `rank`-th channel (1-based) sharing one
     * [[bodcBase]] within a file — the window equivalent of OceanNcVar's
     * "retry until the code is unused" loop: pressure and depth keep their
-    * fixed names, nutrients take a bare suffix, the rest two digits.
+    * fixed names, nutrients take a bare suffix, the rest at least two
+    * digits (rank 100 reads `100`, never the `10` of rank 10).
     */
   def bodcCode(cls: Column, base: Column, rank: Column): Column =
     when(cls.isin("pressure", "depth"), base)
       .when(cls === "nutrient", concat(base, rank.cast("string")))
-      .otherwise(concat(base, lpad(rank.cast("string"), 2, "0")))
+      .otherwise(concat(base, format_string("%02d", rank)))
 
   /** One CF attribute of a standardized channel from its class and
     * suffixed BODC code: the `field` of the class's rule whose base the
@@ -248,12 +249,12 @@ object IosFunctions {
   }
 
   /** [[bodcCode]] of the `rank`-th channel sharing `base`, with the same
-    * strings: `lpad` keeps two characters, so rank 100 reads `10`.
+    * strings.
     */
   def bodcCodeOf(cls: String, base: String, rank: Int): String = cls match {
     case "pressure" | "depth" => base
     case "nutrient" => base + rank
-    case _ => base + f"$rank%02d".take(2)
+    case _ => base + f"$rank%02d"
   }
 
   // --- Unit conversions (GSW-adjacent, deterministic scalar math) ------

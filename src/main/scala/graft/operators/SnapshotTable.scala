@@ -1367,11 +1367,11 @@ object SnapshotTable {
     * V2 aggregate-pushdown evolution guard's probe).
     */
   private[graft] def firstDataFile(spark: SparkSession, path: String,
-                                   dir: String): Option[Path] = {
+                                   dir: String): Option[org.apache.hadoop.fs.FileStatus] = {
     val root = new Path(path, dir)
     val f = fs(spark, root)
     if (!f.exists(root)) None
-    else listDataFiles(f, root).headOption.map(_.getPath)
+    else listDataFiles(f, root).headOption
   }
 
   /** Data files under one snapshot directory, descending through

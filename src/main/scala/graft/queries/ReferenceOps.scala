@@ -175,7 +175,7 @@ object ReferenceOps {
       SELECT p_partkey, p_brand, channel, units, var_class,
         CASE WHEN var_class IN ('pressure','depth') THEN bodc_base
              WHEN var_class = 'nutrient' THEN bodc_base || CAST(rn AS VARCHAR)
-             ELSE bodc_base || lpad(CAST(rn AS VARCHAR), 2, '0') END AS bodc
+             ELSE bodc_base || printf('%02d', rn) END AS bodc
       FROM (SELECT *, ROW_NUMBER() OVER (PARTITION BY p_brand, bodc_base ORDER BY p_partkey) AS rn
             FROM coded) z
       ORDER BY p_partkey"""

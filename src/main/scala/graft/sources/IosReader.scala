@@ -3,8 +3,7 @@ package graft.sources
 import graft.functions.IosFunctions
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.execution.datasources.DataSource
-import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Dataset, GraftSqlShim, SparkSession}
 import org.apache.spark.sql.functions._
 import java.net.URI
 import java.sql.Timestamp
@@ -89,14 +88,14 @@ object IosReader {
   /** (file URI, whole content) per file, from one listing of `pathGlob`.
     * The URI is unique per file, so it can key per-file work across
     * directories; [[parseRaw]] turns it into the file's name. The text
-    * source gets the paths [[globStatus]] matched, not the glob, so it
-    * neither globs again nor stats the glob as a literal path; a matched
-    * directory is read whole.
+    * source gets the statuses [[globStatus]] matched, not the glob, so it
+    * neither globs again, nor stats the glob as a literal path, nor lists
+    * a matched file again (no listing job however many files match); a
+    * matched directory is read whole.
     */
   private[graft] def rawFiles(spark: SparkSession, pathGlob: String): Dataset[(String, String)] = {
     import spark.implicits._
-    spark.read.option("wholetext", "true").option(DataSource.GLOB_PATHS_KEY, "false")
-      .format("text").load(globStatus(spark, pathGlob).map(_.getPath.toString): _*)
+    GraftSqlShim.wholeTextFiles(spark, globStatus(spark, pathGlob))
       .select(input_file_name(), col("value")).as[(String, String)]
   }
 

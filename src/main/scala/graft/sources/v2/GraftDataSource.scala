@@ -6,6 +6,7 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.execution.datasources.{InMemoryFileIndex, NoopCache, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.GraftParquetShim
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
@@ -514,15 +515,14 @@ class GraftScanBuilder(spark: SparkSession, path: String,
         aggregation.groupByExpressions().flatMap(_.references()))
       .flatMap(r => r.fieldNames().headOption)
       .filterNot(partSet).distinct
-    referenced.isEmpty || {
-      val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-      m.dirs.forall { d =>
-        SnapshotTable.firstDataFile(spark, path, d) match {
-          case None => true // empty dir contributes no footer rows
-          case Some(file) =>
-            val names = spark.read.parquet(file.toString).schema.fieldNames.toSet
-            referenced.forall(names.contains)
-        }
+    referenced.isEmpty || m.dirs.forall { d =>
+      SnapshotTable.firstDataFile(spark, path, d) match {
+        case None => true // empty dir contributes no footer rows
+        case Some(file) =>
+          // the footer read on the driver: no schema-inference job
+          val names = GraftParquetShim.footerSchema(spark, Seq(file)).toSeq
+            .flatMap(_.fieldNames).toSet
+          referenced.forall(names.contains)
       }
     }
   }

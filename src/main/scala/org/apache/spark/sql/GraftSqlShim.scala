@@ -1,6 +1,8 @@
 package org.apache.spark.sql
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.util.HadoopFSUtils
 
 /** `private[sql]` access shim: builds a DataFrame from a raw LogicalPlan
   * so library operators can inject custom logical nodes (the standard
@@ -70,6 +72,30 @@ object GraftSqlShim {
     case a: execution.adaptive.AdaptiveSparkPlanExec => writeExec(a.executedPlan)
     case s: execution.adaptive.QueryStageExec => writeExec(s.plan)
     case other => other.children.iterator.map(writeExec).collectFirst { case Some(w) => w }
+  }
+
+  /** `spark.read.format("text").option("wholetext", "true").load(...)`
+    * of the `matched` statuses of a driver-side glob, which it lists no
+    * further: each matched file is its own leaf, so loading many files
+    * runs no parallel listing job. A matched directory is listed as that
+    * load lists it, and a matched hidden file is skipped as it skips it.
+    */
+  def wholeTextFiles(spark: SparkSession, matched: Seq[FileStatus]): DataFrame = {
+    import execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+    val leaves = matched.filter(_.isFile).map { s =>
+      val hidden = HadoopFSUtils.shouldFilterOutPathName(s.getPath.getName)
+      s.getPath -> (if (hidden) Array.empty[FileStatus] else Array(s))
+    }.toMap
+    val listed = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = leaves.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val options = Map("wholetext" -> "true")
+    val index = new InMemoryFileIndex(spark, matched.map(_.getPath), options, None, listed)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      new types.StructType().add("value", types.StringType), None,
+      new execution.datasources.text.TextFileFormat, options)(spark))
   }
 
   /** `bloom_filter_agg(c, expectedItems, numBits)` — the aggregate

@@ -148,13 +148,14 @@ class IosFunctionsSpec extends SparkSpec {
     assert(unusualColumns == unusual)
     assert(unusualPerChannel == unusual)
 
-    // suffix ranks: lpad keeps two characters, so rank 100 reads 10
+    // suffix ranks: at least two digits and never truncated, so rank 100
+    // reads 100, not the 10 of rank 10
     val ranks = Seq(1, 9, 10, 11, 100)
     val coded = Seq(("temperature", "TEMPS9"), ("nutrient", "NTRZAAZ"), ("pressure", "PRESPR01"))
       .flatMap { case (cls, base) => ranks.map(r => (cls, base, r)) }
     val rankedColumns = coded.toDF("cls", "base", "rank")
       .select(F.bodcCode($"cls", $"base", $"rank")).as[String].collect().toSeq
-    val want = Seq("TEMPS901", "TEMPS909", "TEMPS910", "TEMPS911", "TEMPS910",
+    val want = Seq("TEMPS901", "TEMPS909", "TEMPS910", "TEMPS911", "TEMPS9100",
       "NTRZAAZ1", "NTRZAAZ9", "NTRZAAZ10", "NTRZAAZ11", "NTRZAAZ100") ++ Seq.fill(5)("PRESPR01")
     assert(rankedColumns == want)
     assert(coded.map { case (cls, base, r) => F.bodcCodeOf(cls, base, r) } == want)

@@ -222,8 +222,9 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   /** One conversion of a 36-file archive — six copies of each fixture
-    * profile, enough files that listing them runs a Spark job — with the
-    * jobs it ran and the archive's bytes.
+    * profile, more than the 32 paths above which a plain file-source load
+    * lists them in a Spark job — with the jobs it ran and the archive's
+    * bytes.
     */
   private lazy val probedConversion: (Seq[JobProbe.Job], Long) = {
     val dir = Paths.get(tmp("ios_probe_archive"))
@@ -237,24 +238,24 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("convertArchive lists the archive once and describes every other job by its phase") {
     val (jobs, _) = probedConversion
-    // Spark sets its own description on the parallel listing job,
-    // over the caller's
-    val (listings, rest) =
-      jobs.partition(_.description.exists(_.startsWith("Listing leaf files and directories")))
-    assert(listings.size == 1, s"listing jobs: $listings")
-    val bare = rest.filterNot(_.description.exists(_.startsWith("graft convertArchive: ")))
+    // the glob is resolved once on the driver and the text source gets
+    // the matched statuses, so no job lists the 36 files again (Spark
+    // describes its parallel listing job itself, over the caller's)
+    val listings =
+      jobs.filter(_.description.exists(_.startsWith("Listing leaf files and directories")))
+    assert(listings.isEmpty, s"listing jobs: $listings")
+    val bare = jobs.filterNot(_.description.exists(_.startsWith("graft convertArchive: ")))
     assert(bare.isEmpty, s"undescribed jobs: $bare")
-    val phases = rest.flatMap(_.description).map(_.stripPrefix("graft convertArchive: ")).toSet
+    val phases = jobs.flatMap(_.description).map(_.stripPrefix("graft convertArchive: ")).toSet
     assert(phases == Set("write product", "write cf attributes",
       "write cf variable attributes"), phases)
   }
 
   test("convertArchive runs at most 6 jobs on the 36-file archive") {
     val (jobs, _) = probedConversion
-    // the listing, the product's rebalance and write, the global
-    // sidecar, and the per-file aggregate and write of the variable
-    // sidecar: a window in standardize or a distinct in the sidecar
-    // would each add one
+    // the product's rebalance and write, the global sidecar, and the
+    // per-file aggregate and write of the variable sidecar: a window in
+    // standardize or a distinct in the sidecar would each add one
     assert(jobs.size <= 6, jobs.map(_.description).mkString("\n"))
   }
 
@@ -264,6 +265,9 @@ class ReferencePipelineSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // archive; every other phase reads text
     val textBytes = jobs.filterNot(_.description.contains(
       "graft convertArchive: write cf variable attributes")).map(_.inputBytes).sum
+    // the text source reports what it reads: a reader that counted
+    // nothing would pass the bound below vacuously
+    assert(textBytes > 0, jobs)
     assert(textBytes >= archiveBytes && textBytes <= 2 * archiveBytes,
       s"read $textBytes text bytes for a $archiveBytes-byte archive")
   }
