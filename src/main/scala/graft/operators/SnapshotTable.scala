@@ -1939,12 +1939,9 @@ object SnapshotTable {
     // hint broadcast only while the overlay is provably small (file
     // metadata check, no data read); past the bound the optimizer
     // plans from its own stats — overload protection, not a plan pin
-    val f = fs(spark, new Path(path))
-    val tsBytes = m.tombstones.map { name =>
-      val p = tombstonePath(path, name)
-      if (!f.exists(p)) 0L else f.getContentSummary(p).getLength
-    }.sum
-    val build = if (tsBytes <= tombstoneBroadcastMaxBytes) broadcast(ts) else ts
+    val build =
+      if (tombstoneBytes(spark, path, m.tombstones) <= tombstoneBroadcastMaxBytes) broadcast(ts)
+      else ts
     base.join(build,
         base(key) === col("__graft_tk") && col("__graft_tsv") > base(dirVersionCol),
         "left_anti")
@@ -3022,6 +3019,52 @@ object SnapshotTable {
     drop.length
   }
 
+  // ---- the commit classifier every change consumer reads ---------------
+
+  /** Kinds whose commit only adds dirs over its parent: a fast-forward
+    * publish (branch merge) lists a superset of the fork state's dirs,
+    * so it reads as the branch-staged dirs appended.
+    */
+  private[graft] val appendKinds: Set[String] = Set("append", "fast-forward")
+
+  /** Kinds that leave the rows a reader sees unchanged: compactions
+    * rewrite files without changing content, and constraint, column
+    * mapping and partition-layout commits are metadata. A change
+    * consumer rolls its cursor past them with no events.
+    */
+  private[graft] val contentNoOpKinds: Set[String] = Set("compact", "binpack",
+    "posdelete-compact", "constraint", "drop-constraint", "renamecol", "dropcol",
+    "repartition")
+
+  /** What one manifest lists over another: dirs, key tombstones and
+    * `_posdel` sidecars added and dropped, each in manifest order.
+    */
+  private[graft] final case class ManifestDiff(
+      addedDirs: Seq[String], droppedDirs: Seq[String],
+      addedTombstones: Seq[String], droppedTombstones: Seq[String],
+      addedPosDeletes: Seq[String], droppedPosDeletes: Seq[String]) {
+    /** True when the change is readable by directory: dirs and
+      * tombstones were only added and no positional-delete sidecar came
+      * or went. The added tombstones (a merge-on-read commit's deleted
+      * or updated keys) travel with the added dirs.
+      */
+    def dirDelta: Boolean = droppedDirs.isEmpty && droppedTombstones.isEmpty &&
+      addedPosDeletes.isEmpty && droppedPosDeletes.isEmpty
+  }
+
+  /** `to` over `from`; None is the empty table before version 1. */
+  private[graft] def manifestDiff(from: Option[Manifest], to: Manifest): ManifestDiff = {
+    def diff(names: Manifest => Seq[String]): (Seq[String], Seq[String]) = {
+      val before = from.fold(Seq.empty[String])(names)
+      val after = names(to)
+      (after.filterNot(before.toSet), before.filterNot(after.toSet))
+    }
+    val (addedDirs, droppedDirs) = diff(_.dirs)
+    val (addedTs, droppedTs) = diff(_.tombstones)
+    val (addedPd, droppedPd) = diff(_.posDeletes)
+    ManifestDiff(addedDirs, droppedDirs, addedTs, droppedTs, addedPd, droppedPd)
+  }
+
   /** O(delta) changelog: the rows APPENDED after `fromVersion` (exclusive)
     * up to `toVersion` (inclusive, default current). Valid when the chain
     * is append-only across the range — every directory `fromVersion`
@@ -3045,40 +3088,25 @@ object SnapshotTable {
     // retained-range error, not a raw missing-file failure
     val fromM = readManifestChecked(spark, path, fromVersion)
     val toM = readManifestChecked(spark, path, to)
-    val missing = fromM.dirs.filterNot(toM.dirs.toSet)
-    if (missing.nonEmpty) throw new IllegalArgumentException(
-      s"versions $fromVersion..$to at $path are not an append-only chain " +
-        s"(${missing.mkString(", ")} rewritten by a compact/overwrite in the range); " +
-        "use a keyed diff of readAt frames instead")
+    val d = manifestDiff(Some(fromM), toM)
+    def refuse(what: String, names: Seq[String], how: String): Unit =
+      if (names.nonEmpty) throw new IllegalArgumentException(
+        s"versions $fromVersion..$to at $path are not an append-only chain " +
+          s"($what${names.mkString(", ")} $how); use a keyed diff of readAt frames instead")
+    val masked = "were added in the range, masking earlier rows"
+    val resurrected = "were dropped in the range — a rollback resurrected rows they masked"
+    refuse("", d.droppedDirs, "rewritten by a compact/overwrite in the range")
     // merge-on-read commits mutate rows WITHOUT touching the dir list:
     // their logical deletes/updates have no append representation, so a
     // range that crosses one cannot be answered by added rows alone
-    val newTs = toM.tombstones.filterNot(fromM.tombstones.toSet)
-    if (newTs.nonEmpty) throw new IllegalArgumentException(
-      s"versions $fromVersion..$to at $path are not an append-only chain " +
-        s"(merge-on-read tombstones ${newTs.mkString(", ")} were added in the range, " +
-        "masking earlier rows); use a keyed diff of readAt frames instead")
-    val newPd = toM.posDeletes.filterNot(fromM.posDeletes.toSet)
-    if (newPd.nonEmpty) throw new IllegalArgumentException(
-      s"versions $fromVersion..$to at $path are not an append-only chain " +
-        s"(positional deletes ${newPd.mkString(", ")} were added in the range, " +
-        "masking earlier rows); use a keyed diff of readAt frames instead")
-    val gonePd = fromM.posDeletes.filterNot(toM.posDeletes.toSet)
-    if (gonePd.nonEmpty) throw new IllegalArgumentException(
-      s"versions $fromVersion..$to at $path are not an append-only chain " +
-        s"(positional deletes ${gonePd.mkString(", ")} were dropped in the range — " +
-        "a rollback resurrected rows they masked); use a keyed diff of readAt " +
-        "frames instead")
+    refuse("merge-on-read tombstones ", d.addedTombstones, masked)
+    refuse("positional deletes ", d.addedPosDeletes, masked)
+    refuse("positional deletes ", d.droppedPosDeletes, resurrected)
     // the symmetric check: tombstones DROPPED with the dir list intact
     // (a rollback across a pure-delete merge-on-read commit) resurrect
     // masked rows — rows were logically ADDED with no dir to show for it
-    val goneTs = fromM.tombstones.filterNot(toM.tombstones.toSet)
-    if (goneTs.nonEmpty) throw new IllegalArgumentException(
-      s"versions $fromVersion..$to at $path are not an append-only chain " +
-        s"(tombstones ${goneTs.mkString(", ")} were dropped in the range — a " +
-        "rollback resurrected rows they masked); use a keyed diff of readAt " +
-        "frames instead")
-    val added = toM.dirs.filterNot(fromM.dirs.toSet)
+    refuse("tombstones ", d.droppedTombstones, resurrected)
+    val added = d.addedDirs
     if (added.isEmpty) readAt(spark, path, to).limit(0)
     // delta dirs are a sub-chain of `to`'s snapshot: scan them through
     // the same manifest machinery (physical names, partition discovery,
@@ -3169,16 +3197,13 @@ object SnapshotTable {
             s"changes over [$fromVersion, $to] at $path needs version ${v - 1} " +
               s"for the pre-image of version $v, but it expired: ${e.getMessage}")
         })
-      def addedDirs: Seq[String] =
-        mv.dirs.filterNot(mp.map(_.dirs.toSet).getOrElse(Set.empty))
-      def addedDirRows: Option[DataFrame] = {
-        val added = addedDirs
-        if (added.isEmpty) None
-        else Some(remap(rawScan(spark, path, mv.copy(dirs = added, tombstones = Nil)),
+      val d = manifestDiff(mp, mv)
+      def addedDirRows: Option[DataFrame] =
+        if (d.addedDirs.isEmpty) None
+        else Some(remap(rawScan(spark, path, mv.copy(dirs = d.addedDirs, tombstones = Nil)),
           mv, lit("insert"), v))
-      }
       def posVictims: Option[DataFrame] = {
-        val newPd = mv.posDeletes.filterNot(mp.map(_.posDeletes.toSet).getOrElse(Set.empty))
+        val newPd = d.addedPosDeletes
         if (newPd.isEmpty) None
         else {
           val pre = rawScanPos(spark, path, mp.get, withPos = true)
@@ -3192,14 +3217,10 @@ object SnapshotTable {
       }
       mv.kind match {
         case _ if v == 1L => addedDirRows.toSeq // creation baseline: inserts
-        // a fast-forward publish is append-shaped: the branch head's dir
-        // list is a superset of the fork state's, so the feed is exactly
-        // the branch-staged dirs as inserts
-        case "append" | "fast-forward" => addedDirRows.toSeq
-        case "compact" | "binpack" | "posdelete-compact" | "constraint" |
-             "drop-constraint" | "renamecol" | "dropcol" | "repartition" => Nil
+        case k if appendKinds(k) => addedDirRows.toSeq
+        case k if contentNoOpKinds(k) => Nil
         case "merge-on-read" =>
-          val newTs = mv.tombstones.filterNot(mp.map(_.tombstones.toSet).getOrElse(Set.empty))
+          val newTs = d.addedTombstones
           // a MOR commit can add ZERO tombstones (an upsert batch whose
           // rows all gated away, or NULL-keyed inserts) — then there are
           // no delete events and no morkey requirement
@@ -3223,7 +3244,7 @@ object SnapshotTable {
             // side probes "re-added" and the insert side probes
             // "existed" (the two sides of the same intersection), both
             // as broadcast delta-scale key sets.
-            val added = addedDirs
+            val added = d.addedDirs
             val victims = pre.join(broadcast(keys),
               pre(key) === col("__graft_ck"), "left_semi")
             val addedScan = if (added.isEmpty) None
@@ -3838,8 +3859,7 @@ object SnapshotTable {
             // but keeps content the delta was already deduped against
             val appendAdded = (parentDirs +: chain.map(_._2.dirs)).zip(chain.map(_._2))
               .flatMap { case (prev, mm) =>
-                if (mm.kind == "append" || mm.kind == "fast-forward")
-                  mm.dirs.diff(prev)
+                if (appendKinds(mm.kind)) mm.dirs.diff(prev)
                 else Nil
               }
             if (appendAdded.nonEmpty) {

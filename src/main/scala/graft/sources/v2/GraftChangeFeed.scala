@@ -1,12 +1,10 @@
 package graft.sources.v2
 
 import graft.operators.SnapshotTable
-import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types.{DataType, LongType, NullType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -43,7 +41,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * commit's new tombstone keys / delete ordinals select it), so event
   * production is O(delta + touched files), never a join, never a
   * collect of data rows. Offsets, admission control, and
-  * Trigger.AvailableNow are inherited from the plain data stream.
+  * Trigger.AvailableNow are the shared [[VersionStream]] cursor.
   */
 class GraftCdfScan(spark: SparkSession, path: String,
                    m: SnapshotTable.Manifest, logical: StructType,
@@ -58,12 +56,13 @@ class GraftCdfScan(spark: SparkSession, path: String,
   override def readSchema(): StructType =
     StructType(dataFields.fields ++ partFields.fields ++ GraftCdf.metaFields)
 
-  private def mkStream(startVersion: Option[String],
-                       maxPerBatch: Option[Long]): GraftCdfStream =
+  private lazy val cursor = CursorOptions.parse(options)
+
+  private def mkStream(): GraftCdfStream =
     new GraftCdfStream(path,
       StreamSchemas(phys(dataFields), phys(dataFields), phys(partFields),
         phys(logical), Array.empty),
-      m.format, m.partitionCols, startVersion, maxPerBatch)
+      m.partitionCols, cursor)
 
   /** BATCH change-feed read of a path table —
     * `spark.read.format("graft").option("readChangeFeed", "true")
@@ -86,31 +85,27 @@ class GraftCdfScan(spark: SparkSession, path: String,
     // table whose head IS the loaded version therefore yields an EMPTY
     // feed under 'earliest' (nothing is replayable) — empty, not an
     // error, is the honest answer to "give me everything replayable".
-    val (from, fromEarliest) =
-      Option(options.get("startVersion")).map(_.trim.toLowerCase) match {
-        case None => (1L, false)
-        case Some("earliest") =>
-          val head = SnapshotTable.versions(spark, path).headOption.getOrElse(1L)
-          (if (head == 1L) 1L else head + 1, true)
-        case Some("latest") => (version, false)
-        case Some(n) => (n.toLong, false)
-      }
+    val (from, fromEarliest) = cursor.startVersion match {
+      case None => (1L, false)
+      case Some(StartVersion.Earliest) =>
+        val head = SnapshotTable.versions(spark, path).headOption.getOrElse(1L)
+        (if (head == 1L) 1L else head + 1, true)
+      case Some(StartVersion.Latest) => (version, false)
+      case Some(StartVersion.At(n)) => (n, false)
+    }
     require(from >= 1L && (fromEarliest || from <= to),
       s"readChangeFeed batch read of $path: bad version range [$from, $to]")
-    val planner = mkStream(None, None)
+    val planner = mkStream()
     new Batch {
       override def planInputPartitions(): Array[InputPartition] =
-        if (from > to) Array.empty else planner.planRange(from - 1, to)
+        if (from > to) Array.empty else planner.planVersions(from - 1, to)
       override def createReaderFactory(): PartitionReaderFactory =
         CdfReaderFactory()
     }
   }
 
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    val maxPerBatch = Option(options.get("maxVersionsPerBatch")).map(_.trim.toLong)
-    mkStream(Option(options.get("startVersion")), maxPerBatch)
-  }
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = mkStream()
 
   override def description(): String =
     s"GraftCdfScan(path=$path, changeFeed)"
@@ -158,12 +153,9 @@ case class CdfInputPartition(
     innerFactory: org.apache.spark.sql.execution.datasources.v2.FilePartitionReaderFactory,
     spec: CdfFrameSpec) extends InputPartition
 
-class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
-                     partitionCols: Seq[String],
-                     startVersion: Option[String], maxPerBatch: Option[Long])
-    extends GraftDataStream(path, schemas, format, partitionCols,
-      startVersion, maxPerBatch) {
-  import org.apache.spark.sql.connector.read.streaming.Offset
+class GraftCdfStream(path: String, schemas: StreamSchemas,
+                     partitionCols: Seq[String], cursor: CursorOptions)
+    extends GraftDataStream(path, schemas, partitionCols, cursor) {
 
   /** CDF seed offsets differ from the plain data stream's in two ways,
     * both so `readChangeFeed` batch and stream agree on what a start
@@ -174,20 +166,16 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
     * the first REPLAYABLE version — head+1 when the retention prefix
     * expired (head's own pre-images went with manifest head-1; only
     * head == 1, the create baseline, needs none), matching the batch
-    * 'earliest' resolution. The plain data stream's numeric form
-    * predates this and stays EXCLUSIVE (documented there); existing
-    * checkpoints are unaffected (the seed only applies at first start).
+    * 'earliest' resolution. Existing checkpoints are unaffected (the
+    * seed only applies at first start).
     */
-  override def initialOffset(): Offset = {
+  override protected def seedVersion(): Long = {
     val vs = SnapshotTable.versions(spark, path)
-    val v = startVersion.map(_.trim.toLowerCase) match {
-      case None | Some("latest") => vs.lastOption.getOrElse(0L)
-      case Some("earliest") =>
+    cursor.startVersion match {
+      case None | Some(StartVersion.Latest) => vs.lastOption.getOrElse(0L)
+      case Some(StartVersion.Earliest) =>
         vs.headOption.map(h => if (h == 1L) 0L else h).getOrElse(0L)
-      case Some(n) =>
-        val sv = scala.util.Try(n.toLong).getOrElse(
-          throw new IllegalArgumentException(
-            s"startVersion must be 'latest', 'earliest', or a version number; got '$n'"))
+      case Some(StartVersion.At(sv)) =>
         // same lower bound the batch reader's `require` enforces — a
         // seed at -1 would plan nonexistent version 0 and surface a
         // confusing missing-manifest error instead of this one
@@ -195,7 +183,6 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
           s"startVersion must be >= 1 (versions are 1-based); got $sv")
         sv - 1
     }
-    VersionOffset(v)
   }
 
   private val rowIdxField = StructField(
@@ -209,28 +196,10 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
   private def frame(dirs: Seq[String], spec0: CdfFrameSpec,
                     withRowIdx: Boolean,
                     onlySubpaths: Option[Set[String]]): Seq[InputPartition] = {
-    val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val roots = dirs.map(d => new Path(path, d)).filter(f.exists)
-    if (roots.isEmpty) return Nil
-    val index = new GraftPrunedFileIndex(spark, roots, kept0 = null,
-      Some(schemas.fullPhys), partitioned = partitionCols.nonEmpty)
-    onlySubpaths.foreach { subs =>
-      index.restrict(index.allFiles()
-        .map(_.getPath.toString)
-        .filter(p => subs.contains(GraftCdf.subpathOf(p))).toSet)
-    }
     val readData =
       if (withRowIdx) StructType(schemas.readDataPhys.fields :+ rowIdxField)
       else schemas.readDataPhys
-    val batch = ParquetScan(
-      spark,
-      spark.sessionState.newHadoopConfWithOptions(Map.empty),
-      index,
-      schemas.dataPhys,
-      readData,
-      schemas.readPartPhys,
-      Array.empty,
-      CaseInsensitiveStringMap.empty()).toBatch
+    val batch = batchScan(dirs, readData, onlySubpaths)
     val spec = spec0.copy(
       fullSchema = StructType(readData.fields ++ schemas.readPartPhys.fields),
       rowIdxPos = if (withRowIdx) schemas.readDataPhys.length else -1)
@@ -252,15 +221,11 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
     else dataNames.length + (if (withRowIdx) 1 else 0) + partNames.indexOf(phys)
   }
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    planRange(start.asInstanceOf[VersionOffset].v, end.asInstanceOf[VersionOffset].v)
-
-  /** Event frames for the commits in `(fromExclusive, to]` — shared by
-    * the micro-batch stream (offset-to-offset) and the batch CDF read
+  /** Event frames for the commits in `(from, to]` — shared by the
+    * micro-batch stream (offset-to-offset) and the batch CDF read
     * (whole range at once).
     */
-  private[v2] def planRange(fromExclusive: Long, to: Long): Array[InputPartition] = {
-    val from = fromExclusive
+  override protected[v2] def planVersions(from: Long, to: Long): Array[InputPartition] = {
     val bc = spark.sparkContext
     def gate[T](o: Option[T], what: String, v: Long): T = o.getOrElse(
       throw new IllegalArgumentException(
@@ -276,6 +241,7 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
           s"change feed of $path needs version ${v - 1} for the pre-images " +
             s"of version $v, but it expired (${e.getMessage}); restart from " +
             "startVersion=latest or re-baseline the consumer") }
+      lazy val d = SnapshotTable.manifestDiff(Some(mp), mv)
       def insertFrames(dirs: Seq[String],
                        paired: Option[Broadcast[Set[Any]]] = None,
                        keyPos: Int = -1, keyType: DataType = NullType): Unit =
@@ -309,17 +275,13 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
         case "create" =>
           requireLayout(mv, "create baseline")
           insertFrames(mv.dirs)
-        // a fast-forward publish (branch merge) is append-shaped: its
-        // dir list supersets the fork state's, so the feed is the
-        // branch-staged dirs as inserts
-        case "append" | "fast-forward" =>
+        case k if SnapshotTable.appendKinds(k) =>
           requireLayout(mv, "append delta")
-          insertFrames(mv.dirs.filterNot(mp.dirs.toSet))
-        case "compact" | "binpack" | "posdelete-compact" | "constraint" |
-             "drop-constraint" | "renamecol" | "dropcol" | "repartition" => ()
+          insertFrames(d.addedDirs)
+        case k if SnapshotTable.contentNoOpKinds(k) => ()
         case "merge-on-read" =>
-          val newTs = mv.tombstones.filterNot(mp.tombstones.toSet)
-          val added = mv.dirs.filterNot(mp.dirs.toSet)
+          val newTs = d.addedTombstones
+          val added = d.addedDirs
           // zero new tombstones (fully-gated upsert batch, NULL-keyed
           // inserts): no delete events, no morkey requirement
           requireLayout(mv, "merge-on-read commit")
@@ -405,7 +367,7 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
         case "posdelete" | "posupdate" =>
           requireLayout(mv, "positional-delete commit")
           requireLayout(mp, "positional-delete pre-image scan", strict = true)
-          val newPd = mv.posDeletes.filterNot(mp.posDeletes.toSet)
+          val newPd = d.addedPosDeletes
           val vm = gate(SnapshotTable.posDeleteMask(spark, path, mv, newPd),
             "commit's delete sidecar", v)
           val (pp, pk) = priorMasks
@@ -422,7 +384,7 @@ class GraftCdfStream(path: String, schemas: StreamSchemas, format: String,
               Some(bc.broadcast(vm)), None,
               Some(bc.broadcast(pp)), Some(bc.broadcast(pk))),
             withRowIdx = true, onlySubpaths = Some(vm.keySet))
-          insertFrames(mv.dirs.filterNot(mp.dirs.toSet))
+          insertFrames(d.addedDirs)
         case other => throw new IllegalStateException(
           s"version $v of $path is a '$other' commit — its honest event " +
             "form is a whole-table diff, which a change-feed stream must " +

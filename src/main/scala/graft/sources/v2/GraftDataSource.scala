@@ -548,16 +548,13 @@ class GraftScanBuilder(spark: SparkSession, path: String,
     // reports its layout as KeyGroupedPartitioning and plans one scan
     // task group per partition value, so two tables co-partitioned on
     // the join key SMJ/hash-join with ZERO exchanges. Per-read opt-in
-    // (`.option("preserveDataGrouping", true)`) or session-wide
-    // (`spark.graft.spj.preserveDataGrouping=true`) — NOT the default,
+    // (`.option("preserveDataGrouping", true)`) — NOT the default,
     // because key-grouping caps scan parallelism at the partition-value
     // count, which is the right trade for a co-partitioned join and the
     // wrong one for a plain scan (Iceberg's preserve-data-grouping knob
     // makes the same call). Requires every partition column in the
     // output (the reported keys must reference output attributes).
-    val spjWanted = options.getBoolean("preserveDataGrouping",
-      spark.sessionState.conf
-        .getConfString("spark.graft.spj.preserveDataGrouping", "false").toBoolean)
+    val spjWanted = options.getBoolean("preserveDataGrouping", false)
     val spjKeys: Option[Seq[String]] =
       if (spjWanted && m.partitionCols.nonEmpty &&
           m.partitionCols.forall(required.fieldNames.contains))
@@ -751,15 +748,7 @@ class GraftOverlayFallbackScan(spark: SparkSession, path: String, version: Long,
     */
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
-    val maxPerBatch = Option(options.get("maxVersionsPerBatch")).map { s =>
-      val n = scala.util.Try(s.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"maxVersionsPerBatch must be a positive integer; got '$s'"))
-      require(n > 0, s"maxVersionsPerBatch must be a positive integer; got $n")
-      n
-    }
-    new GraftDataStream(path, streamSchemas, m.format, m.partitionCols,
-      Option(options.get("startVersion")), maxPerBatch)
+    new GraftDataStream(path, streamSchemas, m.partitionCols, CursorOptions.parse(options))
   }
 
   override def description(): String =
@@ -996,15 +985,7 @@ class GraftScan(delegate: ParquetScan, logicalRead: StructType,
     if (wrapShape.exists(_.metaNames.nonEmpty)) throw new UnsupportedOperationException(
       "the graft streaming data read does not serve the _graft_file/_graft_pos " +
         "metadata columns; select table columns only")
-    val maxPerBatch = Option(options.get("maxVersionsPerBatch")).map { s =>
-      val n = scala.util.Try(s.trim.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"maxVersionsPerBatch must be a positive integer; got '$s'"))
-      require(n > 0, s"maxVersionsPerBatch must be a positive integer; got $n")
-      n
-    }
-    new GraftDataStream(path, streamSchemas, m.format, m.partitionCols,
-      Option(options.get("startVersion")), maxPerBatch)
+    new GraftDataStream(path, streamSchemas, m.partitionCols, CursorOptions.parse(options))
   }
   override def estimateStatistics(): org.apache.spark.sql.connector.read.Statistics =
     delegate.estimateStatistics()
@@ -1371,45 +1352,30 @@ case class RowWrappedReaderFactory(
   * `graft-snapshot-log` remains the CDC form for consumers that want
   * commits, not rows).
   *
-  * Offsets are version numbers (the version log is the WAL; the
-  * checkpoint just remembers the cursor). Streamable commits: appends
-  * emit their added dirs' rows; content no-ops (compact/binpack) and
-  * metadata-only commits (constraints, renamecol — physical names are
-  * immutable, so the stream-start projection keeps reading later dirs)
-  * emit nothing and the cursor rolls past; version 1 emits the initial
-  * snapshot whatever its kind. Anything that changes or removes
-  * existing rows (overwrite/merge/merge-on-read/posdelete/dropcol/
-  * rollback) has NO append representation and fails the query loudly —
-  * silently skipping would present an incomplete changelog as complete
-  * (Delta's "data update detected" contract). A version expired while
-  * the stream was down fails with the retained range, like the
-  * changelog source. `startVersion` = latest (default) / earliest / N —
-  * N is EXCLUSIVE here (the first delivered version is N+1; historical
-  * contract, kept for checkpoint compatibility), which DIVERGES from
-  * the change-feed reads where the same option is inclusive
-  * ([[GraftCdfStream.initialOffset]] documents the CDF side);
-  * `maxVersionsPerBatch` caps a backfill's batch size;
-  * `Trigger.AvailableNow` drains to a fence and stops.
+  * Offsets, start options and admission control are the shared
+  * [[VersionStream]] cursor (its scaladoc tabulates this stream's
+  * `startVersion` against the other two). Streamable commits: appends
+  * and fast-forward publishes emit their added dirs' rows; content
+  * no-ops (compact/binpack) and metadata-only commits (constraints,
+  * renamecol — physical names are immutable, so the stream-start
+  * projection keeps reading later dirs) emit nothing and the cursor
+  * rolls past; version 1 emits the initial snapshot whatever its kind.
+  * Anything that changes or removes existing rows (overwrite/merge/
+  * merge-on-read/posdelete/dropcol/rollback) has NO append
+  * representation and fails the query loudly — silently skipping would
+  * present an incomplete changelog as complete (Delta's "data update
+  * detected" contract). A version expired while the stream was down
+  * fails with the retained range, like the changelog source.
   */
-class GraftDataStream(path: String, schemas: StreamSchemas, format: String,
-                      partitionCols: Seq[String],
-                      startVersion: Option[String], maxPerBatch: Option[Long])
-    extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming.SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, Offset, ReadLimit, ReadMaxRows}
+class GraftDataStream(path: String, schemas: StreamSchemas,
+                      partitionCols: Seq[String], cursor: CursorOptions)
+    extends VersionStream(path, cursor.maxVersionsPerBatch) {
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 
-  protected def spark = SparkSession.active
-
-  @volatile private var availableNowFence: Option[Long] = None
-  override def prepareForTriggerAvailableNow(): Unit =
-    availableNowFence = Some(SnapshotTable.currentVersion(spark, path).getOrElse(0L))
-
-  override def initialOffset(): Offset = {
+  override protected def seedVersion(): Long = {
     val vs = SnapshotTable.versions(spark, path)
-    val v = startVersion.map(_.trim.toLowerCase) match {
-      case None | Some("latest") => vs.lastOption.getOrElse(0L)
+    cursor.startVersion match {
+      case None | Some(StartVersion.Latest) => vs.lastOption.getOrElse(0L)
       // 'earliest' on a ROW stream means "replay everything" — which is
       // only possible while version 1 is retained. Past an expired
       // prefix, versions <= head survive only as a whole-table STATE
@@ -1419,7 +1385,7 @@ class GraftDataStream(path: String, schemas: StreamSchemas, format: String,
       // cannot compose with a possible outstanding overlay. Refuse
       // loudly with the remediations (unlike the CDF stream, whose
       // 'earliest' legitimately means "first replayable EVENTS").
-      case Some("earliest") =>
+      case Some(StartVersion.Earliest) =>
         vs.headOption match {
           case None => 0L
           case Some(1L) => 0L
@@ -1432,68 +1398,42 @@ class GraftDataStream(path: String, schemas: StreamSchemas, format: String,
               s"startVersion=$h, or consume the 'graft-snapshot-log' " +
               "changelog source (flagged-baseline replay)")
         }
-      case Some(n) => scala.util.Try(n.toLong).getOrElse(
-        throw new IllegalArgumentException(
-          s"startVersion must be 'latest', 'earliest', or a version number; got '$n'"))
+      case Some(StartVersion.At(n)) => n
     }
-    VersionOffset(v)
   }
 
-  // one version ≈ one "row" for admission purposes: ReadMaxRows caps how
-  // many commits a micro-batch spans (the maxFilesPerTrigger analogue)
-  override def getDefaultReadLimit: ReadLimit =
-    maxPerBatch.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
-  override def latestOffset(): Offset = throw new IllegalStateException(
-    "latestOffset(Offset, ReadLimit) should be called instead of this method")
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    val head0 = SnapshotTable.currentVersion(spark, path).getOrElse(0L)
-    val head = availableNowFence.fold(head0)(math.min(head0, _))
-    val from = start.asInstanceOf[VersionOffset].v
-    def cap(l: ReadLimit): Long = l match {
-      case r: ReadMaxRows => from + r.maxRows()
-      case c: CompositeReadLimit => c.getReadLimits.map(cap).min
-      case _ => head
-    }
-    VersionOffset(math.min(head, cap(limit)))
-  }
-  override def reportLatestOffset(): Offset =
-    VersionOffset(SnapshotTable.currentVersion(spark, path).getOrElse(0L))
-  override def deserializeOffset(json: String): Offset = VersionOffset(json.toLong)
-
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
-    val from = start.asInstanceOf[VersionOffset].v
-    val to = end.asInstanceOf[VersionOffset].v
+  override protected def planVersions(from: Long, to: Long): Array[InputPartition] = {
     val retained = SnapshotTable.versions(spark, path).toSet
     val addedDirs = ((from + 1) to to).flatMap { v =>
       val mv = SnapshotTable.readManifestChecked(spark, path, v)
       if (v == 1) mv.dirs // initial snapshot: the table's baseline rows
-      else mv.kind match {
-        case "append" =>
-          if (!retained(v - 1)) throw new IllegalStateException(
-            s"version ${v - 1} of $path expired while the stream was down — " +
-              s"the delta of version $v is unprovable by directory; restart " +
-              "from startVersion=latest or re-baseline the consumer")
-          // the stream's physical read schemas were captured at START
-          // under the then-current partition layout; an append staged
-          // under a DIFFERENT spec ([[SnapshotTable.repartitionTable]])
-          // cannot be decoded by them — fail loudly, a restart
-          // re-captures the current layout
-          if (mv.partitionCols != partitionCols) throw new IllegalStateException(
-            s"version $v of $path was written under partition layout " +
-              s"(${mv.partitionCols.mkString(", ")}) but this stream started " +
-              s"under (${partitionCols.mkString(", ")}) — the table was " +
-              "repartitioned mid-stream; restart the stream to adopt the new layout")
-          mv.dirs.filterNot(
-            SnapshotTable.readManifestChecked(spark, path, v - 1).dirs.toSet)
-        case "compact" | "binpack" | "constraint" | "drop-constraint" |
-             "renamecol" | "posdelete-compact" | "repartition" =>
-          Nil // logical content no-ops for an append stream
-        case other => throw new IllegalStateException(
-          s"version $v of $path is a '$other' commit — it changes or removes " +
-            "existing rows and has no append representation; a row stream " +
-            "cannot deliver it (consume the 'graft-snapshot-log' changelog " +
-            "source, or restart this stream past it with startVersion)")
+      else if (SnapshotTable.appendKinds(mv.kind)) {
+        if (!retained(v - 1)) throw new IllegalStateException(
+          s"version ${v - 1} of $path expired while the stream was down — " +
+            s"the delta of version $v is unprovable by directory; restart " +
+            "from startVersion=latest or re-baseline the consumer")
+        // the stream's physical read schemas were captured at START
+        // under the then-current partition layout; an append staged
+        // under a DIFFERENT spec ([[SnapshotTable.repartitionTable]])
+        // cannot be decoded by them — fail loudly, a restart
+        // re-captures the current layout
+        if (mv.partitionCols != partitionCols) throw new IllegalStateException(
+          s"version $v of $path was written under partition layout " +
+            s"(${mv.partitionCols.mkString(", ")}) but this stream started " +
+            s"under (${partitionCols.mkString(", ")}) — the table was " +
+            "repartitioned mid-stream; restart the stream to adopt the new layout")
+        SnapshotTable.manifestDiff(
+          Some(SnapshotTable.readManifestChecked(spark, path, v - 1)), mv).addedDirs
       }
+      // dropcol is the one content no-op a row stream refuses: the
+      // column leaves every existing row, and an append-only stream has
+      // no way to take back the values it already delivered
+      else if (SnapshotTable.contentNoOpKinds(mv.kind) && mv.kind != "dropcol") Nil
+      else throw new IllegalStateException(
+        s"version $v of $path is a '${mv.kind}' commit — it changes or removes " +
+          "existing rows and has no append representation; a row stream " +
+          "cannot deliver it (consume the 'graft-snapshot-log' changelog " +
+          "source, or restart this stream past it with startVersion)")
     }
     if (addedDirs.isEmpty) Array.empty
     else batchScan(addedDirs).planInputPartitions()
@@ -1504,8 +1444,10 @@ class GraftDataStream(path: String, schemas: StreamSchemas, format: String,
     * build) applied to the delta files — identical machinery to the
     * batch path, so evolution null-fill and column mapping behave the
     * same (physical names are immutable, so the capture stays valid).
+    * `onlySubpaths` restricts the scan to the files it names.
     */
-  private def batchScan(dirs: Seq[String]): Batch = {
+  protected def batchScan(dirs: Seq[String], readData: StructType = schemas.readDataPhys,
+                          onlySubpaths: Option[Set[String]] = None): Batch = {
     val f = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val roots = dirs.map(d => new Path(path, d)).filter(f.exists)
     // GraftPrunedFileIndex (kept = null: no pruning) for its per-root
@@ -1514,12 +1456,17 @@ class GraftDataStream(path: String, schemas: StreamSchemas, format: String,
     // one-base-path CONFLICTING_DIRECTORY_STRUCTURES check
     val index = new GraftPrunedFileIndex(spark, roots, kept0 = null,
       Some(schemas.fullPhys), partitioned = partitionCols.nonEmpty)
+    onlySubpaths.foreach { subs =>
+      index.restrict(index.allFiles()
+        .map(_.getPath.toString)
+        .filter(p => subs.contains(GraftCdf.subpathOf(p))).toSet)
+    }
     ParquetScan(
       spark,
       spark.sessionState.newHadoopConfWithOptions(Map.empty),
       index,
       schemas.dataPhys,
-      schemas.readDataPhys,
+      readData,
       schemas.readPartPhys,
       schemas.pushedPhys,
       CaseInsensitiveStringMap.empty()).toBatch
@@ -1527,9 +1474,6 @@ class GraftDataStream(path: String, schemas: StreamSchemas, format: String,
 
   override def createReaderFactory(): PartitionReaderFactory =
     batchScan(Nil).createReaderFactory()
-
-  override def commit(end: Offset): Unit = ()
-  override def stop(): Unit = ()
 }
 
 object GraftFilters {

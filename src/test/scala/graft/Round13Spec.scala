@@ -836,6 +836,35 @@ class Round13Spec extends SparkSpec {
       s"rollback must arrive flagged with its kind: ${got.toArray.toSeq}")
   }
 
+  test("the version log flags positional-delete commits as rewrites, never as appends") {
+    import spark.implicits._
+    import graft.streaming.SnapshotChangelog
+    val path = tmp("graft-posdel-log")
+    SnapshotTable.ingest(spark,
+      (0L until 30L).map(i => (i, s"doc $i")).toDF("doc_id", "text"),
+      path, "text", expectedItems = 1000L)                          // v1
+    SnapshotTable.deleteWherePositional(spark, path, col("doc_id") < 5L)  // v2
+    SnapshotTable.updateWherePositional(spark, path, col("doc_id") === 7L,
+      Map("text" -> lit("seven")))                                  // v3
+    // the victims are file ordinals, not dirs: read as a by-directory
+    // delta, v2 is an empty append (the delete is lost) and v3 an
+    // append of the updated row (a duplicate) — the default sink refuses
+    val qRefuse = SnapshotChangelog.changelogSink(spark, path, (_, _) => (),
+      startVersion = Some("1"))
+    val e = try intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      qRefuse.processAllAvailable()) finally qRefuse.stop()
+    assert(e.getMessage.contains("rewrite commit"), e.getMessage)
+    // an opted-in consumer gets each as a flagged rewrite whose delta is
+    // the version's correct row set
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Boolean, String, Long)]()
+    val q = SnapshotChangelog.changelogSink(spark, path,
+      (delta, c) => { got.add((c.version, c.rewrite, c.kind, delta.count())); () },
+      startVersion = Some("1"), allowRewrites = true)
+    try q.processAllAvailable() finally q.stop()
+    assert(got.toArray.toSeq == Seq((2L, true, "posdelete", 25L), (3L, true, "posupdate", 25L)),
+      s"positional commits must arrive flagged: ${got.toArray.toSeq}")
+  }
+
   // ---- maxVersionsPerBatch: admission-controlled backfill ---------------
 
   private def ingestN(path: String, fromV: Int, n: Int): Unit = {
@@ -1421,5 +1450,21 @@ class Round13Spec extends SparkSpec {
       spark.readStream.format(classOf[graft.sources.v2.SnapshotLogSource].getName)
         .option("maxVersionsPerBatch", "two").load(path))
     assert(e2.getMessage.contains("maxVersionsPerBatch"), e2.getMessage)
+    // the row stream and the change-feed stream read the same option:
+    // 0 would stall the cursor, "two" is not a number
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    for (cdf <- Seq(false, true); bad <- Seq("0", "two")) {
+      val e3 = intercept[Exception] {
+        val q = spark.readStream.format("graft")
+          .option("readChangeFeed", cdf.toString)
+          .option("maxVersionsPerBatch", bad).load(path)
+          .writeStream.option("checkpointLocation", tmp("graft-throttle-bad-ck"))
+          .format("noop").start()
+        try q.processAllAvailable() finally q.stop()
+      }
+      assert(msgs(e3).exists(_.contains("maxVersionsPerBatch must be a positive integer")),
+        s"readChangeFeed=$cdf maxVersionsPerBatch=$bad: ${msgs(e3)}")
+    }
   }
 }

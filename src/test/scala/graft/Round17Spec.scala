@@ -456,6 +456,28 @@ class Round17Spec extends SparkSpec {
     assert(ids(SnapshotTable.read(spark, path)) == (0L until 220L).toSet)
   }
 
+  test("a running row stream delivers a fast-forward publish as the branch's appended rows") {
+    import scala.jdk.CollectionConverters._
+    val path = tmp("graft-branch-stream")
+    SnapshotTable.ingest(spark, docs(0 until 40), path, "text",
+      expectedItems = 1000L)                                   // main v1
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val q = spark.readStream.format("graft").load(path)
+      .writeStream.option("checkpointLocation", tmp("graft-branch-stream-ck"))
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.select("doc_id").collect().foreach(r => got.add(r.getLong(0))); ()
+      }.start()
+    try {
+      q.processAllAvailable()
+      SnapshotTable.createBranch(spark, path, "audit")
+      SnapshotTable.appendBranch(spark, docs(40 until 55), path, "audit")
+      assert(SnapshotTable.fastForward(spark, path, "audit") == 2L)
+      q.processAllAvailable()
+      assert(got.asScala.toSeq.sorted == (40L until 55L),
+        s"stream must deliver exactly the branch's rows: ${got.asScala.toSeq.sorted}")
+    } finally q.stop()
+  }
+
   test("branch divergence: main advancing past the fork refuses fast-forward loudly") {
     val path = tmp("graft-branch-div")
     SnapshotTable.ingest(spark, docs(0 until 50), path, "text",
