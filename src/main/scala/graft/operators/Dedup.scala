@@ -611,10 +611,13 @@ object Dedup {
     * converge to the per-component minimum id, and sizes count the same
     * per-level membership (ids incident to a surviving edge).
     *
-    * Scale path: when the edge list overflows `driverEdgeLimit`, the
-    * distributed per-level loop runs exactly as before (checkpoint once,
-    * one distributed CC per level) — billions of mr edges at 100 TB
-    * never collect.
+    * Scale path: the driver holds a label row per id per level, and
+    * each edge adds at most two ids, so the fast path collects at most
+    * `driverEdgeLimit / thresholds.size` edges: about
+    * `2·driverEdgeLimit` label rows whatever the level count. Past that
+    * the distributed per-level loop runs exactly as before (checkpoint
+    * once, one distributed CC per level) — billions of mr edges at
+    * 100 TB never collect.
     *
     * A NaN weight counts as +∞ on both paths: Spark SQL orders NaN above
     * every double, so `w >= λ` keeps a NaN edge at every level, while the
@@ -636,13 +639,14 @@ object Dedup {
            org.apache.spark.sql.types.IntegerType | org.apache.spark.sql.types.LongType => true
       case _ => false
     }
+    val edgeLimit = driverEdgeLimit / thresholds.size
     val bounded: Array[(Long, Long, Double)] = if (!integralIds) null else {
       import spark.implicits._
       edgesW.select(col(id1).cast("long"), col(id2).cast("long"),
         col(wCol).cast("double"))
-        .limit(driverEdgeLimit + 1).as[(Long, Long, Double)].collect()
+        .limit(edgeLimit + 1).as[(Long, Long, Double)].collect()
     }
-    if (bounded != null && bounded.length <= driverEdgeLimit) {
+    if (bounded != null && bounded.length <= edgeLimit) {
       import spark.implicits._
       // heaviest first: level l consumes the prefix with w >= thresholds(l)
       val sorted = bounded.sortBy(-_._3)

@@ -422,8 +422,9 @@ object SnapshotTable {
     * artifacts carry committer-unique names, so losing the version slot
     * loses no work. Each attempt:
     *
-    *  1. re-homes the `staged` artifacts (data dirs with their hash and
-    *     stats sidecars, `t<v>-` tombstones) at the slot version by pure
+    *  1. re-homes the `staged` artifacts (data dirs [[stageCommit]]
+    *     staged, with their hash and stats sidecars; `t<v>-`
+    *     tombstones) at the slot version by pure
     *     rename ([[rehome]]). The name must carry the COMMIT version:
     *     the merge-on-read overlay orders rows against tombstones by it,
     *     and a stale number would let an outstanding tombstone mask
@@ -447,25 +448,25 @@ object SnapshotTable {
     * deletes the staged artifacts plus the listed paths: nothing that
     * fails here was published. Otherwise they stay for [[vacuum]].
     *
-    * Admission, the interleaved kinds each op rebases over (each op's
-    * scaladoc gives its reason):
+    * Admission, the interleaved kinds each op rebases over, is one named
+    * set per op built from the commit classifier's kind sets
+    * (`appendKinds` = append fast-forward, `layoutKinds` = compact
+    * binpack, `posMaskKinds` = posdelete posdelete-compact,
+    * `positionalKinds` = those + posupdate, `overlayKinds` = those +
+    * merge-on-read):
     * {{{
-    *   append, commitStreamAppend  append fast-forward compact binpack posdelete
-    *                               posupdate merge-on-read posdelete-compact
-    *   ingest, ingestFuzzy         append fast-forward compact binpack posdelete
-    *                               posdelete-compact
-    *   compact, compactSmall       append fast-forward
-    *   mergeOnRead                 append fast-forward merge-on-read binpack
-    *   commitPositionalDelta       append fast-forward posdelete posupdate
-    *                               posdelete-compact
-    *   compactPosDeletes           append fast-forward posdelete posupdate
-    *                               merge-on-read posdelete-compact
-    *   appendBranch                the branch head (branch chains only append)
+    *   append, commitStreamAppend  appendAdmits    appendKinds layoutKinds overlayKinds
+    *   ingest, ingestFuzzy         ingestAdmits    appendKinds layoutKinds posMaskKinds
+    *   compact, compactSmall       appendKinds     (only appends keep the replaced dirs)
+    *   mergeOnRead                 morAdmits       appendKinds binpack merge-on-read
+    *   commitPositionalDelta       posDeltaAdmits  appendKinds positionalKinds
+    *   compactPosDeletes           posFoldAdmits   appendKinds overlayKinds
+    *   appendBranch                none: the branch head (branch chains only append)
     * }}}
     */
   private def commitLoop(spark: SparkSession, path: String, op: String,
       parentV: Long, parent: Option[Manifest], staged: Seq[String],
-      admits: Seq[String], why: PartialFunction[String, String] = PartialFunction.empty,
+      admits: Set[String], why: PartialFunction[String, String] = PartialFunction.empty,
       ref: Option[String] = None, reclaim: Option[Seq[Path]] = None)(
       build: (Long, Option[Manifest], Seq[(Long, Manifest)]) => Option[Manifest]): Long = {
     val f = fs(spark, new Path(path))
@@ -502,7 +503,7 @@ object SnapshotTable {
               if (!admits.contains(k)) throw new java.io.IOException(
                 s"$op at $path lost the commit race to version $cv (kind '$k'); " +
                   why.applyOrElse(k, (_: String) =>
-                    s"only ${admits.mkString("/")} interleavings rebase automatically") +
+                    s"only ${admits.toSeq.sorted.mkString("/")} interleavings rebase automatically") +
                   s" — re-run the $op against the current snapshot")
             }
             chain ++= fresh
@@ -615,13 +616,11 @@ object SnapshotTable {
     val committedSchema = nullableSchema(df.schema)
     val physmap = assignPhysical(committedSchema, parentPhys, parentRetired)
     val dir = stageDir(next)
-    stagedWrite("write", gated, new Path(path, dir), format, effParts, physmap)
     // the declared schema also covers a zero-row PARTITIONED overwrite
     // (CREATE TABLE of a partitioned table), which stages no data files
     // a bare load could infer from
-    writeStatsSidecar("write", path, dir,
-      readStaged(spark, path, dir, format, committedSchema, physmap),
-      effStats.map(c => physmap.getOrElse(c, c)))
+    stageCommit(spark, "write", path, dir, Some(gated), format, committedSchema, physmap,
+      effParts, effStats)
     commit(spark, path, next, Manifest(Seq(dir), format, None,
       committedSchema, effStats, kind = "overwrite",
       partitionCols = effParts, constraints = constraints,
@@ -911,49 +910,23 @@ object SnapshotTable {
     readFromManifest(spark, path, m)
   }
 
-  /** Append a batch to a BRANCH head — [[append]]'s contract (schema
-    * additive-drift refusal, CHECK-constraint gate, stats sidecars,
-    * O(delta) commit, optimistic-concurrency retry against racing
-    * branch appenders) with the commit routed into the branch chain.
+  /** Append a batch to a BRANCH head: [[append]]'s kernel run on the
+    * branch ref, so the same contract holds (schema additive-drift
+    * refusal, CHECK-constraint gate, stats sidecars, O(delta) commit,
+    * optimistic-concurrency retry against racing branch appenders),
+    * with the chain's committed format, stats config and partitioning.
     * Main is never touched: the staged delta dir lands under the table
     * root (shared data namespace, caller-unique name) but only the
     * branch manifest references it until [[fastForward]] publishes.
     * Branch chains are append-only by construction — the rebase after
     * a lost slot race therefore only ever sees sibling appends, so it
-    * re-parents onto the branch head with no kind whitelist.
+    * re-parents onto the branch head and admits no main-chain kind.
     */
   def appendBranch(spark: SparkSession, incoming: DataFrame, path: String,
                    name: String): Long = {
-    import org.apache.spark.sql.functions._
-    val (headV0, parent0) = branchHeadManifest(spark, path, name)
-    // the chain's committed format governs the staged delta — same
-    // contract as every main-chain incremental commit
-    val format = parent0.format
-    val committedSchema = mergedIngestSchema(parent0.schema, incoming.schema,
-      evolveSchema = false)
-    val effStats = parent0.statsCols
-    val effParts = parent0.partitionCols
-    requirePartitionable(effParts, committedSchema, "appendBranch")
-    val physmap = assignPhysical(committedSchema, parent0.physmap,
-      parent0.physRetired)
-    // cached only for fail-mode probes, as in [[append]]
-    val weCached = parent0.constraints.exists(_.mode != "drop") &&
-      incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (weCached) incoming.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val gated = enforceConstraints(incoming, parent0.constraints, "appendBranch")
-      val deltaDir = stageDir(headV0 + 1)
-      stagedWrite("appendBranch", gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
-        new Path(path, deltaDir), format, effParts, physmap)
-      writeStatsSidecar("appendBranch", path, deltaDir,
-        readStaged(spark, path, deltaDir, format, committedSchema, physmap),
-        effStats.map(c => physmap.getOrElse(c, c)))
-      commitLoop(spark, path, s"appendBranch('$name')", headV0, Some(parent0),
-          Seq(deltaDir), admits = Nil, ref = Some(name)) { (v, base, _) =>
-        Some(appendManifest(base, atVersion(deltaDir, v), format, None,
-          committedSchema, effStats, effParts, physmap, base.get.physRetired))
-      }
-    } finally { if (weCached) { incoming.unpersist(); () } }
+    val (headV, head) = branchHeadManifest(spark, path, name)
+    appendAt(spark, incoming, path, "appendBranch", Some(name), headV, Some(head),
+      head.format, Nil, Nil, admits = Set.empty)
   }
 
   /** Publish a branch onto main — Iceberg's fast-forward merge. Legal
@@ -1296,16 +1269,17 @@ object SnapshotTable {
     out
   }
 
-  /** Stage one commit's data files from `df` (logical column names) into
+  /** Write one commit's data files from `df` (logical column names) into
     * `dest` and return the number of rows written, as counted by the
     * write job itself ([[GraftSqlShim.saveCounted]]) — callers never
-    * re-read the dir to learn it. Names translate to the table's
-    * physical names here, the single choke point every data write in
-    * the file goes through, so "files carry physical names" holds by
-    * construction (partition columns too, though rename/drop refuse on
-    * them). A partitioned table is written Hive-layout,
-    * `dest/<k1>=<v1>/.../part-*`: partition values live in the path and
-    * Spark's partition discovery restores them on read (each manifest
+    * re-read the dir to learn it. Only [[stageCommit]] calls it, so
+    * every data dir a commit stages is written here: names translate to
+    * the table's physical names at this one choke point, and "files
+    * carry physical names" holds by construction (partition columns
+    * too, though rename/drop refuse on them). A partitioned table is
+    * written Hive-layout, `dest/<k1>=<v1>/.../part-*`: partition values
+    * live in the path and Spark's partition discovery restores them on
+    * read (each manifest
     * dir is a discovery root; the first non-`k=v` segment stops the
     * upward walk, so the snapshot-dir name never parses as a partition).
     *
@@ -1352,15 +1326,70 @@ object SnapshotTable {
       GraftSqlShim.saveCounted(clustered, format, parts, dest.toString))
   }
 
-  /** Raw re-read of a data dir graft staged: physical column names, and
-    * the committed schema DECLARED so the load infers nothing (no footer
-    * job) and partition values come back in their declared types.
+  /** A dir [[stageCommit]] staged: the rows its write counted (0 when
+    * executors staged it) and one lazy raw re-read (physical names).
     */
-  private def readStaged(spark: SparkSession, path: String, dir: String,
-                         format: String, schema: StructType,
-                         physmap: Map[String, String]): DataFrame =
-    spark.read.format(format).schema(physSchema(schema, physmap))
-      .load(new Path(path, dir).toString)
+  private final class StagedDir(dir: String, val rows: Long, reread: String => DataFrame) {
+    lazy val written: DataFrame = reread(dir)
+    /** The staged files under the name a rebase re-homed them to. */
+    def at(name: String): DataFrame = if (name == dir) written else reread(name)
+  }
+
+  /** The one staging path of every SnapshotTable commit: writes `data`
+    * (logical names) into `dir` through [[stagedWrite]], or takes `dir`
+    * as executors staged it (`data` None), and decides here alone which
+    * sidecars the dir carries, both off one re-read of its files:
+    *  - `_stats/<dir>` iff `statsCols` is non-empty: what [[readWhere]]
+    *    prunes on; a dir without one is never pruned.
+    *  - `_hashes/<dir>` iff the op knows the dir's content: the union of
+    *    the `unionOf` dirs' sidecars when all exist (content moved, not
+    *    changed: no payload re-hash), else the content key of
+    *    `contentCol` over the written rows. Without either, an ingest's
+    *    exact verify hashes the dir's payload instead: only the op that
+    *    names [[ingest]]'s content column can key a sidecar correctly.
+    */
+  private def stageCommit(spark: SparkSession, op: String, path: String, dir: String,
+      data: Option[DataFrame], format: String, schema: StructType,
+      physmap: Map[String, String], partitionCols: Seq[String], statsCols: Seq[String],
+      contentCol: Option[String] = None, unionOf: Seq[String] = Nil): StagedDir = {
+    val rows = data.fold(0L)(
+      stagedWrite(op, _, new Path(path, dir), format, partitionCols, physmap))
+    // the raw re-read declares the committed schema (physical names), so
+    // the load infers nothing (no footer job) and partition values come
+    // back in their declared types
+    val staged = new StagedDir(dir, rows, d => spark.read.format(format)
+      .schema(physSchema(schema, physmap)).load(new Path(path, d).toString))
+    val union = unionOf.map(hashesDir(path, _))
+    if (union.nonEmpty && union.forall(fs(spark, new Path(path)).exists))
+      phase(spark, op, "hash sidecar")(GraftSqlShim.saveCounted(
+        readHashes(spark, format, union), format, Nil, hashesDir(path, dir).toString))
+    else contentCol.foreach(c => writeHashSidecar(op, path, dir, staged.written,
+      physmap.getOrElse(c, c), format))
+    writeStatsSidecar(op, path, dir, staged.written,
+      statsCols.map(c => physmap.getOrElse(c, c)))
+    staged
+  }
+
+  /** Fold a commit's delta bloom into `prior` and publish it as
+    * `_versions/b<v>-<dir suffix>.bin`, the one bloom name. Blooms are
+    * mergeable summaries: the bloom of a union is the bitwise OR of the
+    * blooms at equal (expectedItems, fpp), so no commit rescans history,
+    * and re-folding is idempotent. `prior` None publishes `delta`; an
+    * incompatible `prior` publishes nothing (None: the commit names no
+    * bloom and the next ingest rebuilds it in one scan).
+    */
+  private def publishBloom(spark: SparkSession, path: String, v: Long, dir: String,
+      prior: Option[org.apache.spark.util.sketch.BloomFilter],
+      delta: org.apache.spark.util.sketch.BloomFilter): Option[String] = {
+    val bloom = prior match {
+      case None => delta
+      case Some(p) if p.isCompatible(delta) => p.mergeInPlace(delta)
+      case Some(_) => return None
+    }
+    val name = f"b$v%08d-${dir.takeRight(8)}.bin"
+    writeBloomAt(spark, path, name, bloom)
+    Some(name)
+  }
 
   /** First data file of one snapshot dir, if any — a dir's files share
     * one write job's schema, so one footer stands for the dir (the
@@ -2752,8 +2781,6 @@ object SnapshotTable {
           .drop("__spread")
       } else df.repartition(nOut)
     val nextDir = stageDir(v + 1)
-    stagedWrite("compact", sorted, new Path(path, nextDir), m.format, m.partitionCols,
-      m.physmap)
     // Compaction also collapses an append chain back to ONE directory.
     // The hash sidecar — when the whole chain has one — collapses by
     // pure hash union (no payload re-hash), and the bloom carries over
@@ -2762,8 +2789,6 @@ object SnapshotTable {
     // When either is missing and the caller named the content column,
     // rebuild it from the just-written compacted output (see scaladoc).
     import org.apache.spark.sql.functions.{col, xxhash64}
-    // raw re-read of the freshly-written files: PHYSICAL column names
-    lazy val written = readStaged(spark, path, nextDir, m.format, m.schema, m.physmap)
     // A tombstone overlay makes BOTH carry-forward shortcuts invalid:
     // the old hash sidecars and bloom still contain the masked rows'
     // content, and compaction is exactly the point where deleted content
@@ -2774,14 +2799,10 @@ object SnapshotTable {
     // by union — that would launder stale hashes into the new dir; the
     // rebuild-from-written branch is exactly how compaction HEALS the
     // table (the committed manifest below defaults back to trusted)
-    val srcSidecars = m.dirs.map(d => hashesDir(path, d))
-    if (!m.hasOverlay && m.hashesValid &&
-        srcSidecars.nonEmpty && srcSidecars.forall(f.exists))
-      phase(spark, "compact", "hash sidecar")(GraftSqlShim.saveCounted(
-        readHashes(spark, m.format, srcSidecars), m.format, Nil,
-        hashesDir(path, nextDir).toString))
-    else textCol.foreach(tc =>
-      writeHashSidecar("compact", path, nextDir, written, m.physOf(tc), m.format))
+    val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
+    val staged = stageCommit(spark, "compact", path, nextDir, Some(sorted), m.format,
+      m.schema, m.physmap, m.partitionCols, effStats, contentCol = textCol,
+      unionOf = if (!m.hasOverlay && m.hashesValid) m.dirs else Nil)
     // A chain with NO named bloom gets one built from the compacted
     // output when textCol is given, so the next ingest's probe path is
     // O(delta).
@@ -2789,20 +2810,15 @@ object SnapshotTable {
     val outBloomName = (m.bloom, textCol) match {
       case (some @ Some(_), _) if !m.hasOverlay => some
       case (_, Some(tc)) =>
-        val name = f"b${v + 1}%08d-${nextDir.takeRight(8)}.bin"
-        val b = bloomOf("compact", written, xxhash64(contentKey(col(m.physOf(tc)))),
+        val b = bloomOf("compact", staged.written, xxhash64(contentKey(col(m.physOf(tc)))),
           expectedItems, fpp)
-        writeBloomAt(spark, path, name, b)
         rebuiltBloom = Some(b)
-        Some(name)
+        publishBloom(spark, path, v + 1, nextDir, None, b)
       case _ => None
     }
-    val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
-    writeStatsSidecar("compact", path, nextDir, written,
-      effStats.map(m.physOf))
     val parentDirs = m.dirs.toSet
     val committed = commitLoop(spark, path, "compaction", v, Some(m), Seq(nextDir),
-        admits = Seq("append", "fast-forward"),
+        admits = appendKinds,
         why = { case "compact" => "a concurrent compaction won: this rewrite is " +
           "obsolete, the chain it replaced no longer exists" }) { (cv, base, chain) =>
       val dir = atVersion(nextDir, cv)
@@ -2818,22 +2834,10 @@ object SnapshotTable {
         else rebuiltBloom.flatMap { rb =>
           val sidecars = appendAdded.map(d => hashesDir(path, d))
           if (!sidecars.forall(f.exists)) None
-          else {
-            // re-merging dirs already merged on a prior attempt is a
-            // bitwise-idempotent OR — safe across attempts
-            val merged =
-              if (appendAdded.isEmpty) Some(rb)
-              else {
-                val ab = bloomOf("compact", readHashes(spark, m.format, sidecars),
-                  xxhash64(col("__h")), expectedItems, fpp)
-                if (rb.isCompatible(ab)) { rb.mergeInPlace(ab); Some(rb) } else None
-              }
-            merged.map { b =>
-              val name = f"b$cv%08d-${dir.takeRight(8)}.bin"
-              writeBloomAt(spark, path, name, b)
-              name
-            }
-          }
+          else if (appendAdded.isEmpty) publishBloom(spark, path, cv, dir, None, rb)
+          else publishBloom(spark, path, cv, dir, Some(rb),
+            bloomOf("compact", readHashes(spark, m.format, sidecars),
+              xxhash64(col("__h")), expectedItems, fpp))
         }
       Some(Manifest(dir +: appendAdded, m.format, bloom, m.schema,
         effStats, kind = "compact", partitionCols = m.partitionCols,
@@ -2928,21 +2932,13 @@ object SnapshotTable {
           .drop("__spread")
       } else df.repartition(nOut)
     val nextDir = stageDir(v + 1)
-    stagedWrite("binpack", spread, new Path(path, nextDir), m.format, m.partitionCols,
-      m.physmap)
     // hash sidecar: pure union of the merged inputs' sidecars — content
     // is unchanged, so no payload is re-hashed
-    val srcSidecars = smalls.map(s => hashesDir(path, s._1))
-    if (srcSidecars.forall(f.exists))
-      phase(spark, "binpack", "hash sidecar")(GraftSqlShim.saveCounted(
-        readHashes(spark, m.format, srcSidecars), m.format, Nil,
-        hashesDir(path, nextDir).toString))
-    writeStatsSidecar("binpack", path, nextDir,
-      readStaged(spark, path, nextDir, m.format, m.schema, m.physmap),
-      m.statsCols.map(m.physOf))
+    stageCommit(spark, "binpack", path, nextDir, Some(spread), m.format, m.schema,
+      m.physmap, m.partitionCols, m.statsCols, unionOf = smalls.map(_._1))
     val merged = smalls.map(_._1).toSet
     val version = commitLoop(spark, path, "binpack", v, Some(m), Seq(nextDir),
-        admits = Seq("append", "fast-forward")) { (cv, base, _) =>
+        admits = appendKinds) { (cv, base, _) =>
       Some(base.get.copy(dirs = base.get.dirs.filterNot(merged) :+ atVersion(nextDir, cv),
         kind = "binpack"))
     }
@@ -3035,6 +3031,27 @@ object SnapshotTable {
   private[graft] val contentNoOpKinds: Set[String] = Set("compact", "binpack",
     "posdelete-compact", "constraint", "drop-constraint", "renamecol", "dropcol",
     "repartition")
+
+  /** Kinds that rewrite files without changing their content. */
+  private val layoutKinds: Set[String] = Set("compact", "binpack")
+  /** Kinds that only mask rows by file position, over files they keep. */
+  private val posMaskKinds: Set[String] = Set("posdelete", "posdelete-compact")
+  /** Position masks, plus a `posupdate`'s delta dir of updated rows. */
+  private val positionalKinds: Set[String] = posMaskKinds + "posupdate"
+  /** Every overlay: a position mask or a keyed tombstone, over kept files. */
+  private val overlayKinds: Set[String] = positionalKinds + "merge-on-read"
+
+  // What each op's [[commitLoop]] rebases over (its scaladoc has the table):
+  // a delta that references no row composes with every kind keeping the files
+  private val appendAdmits: Set[String] = appendKinds ++ layoutKinds ++ overlayKinds
+  // the content its dedup saw must stay: a posupdate adds rows it never saw
+  private val ingestAdmits: Set[String] = appendKinds ++ layoutKinds ++ posMaskKinds
+  // a tombstone masks a binpacked dir like any other; merge-on-reads stack
+  private val morAdmits: Set[String] = appendKinds ++ Set("binpack", "merge-on-read")
+  // the files the ordinals name must stay
+  private val posDeltaAdmits: Set[String] = appendKinds ++ positionalKinds
+  // a fold rewrites no data file
+  private val posFoldAdmits: Set[String] = appendKinds ++ overlayKinds
 
   /** What one manifest lists over another: dirs, key tombstones and
     * `_posdel` sidecars added and dropped, each in manifest order.
@@ -3812,28 +3829,6 @@ object SnapshotTable {
       // Canonical column order: the committed schema's. An evolved batch
       // appends its new columns after the table's; a reordered batch
       // lands in table order.
-      val nNew = stagedWrite("ingest",
-        delta.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
-        new Path(path, deltaDir), format, effParts, physmap)
-      // The delta is on disk (the write counted it): build its bloom from
-      // the WRITTEN files (one small scan — never re-executes the dedup
-      // plan). Raw re-reads see PHYSICAL column names.
-      def staged(dir: String) =
-        readStaged(spark, path, dir, format, committedSchema, physmap)
-      val written = staged(deltaDir)
-      val deltaBloom = bloomOf("ingest", written,
-        xxhash64(contentKey(col(physText))), expectedItems, fpp)
-      val merged = priorBloom match {
-        case Some(prior) if prior.isCompatible(deltaBloom) =>
-          prior.mergeInPlace(deltaBloom); prior
-        case Some(_) =>
-          // caller changed (expectedItems, fpp) mid-table: rebuild once
-          // over the whole next snapshot so coverage stays total
-          bloomOf("ingest", read(spark, path).select(col(textCol))
-            .unionByName(written.select(col(physText).as(textCol))),
-            xxhash64(contentKey(col(textCol))), expectedItems, fpp)
-        case None => deltaBloom
-      }
       // Publish sidecars BEFORE the manifest rename: when the version
       // becomes visible, its bloom, hash sidecar, and stats sidecar
       // already exist. All staged names are committer-unique (stageDir
@@ -3841,18 +3836,32 @@ object SnapshotTable {
       // unreferenced orphans — the winner's files are untouched, and
       // [[vacuum]] reclaims never-committed staging artifacts once they
       // age past its grace window.
-      val bloomName = f"b$next%08d-${deltaDir.takeRight(8)}.bin"
-      writeHashSidecar("ingest", path, deltaDir, written, physText, format)
-      writeStatsSidecar("ingest", path, deltaDir, written,
-        effStats.map(c => physmap.getOrElse(c, c)))
-      writeBloomAt(spark, path, bloomName, merged)
-      var nCommitted = nNew
+      def stage(dir: String, rows: DataFrame) = stageCommit(spark, "ingest", path, dir,
+        Some(rows), format, committedSchema, physmap, effParts, effStats,
+        contentCol = Some(textCol))
+      val staged = stage(deltaDir,
+        delta.select(committedSchema.fieldNames.map(col(_)).toSeq: _*))
+      // The delta is on disk (the write counted it): build its bloom from
+      // the WRITTEN files (one small scan — never re-executes the dedup
+      // plan). Raw re-reads see PHYSICAL column names.
+      val deltaBloom = bloomOf("ingest", staged.written,
+        xxhash64(contentKey(col(physText))), expectedItems, fpp)
+      val bloomName = priorBloom match {
+        case Some(prior) if !prior.isCompatible(deltaBloom) =>
+          // caller changed (expectedItems, fpp) mid-table: rebuild once
+          // over the whole next snapshot so coverage stays total
+          publishBloom(spark, path, next, deltaDir, None,
+            bloomOf("ingest", read(spark, path).select(col(textCol))
+              .unionByName(staged.written.select(col(physText).as(textCol))),
+              xxhash64(contentKey(col(textCol))), expectedItems, fpp))
+        case prior => publishBloom(spark, path, next, deltaDir, prior, deltaBloom)
+      }
+      var nCommitted = staged.rows
       val version = commitLoop(spark, path, "ingest", cur.getOrElse(0L), parent,
-          Seq(deltaDir), admits = Seq("append", "fast-forward", "compact", "binpack",
-            "posdelete", "posdelete-compact")) { (v, base, chain) =>
+          Seq(deltaDir), admits = ingestAdmits) { (v, base, chain) =>
         val dir = atVersion(deltaDir, v)
         val bloom =
-          if (chain.isEmpty) Some(bloomName)
+          if (chain.isEmpty) bloomName
           else {
             // dirs the interleaved APPENDs (and fast-forwards, which add
             // dirs the same way) added; a compact REPLACES the dir list
@@ -3864,7 +3873,7 @@ object SnapshotTable {
               }
             if (appendAdded.nonEmpty) {
               val f = fs(spark, new Path(path))
-              val stagedRead = staged(dir)
+              val stagedRead = staged.at(dir)
               val sidecars = appendAdded.map(d => hashesDir(path, d))
               val theirs =
                 if (sidecars.forall(f.exists)) readHashes(spark, format, sidecars)
@@ -3879,29 +3888,18 @@ object SnapshotTable {
               // the last rewrite's)
               if (nSurv != nCommitted) {
                 // a racer admitted some of our content first: rewrite the
-                // survivors (raw, already-physical names — no translation)
-                // and swap them in under the staged name
+                // survivors (raw rows carry physical names; staging takes
+                // logical ones) and swap them in under the staged name
                 val tmp = stageDir(v)
-                stagedWrite("ingest", surv.select(physSchema(committedSchema, physmap)
-                  .fieldNames.map(col(_)).toSeq: _*),
-                  new Path(path, tmp), format, effParts.map(c => physmap.getOrElse(c, c)))
-                val rewritten = staged(tmp)
-                writeHashSidecar("ingest", path, tmp, rewritten, physText, format)
-                writeStatsSidecar("ingest", path, tmp, rewritten,
-                  effStats.map(c => physmap.getOrElse(c, c)))
+                stage(tmp, surv.select(committedSchema.fieldNames.map(n =>
+                  col(physmap.getOrElse(n, n)).as(n)).toSeq: _*))
                 stagedPaths(path, dir).foreach(f.delete(_, true))
                 renameStaged(f, path, tmp, dir)
               }
               nCommitted = nSurv
             }
-            readBloom(spark, path, v - 1) match {
-              case Some(wb) if wb.isCompatible(deltaBloom) =>
-                wb.mergeInPlace(deltaBloom)
-                val name = f"b$v%08d-${dir.takeRight(8)}.bin"
-                writeBloomAt(spark, path, name, wb)
-                Some(name)
-              case _ => None
-            }
+            readBloom(spark, path, v - 1).flatMap(wb =>
+              publishBloom(spark, path, v, dir, Some(wb), deltaBloom))
           }
         Some(appendManifest(base, dir, format, bloom, committedSchema, effStats,
           effParts, physmap, parentRetired))
@@ -3947,21 +3945,33 @@ object SnapshotTable {
     * references NO existing rows and re-homes to a version STRICTLY
     * LATER than any racer tombstone, so no overlay can mask it.
     * Rewrites and schema changes conflict loudly. Returns the committed
-    * version.
+    * version. [[appendBranch]] runs the same kernel on a branch ref.
     */
   def append(spark: SparkSession, incoming: DataFrame, path: String,
              format: String = "parquet", statsCols: Seq[String] = Nil,
              partitionCols: Seq[String] = Nil): Long = {
-    import org.apache.spark.sql.functions._
     val cur = currentVersion(spark, path)
-    val next = cur.getOrElse(0L) + 1
-    val parent = cur.map(v => readManifestChecked(spark, path, v))
+    appendAt(spark, incoming, path, "append", None, cur.getOrElse(0L),
+      cur.map(v => readManifestChecked(spark, path, v)), format, statsCols, partitionCols,
+      appendAdmits)
+  }
+
+  /** The append kernel: `incoming` appended as one delta dir over
+    * `parent` (version `parentV`, None = the table's first commit) of
+    * the main chain, or of branch `ref`'s chain. `op` names the gate,
+    * the staging phases and, with the ref, the commit.
+    */
+  private def appendAt(spark: SparkSession, incoming: DataFrame, path: String,
+      op: String, ref: Option[String], parentV: Long, parent: Option[Manifest],
+      format: String, statsCols: Seq[String], partitionCols: Seq[String],
+      admits: Set[String]): Long = {
+    import org.apache.spark.sql.functions._
     val committedSchema = parent.fold(nullableSchema(incoming.schema))(m =>
       mergedIngestSchema(m.schema, incoming.schema, evolveSchema = false))
     val effStats =
       if (statsCols.nonEmpty) statsCols else parent.map(_.statsCols).getOrElse(Nil)
-    val effParts = inheritedPartitionCols(parent, partitionCols, "append")
-    requirePartitionable(effParts, committedSchema, "append")
+    val effParts = inheritedPartitionCols(parent, partitionCols, op)
+    requirePartitionable(effParts, committedSchema, op)
     val parentRetired = parent.map(_.physRetired).getOrElse(Nil)
     val physmap = assignPhysical(committedSchema,
       parent.map(_.physmap).getOrElse(Map.empty), parentRetired)
@@ -3973,16 +3983,13 @@ object SnapshotTable {
       incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (weCached) incoming.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      val gated = enforceConstraints(incoming, constraints, "append")
-      val deltaDir = stageDir(next)
-      stagedWrite("append", gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*),
-        new Path(path, deltaDir), format, effParts, physmap)
-      writeStatsSidecar("append", path, deltaDir,
-        readStaged(spark, path, deltaDir, format, committedSchema, physmap),
-        effStats.map(c => physmap.getOrElse(c, c)))
-      commitLoop(spark, path, "append", cur.getOrElse(0L), parent, Seq(deltaDir),
-          admits = Seq("append", "fast-forward", "compact", "binpack", "posdelete",
-            "posupdate", "merge-on-read", "posdelete-compact")) { (v, base, _) =>
+      val gated = enforceConstraints(incoming, constraints, op)
+      val deltaDir = stageDir(parentV + 1)
+      stageCommit(spark, op, path, deltaDir,
+        Some(gated.select(committedSchema.fieldNames.map(col(_)).toSeq: _*)), format,
+        committedSchema, physmap, effParts, effStats)
+      commitLoop(spark, path, ref.fold(op)(r => s"$op('$r')"), parentV, parent,
+          Seq(deltaDir), admits, ref = ref) { (v, base, _) =>
         Some(appendManifest(base, atVersion(deltaDir, v), format, None,
           committedSchema, effStats, effParts, physmap, parentRetired))
       }
@@ -4092,16 +4099,12 @@ object SnapshotTable {
       stagedDir0: String, plan: StreamWritePlan,
       queryId: String, epochId: Long): Long = {
     val f = fs(spark, new Path(path))
-    writeStatsSidecar("streaming append", path, stagedDir0,
-      readStaged(spark, path, stagedDir0, plan.format, plan.committedSchema,
-        plan.physmap),
-      plan.statsCols.map(c => plan.physmap.getOrElse(c, c)))
+    stageCommit(spark, "streaming append", path, stagedDir0, None, plan.format,
+      plan.committedSchema, plan.physmap, plan.partitionCols, plan.statsCols)
     val parentV = currentVersion(spark, path)
     commitLoop(spark, path, "streaming append", parentV.getOrElse(0L),
         parentV.map(v => readManifestChecked(spark, path, v)), Seq(stagedDir0),
-        admits = Seq("append", "fast-forward", "compact", "binpack", "posdelete",
-          "posupdate", "merge-on-read", "posdelete-compact"),
-        reclaim = Some(Nil)) { (v, base, chain) =>
+        admits = appendAdmits, reclaim = Some(Nil)) { (v, base, chain) =>
       if (streamEpochCommitted(spark, path, queryId, epochId)) {
         // zombie gate, checked on every attempt: another incarnation
         // landed this epoch before the parent resolution or in our slot
@@ -4312,10 +4315,9 @@ object SnapshotTable {
       // name is the manifest diff against the parent — exact under
       // rebase too, since our commit adds exactly one dir)
       val newM = readManifestChecked(spark, path, st.version)
-      val parentDirs =
-        if (st.version == 1L) Set.empty[String]
-        else readManifestChecked(spark, path, st.version - 1).dirs.toSet
-      newM.dirs.filterNot(parentDirs).foreach { d =>
+      val parentM =
+        if (st.version == 1L) None else Some(readManifestChecked(spark, path, st.version - 1))
+      manifestDiff(parentM, newM).addedDirs.foreach { d =>
         GraftSqlShim.saveCounted(graft.operators.Dedup.minhashSigs(
             scanDirsAt(spark, path, st.version, Seq(d)), idCol, textCol,
             k, shingleLen).select(col("sig")),
@@ -4392,25 +4394,18 @@ object SnapshotTable {
         .join(changedKeys, current(keyCol) === col("__mk"), "left_anti")
         .unionByName(cb.upserts)
       val nextDir = stageDir(cur + 1)
-      val rowsAfter = stagedWrite("merge", next, new Path(path, nextDir), m.format,
-        m.partitionCols, m.physmap)
-      lazy val written = readStaged(spark, path, nextDir, m.format, m.schema, m.physmap)
       // sidecars: the merged output IS the new dedup universe
-      val bloomName = textCol.map { tc =>
-        writeHashSidecar("merge", path, nextDir, written, m.physOf(tc), m.format)
-        val name = f"b${cur + 1}%08d-${nextDir.takeRight(8)}.bin"
-        writeBloomAt(spark, path, name,
-          bloomOf("merge", written, xxhash64(contentKey(col(m.physOf(tc)))),
-            expectedItems, fpp))
-        name
-      }
       val effStats = if (statsCols.nonEmpty) statsCols else m.statsCols
-      writeStatsSidecar("merge", path, nextDir, written, effStats.map(m.physOf))
+      val staged = stageCommit(spark, "merge", path, nextDir, Some(next), m.format,
+        m.schema, m.physmap, m.partitionCols, effStats, contentCol = textCol)
+      val bloomName = textCol.flatMap(tc => publishBloom(spark, path, cur + 1, nextDir, None,
+        bloomOf("merge", staged.written, xxhash64(contentKey(col(m.physOf(tc)))),
+          expectedItems, fpp)))
       commit(spark, path, cur + 1, Manifest(Seq(nextDir), m.format, bloomName,
         m.schema, effStats, kind = "merge",
         partitionCols = m.partitionCols, constraints = m.constraints,
         physmap = m.physmap, physRetired = m.physRetired))
-      MergeStats(cur + 1, cb.nChanges, cb.nUpserts, cb.nChanges - cb.nUpserts, rowsAfter)
+      MergeStats(cur + 1, cb.nChanges, cb.nUpserts, cb.nChanges - cb.nUpserts, staged.rows)
     } finally { if (weCached) { changes.unpersist(); () } }
   }
 
@@ -4594,8 +4589,11 @@ object SnapshotTable {
       // audit version IDENTICAL to its base (streaming sinks keep their
       // one-commit-per-batch trail; reads pay nothing new)
       val deltaDir = if (cb.nUpserts == 0) None else Some(stageDir(next))
-      val nUpserts = deltaDir.fold(0L)(d => stagedWrite("merge-on-read", cb.upserts,
-        new Path(path, d), m.format, m.partitionCols, m.physmap))
+      // delta-dir sidecars mirror ingest's: stats for pruning, and the
+      // hash sidecar when the dedup gate is live
+      val staged = deltaDir.map(d => stageCommit(spark, "merge-on-read", path, d,
+        Some(cb.upserts), m.format, m.schema, m.physmap, m.partitionCols,
+        if (statsCols.nonEmpty) statsCols else m.statsCols, contentCol = textCol))
       // the tombstone lists EVERY winning non-null key: an upsert masks
       // the key's prior row (the replacement lives in the delta dir,
       // committed at the same version the mask exempts), a delete masks
@@ -4607,21 +4605,9 @@ object SnapshotTable {
           m.format, Nil, tombstonePath(path, t).toString))
         Some(t)
       }
-      def staged(d: String) =
-        readStaged(spark, path, d, m.format, m.schema, m.physmap)
-      lazy val written0 = staged(deltaDir.get)
-      // delta-dir sidecars mirror ingest's: stats for pruning, and the
-      // hash sidecar when the dedup gate is live
-      deltaDir.foreach { d =>
-        writeStatsSidecar("merge-on-read", path, d, written0,
-          (if (statsCols.nonEmpty) statsCols else m.statsCols).map(m.physOf))
-        textCol.foreach(tc =>
-          writeHashSidecar("merge-on-read", path, d, written0, m.physOf(tc), m.format))
-      }
       var outstanding = 0
       val version = commitLoop(spark, path, "merge-on-read", cur, Some(m),
-          deltaDir.toSeq ++ tName,
-          admits = Seq("append", "fast-forward", "merge-on-read", "binpack")) {
+          deltaDir.toSeq ++ tName, admits = morAdmits) {
         (v, base, chain) =>
           val b = base.get
           outstanding = b.tombstones.size + tName.size
@@ -4643,16 +4629,9 @@ object SnapshotTable {
               case Some(d) =>
                 textCol.flatMap { tc =>
                   readBloom(spark, path, v - 1).flatMap { prior =>
-                    val deltaBloom = bloomOf("merge-on-read",
-                      if (chain.isEmpty) written0 else staged(d),
-                      xxhash64(contentKey(col(m.physOf(tc)))), expectedItems, fpp)
-                    if (!prior.isCompatible(deltaBloom)) None
-                    else {
-                      prior.mergeInPlace(deltaBloom)
-                      val name = f"b$v%08d-${d.takeRight(8)}.bin"
-                      writeBloomAt(spark, path, name, prior)
-                      Some(name)
-                    }
+                    publishBloom(spark, path, v, d, Some(prior), bloomOf("merge-on-read",
+                      staged.get.at(d), xxhash64(contentKey(col(m.physOf(tc)))),
+                      expectedItems, fpp))
                   }
                 }
             }
@@ -4665,6 +4644,7 @@ object SnapshotTable {
               posDeletes = b.posDeletes, partEvolved = b.partEvolved))
           }
       }
+      val nUpserts = staged.fold(0L)(_.rows)
       MergeOnReadStats(version, nChanges, nUpserts, nChanges - nUpserts, outstanding)
     } finally { if (weCached) { changes.unpersist(); () } }
   }
@@ -4708,7 +4688,8 @@ object SnapshotTable {
     require(m.format == "parquet",
       s"positional deletes need parquet row ordinals (_metadata.row_index); " +
         s"table format is '${m.format}'")
-    val (perDir, _) = planPrunedFiles(spark, path, m, Some(predicate))
+    val (perDir, _) = phase(spark, "positional delete", "stats pruning")(
+      planPrunedFiles(spark, path, m, Some(predicate)))
     if (perDir.forall(_._3.isEmpty))
       return PosDeleteStats(cur, 0L, 0L, committed = false)
     val (victims0, _) = buildPrunedRead(spark, path, m, perDir, predicate,
@@ -4760,8 +4741,7 @@ object SnapshotTable {
       throw new IllegalArgumentException(s"no committed snapshot at $path"))
     commitLoop(spark, path, "posdelete compaction", cur,
         Some(readManifestChecked(spark, path, cur)), Nil,
-        admits = Seq("append", "fast-forward", "posdelete", "posupdate",
-          "merge-on-read", "posdelete-compact")) { (v, base, _) =>
+        admits = posFoldAdmits) { (v, base, _) =>
       val b = base.get
       if (b.posDeletes.size <= 1) None // nothing to fold
       else {
@@ -4825,7 +4805,8 @@ object SnapshotTable {
     require(unknown.isEmpty,
       s"updateWherePositional: SET column(s) ${unknown.mkString(", ")} " +
         s"not in table schema (${schema.fieldNames.mkString(", ")})")
-    val (perDir, _) = planPrunedFiles(spark, path, m, Some(predicate))
+    val (perDir, _) = phase(spark, "positional update", "stats pruning")(
+      planPrunedFiles(spark, path, m, Some(predicate)))
     if (perDir.forall(_._3.isEmpty))
       return PosUpdateStats(cur, 0L, committed = false)
     val (victims, _) = buildPrunedRead(spark, path, m, perDir, predicate,
@@ -4845,11 +4826,8 @@ object SnapshotTable {
         fs(spark, new Path(path)).delete(posDeletePath(path, name), true)
         return PosUpdateStats(cur, 0L, committed = false)
       }
-      val updDir = stageDir(cur + 1)
-      stagedWrite("positional update", gated.select(schema.fieldNames.map(col(_)).toSeq: _*),
-        new Path(path, updDir), m.format, m.partitionCols, m.physmap)
-      val v = commitPositionalDelta(spark, path, cur, Some(updDir), Some(name),
-        "positional update")
+      val v = commitPositionalDelta(spark, path, cur, Some(stageDir(cur + 1)), Some(name),
+        "positional update", Some(gated.select(schema.fieldNames.map(col(_)).toSeq: _*)))
       PosUpdateStats(v, nUpdated, committed = true)
     } finally { gated.unpersist(); () }
   }
@@ -4895,7 +4873,7 @@ object SnapshotTable {
     */
   private[graft] def commitPositionalDelta(spark: SparkSession, path: String,
       scannedV: Long, stagedDir0: Option[String], sidecar: Option[String],
-      opName: String): Long = {
+      opName: String, data: Option[DataFrame] = None): Long = {
     require(stagedDir0.nonEmpty || sidecar.nonEmpty,
       s"$opName commit with neither staged data nor a delete sidecar")
     val m = readManifestChecked(spark, path, scannedV)
@@ -4903,14 +4881,10 @@ object SnapshotTable {
       if (stagedDir0.isDefined && sidecar.isDefined) "posupdate"
       else if (sidecar.isDefined) "posdelete"
       else "append"
-    stagedDir0.foreach { d =>
-      writeStatsSidecar(opName, path, d,
-        readStaged(spark, path, d, m.format, m.schema, m.physmap),
-        m.statsCols.map(c => m.physmap.getOrElse(c, c)))
-    }
+    stagedDir0.foreach(stageCommit(spark, opName, path, _, data, m.format, m.schema,
+      m.physmap, m.partitionCols, m.statsCols))
     commitLoop(spark, path, opName, scannedV, Some(m), stagedDir0.toSeq,
-        admits = Seq("append", "fast-forward", "posdelete", "posupdate",
-          "posdelete-compact"),
+        admits = posDeltaAdmits,
         why = {
           case "merge-on-read" => "the keyed racer's upserts may invalidate this " +
             "command's victim or not-matched decisions (stacking could duplicate or " +
@@ -5022,11 +4996,11 @@ object SnapshotTable {
     val rows = vs.map { v =>
       val m = ms(v)
       val eff = effTs(v)
-      val parent = ms.get(v - 1)
-      val added: Long = parent match {
-        case Some(p) => m.dirs.count(d => !p.dirs.contains(d)).toLong
-        case None => if (v == 1L) m.dirs.size.toLong else -1L
-      }
+      // -1 when the parent expired: manifestDiff(None, _) would count
+      // every dir as added
+      val added: Long =
+        if (v == 1L) manifestDiff(None, m).addedDirs.size.toLong
+        else ms.get(v - 1).fold(-1L)(p => manifestDiff(Some(p), m).addedDirs.size.toLong)
       org.apache.spark.sql.Row(v, m.kind, new java.sql.Timestamp(eff),
         m.dirs.size.toLong, added,
         m.tombstones.size.toLong, m.format,

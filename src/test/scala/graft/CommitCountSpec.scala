@@ -198,14 +198,18 @@ class CommitCountSpec extends SparkSpec {
     assert(SnapshotTable.read(spark, path).count() > 0L)
   }
 
-  test("every job append, ingest, merge and mergeOnRead launch carries a description") {
+  test("every job a commit op launches carries a description") {
     import spark.implicits._
     val path = tmp("graft-count-described")
     SnapshotTable.write(spark, docs(1L to 10L), path, statsCols = Seq("k", "text"))
     SnapshotTable.addConstraint(spark, path, "pos", "k > 0")
+    SnapshotTable.createBranch(spark, path, "audit")
     val ops: Seq[(String, () => Any)] = Seq(
       "append" -> (() => SnapshotTable.append(spark, docs(11L to 20L), path)),
+      "appendBranch" -> (() => SnapshotTable.appendBranch(spark, docs(21L to 22L), path,
+        "audit")),
       "ingest" -> (() => SnapshotTable.ingest(spark, docs(15L to 30L), path, "text")),
+      "compactSmall" -> (() => assert(SnapshotTable.compactSmall(spark, path).committed)),
       "merge" -> (() => SnapshotTable.merge(spark,
         docs(Seq(2L, 40L)).withColumn("del", lit(false)), path, "k",
         deleteCol = Some("del"), textCol = Some("text"))),
@@ -213,7 +217,10 @@ class CommitCountSpec extends SparkSpec {
         Seq((3L, "u-3", 0L, false, 1), (3L, "v-3", 0L, false, 2), (4L, null, 1L, true, 1))
           .toDF("k", "text", "g", "del", "seq"),
         path, "k", deleteCol = Some("del"), orderCol = Some("seq"), textCol = Some("text"))),
-      "ingest over tombstones" -> (() => SnapshotTable.ingest(spark, docs(50L to 55L), path, "text")))
+      "ingest over tombstones" -> (() => SnapshotTable.ingest(spark, docs(50L to 55L), path, "text")),
+      "updateWherePositional" -> (() => SnapshotTable.updateWherePositional(spark, path,
+        col("k") === 12L, Map("text" -> lit("u-12")))),
+      "compact" -> (() => SnapshotTable.compact(spark, path, textCol = Some("text"))))
     ops.foreach { case (name, op) =>
       val (_, jobs) = jobsOf(op())
       assert(jobs.nonEmpty, s"$name launched no job")

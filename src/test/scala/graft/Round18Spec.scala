@@ -81,6 +81,24 @@ class Round18Spec extends SparkSpec {
       fast.contains((30L, l, 30L, 2L)) && fast.contains((31L, l, 30L, 2L))), fast)
   }
 
+  test("multi-level CC: the driver path's edge bound scales with the level count") {
+    val lvls = Seq(0.9, 0.8, 0.7)
+    def run(limit: Int) = JobProbe.jobsOf(spark)(
+      Dedup.connectedComponentsAtLevels(levelEdges, "id1", "id2", "mr", lvls,
+        driverEdgeLimit = limit)
+        .select("id", "lvl", "cluster", "sz").as[(Long, Int, Long, Long)]
+        .collect().sorted.toSeq)
+    def distributed(jobs: Seq[JobProbe.Job]) = jobs.exists(_.callSites.contains("localCheckpoint"))
+    val n = levelEdges.count().toInt
+    // n edges fit a limit of n, but over 3 levels the driver would hold
+    // up to 3·2n label rows: past limit / 3 edges the distributed loop runs
+    val (dist, distJobs) = run(n)
+    val (fast, fastJobs) = run(3 * n)
+    assert(distributed(distJobs), distJobs)
+    assert(!distributed(fastJobs), fastJobs)
+    assert(dist == fast, s"fast=$fast\ndist=$dist")
+  }
+
   // ---- kernels: generated code path ≡ interpreted eval -----------------
 
   test("kernel doGenCode: codegen'd projection matches interpreted eval") {
